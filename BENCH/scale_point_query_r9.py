@@ -95,7 +95,7 @@ def q_pagerank(spark, n_docs, df, stats):
 
     docs = generate_documents(spark, n_docs)
     mentions = mentions_native(docs)
-    cc = connected_components_auto(sameas_candidates(mentions))
+    cc, _ = connected_components_auto(sameas_candidates(mentions))
     mapping = cc.select(F.col("node").alias("entity"),
                         F.col("component").alias("canonical"))
     ents = (

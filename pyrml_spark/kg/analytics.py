@@ -438,7 +438,7 @@ def _co_mention_edges(spark: SparkSession) -> DataFrame:
     # corpus, so the mapping solves on the driver below the gate instead
     # of paying the iterative loop's per-round job latency; identical
     # labels either way (equality pinned by tests)
-    cc = connected_components_auto(sameas_candidates(mentions))
+    cc, _ = connected_components_auto(sameas_candidates(mentions))
     mapping = cc.select(F.col("node").alias("entity"),
                         F.col("component").alias("canonical"))
     ents = (

@@ -37,7 +37,7 @@ class ConvergenceError(RuntimeError):
     pass
 
 
-# driver union-find crossover (shared with kg/pipeline.py): below this many
+# driver union-find crossover (see connected_components_auto): below this many
 # edges the iterative distributed loop's per-round job latency dominates and
 # a driver-side union-find over the collected edge list is strictly faster
 # while producing the identical lexicographic-min labels.
@@ -74,21 +74,33 @@ def _driver_union_find(edges_rows) -> list:
 
 def connected_components_auto(
     edges: DataFrame,
-    max_driver_edges: int = DRIVER_UNION_FIND_MAX_EDGES,
+    max_driver_edges: Optional[int] = None,
+    edge_rows: Optional[int] = None,
     **kw,
-) -> DataFrame:
-    """:func:`connected_components` with the driver union-find crossover.
+) -> Tuple[DataFrame, int]:
+    """:func:`connected_components` behind the driver union-find crossover,
+    the one gate every caller goes through. Returns ``(components, rows)``:
+    the (node, component) table and its row count.
 
-    The edge table is checkpointed eagerly (materializing the — typically
-    expensive — upstream pair join exactly once), counted, and when the
-    count is below ``max_driver_edges`` the components are solved on the
-    driver (Arrow transfer both ways) instead of running the iterative
-    min-label loop, whose per-round fixed job cost dominates at that size.
-    Identical (node, component) output either way (lexicographic-min
-    labels; pinned by tests). Above the gate the distributed loop runs
-    unchanged — the 100 TB path."""
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
-    if edges.count() <= max_driver_edges:
+    At most ``max_driver_edges`` edges (default
+    :data:`DRIVER_UNION_FIND_MAX_EDGES`, read at call time) are solved on the
+    driver (Arrow transfer both ways), where the iterative min-label loop's
+    per-round fixed job cost would dominate; above the gate the distributed
+    loop runs with ``kw`` — the 100 TB path. Identical output either way
+    (lexicographic-min labels; pinned by tests).
+
+    The edge count is known BEFORE any collect. A caller that already knows
+    it (lineage manifest, count over a persisted table) passes ``edge_rows``
+    and vouches that ``edges`` is materialized, so no job runs before the
+    gate; otherwise the edges are checkpointed eagerly (the typically
+    expensive upstream pair join runs exactly once) and counted."""
+    if max_driver_edges is None:
+        max_driver_edges = DRIVER_UNION_FIND_MAX_EDGES
+    edges = edges.select("src", "dst")
+    if edge_rows is None:
+        edges = edges.localCheckpoint(eager=True)
+        edge_rows = edges.count()
+    if edge_rows <= max_driver_edges:
         import pandas as pd
 
         epdf = edges.toPandas()
@@ -97,8 +109,8 @@ def connected_components_auto(
         spark = edges.sparkSession
         return spark.createDataFrame(
             pd.DataFrame(pairs, columns=["node", "component"]),
-            schema="node string, component string")
-    return connected_components(edges, **kw)
+            schema="node string, component string"), len(pairs)
+    return _min_label_components(edges, **kw)
 
 
 def connected_components(
@@ -112,6 +124,18 @@ def connected_components(
 
     Deterministic: labels are the lexicographic min of the node keys.
     """
+    return _min_label_components(edges, max_iter, on_iteration,
+                                 double_from)[0]
+
+
+def _min_label_components(
+    edges: DataFrame,
+    max_iter: int = 25,
+    on_iteration: Optional[Callable[[int, int], None]] = None,
+    double_from: int = 2,
+) -> Tuple[DataFrame, int]:
+    """:func:`connected_components` plus the label table's row count, which
+    the convergence aggregate yields in the same job."""
     sym = (
         edges.select("src", "dst")
         .unionByName(edges.select(F.col("dst").alias("src"),
@@ -186,15 +210,18 @@ def connected_components(
                 .cast("int").alias("changed"),
             )
         # lazy checkpoint + immediate aggregate: the agg action materializes
-        # the checkpoint AND returns the convergence count in ONE job per
-        # iteration (eager=True plus a separate agg ran two)
+        # the checkpoint AND returns the convergence count (plus the label
+        # row count) in ONE job per iteration (eager=True plus a separate
+        # agg ran two)
         new_labels = new_labels.localCheckpoint(eager=False)
-        changed = new_labels.agg(F.sum("changed")).collect()[0][0] or 0
+        changed, rows = new_labels.agg(F.sum("changed"),
+                                       F.count(F.lit(1))).collect()[0]
+        changed = changed or 0
         labels = new_labels.drop("changed")
         if on_iteration:
             on_iteration(it, int(changed))
         if changed == 0:
-            return labels
+            return labels, rows
     raise ConvergenceError(
         f"connected_components did not converge in {max_iter} iterations"
     )

@@ -63,6 +63,11 @@ def kg_canonical_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def kg_pipeline_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Checkpointed mode (``run_pipeline``: per-stage Parquet checkpoints +
+    manifest) against the SQL oracle. At _N_DOCS_CHECK docs the edge set is
+    far below the gate, so the mapping comes from driver union-find; the
+    distributed min-label loop has its own oracle row,
+    kg_canonical_mapping."""
     # mkdtemp (not TemporaryDirectory): the checkpoint parquet must outlive
     # this call — the driver re-reads the returned DataFrame lazily
     d = tempfile.mkdtemp(prefix="kg_entry_")
@@ -103,21 +108,21 @@ def kg_stream_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def kg_pipeline_fused_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fused/throughput assembly against the SAME oracle as the
-    checkpointed mode: driver union-find canonicalization (the fused path's
-    small-edge-set crossover) + single-DAG category-wise assembly, no
-    checkpoints — where kg_pipeline_triples uses the iterative distributed
-    CC and per-stage checkpointing. Two different canonicalization
-    algorithms and orchestrations, one independent SQL rederivation — all
-    three must agree byte-for-byte."""
-    from .extract import (assemble_canonical_triples, media_spans,
-                          mentions_native, sameas_candidates)
-    from .pipeline import _driver_union_find
+    checkpointed mode: driver union-find canonicalization + single-DAG
+    category-wise assembly, no checkpoints. kg_pipeline_triples also solves
+    its 300-doc edge set with driver union-find (through the gate), so the
+    two rows differ in orchestration, not in canonicalization algorithm;
+    the distributed min-label loop is checked by kg_canonical_mapping. Each
+    must agree byte-for-byte with one independent SQL rederivation."""
+    from .canonicalize import _driver_union_find
+    from .extract import assemble_canonical_triples, media_spans
 
     docs = _docs(spark)
     mentions = mentions_native(docs)
     # ungated collect is fine HERE ONLY: _N_DOCS_CHECK bounds the edge set.
-    # Production code must copy run_pipeline_fused (kg/pipeline.py), which
-    # counts the edges BEFORE collecting and falls back to distributed CC.
+    # Production code must go through the single union-find gate,
+    # canonicalize.connected_components_auto, which counts the edges BEFORE
+    # collecting and falls back to distributed CC.
     rows = [(r["src"], r["dst"]) for r in sameas_candidates(mentions).collect()]
     mapping = spark.createDataFrame(_driver_union_find(rows),
                                     ["entity", "canonical"])

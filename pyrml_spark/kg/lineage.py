@@ -49,19 +49,11 @@ class StageRecord:
 
 
 class StageRunner:
-    def __init__(self, spark: SparkSession, base_dir: str,
-                 collect_partition_lineage: bool = True,
-                 stage_dir: str | None = None):
-        """``stage_dir``: where stage parquet checkpoints land (default
-        ``<base_dir>/stages``). Splitting it from the manifest dir lets
-        benches put the checkpoint I/O on fast storage (tmpfs as the
-        object-store stand-in) while the manifest stays durable — on a
-        cluster this is the S3/HDFS checkpoint prefix."""
+    def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base_dir = base_dir
         self.manifest_path = os.path.join(base_dir, "manifest.jsonl")
-        self.collect_partition_lineage = collect_partition_lineage
-        self.stage_dir = stage_dir or os.path.join(base_dir, "stages")
+        self.stage_dir = os.path.join(base_dir, "stages")
         os.makedirs(self.stage_dir, exist_ok=True)
         self._manifest: Dict[tuple, dict] = {}
         if os.path.exists(self.manifest_path):
@@ -87,32 +79,27 @@ class StageRunner:
         if rec is not None and os.path.exists(rec["path"]):
             return self.spark.read.parquet(rec["path"])
 
-        t0 = time.time()
+        t0 = time.perf_counter()
         df = build()
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
         out = self.spark.read.parquet(path)
-        per_partition = []
-        if self.collect_partition_lineage:
-            # one job yields BOTH the per-partition lineage and (by summing)
-            # the total row count — the separate count() job is redundant
-            per_partition = [
-                {"partition": r["pid"], "rows": r["rows"]}
-                for r in out.groupBy(
-                    F.spark_partition_id().alias("pid")
-                ).agg(F.count(F.lit(1)).alias("rows")).collect()
-            ]
-            rows = sum(p["rows"] for p in per_partition)
-        else:
-            rows = out.count()
+        # one job yields BOTH the per-partition lineage and (by summing) the
+        # total row count — a separate count() job would be redundant
+        per_partition = [
+            {"partition": r["pid"], "rows": r["rows"]}
+            for r in out.groupBy(
+                F.spark_partition_id().alias("pid")
+            ).agg(F.count(F.lit(1)).alias("rows")).collect()
+        ]
         record = StageRecord(
             stage=name,
             input_fingerprint=input_fp,
-            rows=rows,
+            rows=sum(p["rows"] for p in per_partition),
             partitions=out.rdd.getNumPartitions(),
-            elapsed_sec=round(time.time() - t0, 3),
+            elapsed_sec=round(time.perf_counter() - t0, 3),
             path=path,
             extra=extra_metrics(out) if extra_metrics else {},
             per_partition=per_partition,
@@ -134,5 +121,3 @@ class StageRunner:
         rec = self._manifest.get((name, input_fp))
         return None if rec is None else rec.get("rows")
 
-    def stage_fingerprints(self) -> Dict[str, str]:
-        return {k[0]: k[1] for k in self._manifest}

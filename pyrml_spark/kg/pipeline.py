@@ -1,4 +1,4 @@
-"""End-to-end KG construction pipeline (the north rule):
+"""End-to-end KG construction pipeline (the north rule), defined once:
 
     interleaved documents (doc_id, spans[])
       → mention detection (Arrow/pandas UDF or native — both vectorized)
@@ -7,22 +7,36 @@
       → subject/object rewrite through the canonical mapping
       → dedup → partitioned (s,p,o,g) table + N-Quads-ready strings
 
-Every stage is checkpointed + manifest-recorded (resumable); the output
-table is partitioned by a subject hash bucket (``pmod(xxhash64(s), N)``) so
-downstream point lookups and joins prune partitions. AQE + explicit
-repartition sizes handle skew on hot subjects at scale.
+One DAG of DataFrame transforms (:func:`_build`) serves both entry points.
+They differ only in the materialization policy that decides how each stage
+is kept:
+
+* :func:`run_pipeline` — checkpoint policy: every stage is written to
+  Parquet under ``work_dir`` and recorded in the lineage manifest
+  (:class:`~.lineage.StageRunner`), so a re-run resumes mid-DAG. Row counts
+  come from the manifest; planning decisions are written to it as events.
+* :func:`run_pipeline_fused` — memory policy (:class:`_InMemory`, same
+  interface as the runner): stages read more than once are persisted, a
+  count runs only where the union-find gate needs one, and everything is
+  unpersisted after the one final write.
+
+The canonical mapping goes through the single union-find gate,
+:func:`~.canonicalize.connected_components_auto`: driver union-find below
+``DRIVER_UNION_FIND_MAX_EDGES`` edges, the distributed min-label loop above.
+The output table is partitioned by a subject hash bucket
+(``pmod(xxhash64(s), N)``) so downstream point lookups and joins prune
+partitions. AQE + range repartitioning handle skew on hot subjects at scale.
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
-from typing import Optional
+from typing import Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .canonicalize import canonical_mapping
+from .canonicalize import connected_components_auto
 from .datagen import generate_documents
 from .extract import (
     assemble_canonical_triples,
@@ -39,20 +53,11 @@ class KGPipelineConfig:
     n_docs: int = 10_000
     use_pandas_extractor: bool = True
     n_subject_buckets: int = 32
-    output_partitions: int = 0          # 0 = one file per bucket
     cc_max_iter: int = 25
-    collect_partition_lineage: bool = True  # off for pure-throughput benches
     gen_partitions: int = 0                 # fixed datagen partitioning (benches)
     final_repartition: bool = True          # False: skip the bucket exchange
-                                            # (fused bench path; dedup's own
-                                            # shuffle already colocates rows)
-    checkpoint_dir: Optional[str] = None    # stage-parquet location when it
-                                            # should differ from work_dir
-                                            # (benches: tmpfs; cluster: the
-                                            # object-store checkpoint prefix)
-    collect_extra_metrics: bool = True      # distinct-subject/graph counts on
-                                            # the final table (one extra agg
-                                            # job; off for throughput runs)
+                                            # (dedup's own shuffle already
+                                            # colocates rows)
 
 
 def _public_input_tag(documents: DataFrame) -> str:
@@ -97,84 +102,165 @@ def run_pipeline(
     input_tag: Optional[str] = None,
 ) -> DataFrame:
     """Returns the final (s,p,o,g,subject_bucket) DataFrame; all stages
-    checkpointed under ``work_dir`` with manifest lineage."""
-    runner = StageRunner(
-        spark, work_dir,
-        collect_partition_lineage=config.collect_partition_lineage,
-        stage_dir=config.checkpoint_dir,
-    )
+    checkpointed under ``work_dir`` with manifest lineage.
+
+    External ``documents`` need a resume identity mixed into the stage
+    fingerprints, else fingerprints collide across different caller-supplied
+    inputs and resume would reuse stale checkpoints. ``input_tag`` names it
+    (dataset name + version); omitted, :func:`_public_input_tag` derives one
+    from public surface only (the analyzed-plan string is a private JVM API
+    that breaks under Spark Connect and embeds session-specific expression
+    ids, so the same input would never resume across sessions)."""
+    if documents is not None:
+        input_tag = input_tag or _public_input_tag(documents)
+    return _build(spark, config, documents, input_tag,
+                  StageRunner(spark, work_dir))
+
+
+def run_pipeline_fused(
+    spark: SparkSession,
+    out_dir: str,
+    config: KGPipelineConfig = KGPipelineConfig(),
+    documents: Optional[DataFrame] = None,
+) -> DataFrame:
+    """Same DAG as :func:`run_pipeline` kept in memory instead of in
+    checkpoints: stages are persisted (mentions feed both the edge
+    derivation and the triple build), the edge count feeds the union-find
+    gate, and the one partitioned write goes to ``out_dir``.
+
+    ``documents`` supplies an external corpus (same shape as
+    :func:`~pyrml_spark.kg.datagen.generate_documents`: BASELINE.json's
+    input_hint) — omitted, the synthetic corpus is generated. No
+    ``input_tag`` parameter: fused mode keeps no checkpoints, so there is
+    no resume identity to name.
+
+    Use for throughput benching / one-shot runs; use :func:`run_pipeline`
+    when stage-level resumability and lineage are required. Results are
+    identical (tests assert it)."""
+    keep = _InMemory(spark, out_dir)
+    try:
+        if documents is not None:
+            documents = keep.persist("documents", documents)
+        return _build(spark, config, documents, None, keep)
+    finally:
+        keep.unpersist()
+
+
+class _InMemory:
+    """The memory policy behind :class:`~.lineage.StageRunner`'s interface,
+    with no checkpoints and no manifest. A stage read more than once is
+    persisted until :meth:`unpersist`, a row count is a count job, and the
+    partitioned stage is the one write (to ``out_dir``). Single-use stages
+    stay lazy: under AQE a persisted stage pays its own cache-materialization
+    jobs (measured on local[4], 2 000 docs: persisting media_spans added 2
+    jobs, canonical_mapping 6), and both are cheap to re-read — media_spans
+    derives from the persisted documents, and the mapping is a local
+    relation or the CC loop's checkpoint."""
+
+    REUSED = frozenset({"documents", "mentions", "sameas_edges"})
+
+    def __init__(self, spark: SparkSession, out_dir: str):
+        self.spark = spark
+        self.out_dir = out_dir
+        self.persisted: Dict[str, DataFrame] = {}
+
+    def persist(self, name: str, df: DataFrame) -> DataFrame:
+        self.persisted[name] = df = df.persist()
+        return df
+
+    def run(self, name, input_fp, build, partition_by=None,
+            extra_metrics=None) -> DataFrame:
+        if not partition_by:
+            df = build()
+            return self.persist(name, df) if name in self.REUSED else df
+        build().write.mode("overwrite").partitionBy(*partition_by) \
+            .parquet(self.out_dir)
+        return self.spark.read.parquet(self.out_dir)
+
+    def stage_rows(self, name: str, input_fp: str) -> int:
+        # a plain count, not limit(N+1).count(): CollectLimit's incremental
+        # partition scans bypass and partially populate the persist cache
+        return self.persisted[name].count()
+
+    def record_event(self, stage: str, payload: dict) -> None:
+        pass
+
+    def unpersist(self) -> None:
+        for df in self.persisted.values():
+            df.unpersist()
+
+
+def _table_metrics(df: DataFrame) -> dict:
+    """Manifest extras for the final table: ONE multi-aggregate job, not
+    one full-table job per metric."""
+    row = df.agg(
+        F.countDistinct("s").alias("distinct_subjects"),
+        F.countDistinct("g").alias("graphs"),
+    ).collect()[0]
+    return {"distinct_subjects": row["distinct_subjects"],
+            "graphs": row["graphs"]}
+
+
+def _build(spark: SparkSession, config: KGPipelineConfig,
+           documents: Optional[DataFrame], input_tag: Optional[str],
+           keep) -> DataFrame:
+    """The pipeline DAG; ``keep`` is the materialization policy (a
+    :class:`StageRunner` or an :class:`_InMemory`). Stage names and
+    fingerprints are the resume identity of existing work dirs — keep them
+    stable."""
     cfg_fp = fingerprint(
         config.n_docs, config.use_pandas_extractor, config.n_subject_buckets,
         "v1",
     )
-
     if documents is None:
         docs_fp = fingerprint("docs", cfg_fp)
-        docs = runner.run(
+        docs = keep.run(
             "documents", docs_fp,
-            lambda: generate_documents(spark, config.n_docs),
+            lambda: generate_documents(spark, config.n_docs,
+                                       partitions=config.gen_partitions),
         )
     else:
-        # external input: mix an identity of the DataFrame into the
-        # fingerprint, else stage fingerprints collide across different
-        # caller-supplied inputs and resume would reuse stale checkpoints.
-        # Caller should pass input_tag for a stable, resumable identity
-        # (dataset name + version). Fallback derives a tag from PUBLIC
-        # surface only — schema JSON + a bounded content sample hash (the
-        # earlier analyzed-plan string was a private JVM API that breaks
-        # under Spark Connect and embeds session-specific expression ids, so
-        # the same input never resumed across sessions).
-        tag = input_tag or _public_input_tag(documents)
-        docs_fp = fingerprint("docs-ext", cfg_fp, tag)
+        docs_fp = fingerprint("docs-ext", cfg_fp, input_tag)
         docs = documents
 
     extractor = mentions_pandas if config.use_pandas_extractor else mentions_native
     mentions_fp = fingerprint("mentions", docs_fp, config.use_pandas_extractor)
-    mentions = runner.run("mentions", mentions_fp, lambda: extractor(docs))
+    mentions = keep.run("mentions", mentions_fp, lambda: extractor(docs))
 
     media_fp = fingerprint("media", docs_fp)
-    media = runner.run("media_spans", media_fp, lambda: media_spans(docs))
+    media = keep.run("media_spans", media_fp, lambda: media_spans(docs))
 
     edges_fp = fingerprint("edges", mentions_fp)
-    edges = runner.run("sameas_edges", edges_fp,
-                       lambda: sameas_candidates(mentions))
+    edges = keep.run("sameas_edges", edges_fp,
+                     lambda: sameas_candidates(mentions))
 
     mapping_fp = fingerprint("mapping", edges_fp, config.cc_max_iter)
-    # the edges stage just ran (or resumed), so its row count is already in
-    # the manifest — the same scale gate as run_pipeline_fused costs no job
-    edge_rows = runner.stage_rows("sameas_edges", edges_fp)
+    label_rows = []
 
     def build_mapping() -> DataFrame:
-        if edge_rows is not None and edge_rows <= DRIVER_UNION_FIND_MAX_EDGES:
-            # small edge set: the distributed min-label loop pays several
-            # job round-trips per iteration (~3-4 s at bench scale) which
-            # dominate when the edges fit in driver memory; driver
-            # union-find produces the identical (entity, canonical) table
-            # (same lexicographic-min labels — the fused path's shortcut,
-            # equality pinned by tests). Arrow both ways, as in fused mode.
-            import pandas as pd
+        edge_rows = keep.stage_rows("sameas_edges", edges_fp)
+        iterations = []
 
-            epdf = edges.toPandas()
-            pairs = _driver_union_find(
-                zip(epdf["src"].tolist(), epdf["dst"].tolist()))
-            runner.record_event(
-                "cc_driver_union_find",
-                {"edges": int(edge_rows), "labels": len(pairs)})
-            return spark.createDataFrame(
-                pd.DataFrame(pairs, columns=["entity", "canonical"]),
-                schema="entity string, canonical string")
-        return canonical_mapping(
-            edges,
-            max_iter=config.cc_max_iter,
-            on_iteration=lambda it, changed: runner.record_event(
-                "cc_iteration", {"iteration": it, "labels_changed": changed}
-            ),
-        )
+        def on_iteration(it: int, changed: int) -> None:
+            iterations.append(it)
+            keep.record_event("cc_iteration",
+                              {"iteration": it, "labels_changed": changed})
 
-    mapping = runner.run("canonical_mapping", mapping_fp, build_mapping)
-    # manifest already holds the mapping's row count — reuse it for the
-    # conditional-broadcast decision instead of a probe job
-    mapping_rows = runner.stage_rows("canonical_mapping", mapping_fp)
+        cc, rows = connected_components_auto(
+            edges, edge_rows=edge_rows, max_iter=config.cc_max_iter,
+            on_iteration=on_iteration)
+        if not iterations:  # no distributed round ran: solved on the driver
+            keep.record_event("cc_driver_union_find",
+                              {"edges": int(edge_rows), "labels": rows})
+        label_rows.append(rows)
+        return cc.select(F.col("node").alias("entity"),
+                         F.col("component").alias("canonical"))
+
+    mapping = keep.run("canonical_mapping", mapping_fp, build_mapping)
+    # the mapping's row count drives the conditional broadcast: the gate
+    # returned it, or (resumed) the manifest holds it — no probe job
+    mapping_rows = (label_rows[0] if label_rows
+                    else keep.stage_rows("canonical_mapping", mapping_fp))
 
     triples_fp = fingerprint("triples", mentions_fp, media_fp, mapping_fp)
 
@@ -188,6 +274,8 @@ def run_pipeline(
             "subject_bucket",
             F.pmod(F.xxhash64("s"), F.lit(config.n_subject_buckets)).cast("int"),
         )
+        if not config.final_repartition:
+            return out
         # cluster rows by bucket before partitionBy: without this every task
         # writes into every bucket dir (tasks × buckets small files).
         # RANGE partitioning on (bucket, s) instead of hash-on-bucket: with
@@ -202,119 +290,9 @@ def run_pipeline(
         # subtree a second time before the write — checkpointed, the
         # sampler and the write share one materialization (guide §1.2)
         out = out.localCheckpoint(eager=False)
-        out = out.repartitionByRange(
-            config.output_partitions or config.n_subject_buckets,
-            "subject_bucket", "s",
-        )
-        return out
+        return out.repartitionByRange(config.n_subject_buckets,
+                                      "subject_bucket", "s")
 
-    extra = None
-    if config.collect_extra_metrics:
-        # ONE multi-aggregate job, not one full-table job per metric
-        def extra(df: DataFrame) -> dict:
-            row = df.agg(
-                F.countDistinct("s").alias("distinct_subjects"),
-                F.countDistinct("g").alias("graphs"),
-            ).collect()[0]
-            return {"distinct_subjects": row["distinct_subjects"],
-                    "graphs": row["graphs"]}
-
-    return runner.run(
-        "triples", triples_fp, build_triples,
-        partition_by=["subject_bucket"],
-        extra_metrics=extra,
-    )
-
-
-# ---------------------------------------------------------------------------
-# fused mode: one Spark job end-to-end (throughput path)
-# ---------------------------------------------------------------------------
-
-# shared with canonicalize.py (moved there r9 so dedup's CC can reuse the
-# same crossover); re-exported here for existing importers
-from .canonicalize import (  # noqa: E402
-    DRIVER_UNION_FIND_MAX_EDGES,
-    _driver_union_find,
-)
-
-
-def run_pipeline_fused(
-    spark: SparkSession,
-    out_dir: str,
-    config: KGPipelineConfig = KGPipelineConfig(),
-    documents: Optional[DataFrame] = None,
-) -> DataFrame:
-    """Same logical pipeline as :func:`run_pipeline` but fused into one
-    lazy DAG with a single partitioned write: mentions are persisted in
-    memory (consumed by both the edge derivation and the triple build), the
-    canonical mapping is computed with driver union-find when the edge set
-    is small (broadcast back as a mapping table), and no intermediate
-    parquet checkpoints are written.
-
-    ``documents`` supplies an external corpus (same shape as
-    :func:`~pyrml_spark.kg.datagen.generate_documents`: BASELINE.json's
-    input_hint) — omitted, the synthetic corpus is generated. No
-    ``input_tag`` parameter: fused mode keeps no checkpoints, so there is
-    no resume identity to name.
-
-    Use for throughput benching / one-shot runs; use :func:`run_pipeline`
-    when stage-level resumability and lineage are required. Results are
-    identical (tests assert it)."""
-
-    if documents is None:
-        docs = generate_documents(spark, config.n_docs,
-                                  partitions=config.gen_partitions).persist()
-    else:
-        docs = documents.persist()
-    extractor = mentions_pandas if config.use_pandas_extractor else mentions_native
-    mentions = extractor(docs).persist()
-    edges = sameas_candidates(mentions).persist()
-    # size gate BEFORE any collect: a count() proves the set fits (or
-    # doesn't) without ever shipping an over-threshold edge list to the
-    # driver — collecting first would be the OOM itself at real scale.
-    # (A plain count, not limit(N+1).count(): CollectLimit's incremental
-    # partition scans bypass and partially populate the persist cache.)
-    probe = edges.count()
-    if probe <= DRIVER_UNION_FIND_MAX_EDGES:
-        import pandas as pd
-
-        # Arrow both ways: .collect()'s per-Row materialization and
-        # createDataFrame-from-tuples' per-row pickling are driver-serial
-        # costs that Amdahl straight off the scaling efficiency; toPandas /
-        # from-pandas move the same data as Arrow record batches.
-        epdf = edges.toPandas()
-        pairs = _driver_union_find(
-            zip(epdf["src"].tolist(), epdf["dst"].tolist()))
-        mapping = spark.createDataFrame(
-            pd.DataFrame(pairs, columns=["entity", "canonical"]))
-        mapping_rows = len(pairs)
-    else:  # pragma: no cover - exercised only at true scale
-        # Persist the CC fixpoint result BEFORE anything consumes it:
-        # unpersisted, maybe_broadcast's size probe would re-run the whole
-        # iterative fixpoint once, and the two rewrite joins (s-side and
-        # o-side) would run it again each. The count over the persisted
-        # table doubles as the broadcast row hint, so no probe job either.
-        mapping = canonical_mapping(
-            edges, max_iter=config.cc_max_iter).persist()
-        mapping_rows = mapping.count()
-    canon = assemble_canonical_triples(mentions, media_spans(docs), mapping,
-                                       mapping_rows=mapping_rows)
-    out = canon.withColumn(
-        "subject_bucket",
-        F.pmod(F.xxhash64("s"), F.lit(config.n_subject_buckets)).cast("int"),
-    )
-    if config.final_repartition:
-        # range-partitioned for balanced writer tasks (see run_pipeline);
-        # lazy checkpoint so the range sampler and the write share one
-        # materialization of the assembly
-        out = out.localCheckpoint(eager=False)
-        out = out.repartitionByRange(
-            config.output_partitions or config.n_subject_buckets,
-            "subject_bucket", "s")
-    out.write.mode("overwrite").partitionBy("subject_bucket").parquet(out_dir)
-    edges.unpersist()
-    mentions.unpersist()
-    docs.unpersist()
-    if mapping.is_cached:  # at-scale distributed-CC branch persisted it
-        mapping.unpersist()
-    return spark.read.parquet(out_dir)
+    return keep.run("triples", triples_fp, build_triples,
+                    partition_by=["subject_bucket"],
+                    extra_metrics=_table_metrics)

@@ -198,7 +198,8 @@ def dedup_neardup_clusters(spark: SparkSession, sf_dir: str,
     # crossover solves the components on the driver below the edge gate
     # (one checkpoint + count, no per-round job latency) and falls back to
     # the identical-output distributed loop above it (r9, guide §1.2)
-    labels = connected_components_auto(edges).select(
+    components, _ = connected_components_auto(edges)
+    labels = components.select(
         F.col("node").cast("bigint").alias("doc_id"),
         F.col("component").cast("bigint").alias("cluster_id"),
     )
