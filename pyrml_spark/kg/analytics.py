@@ -16,8 +16,8 @@ the "use the KG" side of the north rule's construct→materialize story.
   would diverge across engines in the reduction order. The iteration
   shape is the scalable one (edges ⋈ ranks → groupBy(dst) with map-side
   partial sums per round); a production run swaps the 2-round constant
-  for convergence-loop + localCheckpoint exactly as `canonicalize.py`
-  does for connected components.
+  for the fixed-point loop in `kg/fixpoint.py`, which connected
+  components and the SPARQL path closures already run on.
 """
 
 from __future__ import annotations

@@ -15,10 +15,10 @@ A 500-node alias chain converges in ~10 rounds instead of 500
 (``tests/test_kg_pipeline.py::test_cc_pointer_doubling_long_chain``).
 
 Each iteration is three hash joins (two on the edge table, one label
-self-join); ``localCheckpoint`` every iteration truncates the logical plan
-so the loop stays O(iter) not O(2^iter) at plan level; convergence is
-detected with an aggregate (changed-count). Bounded by ``max_iter`` with a
-loud failure, and every iteration's metrics land in the lineage manifest.
+self-join), run by :func:`.fixpoint.fixpoint`: it checkpoints every round
+so the loop stays O(iter) not O(2^iter) at plan level, detects convergence
+with the changed-count aggregate and fails loudly past ``max_iter``. Every
+iteration's metrics land in the lineage manifest.
 
 At 10^12-doc scale the edge table is huge but each iteration is a fixed
 number of shuffles on the same key — AQE handles skew (celebrity entities)
@@ -27,14 +27,12 @@ and the label table shrinks as components converge.
 
 from __future__ import annotations
 
-from typing import Callable, List, Optional, Tuple
+from typing import Callable, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-class ConvergenceError(RuntimeError):
-    pass
+from .fixpoint import fixpoint
 
 
 # driver union-find crossover (see connected_components_auto): below this many
@@ -117,22 +115,27 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
     on_iteration: Optional[Callable[[int, int], None]] = None,
-    double_from: int = 2,
 ) -> DataFrame:
     """edges(src, dst) → (node, component) where component = min node id
     (string min) in the connected component.
 
     Deterministic: labels are the lexicographic min of the node keys.
     """
-    return _min_label_components(edges, max_iter, on_iteration,
-                                 double_from)[0]
+    return _min_label_components(edges, max_iter, on_iteration)[0]
+
+
+# doubling can't jump further than propagation has reached, so it only pays
+# from round 2 on: short-diameter graphs (this corpus: alias chains of
+# length ≤ 3) converge before it ever runs, saving a self-join + checkpoint
+# job per round; long chains still get O(log diameter) total rounds
+# (measured: 500-node chain ≤ 14)
+DOUBLE_FROM = 2
 
 
 def _min_label_components(
     edges: DataFrame,
     max_iter: int = 25,
     on_iteration: Optional[Callable[[int, int], None]] = None,
-    double_from: int = 2,
 ) -> Tuple[DataFrame, int]:
     """:func:`connected_components` plus the label table's row count, which
     the convergence aggregate yields in the same job."""
@@ -152,7 +155,7 @@ def _min_label_components(
     labels = nodes.select("node", F.col("node").alias("component"))
     labels = labels.localCheckpoint(eager=True)
 
-    for it in range(max_iter):
+    def step(labels: DataFrame, it: int) -> DataFrame:
         # neighbor minimum: for each node, min of neighbors' labels
         nbr_min = (
             sym.join(labels, sym.dst == labels.node)
@@ -170,61 +173,28 @@ def _min_label_components(
                 ).alias("cand"),
             )
         )
-        # Pointer doubling: cand(v) ← cand(cand(v)). Labels only ever
-        # decrease (initialized to self, monotone min), so the lookup can't
-        # increase a label; coalesce guards the (impossible in a closed
-        # label table, cheap anyway) missing-key case. Materialized eagerly
-        # because BOTH sides of the self-join read it — a lazy checkpoint
-        # shared by two concurrently-materializing AQE stages re-derives
-        # the whole subtree twice (see BENCH/BASELINE.md, sameAs-subtree
-        # note).
-        #
-        # The doubling step is SKIPPED for the first ``double_from`` rounds:
-        # doubling can't jump further than propagation has reached, so it
-        # only pays from round 2 on — short-diameter graphs (this corpus:
-        # alias chains of length ≤ 3) converge before it ever runs, saving
-        # a self-join + checkpoint job per round; long chains still get
-        # O(log diameter) total rounds (measured: 500-node chain ≤ 14).
-        if it >= double_from:
+        cand = F.col("cand")
+        # Pointer doubling (from round DOUBLE_FROM): cand(v) ← cand(cand(v)).
+        # Labels only ever decrease (initialized to self, monotone min), so
+        # the lookup can't increase a label; coalesce guards the (impossible
+        # in a closed label table, cheap anyway) missing-key case.
+        # Materialized eagerly because BOTH sides of the self-join read it —
+        # a lazy checkpoint shared by two concurrently-materializing AQE
+        # stages re-derives the whole subtree twice (see BENCH/BASELINE.md,
+        # sameAs-subtree note).
+        if it >= DOUBLE_FROM:
             half = half.localCheckpoint(eager=True)
             lut = half.select(F.col("node").alias("lut_node"),
                               F.col("cand").alias("lut_cand"))
-            doubled = F.least(
-                F.col("cand"),
-                F.coalesce(F.col("lut_cand"), F.col("cand")),
-            )
-            new_labels = (
-                half.join(lut, half.cand == F.col("lut_node"), "left")
-                .select(
-                    "node",
-                    doubled.alias("component"),
-                    (doubled < F.col("old_component"))
-                    .cast("int").alias("changed"),
-                )
-            )
-        else:
-            new_labels = half.select(
-                "node",
-                F.col("cand").alias("component"),
-                (F.col("cand") < F.col("old_component"))
-                .cast("int").alias("changed"),
-            )
-        # lazy checkpoint + immediate aggregate: the agg action materializes
-        # the checkpoint AND returns the convergence count (plus the label
-        # row count) in ONE job per iteration (eager=True plus a separate
-        # agg ran two)
-        new_labels = new_labels.localCheckpoint(eager=False)
-        changed, rows = new_labels.agg(F.sum("changed"),
-                                       F.count(F.lit(1))).collect()[0]
-        changed = changed or 0
-        labels = new_labels.drop("changed")
-        if on_iteration:
-            on_iteration(it, int(changed))
-        if changed == 0:
-            return labels, rows
-    raise ConvergenceError(
-        f"connected_components did not converge in {max_iter} iterations"
-    )
+            half = half.join(lut, half.cand == F.col("lut_node"), "left")
+            cand = F.least(cand, F.coalesce(F.col("lut_cand"), cand))
+        return half.select(
+            "node",
+            cand.alias("component"),
+            (cand < F.col("old_component")).cast("int").alias("_changed"),
+        )
+
+    return fixpoint(labels, step, max_iter, on_iteration)
 
 
 def canonical_mapping(edges: DataFrame, **kw) -> DataFrame:
@@ -234,52 +204,6 @@ def canonical_mapping(edges: DataFrame, **kw) -> DataFrame:
     cc = connected_components(edges, **kw)
     return cc.select(F.col("node").alias("entity"),
                      F.col("component").alias("canonical"))
-
-
-def rewrite_entities(
-    triples: DataFrame,
-    mapping: DataFrame,
-    entity_prefix: str = "<http://kg.ex/ent/person/",
-    mapping_rows: Optional[int] = None,
-) -> DataFrame:
-    """Rewrite subject/object entity IRIs through the canonical mapping.
-
-    The mapping is keyed on the entity *surface key*; IRIs are rebuilt as
-    ``<prefix><canonical>>``. Broadcast is CONDITIONAL on size
-    (:func:`pyrml_spark.plans.tuning.maybe_broadcast`): at the north rule's
-    10^12-doc scale the mapping holds every aliased entity — billions of
-    rows — and a forced broadcast OOMs every executor, so above the ceiling
-    this degrades to a pair of shuffle hash joins on s/o (AQE skew-split /
-    ``plans.salting.salted_join`` for celebrity entities). ``mapping_rows``
-    lets callers who already know the count (checkpoint manifest,
-    driver-built mapping) skip the probe job."""
-    from ..plans.tuning import maybe_broadcast
-
-    suffix = ">"
-    m = maybe_broadcast(
-        mapping.select(
-            F.concat(F.lit(entity_prefix), F.col("entity"),
-                     F.lit(suffix)).alias("ent_iri"),
-            F.concat(F.lit(entity_prefix), F.col("canonical"),
-                     F.lit(suffix)).alias("canon_iri"),
-        ),
-        row_hint=mapping_rows,
-    )
-    ms = (m.withColumnRenamed("ent_iri", "s_ent")
-           .withColumnRenamed("canon_iri", "s_canon"))
-    mo = (m.withColumnRenamed("ent_iri", "o_ent")
-           .withColumnRenamed("canon_iri", "o_canon"))
-    out = (
-        triples.join(ms, triples.s == F.col("s_ent"), "left")
-        .join(mo, triples.o == F.col("o_ent"), "left")
-        .select(
-            F.coalesce(F.col("s_canon"), F.col("s")).alias("s"),
-            F.col("p"),
-            F.coalesce(F.col("o_canon"), F.col("o")).alias("o"),
-            F.col("g"),
-        )
-    )
-    return out
 
 
 def sameas_triples(mapping: DataFrame,

@@ -146,22 +146,6 @@ def mention_triples(mentions: DataFrame) -> DataFrame:
     return mentions_t.unionByName(type_t).unionByName(surface_t)
 
 
-def media_triples(media: DataFrame) -> DataFrame:
-    doc = F.concat(F.lit("<http://kg.ex/doc/"), F.col("doc_id"), F.lit(">"))
-    m = F.concat(F.lit("<"), F.col("media_ref"), F.lit(">"))
-    g = F.lit("<http://kg.ex/graph/media>")
-    has = media.select(
-        doc.alias("s"), F.lit("<http://kg.ex/p/hasMedia>").alias("p"),
-        m.alias("o"), g.alias("g"),
-    )
-    kind = media.select(
-        m.alias("s"), F.lit("<http://kg.ex/p/mediaKind>").alias("p"),
-        F.concat(F.lit('"'), F.col("kind"), F.lit('"')).alias("o"),
-        g.alias("g"),
-    )
-    return has.unionByName(kind)
-
-
 def sameas_candidates(mentions: DataFrame) -> DataFrame:
     """Candidate sameAs links from the alias convention: ``X_aka`` ↔ ``X``,
     ``X_aka2`` ↔ ``X_aka`` (multi-hop chains for the union-find stage).

@@ -48,14 +48,16 @@ at parse time — loud, never a silent approximation):
   ``( )``. Sequences and inverses DESUGAR into plain triple patterns
   with fresh hidden variables — they keep the BGP compiler's pruned
   scans and join ordering. Alternation of plain IRIs is one
-  ``p IN (...)`` scan; closures run pointer-doubling transitive closure
-  (O(log diameter) rounds, the CC machinery's shape). Zero-length
-  paths (``* ?``) connect every node OCCURRING IN THE GRAPH to itself —
-  a constant endpoint absent from the graph misses its spec-mandated
-  self-solution (documented deviation). Negated property sets ``!iri``
-  / ``!(iri|...)`` with FORWARD members desugar to one scan with a
-  ``NOT IN`` predicate filter (a fresh hidden predicate variable) and
-  compose with sequences; inverse members (``!(^p)``), ``^`` applied
+  ``p IN (...)`` scan. A closure with one constant endpoint runs a
+  seeded frontier BFS; otherwise it runs pointer-doubling transitive
+  closure (O(log diameter) rounds). Both run on the CC machinery's
+  fixed-point loop (``kg/fixpoint.py``). Zero-length paths (``* ?``)
+  connect every node OCCURRING IN THE GRAPH to itself — outside the
+  seeded ``*`` form, a constant endpoint absent from the graph misses
+  its spec-mandated self-solution (documented deviation). Negated
+  property sets ``!iri`` / ``!(iri|...)`` with FORWARD members desugar
+  to one scan with a ``NOT IN`` predicate filter (a fresh hidden
+  predicate variable) and compose with sequences; inverse members (``!(^p)``), ``^`` applied
   to a whole negated set, and negated sets under closures/alternations
   stay loud. Alternation/closure inside OPTIONAL/UNION stay loud.
 * ``FILTER`` expressions: ``&&  ||  !  ( )``, comparisons
@@ -173,6 +175,7 @@ from urllib.parse import urljoin
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .fixpoint import fixpoint
 from .query import BGPError, is_var, kg_query
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
@@ -2097,26 +2100,32 @@ def _bound_vars(pq: ParsedQuery) -> set:
 # ------------------------------------------------- property-path eval
 
 
+def _first_born(rows: DataFrame, keys, it: int) -> DataFrame:
+    """One path round's dedup and convergence flag: every row keeps the
+    round that first derived it (``_born``), and a row is new — changed —
+    when round ``it`` derived it. One aggregate stands in for a
+    ``distinct``, an anti-join against the known rows and a count."""
+    return (rows.groupBy(*keys).agg(F.min("_born").alias("_born"))
+            .withColumn("_changed", (F.col("_born") == it + 1).cast("int")))
+
+
 def _closure(edges: DataFrame) -> DataFrame:
     """Transitive closure of an (_a, _b) edge frame by pointer doubling
     (R ← R ∪ R⋈R each round) — O(log diameter) rounds, the same
-    convergence shape as the canonicalizer's connected components
-    (kg/canonicalize.py). Each round is one equi-join + distinct;
-    ``localCheckpoint`` cuts the lineage so round N is one job, not N.
-    Monotone growth makes the count-stable test a correct fixpoint
-    check."""
-    r = edges.distinct().localCheckpoint(eager=True)
-    n = r.count()
-    while True:
-        step = (r.alias("l")
-                .join(r.alias("r2"), F.col("l._b") == F.col("r2._a"))
-                .select(F.col("l._a").alias("_a"),
-                        F.col("r2._b").alias("_b")))
-        nxt = r.unionByName(step).distinct().localCheckpoint(eager=True)
-        m = nxt.count()
-        if m == n:
-            return nxt
-        r, n = nxt, m
+    convergence shape as the canonicalizer's connected components. Runs on
+    :func:`.fixpoint.fixpoint`: each round is one equi-join plus the
+    ``_first_born`` aggregate. No ``max_iter``: the set only grows and the
+    edge set is finite, so the loop always stops."""
+    def step(r: DataFrame, it: int) -> DataFrame:
+        derived = (r.alias("l")
+                   .join(r.alias("r2"), F.col("l._b") == F.col("r2._a"))
+                   .select(F.col("l._a").alias("_a"),
+                           F.col("r2._b").alias("_b"),
+                           F.lit(it + 1).alias("_born")))
+        return _first_born(r.unionByName(derived), ["_a", "_b"], it)
+
+    start = edges.select("_a", "_b", F.lit(0).alias("_born"))
+    return fixpoint(start, step)[0].drop("_born")
 
 
 def _graph_nodes(triples: DataFrame) -> DataFrame:
@@ -2142,10 +2151,10 @@ def _path_edges(triples: DataFrame, path) -> DataFrame:
       zero-length identity over the graph's node set, ? is edges ∪
       identity.
 
-    Scale note: a closure is evaluated on the FULL predicate-pruned
-    edge set and endpoint constants filter afterwards — correct but not
-    seeded; a bound-endpoint breadth-first seed (the spec's ALP) is the
-    optimization path if closures over huge predicates become hot."""
+    A closure here runs over the FULL predicate-pruned edge set; a
+    pattern with exactly one constant endpoint never gets here for its
+    outer closure — :func:`_path_pattern_df` sends it to the seeded BFS
+    (:func:`_seeded_reach`) instead."""
     if isinstance(path, PathIri):
         return (triples.filter(F.col("p") == F.lit(path.iri))
                 .select(F.col("s").alias("_a"), F.col("o").alias("_b")))
@@ -2185,26 +2194,25 @@ def _path_edges(triples: DataFrame, path) -> DataFrame:
 
 def _seeded_reach(edges: DataFrame, seed: str) -> DataFrame:
     """Nodes reachable from constant ``seed`` via 1+ edge hops —
-    frontier BFS (the spec's ALP shape): per round one equi-join of the
-    CURRENT frontier against the edge frame + an anti-join against the
-    reached set, so total work is proportional to the REACHABLE
-    subgraph, not the predicate's full transitive closure. O(diameter)
-    rounds (vs pointer doubling's O(log d) over the whole graph) — the
-    right trade when one endpoint is bound, which is exactly when the
-    reachable set is small. Returns one column ``_n``."""
-    frontier = (edges.filter(F.col("_a") == F.lit(seed))
-                .select(F.col("_b").alias("_n")).distinct()
-                .localCheckpoint(eager=True))
-    reached = frontier
-    while frontier.count() > 0:
-        step = (frontier.join(edges,
-                              frontier["_n"] == edges["_a"])
-                .select(F.col("_b").alias("_n")).distinct())
-        frontier = (step.join(reached, on="_n", how="left_anti")
-                    .localCheckpoint(eager=True))
-        reached = (reached.unionByName(frontier).distinct()
-                   .localCheckpoint(eager=True))
-    return reached
+    frontier BFS (the spec's ALP shape) on :func:`.fixpoint.fixpoint`:
+    per round one equi-join of the frontier — the nodes born in the last
+    round — against the edge frame, plus the ``_first_born`` aggregate,
+    so total work is proportional to the REACHABLE subgraph, not the
+    predicate's full transitive closure. O(diameter) rounds (vs pointer
+    doubling's O(log d) over the whole graph) — the right trade when one
+    endpoint is bound, which is exactly when the reachable set is small.
+    Returns one column ``_n``."""
+    hop = edges.select(F.col("_a").alias("_n"), "_b")
+
+    def step(reached: DataFrame, it: int) -> DataFrame:
+        derived = (reached.filter(F.col("_born") == it).join(hop, "_n")
+                   .select(F.col("_b").alias("_n"),
+                           F.lit(it + 1).alias("_born")))
+        return _first_born(reached.unionByName(derived), ["_n"], it)
+
+    start = (edges.filter(F.col("_a") == F.lit(seed))
+             .select(F.col("_b").alias("_n"), F.lit(0).alias("_born")))
+    return fixpoint(start, step)[0].drop("_born")
 
 
 def _path_pattern_df(triples: DataFrame, s_term: str, path,

@@ -390,7 +390,7 @@ QC_THRESHOLD = 0.05
 
 def qc_features(t: F.Column) -> tuple:
     """(n_tokens, weight_milli_sum) columns of the linear classifier over a
-    text column — reused by the batch op and the streaming curator."""
+    text column."""
     weights = F.array(*[F.lit(w) for w in QC_WEIGHTS])
     toks = F.split(t, r"\s+")
     bucket = lambda tok: (  # noqa: E731 — inline per-token hash

@@ -102,6 +102,26 @@ def test_cc_pointer_doubling_long_chain(spark):
     assert len(iters) <= 14, f"took {len(iters)} rounds for a {n}-chain"
 
 
+def test_cc_max_iter_bound_is_loud(spark):
+    """A loop still changing at ``max_iter`` raises instead of returning a
+    half-propagated labelling: the 500-node chain needs ~10 rounds, so a
+    bound of 3 must fail after exactly 3 reported rounds."""
+    from pyrml_spark.kg.fixpoint import ConvergenceError
+
+    n = 500
+    ids = [f"n{i:04d}" for i in range(n)]
+    edges = spark.createDataFrame(
+        [(ids[i + 1], ids[i]) for i in range(n - 1)], ["src", "dst"]
+    ).coalesce(4)
+    iters = []
+    with pytest.raises(ConvergenceError):
+        connected_components(
+            edges, max_iter=3,
+            on_iteration=lambda it, ch: iters.append((it, ch)))
+    assert [it for it, _ in iters] == [0, 1, 2]
+    assert all(ch > 0 for _, ch in iters)
+
+
 def test_canonicalization_merges_aliases(spark):
     docs = generate_documents(spark, 500)
     mentions = mentions_native(docs)

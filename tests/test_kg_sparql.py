@@ -817,6 +817,27 @@ def test_exec_path_seeded_closure(chain):
                           ("<http://c/4>",), ("<http://c/5>",)]
 
 
+def test_exec_path_long_chain_has_no_round_bound(spark):
+    """A 40-hop chain needs more rounds than connected components' default
+    bound of 25: the path closures are unbounded (monotone over a finite
+    edge set), so a query that has an answer must return it, not raise."""
+    rows = [(f"<http://c/{i}>", "<http://c/next>", f"<http://c/{i + 1}>")
+            for i in range(40)]
+    long_chain = spark.createDataFrame(rows, ["s", "p", "o"])
+    nodes = [(f"<http://c/{i}>",) for i in range(41)]
+    out = sparql_select(long_chain, CPFX + "SELECT ?b WHERE "
+                        "{ <http://c/0> c:next+ ?b }")
+    assert _rows(out) == sorted(nodes[1:])
+    out = sparql_select(long_chain, CPFX + "SELECT ?a WHERE "
+                        "{ ?a c:next+ <http://c/40> }")
+    assert _rows(out) == sorted(nodes[:-1])
+    out = _rows(sparql_select(long_chain, CPFX + "SELECT ?a ?b WHERE "
+                              "{ ?a c:next+ ?b }"))
+    assert len(out) == 820
+    assert out == sorted((f"<http://c/{i}>", f"<http://c/{j}>")
+                         for i in range(41) for j in range(i + 1, 41))
+
+
 # ------------------------------------------------------------ DESCRIBE
 
 

@@ -123,7 +123,7 @@ def test_kg_assembly_large_mapping_does_not_broadcast(spark):
     from pyrml_spark.kg.extract import (assemble_canonical_triples,
                                         media_spans, mentions_native,
                                         sameas_candidates)
-    from pyrml_spark.kg.canonicalize import canonical_mapping, rewrite_entities
+    from pyrml_spark.kg.canonicalize import canonical_mapping
     from pyrml_spark.plans.tuning import BROADCAST_MAX_ROWS
 
     docs = generate_documents(spark, 200)
@@ -135,14 +135,6 @@ def test_kg_assembly_large_mapping_does_not_broadcast(spark):
     plan = plan_of(out)
     assert "BroadcastHashJoin" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan
-    # same contract on the generic rewrite helper (joins on s AND o);
-    # mention_triples has no joins of its own, so any broadcast in the plan
-    # would come from the rewrite
-    from pyrml_spark.kg.extract import mention_triples
-
-    triples = mention_triples(mentions)
-    plan2 = plan_of(rewrite_entities(triples, mapping, mapping_rows=big_hint))
-    assert "BroadcastHashJoin" not in plan2, plan2
 
 
 def test_ann_topk_pre_reduces_before_global_rank(spark):

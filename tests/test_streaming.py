@@ -58,122 +58,3 @@ def test_stream_mentions_schema(spark):
         m = stream_mentions(read_document_stream(spark, in_dir))
         assert {"doc_id", "etype", "surface", "offset"} <= set(m.columns)
         assert m.isStreaming
-
-
-def test_stateful_sessionize_stream(spark):
-    """applyInPandasWithState session operator: gap-split within and ACROSS
-    micro-batches, event-time-timeout flush, append-mode closed sessions.
-
-    Three files drained as one-file micro-batches; the last file carries a
-    far-future sentinel event whose watermark advance times out every open
-    session. Expected sessions computed independently."""
-    import pandas as pd
-
-    from pyspark.sql import types as T
-    from pyrml_spark.streaming.sessionize_stream import sessionize_stream
-
-    t0 = 1_700_000_000
-    schema = T.StructType([
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("value", T.DoubleType()),
-    ])
-
-    def rows_df(rows):
-        pdf = pd.DataFrame(rows, columns=["user_id", "event_id", "epoch",
-                                          "value"])
-        pdf["ts"] = pd.to_datetime(pdf.pop("epoch"), unit="s")
-        return spark.createDataFrame(pdf[["user_id", "event_id", "ts",
-                                          "value"]], schema)
-
-    batches = [
-        # user 1 two events 10 min apart; user 2 one event
-        [(1, 1, t0, 1.0), (1, 2, t0 + 600, 2.0), (2, 3, t0, 5.0)],
-        # user 1: 60 min after last → NEW session; user 2: +20 min → same
-        [(1, 4, t0 + 4200, 3.0), (2, 5, t0 + 1200, 7.0)],
-        # sentinel advances the watermark ~20h → times out all opens
-        [(999, 6, t0 + 72000, 0.0)],
-    ]
-
-    with tempfile.TemporaryDirectory() as d:
-        in_dir = os.path.join(d, "in")
-        os.makedirs(in_dir)
-        for i, rows in enumerate(batches):
-            rows_df(rows).coalesce(1).write.parquet(
-                os.path.join(in_dir, f"b{i}"))
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", 1)
-                  .parquet(in_dir + "/*"))
-        sessions = sessionize_stream(stream, gap_minutes=30,
-                                     watermark="10 minutes")
-        q = (sessions.writeStream.format("memory")
-             .queryName("sess_test").outputMode("append")
-             .option("checkpointLocation", os.path.join(d, "ckpt"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(300)
-        got = {(r["user_id"], int(r["session_start"]), r["n_events"],
-                round(r["total_value"], 6))
-               for r in spark.sql("SELECT * FROM sess_test").collect()}
-
-    expected = {
-        (1, t0, 2, 3.0),           # events 1+2 (gap 10 min)
-        (1, t0 + 4200, 1, 3.0),    # event 4 (70 min after start, >30 gap)
-        (2, t0, 2, 12.0),          # events 3+5 (gap 20 min)
-    }
-    assert got == expected, got
-
-
-def test_curate_stream_matches_batch(spark):
-    """Streaming curation (dedup → redact → gate) over two file batches
-    equals the batch twin on (fingerprint, redacted, logit) — doc_id of the
-    dedup survivor is arrival-order-dependent, the curated CONTENT is not."""
-    from pyrml_spark.streaming.doc_stream import (
-        curate_batch,
-        curate_stream,
-        read_doc_stream,
-    )
-
-    with tempfile.TemporaryDirectory() as d:
-        in_dir = os.path.join(d, "in")
-        out_dir = os.path.join(d, "out")
-        ckpt = os.path.join(d, "ckpt")
-        base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        docs = base.limit(60).select(
-            "doc_id",
-            F.concat(
-                F.col("text"),
-                F.when(F.col("doc_id") % 2 == 0,
-                       F.concat(F.lit(" ping admin"),
-                                F.col("doc_id").cast("string"),
-                                F.lit("@example.org from 10.9.9.9")))
-                .otherwise(F.lit("")),
-            ).alias("text"),
-            "lang", "source",
-            F.timestamp_seconds(F.lit(1700000000)).alias("ingest_ts"),
-        ).cache()
-        # batch 1: originals; batch 2: exact-duplicate texts under new ids
-        docs.write.parquet(in_dir, mode="overwrite")
-        dups = docs.filter(F.col("doc_id") < 20).withColumn(
-            "doc_id", F.col("doc_id") + 100000)
-        dups.write.mode("append").parquet(in_dir)
-
-        curated = curate_stream(read_doc_stream(spark, in_dir))
-        assert curated.isStreaming
-        q = (curated.writeStream.format("parquet")
-             .option("path", out_dir).option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-        got = spark.read.parquet(out_dir)
-        expected = curate_batch(docs.unionByName(dups).drop("ingest_ts"))
-        key = ["fingerprint", "redacted", "quality_logit"]
-        got_set = {tuple(r) for r in got.select(*key).collect()}
-        exp_set = {tuple(r) for r in expected.select(*key).collect()}
-        assert got_set == exp_set
-        assert got.count() == expected.count()  # dedup kept exactly one copy
-        # the gate actually dropped something and PII was actually redacted
-        assert got.count() < docs.count()
-        red = got.filter(F.col("redacted").contains("[EMAIL]"))
-        assert red.count() > 0
-        assert got.filter(F.col("redacted").contains("@example.org")).count() == 0
