@@ -202,12 +202,11 @@ spark.sparkContext.setLogLevel("ERROR")
 # final_repartition=True: bucket-aligned output tasks (32 clean files; an
 # unaligned partitionBy write forks tasks×buckets small files whose commit
 # is driver-serial).
-# use_pandas_extractor=False: the regex extractor compiles to native Columns
-# (whole-stage codegen). The Arrow/pandas extractor is the pluggable
-# model-NER slot (equality-tested in tests/test_kg_pipeline.py) but its
-# separate python-worker processes fight the JVM for the SAME caged cores in
-# local mode (measured 1.90× at 1→4 vs 3.18× native) — a real cluster gives
-# workers their own reserved executor cores.
+# use_pandas_extractor is a no-op (the extractor is native Columns, whole-
+# stage codegen); it stays here as the field these recorded runs passed.
+# The Arrow/pandas extractor it once selected ran python workers that fought
+# the JVM for the SAME caged cores in local mode (measured 1.90× at 1→4 vs
+# 3.18× native).
 _CFG = dict(use_pandas_extractor=False, gen_partitions=64,
             final_repartition=True)
 # untimed warmup: JIT/codegen/python-worker spin-up happen once per JVM

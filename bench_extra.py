@@ -21,22 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import SparkSession
-
-
-def build_session(cpus: int) -> SparkSession:
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("pyrml_spark_bench_extra")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_BENCH_MEM", "48g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+from pyrml_spark.plans.tuning import build_session  # noqa: E402
 
 
 def main() -> None:
@@ -52,7 +37,11 @@ def main() -> None:
     from __spark_entry__ import all_queries
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = build_session(cpus)
+    spark = build_session(
+        "pyrml_spark_bench_extra", master=f"local[{cpus}]",
+        shuffle_partitions=max(cpus, 8),
+        driver_memory=os.environ.get("SPARK_BENCH_MEM", "48g"),
+    )
     spark.sparkContext.setLogLevel("ERROR")
     qmap = all_queries()
     names = args.queries or list(qmap)

@@ -68,15 +68,11 @@ def main(argv=None) -> int:
         k, _, v = kv.partition("=")
         template_vars[k] = v
 
-    from pyspark.sql import SparkSession
+    from .plans.tuning import build_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.parallelism}]")
-        .appName("pyrml_spark_cli")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+    spark = build_session(
+        "pyrml_spark_cli", master=f"local[{args.parallelism}]",
+        shuffle_partitions=max(args.parallelism, 8),
     )
     spark.sparkContext.setLogLevel("ERROR")
 

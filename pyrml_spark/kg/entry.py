@@ -73,7 +73,7 @@ def kg_pipeline_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tempfile.mkdtemp(prefix="kg_entry_")
     df = run_pipeline(
         spark, d,
-        KGPipelineConfig(n_docs=_N_DOCS_CHECK, use_pandas_extractor=False),
+        KGPipelineConfig(n_docs=_N_DOCS_CHECK),
         documents=_docs(spark),
         input_tag=f"md5-{_N_DOCS_CHECK}",
     )

@@ -437,8 +437,10 @@ def lsh_cosine_neardup(emb: DataFrame,
     # side), so the single captured copy is strictly lighter; above the
     # ceiling the attach-join shape (broadcast or AQE shuffle join) is the
     # scale-safe fallback.
+    # an empty table has no matrix to capture (np.stack needs a row): it
+    # takes the attach-join path, which returns the empty result
     captured = None
-    if n_emb_hint * dim <= 64_000_000:
+    if 0 < n_emb_hint * dim <= 64_000_000:
         epdf = emb.select(
             "vec_id",
             F.col("embedding").cast("array<float>").alias("e")).toPandas()

@@ -92,18 +92,6 @@ def literal(lex: str, lang: Optional[str] = None, datatype: Optional[str] = None
     return ("literal", lex, lang, datatype)
 
 
-def is_iri(t: Term) -> bool:
-    return t[0] == "iri"
-
-
-def is_literal(t: Term) -> bool:
-    return t[0] == "literal"
-
-
-def is_bnode(t: Term) -> bool:
-    return t[0] == "bnode"
-
-
 def to_nt(t: Term) -> str:
     """Serialize a term tuple to its N-Triples lexical form."""
     kind = t[0]

@@ -54,8 +54,7 @@ def main(argv=None) -> int:
     from pyrml_spark.kg.pipeline import (KGPipelineConfig, run_pipeline,
                                          run_pipeline_fused)
 
-    cfg = KGPipelineConfig(n_docs=args.docs, n_subject_buckets=args.buckets,
-                           use_pandas_extractor=False)
+    cfg = KGPipelineConfig(n_docs=args.docs, n_subject_buckets=args.buckets)
     t0 = time.time()
     documents = (spark.read.parquet(args.input) if args.input else None)
     if args.mode == "fused":

@@ -1,5 +1,6 @@
 """Unit tests for the corpus-shaping ops beyond the oracle-parity sweep:
-URL canonicalization edge cases and boilerplate-chunk semantics."""
+URL canonicalization edge cases, boilerplate-chunk semantics and the LSH
+near-dup operator on an empty input."""
 
 import sys
 
@@ -118,3 +119,13 @@ def test_ngram_jaccard_size_filter_keeps_boundary_pair(spark, tmp_path):
     out = dedup_ngram_jaccard(spark, str(d), threshold=0.8).collect()
     assert [(r["doc_a"], r["doc_b"], r["jaccard"]) for r in out] == \
         [(1, 2, 0.8)]
+
+
+def test_lsh_cosine_neardup_empty_input(spark):
+    from pyrml_spark.ops.similarity import lsh_cosine_neardup
+
+    emb = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    out = lsh_cosine_neardup(emb)
+    assert out.dtypes == [("vec_a", "bigint"), ("vec_b", "bigint"),
+                          ("sim", "double")]
+    assert out.count() == 0

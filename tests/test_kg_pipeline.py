@@ -1,9 +1,10 @@
 """North-rule KG pipeline tests: determinism, span-sequence invariant,
-native≡pandas extractor, connected-components correctness, checkpoint
-resume, partitioned output."""
+extractor ≡ pure-Python regex reference, connected-components correctness,
+checkpoint resume, partitioned output."""
 
 import json
 import os
+import re
 import tempfile
 
 import pytest
@@ -12,8 +13,9 @@ from pyspark.sql import functions as F
 from pyrml_spark.kg.canonicalize import canonical_mapping, connected_components
 from pyrml_spark.kg.datagen import generate_documents
 from pyrml_spark.kg.extract import (
+    PERSON_RE,
+    PLACE_RE,
     mentions_native,
-    mentions_pandas,
     sameas_candidates,
 )
 from pyrml_spark.kg.pipeline import KGPipelineConfig, run_pipeline
@@ -60,12 +62,20 @@ def test_span_sequence_invariant(spark):
     assert orig == back
 
 
-def test_native_and_pandas_extractors_agree(spark):
+def test_extractor_matches_python_reference(spark):
+    """mentions_native ≡ re.findall over the collected text spans."""
     docs = generate_documents(spark, N_DOCS)
-    a = {tuple(r) for r in mentions_native(docs).collect()}
-    b = {tuple(r) for r in mentions_pandas(docs).collect()}
-    assert a == b
-    assert len(a) > 0
+    got = {tuple(r) for r in mentions_native(docs).collect()}
+    want = set()
+    for d in docs.collect():
+        for i, span in enumerate(d["spans"]):
+            if span["kind"] != "text":
+                continue
+            for etype, pattern in (("person", PERSON_RE), ("place", PLACE_RE)):
+                for surface in re.findall(pattern, span["text"]):
+                    want.add((d["doc_id"], i, span["offset"], etype, surface))
+    assert got == want
+    assert len(got) > 0
 
 
 def test_connected_components_chains(spark):

@@ -355,3 +355,42 @@ def test_sparql_query_plan_is_pruned_sink_scan(spark):
     plan = plan_of(kg_sparql_notexists(spark, SF_DIR))
     assert "LeftAnti" in plan, plan
     assert "CartesianProduct" not in plan, plan
+
+
+PYTHON_EVAL_NODES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython",
+                     "FlatMapGroupsInPandas", "PythonMapInArrow")
+
+
+def test_default_kg_pipeline_has_no_python_eval(spark, tmp_path, monkeypatch):
+    """The default KG build, checkpointed and fused, starts no Python
+    workers: no stage DataFrame plans a Python-eval operator. The config is
+    the one the frozen bench harness passes (use_pandas_extractor=True)."""
+    from pyrml_spark.kg import pipeline as P
+    from pyrml_spark.kg.lineage import StageRunner
+
+    plans = {}
+
+    def capturing(run):
+        def wrapped(self, name, input_fp, build, *args, **kwargs):
+            def build_and_capture():
+                df = build()
+                plans[(mode, name)] = formatted(df)
+                return df
+            return run(self, name, input_fp, build_and_capture,
+                       *args, **kwargs)
+        return wrapped
+
+    monkeypatch.setattr(StageRunner, "run", capturing(StageRunner.run))
+    monkeypatch.setattr(P._InMemory, "run", capturing(P._InMemory.run))
+    cfg = P.KGPipelineConfig(n_docs=150, use_pandas_extractor=True)
+    for mode, run in (("checkpointed", P.run_pipeline),
+                      ("fused", P.run_pipeline_fused)):
+        run(spark, str(tmp_path / mode), cfg)
+
+    stages = {"documents", "mentions", "media_spans", "sameas_edges",
+              "canonical_mapping", "triples"}
+    assert set(plans) == {(m, s) for m in ("checkpointed", "fused")
+                          for s in stages}
+    for key, plan in plans.items():
+        found = [n for n in PYTHON_EVAL_NODES if n in plan]
+        assert not found, (key, found, plan)
