@@ -27,12 +27,14 @@ Compilation is the classic relational translation of a SPARQL BGP:
   variable names — plain hash/sort-merge equi-joins on high-cardinality
   IRI keys, which is exactly what AQE's skew handling and the sink's
   subject bucketing are for at 100 TB.
-* **Filter placement.** ``filters`` are ANSI-SQL boolean expressions over
-  variable names. A filter whose variables all come from one pattern is
-  pushed into every such pattern's scan (prunes before the first join —
-  and reaches the parquet reader as a pushed predicate where the
-  expression allows); multi-pattern filters apply at the earliest join
-  that binds all their variables.
+* **Filter placement.** A filter is an ANSI-SQL boolean expression over
+  variable names (its variables are found by name in the text), or a
+  ``(Column, var_names)`` pair that names them exactly — the SPARQL
+  front-end passes pairs. A filter whose variables all come from one
+  pattern is pushed into every such pattern's scan (prunes before the
+  first join — and reaches the parquet reader as a pushed predicate
+  where the expression allows); multi-pattern filters apply at the
+  earliest join that binds all their variables.
 
 The reference engine has no query surface at all (it only writes graphs
 — rdflib ``Dataset.serialize``, pyrml_mapper.py:137-140); this module is
@@ -43,9 +45,9 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-from typing import Dict, List, Optional, Sequence, Tuple, Union
+from typing import Dict, Iterable, List, Optional, Sequence, Tuple, Union
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _POSITIONS = ("s", "p", "o", "g")  # a pattern uses the first 3 or all 4
@@ -65,6 +67,10 @@ TOTAL_KEY = "__total__"
 # drop-in compatible; absent keys degrade to the constant divisor)
 _ND_S = "__nds__:"
 _ND_O = "__ndo__:"
+
+
+# an SQL boolean expression, or a Column with the variables it reads
+Filter = Union[str, Tuple[Column, Iterable[str]]]
 
 
 class BGPError(ValueError):
@@ -111,7 +117,7 @@ class PatternPlan:
     pattern: Tuple[str, ...]         # (s, p, o) or (s, p, o, g)
     proj: Dict[str, str]             # var name -> s/p/o position
     est_rows: float
-    scan_filters: List[str] = field(default_factory=list)  # pushed filters
+    scan_filters: List[Filter] = field(default_factory=list)  # pushed
 
 
 @dataclass
@@ -119,7 +125,7 @@ class BGPPlan:
     """Deterministic compile result: join order + filter placement."""
     order: List[PatternPlan]
     join_vars: List[List[str]]       # per join step (len = len(order)-1)
-    post_filters: List[Tuple[int, str]]  # (apply after join step i, expr)
+    post_filters: List[Tuple[int, Filter]]  # (after join step i, filter)
     out_vars: List[str]
 
 
@@ -154,28 +160,37 @@ def _estimate(pat: Sequence[str], stats: Optional[Dict[str, int]]) -> float:
     return base
 
 
-def _filter_deps(expr: str, known_vars: Sequence[str]) -> List[str]:
-    """Variables a filter expression references (word-boundary match
-    against the query's variable names — quoted literals are masked so a
-    var name inside a string constant doesn't count). Handles both
-    backslash escapes and ANSI ''-doubled quotes ("name = 'it''s'") —
-    a mis-masked tail would false-positive as a dependency and misplace
-    the filter onto a scan lacking the column."""
-    masked = re.sub(
-        r"'(?:[^'\\]|\\.|'')*'|\"(?:[^\"\\]|\\.|\"\")*\"", "''", expr)
-    deps = [v for v in known_vars
-            if re.search(rf"(?<![A-Za-z0-9_]){re.escape(v)}(?![A-Za-z0-9_])",
-                         masked)]
+def _filter_deps(f: Filter, known_vars: Sequence[str]) -> List[str]:
+    """Variables a filter references: the names a ``(Column, var_names)``
+    pair gives; for an SQL string, a word-boundary match against the
+    query's variable names — quoted literals are masked so a var name
+    inside a string constant doesn't count. Handles both backslash
+    escapes and ANSI ''-doubled quotes ("name = 'it''s'") — a mis-masked
+    tail would false-positive as a dependency and misplace the filter
+    onto a scan lacking the column."""
+    if isinstance(f, str):
+        masked = re.sub(
+            r"'(?:[^'\\]|\\.|'')*'|\"(?:[^\"\\]|\\.|\"\")*\"", "''", f)
+        deps = [v for v in known_vars
+                if re.search(
+                    rf"(?<![A-Za-z0-9_]){re.escape(v)}(?![A-Za-z0-9_])",
+                    masked)]
+    else:
+        deps = list(f[1])
     if not deps:
         raise BGPError(
-            f"filter {expr!r} references no query variable "
+            f"filter {f!r} references no query variable "
             f"(known: {list(known_vars)})")
     return deps
 
 
+def _filter_column(f: Filter) -> Column:
+    return F.expr(f) if isinstance(f, str) else f[0]
+
+
 def compile_bgp(
     patterns: Sequence[Sequence[str]],
-    filters: Sequence[str] = (),
+    filters: Sequence[Filter] = (),
     stats: Optional[Dict[str, int]] = None,
     select: Optional[Sequence[str]] = None,
 ) -> BGPPlan:
@@ -217,7 +232,7 @@ def compile_bgp(
     # whose variable set covers them (valid under inner-join semantics —
     # the join equates the variable across patterns); the rest wait for
     # the join step that binds their last dependency.
-    deferred: List[Tuple[frozenset, str]] = []
+    deferred: List[Tuple[frozenset, Filter]] = []
     for f_expr in filters:
         deps = frozenset(_filter_deps(f_expr, all_vars))
         hosts = [pl for pl in plans if deps <= set(pl.proj)]
@@ -247,7 +262,7 @@ def compile_bgp(
         order.append(nxt)
         bound |= set(nxt.proj)
 
-    post_filters: List[Tuple[int, str]] = []
+    post_filters: List[Tuple[int, Filter]] = []
     for deps, f_expr in deferred:
         have = set(order[0].proj)
         step = None
@@ -286,15 +301,15 @@ def _scan(triples: DataFrame, pl: PatternPlan) -> DataFrame:
             else:
                 seen[v] = pos
     df = df.select(*[F.col(pos).alias(v) for v, pos in pl.proj.items()])
-    for f_expr in pl.scan_filters:
-        df = df.filter(F.expr(f_expr))
+    for f in pl.scan_filters:
+        df = df.filter(_filter_column(f))
     return df
 
 
 def kg_query(
     triples: DataFrame,
     patterns: Sequence[Sequence[str]],
-    filters: Sequence[str] = (),
+    filters: Sequence[Filter] = (),
     select: Optional[Sequence[str]] = None,
     distinct: bool = True,
     stats: Union[Dict[str, int], str, None] = None,
@@ -307,6 +322,10 @@ def kg_query(
     ``distinct=True`` gives SPARQL ``SELECT DISTINCT`` set semantics —
     projection over a BGP is a bag otherwise.
 
+    Each filter is an ANSI-SQL boolean expression over variable names, or
+    a ``(Column, var_names)`` pair whose ``var_names`` are exactly the
+    variables the Column reads (they decide where it is placed).
+
     A 4-term pattern constrains/binds the graph column ``g`` (named
     graphs — SPARQL ``GRAPH``); the DataFrame must then carry ``g``."""
     if any(len(pat) == 4 for pat in patterns) and "g" not in triples.columns:
@@ -317,11 +336,10 @@ def kg_query(
         stats = predicate_stats(triples)
     plan = compile_bgp(patterns, filters=filters, stats=stats, select=select)
     acc = _scan(triples, plan.order[0])
-    pending = list(plan.post_filters)
     for j, pl in enumerate(plan.order[1:]):
         acc = acc.join(_scan(triples, pl), on=plan.join_vars[j])
-        for step, f_expr in [pf for pf in pending if pf[0] == j]:
-            acc = acc.filter(F.expr(f_expr))
-            pending.remove((step, f_expr))
+        for step, f in plan.post_filters:
+            if step == j:
+                acc = acc.filter(_filter_column(f))
     out = acc.select(*plan.out_vars)
     return out.distinct() if distinct else out

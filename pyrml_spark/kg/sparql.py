@@ -22,7 +22,7 @@ at parse time — loud, never a silent approximation):
   ``REDUCED`` runs as the bag (returning duplicates is conformant:
   REDUCED *permits* but does not require elimination). Aggregates:
   ``COUNT(*)``, ``COUNT([DISTINCT] ?v)``, ``SUM/AVG/MIN/MAX(?v)``
-  (numeric, over the lexical form via TRY_CAST — a non-numeric term
+  (numeric, over the lexical form via ``try_cast`` — a non-numeric term
   contributes NULL, which SQL aggregates skip, matching SPARQL's
   error-term elision), ``SAMPLE(?v)`` (implementation-defined choice:
   deterministically the encoding-order minimum), and
@@ -115,11 +115,12 @@ at parse time — loud, never a silent approximation):
   cannot express SPARQL's unbound-is-compatible rule; loud subset
   boundary, not an approximation).
 * ``HAVING (constraint) ...`` after GROUP BY (or over the implicit
-  group when SELECT has aggregates): constraints are comparisons over
-  **aggregate expressions and numeric constants** combined with
-  ``&& ||`` — per-solution or group-key constraints belong in FILTER
-  (loud; equivalent and cheaper before grouping). HAVING aggregates
-  ride the same single aggregation pass as hidden columns.
+  group when SELECT has aggregates): constraints use the FILTER
+  grammar (``&& || !``, parentheses, comparisons) over **aggregate
+  expressions and numeric constants** only — per-solution or group-key
+  constraints belong in FILTER (loud; equivalent and cheaper before
+  grouping). HAVING aggregates ride the same single aggregation pass as
+  hidden columns.
 * ``ORDER BY [ASC|DESC](?v) ...``, ``LIMIT n``, ``OFFSET n``. Order
   variables may be any in-scope variable (SPARQL orders before
   projection); with DISTINCT they must survive the projection (loud
@@ -136,12 +137,12 @@ FILTER semantics (documented, SPARQL-faithful where it matters):
 * ``=`` / ``!=`` against a term constant compare the full **encoded**
   term — SPARQL term equality (``"x"`` ≠ ``"x"@en`` ≠ ``"x"^^xsd:y``,
   exactly as RDF says). Against a **numeric** operand they compare
-  values (``"05"^^xsd:integer = 5``) via TRY_CAST of the lexical form
+  values (``"05"^^xsd:integer = 5``) via ``try_cast`` of the lexical form
   — a non-numeric term is a SPARQL type error and the row drops (for
   ``!=`` too), never an ANSI cast failure aborting the query.
 * ``< > <= >=`` with a numeric operand compare **values**: the
-  variable's lexical form is cast to DOUBLE; a non-numeric term casts
-  to NULL, the comparison is not true, and the row drops — which is
+  variable's lexical form is ``try_cast`` to a double; a non-numeric term
+  casts to NULL, the comparison is not true, and the row drops — which is
   precisely SPARQL's type-error-eliminates-the-row rule. With a string
   operand the comparison is codepoint order on the lexical form (the
   simple-literal case of SPARQL's operator table).
@@ -151,8 +152,11 @@ FILTER semantics (documented, SPARQL-faithful where it matters):
   a string is auto-coerced through ``STR`` — a documented convenience
   superset, never a different answer for a query SPARQL accepts.
 * ``REGEX`` runs as Spark ``rlike`` (Java regex — the closest engine to
-  the XPath dialect SPARQL specifies); the optional ``"i"`` flag maps
-  to an inline ``(?i)``. Other flags are rejected.
+  the XPath dialect SPARQL specifies); the optional flags (``i s m``
+  combinations) map to an inline ``(?flags)``. Other flags are rejected.
+* FILTER, HAVING and BIND expressions parse into one expression tree,
+  lowered once to Spark Columns; a filter's scope and its placement in
+  the BGP come from the exact variable set of its tree.
 
 ``LIMIT`` without ``ORDER BY`` over all output columns is accepted (it
 is valid SPARQL — any n rows satisfy it) but the choice of rows is then
@@ -167,12 +171,15 @@ sort+limit to TakeOrderedAndProject, no full sort materialized).
 
 from __future__ import annotations
 
+import operator
 import re
 from dataclasses import dataclass, field
-from typing import Dict, List, Optional, Tuple
+from decimal import Decimal
+from functools import reduce
+from typing import Dict, List, Optional, Tuple, Union
 from urllib.parse import urljoin
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .fixpoint import fixpoint
@@ -342,6 +349,109 @@ def _contains_neg(path) -> bool:
     return False
 
 
+# --- expression tree -------------------------------------------------
+#
+# FILTER, HAVING and BIND expressions, the IF condition, the VALUES
+# single-variable IN and the negated-property-set NOT IN all parse into
+# these nodes. Each node has an operand kind (what its value is) and its
+# exact variable set, which decides filter and BIND scope; :func:`_column`
+# lowers a node to a Spark Column at execution.
+
+_NUMERIC = "num"       # a number
+_TERM = "term"         # an ENCODED term constant (IRI or literal)
+_VAR = "var"           # a variable: an encoded-term column
+_LEX = "lex"           # a lexical form
+_IRI = "iri"           # an IRI's lexical form
+_ENC = "enc"           # an ENCODED term
+_BOOL = "bool"         # a boolean
+
+class _Node:
+    """Base of the expression nodes: a node's variable set is the union
+    of its operands' (a leaf without operands has none)."""
+    args: tuple = ()
+
+    @property
+    def vars(self) -> frozenset:
+        return frozenset().union(*(a.vars for a in self.args))
+
+
+@dataclass(frozen=True)
+class Var(_Node):
+    """``?name``."""
+    name: str
+    kind = _VAR
+
+    @property
+    def vars(self) -> frozenset:
+        return frozenset((self.name,))
+
+
+@dataclass(frozen=True)
+class Const(_Node):
+    """An encoded term (``kind=_TERM``) or a numeric token kept verbatim
+    (``kind=_NUMERIC``)."""
+    value: str
+    kind: str = _TERM
+
+
+@dataclass(frozen=True)
+class AggRef(_Node):
+    """A HAVING aggregate: the hidden column ``alias`` of the grouped
+    frame (see ``ParsedQuery.having_aggs``)."""
+    alias: str
+    kind = _NUMERIC
+
+
+# function → the kind of its result
+_CALL_KINDS = {
+    "STR": _LEX, "LANG": _LEX, "CONCAT": _LEX, "UCASE": _LEX,
+    "LCASE": _LEX, "SUBSTR": _LEX, "STRBEFORE": _LEX, "STRAFTER": _LEX,
+    "REPLACE": _LEX, "STRLEN": _NUMERIC, "IRI": _IRI, "DATATYPE": _IRI,
+    "STRDT": _ENC, "STRLANG": _ENC, "COALESCE": _ENC, "IF": _ENC,
+    "STRSTARTS": _BOOL, "STRENDS": _BOOL, "CONTAINS": _BOOL,
+    "REGEX": _BOOL, "BOUND": _BOOL, "LANGMATCHES": _BOOL, "ISIRI": _BOOL,
+    "ISLITERAL": _BOOL, "ISBLANK": _BOOL, "IN": _BOOL,
+}
+
+
+@dataclass(frozen=True)
+class Call(_Node):
+    """A function call. ``args`` are operand nodes; ``params`` are the
+    constant arguments the parser validated (a regex with its inline
+    flags, SUBSTR positions, a closing literal suffix, an IN list)."""
+    fn: str
+    args: tuple = ()
+    params: tuple = ()
+
+    @property
+    def kind(self) -> str:
+        return _CALL_KINDS[self.fn]
+
+
+@dataclass(frozen=True)
+class Compare(_Node):
+    """``lhs op rhs`` with op one of ``= != < > <= >=``."""
+    op: str
+    lhs: Expr
+    rhs: Expr
+    kind = _BOOL
+
+    @property
+    def args(self) -> tuple:
+        return (self.lhs, self.rhs)
+
+
+@dataclass(frozen=True)
+class Logic(_Node):
+    """``&&`` / ``||`` over two or more operands, or ``!`` over one."""
+    op: str
+    args: tuple
+    kind = _BOOL
+
+
+Expr = Union[Var, Const, AggRef, Call, Compare, Logic]
+
+
 @dataclass
 class ParsedQuery:
     """Inspectable parse result — everything the executors hand to the
@@ -350,14 +460,14 @@ class ParsedQuery:
     select_vars: Optional[List[str]]        # None == SELECT *
     distinct: bool
     patterns: List[Tuple[str, str, str]]    # required-group patterns
-    filters: List[str]                      # translated SQL expressions
+    filters: List[Expr]                     # FILTER expression trees
     # each OPTIONAL block: (patterns, filters) — left-joined in order
-    optionals: List[Tuple[List[Tuple[str, str, str]], List[str]]] = field(
+    optionals: List[Tuple[List[Tuple[str, str, str]], List[Expr]]] = field(
         default_factory=list)
     # top-level { g } UNION { g }: list of (patterns, filters) sides;
     # when set, patterns/filters/optionals above are empty
     union_groups: Optional[
-        List[Tuple[List[Tuple[str, str, str]], List[str]]]] = None
+        List[Tuple[List[Tuple[str, str, str]], List[Expr]]]] = None
     aggregates: List[Aggregate] = field(default_factory=list)
     group_by: List[str] = field(default_factory=list)
     template: List[Tuple[str, str, str]] = field(default_factory=list)
@@ -367,34 +477,33 @@ class ParsedQuery:
         default_factory=list)
     # MINUS { … } groups: anti-joined on shared vars (spec: a MINUS
     # side sharing no variable removes nothing)
-    minus_groups: List[Tuple[List[Tuple[str, str, str]], List[str]]] = \
+    minus_groups: List[Tuple[List[Tuple[str, str, str]], List[Expr]]] = \
         field(default_factory=list)
     # FILTER [NOT] EXISTS { … }: (positive?, patterns, filters) —
     # semi/anti join on the shared variables
     exists_filters: List[
-        Tuple[bool, List[Tuple[str, str, str]], List[str]]] = field(
+        Tuple[bool, List[Tuple[str, str, str]], List[Expr]]] = field(
         default_factory=list)
     # VALUES clauses: (var names, rows of encoded terms / None=UNDEF)
     values_clauses: List[
         Tuple[List[str], List[Tuple[Optional[str], ...]]]] = field(
         default_factory=list)
-    # BIND(expr AS ?alias): (alias, operand kind, SQL fragment)
-    binds: List[Tuple[str, str, str]] = field(default_factory=list)
+    # BIND(expr AS ?alias): (alias, expression)
+    binds: List[Tuple[str, Expr]] = field(default_factory=list)
     # required-group patterns that reference a BIND alias: executed as
     # an equi-join on the computed alias column after binds materialize
     bind_patterns: List[Tuple[str, ...]] = field(default_factory=list)
     # top-level FILTERs referencing a BIND alias: applied after the
     # binds (and bind_patterns) instead of inside the BGP
-    post_filters: List[str] = field(default_factory=list)
+    post_filters: List[Expr] = field(default_factory=list)
     # top-level FILTERs referencing OPTIONAL-introduced variables:
     # applied after every OPTIONAL left-joins (SPARQL group scope — the
     # filter sees the extended solutions; enables FILTER(!BOUND(?x)))
-    optional_filters: List[str] = field(default_factory=list)
+    optional_filters: List[Expr] = field(default_factory=list)
     # BINDs whose expression references OPTIONAL-introduced variables
     # (directly or via an earlier deferred alias): applied after the
     # left joins, before optional_filters — COALESCE-over-OPTIONAL
-    optional_binds: List[Tuple[str, str, str]] = field(
-        default_factory=list)
+    optional_binds: List[Tuple[str, Expr]] = field(default_factory=list)
     # { SELECT ... } subqueries in the required group: each runs as its
     # own full SELECT (fresh scope — SPARQL bottom-up evaluation) and
     # inner-joins the outer bag on the shared PROJECTED variables
@@ -407,10 +516,10 @@ class ParsedQuery:
     order_by: List[Tuple[str, bool]] = field(default_factory=list)  # (var, asc)
     limit: Optional[int] = None
     offset: Optional[int] = None
-    # HAVING constraints: SQL fragments over hidden aggregate columns
+    # HAVING constraints: expressions over hidden aggregate columns
     # (``having_aggs``, aliased ``_h0, _h1, …`` — computed in the same
     # groupBy().agg() as the SELECT aggregates, filtered, then dropped)
-    having: List[str] = field(default_factory=list)
+    having: List[Expr] = field(default_factory=list)
     having_aggs: List[Aggregate] = field(default_factory=list)
 
 
@@ -427,11 +536,14 @@ class _Parser:
         self._pending_minus: List[tuple] = []
         self._pending_exists: List[tuple] = []
         self._pending_values: List[tuple] = []
-        self._pending_binds: List[Tuple[str, str, str]] = []
+        self._pending_binds: List[Tuple[str, Expr]] = []
         # scan filters emitted by path desugaring (negated property
         # sets) — drained into the enclosing group's FILTER list
-        self._pending_scan_filters: List[str] = []
+        self._pending_scan_filters: List[Expr] = []
         self._pending_subqueries: List[ParsedQuery] = []
+        # HAVING's hidden aggregates while its constraints parse; None
+        # elsewhere (aggregate operands are allowed only in HAVING)
+        self._having_aggs: Optional[List[Aggregate]] = None
 
     # -- token helpers ----------------------------------------------
     def peek(self) -> _Tok:
@@ -502,16 +614,6 @@ class _Parser:
             return quoted
         return f"{quoted}^^{dt_iri}"
 
-    @staticmethod
-    def _number_term(text: str) -> str:
-        if re.fullmatch(r"[+-]?\d+", text):
-            dt = "integer"
-        elif "e" in text.lower():
-            dt = "double"
-        else:
-            dt = "decimal"
-        return f'"{text}"^^<{XSD}{dt}>'
-
     def _term(self, position: str) -> str:
         """One pattern term → a kg_query term string (?var or encoded
         constant)."""
@@ -536,7 +638,7 @@ class _Parser:
             if t.kind == "STRING":
                 return self._string_term(t.text)
             if t.kind == "NUMBER":
-                return self._number_term(t.text)
+                return _number_term(t.text)
             if t.kind == "OP" and t.text == "[":
                 raise SPARQLUnsupportedError(
                     f"blank node syntax at offset {t.pos} is outside "
@@ -649,13 +751,28 @@ class _Parser:
     def _select_expression(self) -> Aggregate:
         self.expect_op("(")
         t = self.next()
-        name = t.text.upper() if t.kind == "NAME" else ""
-        if name not in _AGG_FNS:
+        if not (t.kind == "NAME" and t.text.upper() in _AGG_FNS):
             self._reject_unsupported(t)
             raise SPARQLUnsupportedError(
                 f"SELECT expression {t.text!r} at offset {t.pos} is "
                 "outside the supported subset (COUNT/SUM/AVG/MIN/MAX "
                 "aggregates only)")
+        agg = self._aggregate_call(t, having=False)
+        self.expect_kw("as")
+        al = self.next()
+        if al.kind != "VAR":
+            raise SPARQLError(
+                f"expected ?alias after AS at offset {al.pos}")
+        self.expect_op(")")
+        agg.alias = al.text[1:]
+        return agg
+
+    def _aggregate_call(self, t: _Tok, having: bool) -> Aggregate:
+        """``AGG([DISTINCT] ?v | * [; SEPARATOR="..."])`` after its name
+        token ``t`` — shared by SELECT expressions and HAVING operands.
+        The alias is left for the caller."""
+        name = t.text.upper()
+        ctx = "HAVING " if having else ""
         self.expect_op("(")
         agg_distinct = False
         if self.at_kw("distinct"):
@@ -665,18 +782,20 @@ class _Parser:
         a = self.next()
         if a.kind == "VAR":
             var = a.text[1:]
-        elif a.kind == "OP" and a.text == "*" and name == "COUNT":
-            var = None
-        else:
+            if having and var not in self.vars_seen:
+                raise SPARQLError(
+                    f"HAVING aggregates over ?{var} (offset {a.pos}), "
+                    "not bound by any pattern")
+        elif not (a.kind == "OP" and a.text == "*" and name == "COUNT"):
             raise SPARQLError(
                 f"expected ?var{' or *' if name == 'COUNT' else ''} in "
-                f"{name}() at offset {a.pos}")
-        if var is None and agg_distinct:
+                f"{ctx}{name}() at offset {a.pos}")
+        if agg_distinct and (var is None
+                             or name not in ("COUNT", "GROUP_CONCAT")):
             raise SPARQLUnsupportedError(
-                "COUNT(DISTINCT *) is outside the supported subset")
-        if agg_distinct and name not in ("COUNT", "GROUP_CONCAT"):
-            raise SPARQLUnsupportedError(
-                f"{name}(DISTINCT ...) is outside the supported subset")
+                f"{name}(DISTINCT {'*' if var is None else '?' + var}) "
+                f"{'in HAVING ' if having else ''}is outside the "
+                "supported subset")
         sep: Optional[str] = None
         if name == "GROUP_CONCAT" and (
                 self.peek().kind == "OP" and self.peek().text == ";"):
@@ -694,14 +813,8 @@ class _Parser:
                     f"{st.pos}")
             sep = _unescape(st.text[1:-1])
         self.expect_op(")")
-        self.expect_kw("as")
-        al = self.next()
-        if al.kind != "VAR":
-            raise SPARQLError(
-                f"expected ?alias after AS at offset {al.pos}")
-        self.expect_op(")")
-        return Aggregate(fn=name, var=var, distinct=agg_distinct,
-                         alias=al.text[1:], sep=sep)
+        return Aggregate(fn=name, var=var, distinct=agg_distinct, alias="",
+                         sep=sep)
 
     def _group_by(self) -> List[str]:
         if not self.at_kw("group"):
@@ -723,17 +836,18 @@ class _Parser:
         return out
 
     def _having(self, has_aggregates: bool) -> Tuple[
-            List[str], List[Aggregate]]:
-        """``HAVING (constraint)+`` → (SQL fragments, hidden aggregates).
+            List[Expr], List[Aggregate]]:
+        """``HAVING (constraint)+`` → (constraints, hidden aggregates).
 
-        Operands are aggregate expressions and numeric constants only —
-        per SPARQL §11.4.8 HAVING sees the GROUPED solutions, so any
-        per-solution constraint belongs in FILTER (and a constraint on
-        a group key IS a per-solution constraint: filtering before or
-        after grouping on a key is equivalent, and before is cheaper).
-        Identical aggregate expressions share one hidden column; SQL
-        comparisons over them are plain numeric (COUNT → long, others →
-        TRY_CAST double), never encoded-term logic."""
+        Constraints use the FILTER grammar, but their operands are
+        aggregate expressions and numeric constants only — per SPARQL
+        §11.4.8 HAVING sees the GROUPED solutions, so any per-solution
+        constraint belongs in FILTER (and a constraint on a group key IS
+        a per-solution constraint: filtering before or after grouping on
+        a key is equivalent, and before is cheaper). Identical aggregate
+        expressions share one hidden column; comparisons over them are
+        plain numeric (COUNT → long, others → double), never
+        encoded-term logic."""
         if not self.at_kw("having"):
             return [], []
         t = self.next()
@@ -742,104 +856,49 @@ class _Parser:
                 f"HAVING at offset {t.pos} without an aggregate in "
                 "SELECT is outside the supported subset (an implicit "
                 "single group projecting no aggregate; use FILTER)")
-        self._having_aggs: List[Aggregate] = []
-        conds: List[str] = []
+        self._having_aggs = []
+        conds: List[Expr] = []
         while self.peek().kind == "OP" and self.peek().text == "(":
             self.next()
-            conds.append(self._having_or())
+            conds.append(self._or_expr())
             self.expect_op(")")
+        aggs, self._having_aggs = self._having_aggs, None
         if not conds:
             t = self.peek()
             raise SPARQLError(
                 f"expected (constraint) after HAVING at offset {t.pos}")
-        return conds, self._having_aggs
+        return conds, aggs
 
-    def _having_or(self) -> str:
-        parts = [self._having_and()]
-        while self.peek().kind == "OP" and self.peek().text == "||":
-            self.next()
-            parts.append(self._having_and())
-        return (parts[0] if len(parts) == 1
-                else "(" + " OR ".join(parts) + ")")
-
-    def _having_and(self) -> str:
-        parts = [self._having_cmp()]
-        while self.peek().kind == "OP" and self.peek().text == "&&":
-            self.next()
-            parts.append(self._having_cmp())
-        return (parts[0] if len(parts) == 1
-                else "(" + " AND ".join(parts) + ")")
-
-    def _having_cmp(self) -> str:
-        lhs = self._having_operand()
-        t = self.next()
-        ops = {"=": "=", "!=": "<>", "<": "<", ">": ">",
-               "<=": "<=", ">=": ">="}
-        if not (t.kind == "OP" and t.text in ops):
-            raise SPARQLError(
-                f"expected comparison operator in HAVING at offset "
-                f"{t.pos}, got {t.text!r}")
-        rhs = self._having_operand()
-        return f"({lhs} {ops[t.text]} {rhs})"
-
-    def _having_operand(self) -> str:
-        t = self.peek()
+    def _aggregate_operand(self, t: _Tok) -> Expr:
         if t.kind == "NUMBER":
-            self.next()
-            return t.text
-        if t.kind == "NAME" and t.text.upper() in _AGG_FNS:
-            if t.text.upper() not in _NUMERIC_AGG_FNS:
-                raise SPARQLUnsupportedError(
-                    f"{t.text.upper()} in HAVING at offset {t.pos} is "
-                    "outside the supported subset (HAVING comparisons "
-                    "are numeric; SAMPLE/GROUP_CONCAT results are not)")
-            name = self.next().text.upper()
-            self.expect_op("(")
-            agg_distinct = False
-            if self.at_kw("distinct"):
-                self.next()
-                agg_distinct = True
-            a = self.next()
-            if a.kind == "VAR":
-                var: Optional[str] = a.text[1:]
-                if var not in self.vars_seen:
-                    raise SPARQLError(
-                        f"HAVING aggregates over ?{var} (offset "
-                        f"{a.pos}), not bound by any pattern")
-            elif a.kind == "OP" and a.text == "*" and name == "COUNT":
-                var = None
-            else:
-                raise SPARQLError(
-                    f"expected ?var{' or *' if name == 'COUNT' else ''}"
-                    f" in HAVING {name}() at offset {a.pos}")
-            if agg_distinct and (name != "COUNT" or var is None):
-                raise SPARQLUnsupportedError(
-                    f"{name}(DISTINCT {'*' if var is None else '?' + var}"
-                    ") in HAVING is outside the supported subset")
-            self.expect_op(")")
-            key = (name, var, agg_distinct)
-            for agg in self._having_aggs:
-                if (agg.fn, agg.var, agg.distinct) == key:
-                    return _col(agg.alias)
-            # `_h<n>` is a valid SPARQL variable name: skip over any the
-            # query itself binds, or the aggregated frame would carry two
-            # columns of that name (ambiguous-reference at execution —
-            # ADVICE r8)
-            taken = set(self.vars_seen) | {a.alias
-                                           for a in self._having_aggs}
-            n = len(self._having_aggs)
-            while f"_h{n}" in taken:
-                n += 1
-            agg = Aggregate(fn=name, var=var, distinct=agg_distinct,
-                            alias=f"_h{n}")
-            self._having_aggs.append(agg)
-            return _col(agg.alias)
-        self._reject_unsupported(t)
-        raise SPARQLUnsupportedError(
-            f"HAVING operand {t.text!r} at offset {t.pos} is outside "
-            "the supported subset (aggregate expressions and numeric "
-            "constants only — per-solution or group-key constraints "
-            "belong in FILTER)")
+            return Const(t.text, _NUMERIC)
+        if not (t.kind == "NAME" and t.text.upper() in _AGG_FNS):
+            raise SPARQLUnsupportedError(
+                f"HAVING operand {t.text!r} at offset {t.pos} is outside "
+                "the supported subset (aggregate expressions and numeric "
+                "constants only — per-solution or group-key constraints "
+                "belong in FILTER)")
+        if t.text.upper() not in _NUMERIC_AGG_FNS:
+            raise SPARQLUnsupportedError(
+                f"{t.text.upper()} in HAVING at offset {t.pos} is "
+                "outside the supported subset (HAVING comparisons "
+                "are numeric; SAMPLE/GROUP_CONCAT results are not)")
+        agg = self._aggregate_call(t, having=True)
+        for prior in self._having_aggs:
+            if (prior.fn, prior.var, prior.distinct) == (
+                    agg.fn, agg.var, agg.distinct):
+                return AggRef(prior.alias)
+        # `_h<n>` is a valid SPARQL variable name: skip over any the
+        # query itself binds, or the aggregated frame would carry two
+        # columns of that name (ambiguous-reference at execution —
+        # ADVICE r8)
+        taken = set(self.vars_seen) | {a.alias for a in self._having_aggs}
+        n = len(self._having_aggs)
+        while f"_h{n}" in taken:
+            n += 1
+        agg.alias = f"_h{n}"
+        self._having_aggs.append(agg)
+        return AggRef(agg.alias)
 
     def _limit_offset(self, pq: ParsedQuery) -> None:
         while self.at_kw("limit", "offset"):
@@ -889,8 +948,7 @@ class _Parser:
                     "bind them")
             pq = ParsedQuery(form="", select_vars=None, distinct=False,
                              patterns=[], filters=[])
-        bound = _bound_vars(pq) | {a for a, _, _ in
-                                   pq.binds + pq.optional_binds}
+        bound = _bound_vars(pq)
         unbound = sorted(t[1:] for t in terms
                          if is_var(t) and t[1:] not in bound)
         if unbound:
@@ -937,8 +995,7 @@ class _Parser:
         pq = self._where_clause()
         pq.form = "CONSTRUCT"
         pq.template = template
-        bound = _bound_vars(pq) | {a for a, _, _ in
-                                   pq.binds + pq.optional_binds}
+        bound = _bound_vars(pq)
         unbound = sorted(
             v[1:] for v in template_vars if v[1:] not in bound)
         if unbound:
@@ -1011,34 +1068,21 @@ class _Parser:
                        for t in (st, ot) if is_var(t)}
                     | {v for names, _ in pq.values_clauses
                        for v in names}
-                    | {a for a, _, _ in pq.binds}
+                    | {a for a, _ in pq.binds}
                     | {v for sub in pq.subqueries
                        for v in _subquery_proj(sub)})
         opt_only = opt_vars - req_vars
         deferred_aliases: set = set()
         if opt_only and pq.binds:
             kept = []
-            for alias, kind, sql in pq.binds:
-                # a var-kind BIND stores the BARE variable name (no
-                # backticks), so _refs_any's backticked-column search
-                # would never see it — match the name directly (ADVICE
-                # r8: BIND(?a AS ?y) with ?a OPTIONAL-only must defer)
-                if kind == self._VAR:
-                    refs_opt = sql in opt_only or sql in deferred_aliases
-                else:
-                    refs_opt = _refs_any(sql, opt_only | deferred_aliases)
-                if refs_opt:
-                    pq.optional_binds.append((alias, kind, sql))
+            for alias, e in pq.binds:
+                if e.vars & (opt_only | deferred_aliases):
+                    pq.optional_binds.append((alias, e))
                     deferred_aliases.add(alias)
                 else:
-                    kept.append((alias, kind, sql))
+                    kept.append((alias, e))
             pq.binds = kept
-        opt_scope = opt_only | deferred_aliases
-        if opt_scope and pq.filters:
-            moved_f = [f for f in pq.filters if _refs_any(f, opt_scope)]
-            if moved_f:
-                pq.optional_filters = moved_f
-                pq.filters = [f for f in pq.filters if f not in moved_f]
+        pq.optional_filters = _take_filters(pq, opt_only | deferred_aliases)
         if deferred_aliases:
             # a deferred alias's column does not exist until AFTER the
             # OPTIONAL left-joins — any pattern-side use joins on a
@@ -1062,7 +1106,7 @@ class _Parser:
                             "this subset (bind it from required "
                             "variables, or restructure the query)")
         if pq.binds:
-            aliases = {a for a, _, _ in pq.binds}
+            aliases = {a for a, _ in pq.binds}
             # required-group patterns referencing an alias can't run in
             # the BGP (the column doesn't exist at scan time): they move
             # to bind_patterns and equi-join on the COMPUTED value after
@@ -1091,14 +1135,10 @@ class _Parser:
                            for t in pat if is_var(t)}
                           - {t[1:] for pat in pq.patterns
                              for t in pat if is_var(t)} - aliases)
-            post = [f for f in pq.filters
-                    if _refs_any(f, aliases | moved_only)]
-            if post:
-                # filters over the alias OR over variables bound only
-                # by a moved pattern apply after the bind-pattern join
-                # (the required BGP no longer binds those columns)
-                pq.post_filters = post
-                pq.filters = [f for f in pq.filters if f not in post]
+            # filters over the alias OR over variables bound only by a
+            # moved pattern apply after the bind-pattern join (the
+            # required BGP no longer binds those columns)
+            pq.post_filters = _take_filters(pq, aliases | moved_only)
         if pq.subqueries:
             # an AGGREGATE alias column is a raw numeric, not an encoded
             # term — as a triple-pattern key it would never equi-match
@@ -1121,13 +1161,7 @@ class _Parser:
                             if is_var(t)}
             sub_only = {v for sub in pq.subqueries
                         for v in _subquery_proj(sub)} - pattern_only
-            if sub_only:
-                post = [f for f in pq.filters
-                        if _refs_any(f, sub_only)]
-                if post:
-                    pq.post_filters.extend(post)
-                    pq.filters = [f for f in pq.filters
-                                  if f not in post]
+            pq.post_filters += _take_filters(pq, sub_only)
         if pq.union_groups is not None and (pq.minus_groups
                                             or pq.exists_filters
                                             or pq.values_clauses):
@@ -1137,16 +1171,16 @@ class _Parser:
         return pq
 
     def _group(self, allow_compound: bool) -> Tuple[
-            List[Tuple[str, str, str]], List[str],
-            List[Tuple[List[Tuple[str, str, str]], List[str]]]]:
+            List[Tuple[str, str, str]], List[Expr],
+            List[Tuple[List[Tuple[str, str, str]], List[Expr]]]]:
         """One brace-delimited group body → (patterns, filters,
         optionals). ``allow_compound=False`` (UNION sides, OPTIONAL
         bodies) rejects OPTIONAL — one level of compounding only, loud.
         Consumes the closing '}'."""
         patterns: List[Tuple[str, str, str]] = []
-        filters: List[str] = []
+        filters: List[Expr] = []
         optionals: List[
-            Tuple[List[Tuple[str, str, str]], List[str]]] = []
+            Tuple[List[Tuple[str, str, str]], List[Expr]]] = []
         while True:
             t = self.peek()
             if t.kind == "OP" and t.text == "}":
@@ -1205,7 +1239,7 @@ class _Parser:
                         "is outside the supported subset")
                 self.next()
                 self.expect_op("(")
-                kind, sql = self._operand()
+                e = self._operand()
                 self.expect_kw("as")
                 al = self.next()
                 if al.kind != "VAR":
@@ -1217,16 +1251,11 @@ class _Parser:
                         f"BIND rebinds ?{name}, already in scope "
                         "(SPARQL forbids rebinding)")
                 self.expect_op(")")
-                if kind == self._BOOL:
+                if e.kind == _BOOL:
                     raise SPARQLUnsupportedError(
                         "BIND of a boolean expression is outside the "
                         "supported subset")
-                if kind == self._NUMERIC and re.fullmatch(
-                        r"[+-]?(?:\d+\.\d+(?:[eE][+-]?\d+)?"
-                        r"|\d+[eE][+-]?\d+|\d+)", sql):
-                    # a numeric CONSTANT keeps its XSD-typed encoding
-                    kind, sql = self._TERM, self._number_term(sql)
-                self._pending_binds.append((name, kind, sql))
+                self._pending_binds.append((name, e))
                 self.vars_seen.append(name)
                 continue
             if self.at_kw("graph"):
@@ -1358,7 +1387,7 @@ class _Parser:
                 "SELECT * in a subquery is outside the supported subset "
                 "(project the join variables explicitly — the outer "
                 "join key set must be deterministic at parse time)")
-        pending_aliases = {a for a, _, _ in self._pending_binds}
+        pending_aliases = {a for a, _ in self._pending_binds}
         for v in _subquery_proj(sub):
             # a projection colliding with an earlier BIND alias would
             # execute as the subquery join followed by a withColumn that
@@ -1426,7 +1455,7 @@ class _Parser:
         if t.kind == "STRING":
             return self._string_term(t.text)
         if t.kind == "NUMBER":
-            return self._number_term(t.text)
+            return _number_term(t.text)
         raise SPARQLError(
             f"unexpected {t.text!r} in VALUES data at offset {t.pos} "
             "(terms and UNDEF only — no variables)")
@@ -1559,9 +1588,8 @@ class _Parser:
             return [(obj, path.inner.iri, subj)]
         if isinstance(path, PathNeg):
             pv = self._fresh_var()
-            in_list = ", ".join(_sql_str(i) for i in path.iris)
             self._pending_scan_filters.append(
-                f"(`{pv}` NOT IN ({in_list}))")
+                Logic("!", (Call("IN", (Var(pv),), tuple(path.iris)),)))
             return [(subj, "?" + pv, obj)]
         if isinstance(path, PathSeq):
             out: List[Tuple[str, str, str]] = []
@@ -1615,183 +1643,95 @@ class _Parser:
             raise SPARQLError("ORDER BY with no sort conditions")
         return conds
 
-    # -- FILTER expression → SQL over variable columns ---------------
-    #
-    # Emitted SQL is assembled only from validated fragments: variable
-    # names ([A-Za-z_]\w*, become column refs), SQL-escaped string
-    # constants, numeric tokens, and fixed operator/function templates —
-    # a user query can never smuggle raw SQL through.
+    # -- expressions -------------------------------------------------
 
-    def _filter_exprs(self) -> List[str]:
-        """One FILTER clause → one-or-more SQL expressions: a top-level
+    def _filter_exprs(self) -> List[Expr]:
+        """One FILTER clause → one-or-more expressions: a top-level
         conjunction splits into independent filters (``FILTER(A && B)``
         ≡ ``FILTER(A) FILTER(B)`` in SPARQL), so each conjunct gets the
         BGP compiler's per-pattern scan pushdown on its own variable set
         instead of the whole clause waiting for the join that binds the
         union of them."""
         self.expect_op("(")
-        parts = self._and_parts()
-        if self.peek().kind == "OP" and self.peek().text == "||":
-            first = (parts[0] if len(parts) == 1
-                     else "(" + " AND ".join(parts) + ")")
-            ors = [first]
-            while self.peek().kind == "OP" and self.peek().text == "||":
-                self.next()
-                ors.append(self._and_expr())
-            parts = ["(" + " OR ".join(ors) + ")"]
+        e = self._or_expr()
         self.expect_op(")")
-        return parts
+        if isinstance(e, Logic) and e.op == "&&":
+            return list(e.args)
+        return [e]
 
-    def _or_expr(self) -> str:
-        parts = [self._and_expr()]
-        while self.peek().kind == "OP" and self.peek().text == "||":
+    def _chain(self, op: str, operand) -> Expr:
+        parts = [operand()]
+        while self.peek().kind == "OP" and self.peek().text == op:
             self.next()
-            parts.append(self._and_expr())
-        return parts[0] if len(parts) == 1 else "(" + " OR ".join(parts) + ")"
+            parts.append(operand())
+        return parts[0] if len(parts) == 1 else Logic(op, tuple(parts))
 
-    def _and_parts(self) -> List[str]:
-        parts = [self._unary_expr()]
-        while self.peek().kind == "OP" and self.peek().text == "&&":
-            self.next()
-            parts.append(self._unary_expr())
-        return parts
+    def _or_expr(self) -> Expr:
+        return self._chain("||", self._and_expr)
 
-    def _and_expr(self) -> str:
-        parts = self._and_parts()
-        return (parts[0] if len(parts) == 1
-                else "(" + " AND ".join(parts) + ")")
+    def _and_expr(self) -> Expr:
+        return self._chain("&&", self._unary_expr)
 
-    def _unary_expr(self) -> str:
+    def _unary_expr(self) -> Expr:
         t = self.peek()
         if t.kind == "OP" and t.text == "!":
             self.next()
-            return f"(NOT {self._unary_expr()})"
+            return Logic("!", (self._unary_expr(),))
         if t.kind == "OP" and t.text == "(":
             self.next()
             inner = self._or_expr()
             self.expect_op(")")
-            return f"({inner})"
+            return inner
         return self._comparison()
 
-    # operand forms a comparison side can take
-    _NUMERIC = "num"       # SQL numeric constant
-    _TERM = "term"         # an ENCODED term constant (IRI or literal)
-    _VAR = "var"           # encoded-term column
-    _LEX = "lex"           # SQL expression producing a lexical form
-    _IRI = "iri"           # SQL expression producing an IRI's lexical
-    _ENC = "enc"           # SQL expression producing an ENCODED term
-    _BOOL = "bool"         # complete boolean SQL
-
-    def _comparison(self) -> str:
+    def _comparison(self) -> Expr:
+        first = self.peek()
         lhs = self._operand()
         t = self.peek()
-        ops = {"=": "=", "!=": "<>", "<": "<", ">": ">",
-               "<=": "<=", ">=": ">="}
-        if not (t.kind == "OP" and t.text in ops):
-            if lhs[0] == self._BOOL:
-                return lhs[1]
+        if not (t.kind == "OP" and t.text in ("=", "!=", "<", ">", "<=",
+                                              ">=")):
+            if lhs.kind == _BOOL:
+                return lhs
             raise SPARQLError(
                 f"expected comparison operator at offset {t.pos} "
-                f"(bare term {lhs[1]!r} is not a boolean)")
-        op = ops[self.next().text]
+                f"(bare term {first.text!r} is not a boolean)")
+        self.next()
         rhs = self._operand()
-        return self._emit_compare(lhs, op, rhs, t.pos)
-
-    def _emit_compare(self, lhs, op, rhs, pos) -> str:
-        lk, lv = lhs
-        rk, rv = rhs
-        if self._BOOL in (lk, rk):
+        if _BOOL in (lhs.kind, rhs.kind):
             raise SPARQLError(
                 f"boolean expression used as comparison operand at "
-                f"offset {pos}")
-        if op in ("=", "<>"):
-            # term equality on whatever representation both sides share:
-            # var-to-var / var-to-term compare ENCODED terms ("x" ≠
-            # "x"@en — RDF term equality); anything involving a lexical
-            # (STR(), a function result) compares lexical forms.
-            if {lk, rk} <= {self._VAR, self._TERM, self._IRI,
-                            self._ENC}:
-                return (f"({self._as_encoded(lhs)} {op} "
-                        f"{self._as_encoded(rhs)})")
-            if self._NUMERIC in (lk, rk):
-                # numeric =/<> is VALUE equality (SPARQL operator
-                # dispatch: "05"^^xsd:integer = 5).  TRY_CAST the
-                # non-numeric side so a non-numeric binding is a type
-                # error (NULL → row drops) instead of Spark 4 ANSI
-                # CAST_INVALID_INPUT aborting the whole query on a raw
-                # string-vs-int comparison.
-                l_sql = (lv if lk == self._NUMERIC
-                         else f"TRY_CAST({self._as_lexical(lhs)} AS DOUBLE)")
-                r_sql = (rv if rk == self._NUMERIC
-                         else f"TRY_CAST({self._as_lexical(rhs)} AS DOUBLE)")
-                return f"({l_sql} {op} {r_sql})"
-            l_sql = self._as_lexical(lhs)
-            r_sql = self._as_lexical(rhs)
-            return f"({l_sql} {op} {r_sql})"
-        # ordering comparison: numeric if either side is numeric
-        # (SPARQL operator dispatch), else codepoint order on lexicals.
-        # TRY_CAST, not CAST: Spark 4 runs ANSI mode, where a malformed
-        # CAST throws — SPARQL says a type error makes the comparison
-        # unsatisfied and drops the row, which is exactly TRY_CAST's
-        # NULL → non-true behavior.
-        if self._NUMERIC in (lk, rk):
-            l_sql = (lv if lk == self._NUMERIC
-                     else f"TRY_CAST({self._as_lexical(lhs)} AS DOUBLE)")
-            r_sql = (rv if rk == self._NUMERIC
-                     else f"TRY_CAST({self._as_lexical(rhs)} AS DOUBLE)")
-        else:
-            l_sql = self._as_lexical(lhs)
-            r_sql = self._as_lexical(rhs)
-        return f"({l_sql} {op} {r_sql})"
+                f"offset {t.pos}")
+        return Compare(t.text, lhs, rhs)
 
-    def _as_encoded(self, operand) -> str:
-        kind, val = operand
-        if kind == self._VAR:
-            return _col(val)
-        if kind == self._IRI:
-            return f"concat('<', {val}, '>')"
-        if kind == self._ENC:
-            return val
-        assert kind == self._TERM, kind
-        return _sql_str(val)
-
-    def _as_lexical(self, operand) -> str:
-        kind, val = operand
-        if kind == self._VAR:
-            return _lex_sql(val)
-        if kind == self._TERM:
-            return _sql_str(_term_lexical(val))
-        if kind == self._ENC:
-            return _lex_sql_of(val)
-        return val  # _LEX (an SQL expression) / _NUMERIC
-
-    def _operand(self):
+    def _operand(self) -> Expr:
         t = self.next()
         self._reject_unsupported(t)
+        if self._having_aggs is not None:
+            return self._aggregate_operand(t)
         if t.kind == "VAR":
             v = t.text[1:]
             if v not in self.vars_seen:
                 raise SPARQLError(
                     f"FILTER references ?{v} (offset {t.pos}) before any "
                     "pattern binds it")
-            return (self._VAR, v)
+            return Var(v)
         if t.kind == "NUMBER":
-            return (self._NUMERIC, t.text)
+            return Const(t.text, _NUMERIC)
         if t.kind == "STRING":
             # string constants are RDF terms: "x" is a simple literal
             # (term-equal only to another plain "x"); comparison against
-            # a lexical (STR()) converts via _as_lexical.
-            return (self._TERM, self._string_term(t.text))
+            # a lexical (STR()) compares lexical forms
+            return Const(self._string_term(t.text))
         if t.kind == "IRIREF":
-            return (self._TERM, self._resolve_iriref(t.text))
+            return Const(self._resolve_iriref(t.text))
         if t.kind == "PNAME":
-            return (self._TERM, self._expand_pname(t.text, t.pos))
+            return Const(self._expand_pname(t.text, t.pos))
         if t.kind == "NAME":
             return self._function(t)
         raise SPARQLError(
             f"unexpected {t.text!r} in FILTER at offset {t.pos}")
 
-    def _fn_args(self, name: str, n_min: int, n_max: int) -> list:
+    def _fn_args(self, name: str, n_min: int, n_max: int) -> List[Expr]:
         self.expect_op("(")
         args = []
         while True:
@@ -1808,97 +1748,71 @@ class _Parser:
                 + f" arguments, got {len(args)}")
         return args
 
-    def _function(self, t: _Tok):
+    def _function(self, t: _Tok) -> Expr:
         name = t.text.upper()
-        if name == "STR":
+        if name in ("STR", "STRLEN", "UCASE", "LCASE", "IRI", "URI"):
+            return Call("IRI" if name == "URI" else name,
+                        tuple(self._fn_args(name, 1, 1)))
+        if name in ("LANG", "BOUND", "DATATYPE", "ISIRI", "ISURI",
+                    "ISLITERAL", "ISBLANK"):
             (a,) = self._fn_args(name, 1, 1)
-            return (self._LEX, self._as_lexical(a))
-        if name == "LANG":
-            (a,) = self._fn_args(name, 1, 1)
-            if a[0] != self._VAR:
-                raise SPARQLError("LANG takes a variable")
-            c = _col(a[1])
-            return (self._LEX,
-                    f"(CASE WHEN {c} RLIKE '^\"(?:[^\"\\\\\\\\]|"
-                    f"\\\\\\\\.)*\"@' THEN regexp_extract({c}, "
-                    f"'@([A-Za-z0-9-]+)$', 1) ELSE '' END)")
-        if name == "STRLEN":
-            (a,) = self._fn_args(name, 1, 1)
-            return (self._NUMERIC, f"length({self._as_lexical(a)})")
-        if name in ("STRSTARTS", "STRENDS", "CONTAINS"):
-            a, b = self._fn_args(name, 2, 2)
-            fn = {"STRSTARTS": "startswith", "STRENDS": "endswith",
-                  "CONTAINS": "contains"}[name]
-            return (self._BOOL,
-                    f"{fn}({self._as_lexical(a)}, {self._as_lexical(b)})")
+            if not isinstance(a, Var):
+                raise SPARQLError(f"{name} takes a variable")
+            return Call("ISIRI" if name == "ISURI" else name, (a,))
+        if name in ("STRSTARTS", "STRENDS", "CONTAINS", "STRBEFORE",
+                    "STRAFTER"):
+            return Call(name, tuple(self._fn_args(name, 2, 2)))
+        if name == "CONCAT":
+            return Call(name, tuple(self._fn_args(name, 1, 64)))
         if name == "REGEX":
             args = self._fn_args(name, 2, 3)
-            subj = self._as_lexical(args[0])
-            if args[1][0] != self._TERM or not args[1][1].startswith('"'):
+            pat = _literal_arg(args[1])
+            if pat is None:
                 raise SPARQLError("REGEX pattern must be a string literal")
-            pat = _term_lexical(args[1][1])
-            if len(args) == 3:
-                flags = (_term_lexical(args[2][1])
-                         if args[2][0] == self._TERM else None)
-                if flags not in ("i", "s", "m", "is", "si", "im", "mi",
-                                 "sm", "ms"):
-                    raise SPARQLUnsupportedError(
-                        "REGEX flags other than combinations of i/s/m "
-                        "are outside the supported subset")
-                pat = f"(?{flags})" + pat
-            return (self._BOOL, f"({subj} RLIKE {_sql_str(pat)})")
-        if name == "CONCAT":
-            args = self._fn_args(name, 1, 64)
-            parts = ", ".join(self._as_lexical(a) for a in args)
-            return (self._LEX, f"concat({parts})")
-        if name == "BOUND":
-            (a,) = self._fn_args(name, 1, 1)
-            if a[0] != self._VAR:
-                raise SPARQLError("BOUND takes a variable")
-            return (self._BOOL, f"({_col(a[1])} IS NOT NULL)")
+            return Call(name, (args[0],),
+                        (_with_flags(name, pat, args[2:]),))
+        if name == "REPLACE":
+            args = self._fn_args(name, 3, 4)
+            pat, rep = _literal_arg(args[1]), _literal_arg(args[2])
+            if pat is None or rep is None:
+                raise SPARQLError(
+                    "REPLACE pattern/replacement must be string "
+                    "literals")
+            return Call(name, (args[0],),
+                        (_with_flags(name, pat, args[3:]), rep))
         if name == "LANGMATCHES":
             a, b = self._fn_args(name, 2, 2)
-            if b[0] != self._TERM or not b[1].startswith('"'):
+            rng = _literal_arg(b)
+            if rng is None:
                 raise SPARQLError(
                     "LANGMATCHES range must be a string literal")
-            rng = _term_lexical(b[1]).lower()
-            la = f"lower({self._as_lexical(a)})"
-            if rng == "*":
-                return (self._BOOL, f"({la} != '')")
-            # RFC 4647 basic filtering: exact tag or subtag prefix
-            return (self._BOOL,
-                    f"({la} = {_sql_str(rng)} OR "
-                    f"startswith({la}, {_sql_str(rng + '-')}))")
+            return Call(name, (a,), (rng.lower(),))
         if name in ("STRDT", "STRLANG"):
             a, b = self._fn_args(name, 2, 2)
-            lex = self._as_lexical(a)
-            esc = (f"replace(replace({lex}, '\\\\', '\\\\\\\\'), "
-                   f"'\"', '\\\\\"')")
             if name == "STRDT":
-                if b[0] != self._TERM or not b[1].startswith("<"):
+                if not (isinstance(b, Const) and b.kind == _TERM
+                        and b.value.startswith("<")):
                     raise SPARQLError(
                         "STRDT datatype must be a constant IRI")
-                suffix = f'"^^{b[1]}'
+                suffix = f'"^^{b.value}'
             else:
-                if b[0] != self._TERM or not b[1].startswith('"'):
+                tag = _literal_arg(b)
+                if tag is None:
                     raise SPARQLError(
                         "STRLANG tag must be a string literal")
-                tag = _term_lexical(b[1])
                 if not re.fullmatch(r"[A-Za-z]+(?:-[A-Za-z0-9]+)*", tag):
                     raise SPARQLError(
                         f"STRLANG tag {tag!r} is not a valid "
                         "language tag")
                 suffix = f'"@{tag}'
-            return (self._ENC,
-                    f"concat('\"', {esc}, {_sql_str(suffix)})")
+            return Call(name, (a,), (suffix,))
         if name == "COALESCE":
             args = self._fn_args(name, 1, 64)
-            if any(a[0] == self._BOOL for a in args):
+            if any(a.kind == _BOOL for a in args):
                 raise SPARQLError(
                     "COALESCE over boolean expressions is not supported"
                     " (coalesce terms, compare after)")
-            encs = ", ".join(_bind_encode_sql(k, v) for k, v in args)
-            return (self._ENC, f"coalesce({encs})")
+            return Call(name, tuple(args))
         if name == "IF":
             # the condition is a full boolean expression (comparisons,
             # && || !), not a bare operand — parse it with the filter
@@ -1910,97 +1824,19 @@ class _Parser:
             self.expect_op(",")
             b = self._operand()
             self.expect_op(")")
-            c = (self._BOOL, cond)
-            if self._BOOL in (a[0], b[0]):
+            if _BOOL in (a.kind, b.kind):
                 raise SPARQLError(
                     "IF branches must be terms, not boolean expressions")
-            ea = _bind_encode_sql(a[0], a[1])
-            eb = _bind_encode_sql(b[0], b[1])
-            # NULL condition (SPARQL error) → NULL result (unbound),
-            # not the else branch — hence the explicit NOT arm
-            return (self._ENC,
-                    f"(CASE WHEN {c[1]} THEN {ea} "
-                    f"WHEN NOT ({c[1]}) THEN {eb} END)")
-        if name in ("UCASE", "LCASE"):
-            (a,) = self._fn_args(name, 1, 1)
-            fn = "upper" if name == "UCASE" else "lower"
-            return (self._LEX, f"{fn}({self._as_lexical(a)})")
+            return Call(name, (cond, a, b))
         if name == "SUBSTR":
             args = self._fn_args(name, 2, 3)
-            src = self._as_lexical(args[0])
             for k in args[1:]:
-                if k[0] != self._NUMERIC or not re.fullmatch(r"\d+", k[1]):
+                if not (isinstance(k, Const) and k.kind == _NUMERIC
+                        and re.fullmatch(r"\d+", k.value)):
                     raise SPARQLError(
                         "SUBSTR position/length must be non-negative "
                         "integer constants")
-            if len(args) == 2:
-                return (self._LEX, f"substring({src}, {args[1][1]})")
-            return (self._LEX,
-                    f"substring({src}, {args[1][1]}, {args[2][1]})")
-        if name in ("STRBEFORE", "STRAFTER"):
-            a, b = self._fn_args(name, 2, 2)
-            sa, sb = self._as_lexical(a), self._as_lexical(b)
-            # spec: "" when there is no occurrence; the empty-needle
-            # cases fall out of instr()=1 (STRBEFORE → "", STRAFTER → x)
-            if name == "STRBEFORE":
-                sql = (f"(CASE WHEN instr({sa}, {sb}) > 0 THEN "
-                       f"substring({sa}, 1, instr({sa}, {sb}) - 1) "
-                       f"ELSE '' END)")
-            else:
-                sql = (f"(CASE WHEN instr({sa}, {sb}) > 0 THEN "
-                       f"substring({sa}, instr({sa}, {sb}) + "
-                       f"length({sb})) ELSE '' END)")
-            return (self._LEX, sql)
-        if name == "REPLACE":
-            args = self._fn_args(name, 3, 4)
-            src = self._as_lexical(args[0])
-            for k in (1, 2):
-                if args[k][0] != self._TERM or not args[k][1].startswith('"'):
-                    raise SPARQLError(
-                        "REPLACE pattern/replacement must be string "
-                        "literals")
-            pat = _term_lexical(args[1][1])
-            rep = _term_lexical(args[2][1])
-            if len(args) == 4:
-                flags = (_term_lexical(args[3][1])
-                         if args[3][0] == self._TERM else None)
-                if flags not in ("i", "s", "m", "is", "si", "im", "mi",
-                                 "sm", "ms"):
-                    raise SPARQLUnsupportedError(
-                        "REPLACE flags other than combinations of i/s/m "
-                        "are outside the supported subset")
-                pat = f"(?{flags})" + pat
-            return (self._LEX,
-                    f"regexp_replace({src}, {_sql_str(pat)}, "
-                    f"{_sql_str(rep)})")
-        if name == "DATATYPE":
-            (a,) = self._fn_args(name, 1, 1)
-            if a[0] != self._VAR:
-                raise SPARQLError("DATATYPE takes a variable")
-            c = _col(a[1])
-            ext = f"regexp_extract({c}, '\\\\^\\\\^<([^>]*)>$', 1)"
-            # literal → its datatype IRI (typed: the tag; lang-tagged:
-            # rdf:langString; plain: xsd:string); non-literal → NULL
-            # (SPARQL type error, the row drops out of comparisons)
-            return (self._IRI,
-                    f"(CASE WHEN substring({c}, 1, 1) = '\"' THEN "
-                    f"CASE WHEN {ext} != '' THEN {ext} "
-                    f"WHEN {c} RLIKE '@[A-Za-z0-9-]+$' THEN "
-                    f"'http://www.w3.org/1999/02/22-rdf-syntax-ns#"
-                    f"langString' "
-                    f"ELSE 'http://www.w3.org/2001/XMLSchema#string' "
-                    f"END END)")
-        if name in ("IRI", "URI"):
-            (a,) = self._fn_args(name, 1, 1)
-            return (self._IRI, self._as_lexical(a))
-        if name in ("ISIRI", "ISURI", "ISLITERAL", "ISBLANK"):
-            (a,) = self._fn_args(name, 1, 1)
-            if a[0] != self._VAR:
-                raise SPARQLError(f"{name} takes a variable")
-            c = _col(a[1])
-            pref = {"ISIRI": "<", "ISURI": "<", "ISLITERAL": '"',
-                    "ISBLANK": "_"}[name]
-            return (self._BOOL, f"(substring({c}, 1, 1) = '{pref}')")
+            return Call(name, (args[0],), tuple(k.value for k in args[1:]))
         if name in ("EXISTS", "NOT"):
             raise SPARQLUnsupportedError(
                 f"{name} at offset {t.pos} inside a parenthesized FILTER "
@@ -2015,25 +1851,40 @@ class _Parser:
             "STRDT STRLANG isIRI isLiteral isBlank)")
 
 
-# ------------------------------------------------------- SQL fragments
+# ------------------------------------------------ constant arguments
 
 
-def _col(var: str) -> str:
-    return f"`{var}`"
+def _literal_arg(a: Expr) -> Optional[str]:
+    """The lexical form of a string-literal argument, else None."""
+    if isinstance(a, Const) and a.kind == _TERM and a.value.startswith('"'):
+        return _term_lexical(a.value)
+    return None
 
 
-def _refs_any(sql: str, names) -> bool:
-    """Does a generated SQL fragment reference any of the backticked
-    variable columns? String literals are masked first (backslash and
-    ''-doubled escapes), so a constant containing a backticked name
-    cannot misclassify the fragment."""
-    masked = re.sub(
-        r"'(?:[^'\\]|\\.|'')*'|\"(?:[^\"\\]|\\.|\"\")*\"", "''", sql)
-    return any(f"`{v}`" in masked for v in names)
+def _with_flags(name: str, pat: str, flag_args: List[Expr]) -> str:
+    """A REGEX/REPLACE pattern with its optional flags argument inlined
+    as ``(?flags)`` — Java regex, the closest engine to SPARQL's XPath
+    dialect."""
+    if not flag_args:
+        return pat
+    flags = _literal_arg(flag_args[0])
+    if flags not in ("i", "s", "m", "is", "si", "im", "mi", "sm", "ms"):
+        raise SPARQLUnsupportedError(
+            f"{name} flags other than combinations of i/s/m are outside "
+            "the supported subset")
+    return f"(?{flags})" + pat
 
 
-def _sql_str(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+def _number_term(text: str) -> str:
+    """A numeric token → its XSD-typed encoded literal, token text kept
+    (SPARQL's integer / decimal / double shorthand)."""
+    if re.fullmatch(r"[+-]?\d+", text):
+        dt = "integer"
+    elif "e" in text.lower():
+        dt = "double"
+    else:
+        dt = "decimal"
+    return f'"{text}"^^<{XSD}{dt}>'
 
 
 def _unescape(body: str) -> str:
@@ -2044,7 +1895,7 @@ def _unescape(body: str) -> str:
 
 def _term_lexical(term: str) -> str:
     """Lexical form of an ENCODED constant term (driver-side mirror of
-    :func:`_lex_sql`)."""
+    :func:`_lexical`)."""
     if term.startswith("<") and term.endswith(">"):
         return term[1:-1]
     m = re.match(r'^"((?:[^"\\]|\\.)*)"', term)
@@ -2053,27 +1904,179 @@ def _term_lexical(term: str) -> str:
     return term
 
 
-def _lex_sql(var: str) -> str:
-    """SQL expression for a variable's lexical form (SPARQL ``STR``)."""
-    return _lex_sql_of(_col(var))
+# ------------------------------------------------------------- lowering
 
 
-def _lex_sql_of(c: str) -> str:
-    """Lexical form of an arbitrary SQL expression yielding an ENCODED
-    term: brackets off IRIs; quotes, ``@lang``/``^^dt`` and
-    backslash-escapes off literals; blank-node labels (and anything
-    else) pass through. ``regexp_replace(x, '\\\\(.)', '$1')`` is a
-    correct full unescape — left-to-right, non-overlapping, so
-    ``\\\\`` → ``\\`` and ``\\"`` → ``"`` in one pass. The expression is
-    interpolated several times — fine under codegen CSE."""
-    return (
-        f"(CASE WHEN substring({c}, 1, 1) = '<' "
-        f"THEN substring({c}, 2, length({c}) - 2) "
-        f"WHEN substring({c}, 1, 1) = '\"' "
-        f"THEN regexp_replace(regexp_extract({c}, "
-        f"'^\"((?:[^\"\\\\\\\\]|\\\\\\\\.)*)\"', 1), "
-        f"'\\\\\\\\(.)', '$1') "
-        f"ELSE {c} END)")
+def _lexical(c: Column) -> Column:
+    """Lexical form of an ENCODED term column (SPARQL ``STR``): brackets
+    off IRIs; quotes, ``@lang``/``^^dt`` and backslash-escapes off
+    literals; blank-node labels (and anything else) pass through.
+    ``regexp_replace(x, '\\\\(.)', '$1')`` is a correct full unescape —
+    left-to-right, non-overlapping, so ``\\\\`` → ``\\`` and ``\\"`` →
+    ``"`` in one pass."""
+    first = c.substr(1, 1)
+    return (F.when(first == "<", c.substr(F.lit(2), F.length(c) - 2))
+            .when(first == '"', F.regexp_replace(
+                F.regexp_extract(c, r'^"((?:[^"\\]|\\.)*)"', 1),
+                r"\\(.)", "$1"))
+            .otherwise(c))
+
+
+def _quoted(lex: Column, suffix: str) -> Column:
+    """A lexical form as an encoded literal: N-Triples ``\\`` and ``"``
+    escapes, the opening quote, then ``suffix`` (the closing quote plus
+    any ``@tag`` / ``^^<dt>``)."""
+    esc = F.replace(F.replace(lex, F.lit("\\"), F.lit("\\\\")),
+                    F.lit('"'), F.lit('\\"'))
+    return F.concat(F.lit('"'), esc, F.lit(suffix))
+
+
+def _number_column(text: str) -> Column:
+    """A numeric token as the literal Spark SQL reads it: integer,
+    decimal (scale kept) or double."""
+    if "e" in text.lower():
+        return F.lit(float(text))
+    return F.lit(Decimal(text) if "." in text else int(text))
+
+
+_COMPARE = {"=": operator.eq, "!=": operator.ne, "<": operator.lt,
+            ">": operator.gt, "<=": operator.le, ">=": operator.ge}
+# kinds whose equality is RDF term equality on the encoded form
+_ENCODABLE = {_VAR, _TERM, _IRI, _ENC}
+_ISA_PREFIX = {"ISIRI": "<", "ISLITERAL": '"', "ISBLANK": "_"}
+
+
+def _column(e: Expr, to: Optional[str] = None) -> Column:
+    """Lower an expression node to a Spark Column: the node's own value,
+    or, with ``to``, converted to the engine's term encoding (``"enc"``:
+    a lexical becomes a plain literal with N-Triples escapes, an IRI gets
+    its brackets, a number an XSD-typed literal — a constant keeps its
+    token text), to the lexical form (``"lex"``), or to a double
+    (``"num"``: ``try_cast`` of the lexical form, so a non-numeric term
+    is NULL — SPARQL's type error drops the row — never an ANSI cast
+    failure aborting the query)."""
+    k = e.kind
+    if to == "enc" and k not in (_VAR, _ENC):
+        if isinstance(e, Const):
+            return F.lit(e.value if k == _TERM else _number_term(e.value))
+        if k == _IRI:
+            return F.concat(F.lit("<"), _column(e), F.lit(">"))
+        if k == _NUMERIC:  # STRLEN: integer-valued
+            return F.concat(F.lit('"'), _column(e).cast("string"),
+                            F.lit(f'"^^<{XSD}integer>'))
+        return _quoted(_column(e), '"')
+    if to == "lex" and k in (_VAR, _TERM, _ENC):
+        if isinstance(e, Const):
+            return F.lit(_term_lexical(e.value))
+        return _lexical(_column(e))
+    if to == "num" and k != _NUMERIC:
+        return _column(e, "lex").try_cast("double")
+    if isinstance(e, Var):
+        return F.col(e.name)
+    if isinstance(e, AggRef):
+        return F.col(e.alias)
+    if isinstance(e, Const):
+        return F.lit(e.value) if k == _TERM else _number_column(e.value)
+    if isinstance(e, Logic):
+        cols = [_column(a) for a in e.args]
+        if e.op == "!":
+            return ~cols[0]
+        return reduce(operator.and_ if e.op == "&&" else operator.or_, cols)
+    if isinstance(e, Compare):
+        # =/!= between terms is RDF term equality on the encoding ("x" ≠
+        # "x"@en); otherwise a numeric side makes it a value comparison
+        # (SPARQL operator dispatch: "05"^^xsd:integer = 5), and anything
+        # else compares lexical forms by codepoint
+        kinds = {e.lhs.kind, e.rhs.kind}
+        if e.op in ("=", "!=") and kinds <= _ENCODABLE:
+            rep = "enc"
+        elif _NUMERIC in kinds:
+            rep = "num"
+        else:
+            rep = "lex"
+        return _COMPARE[e.op](_column(e.lhs, rep), _column(e.rhs, rep))
+    return _call_column(e)
+
+
+def _call_column(e: Call) -> Column:
+    fn, args, params = e.fn, e.args, e.params
+    if fn in _ISA_PREFIX:
+        return _column(args[0]).substr(1, 1) == F.lit(_ISA_PREFIX[fn])
+    if fn == "BOUND":
+        return _column(args[0]).isNotNull()
+    if fn == "IN":
+        return _column(args[0]).isin(list(params))
+    if fn == "COALESCE":
+        return F.coalesce(*[_column(a, "enc") for a in args])
+    if fn == "IF":
+        # NULL condition (SPARQL error) → NULL result (unbound), not
+        # the else branch — hence the explicit negated arm
+        cond = _column(args[0])
+        return (F.when(cond, _column(args[1], "enc"))
+                .when(~cond, _column(args[2], "enc")))
+    if fn == "LANG":
+        c = _column(args[0])
+        return (F.when(c.rlike(r'^"(?:[^"\\]|\\.)*"@'),
+                       F.regexp_extract(c, "@([A-Za-z0-9-]+)$", 1))
+                .otherwise(F.lit("")))
+    if fn == "DATATYPE":
+        # literal → its datatype IRI (typed: the tag; lang-tagged:
+        # rdf:langString; plain: xsd:string); non-literal → NULL (SPARQL
+        # type error, the row drops out of comparisons)
+        c = _column(args[0])
+        ext = F.regexp_extract(c, r"\^\^<([^>]*)>$", 1)
+        return F.when(
+            c.substr(1, 1) == '"',
+            F.when(ext != "", ext)
+            .when(c.rlike("@[A-Za-z0-9-]+$"), F.lit(
+                "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"))
+            .otherwise(F.lit(f"{XSD}string")))
+    lex = [_column(a, "lex") for a in args]
+    if fn in ("STR", "IRI"):
+        return lex[0]
+    if fn == "STRLEN":
+        return F.length(lex[0])
+    if fn in ("UCASE", "LCASE"):
+        return (F.upper if fn == "UCASE" else F.lower)(lex[0])
+    if fn == "CONCAT":
+        return F.concat(*lex)
+    if fn == "STRSTARTS":
+        return lex[0].startswith(lex[1])
+    if fn == "STRENDS":
+        return lex[0].endswith(lex[1])
+    if fn == "CONTAINS":
+        return lex[0].contains(lex[1])
+    if fn == "REGEX":
+        return lex[0].rlike(params[0])
+    if fn == "REPLACE":
+        return F.regexp_replace(lex[0], F.lit(params[0]), F.lit(params[1]))
+    if fn == "LANGMATCHES":
+        # RFC 4647 basic filtering: any tag, the exact tag or a subtag
+        # prefix
+        la, rng = F.lower(lex[0]), params[0]
+        if rng == "*":
+            return la != ""
+        return (la == F.lit(rng)) | la.startswith(F.lit(rng + "-"))
+    if fn in ("STRDT", "STRLANG"):
+        return _quoted(lex[0], params[0])
+    if fn == "SUBSTR":
+        return F.substr(lex[0], *[F.lit(int(p)) for p in params])
+    # STRBEFORE / STRAFTER — spec: "" when there is no occurrence; the
+    # empty-needle cases fall out of instr()=1 (STRBEFORE → "",
+    # STRAFTER → x)
+    a, b = lex
+    i = F.instr(a, b)
+    part = (F.substr(a, F.lit(1), i - 1) if fn == "STRBEFORE"
+            else F.substr(a, i + F.length(b)))
+    return F.when(i > 0, part).otherwise(F.lit(""))
+
+
+def _take_filters(pq: ParsedQuery, names) -> List[Expr]:
+    """Remove and return the filters of ``pq`` that read any of
+    ``names``."""
+    taken = [f for f in pq.filters if f.vars & names]
+    pq.filters = [f for f in pq.filters if not f.vars & names]
+    return taken
 
 
 def _subquery_proj(sub: ParsedQuery) -> List[str]:
@@ -2082,7 +2085,8 @@ def _subquery_proj(sub: ParsedQuery) -> List[str]:
 
 
 def _bound_vars(pq: ParsedQuery) -> set:
-    """Variable names bound by any pattern of the WHERE clause."""
+    """Variable names bound by any pattern or BIND of the WHERE
+    clause."""
     groups = ([pq.patterns, pq.bind_patterns]
               + [p for p, _ in pq.optionals]
               + [p for p, _ in (pq.union_groups or [])])
@@ -2094,7 +2098,7 @@ def _bound_vars(pq: ParsedQuery) -> set:
         out |= set(v_names)
     for sub in pq.subqueries:
         out |= set(_subquery_proj(sub))
-    return out
+    return out | {a for a, _ in pq.binds + pq.optional_binds}
 
 
 # ------------------------------------------------- property-path eval
@@ -2265,41 +2269,10 @@ def parse_select(query: str) -> ParsedQuery:
     return _Parser(query).parse()
 
 
-def _bind_encode_sql(kind: str, sql: str) -> str:
-    """A BIND operand → SQL producing the value in the engine's TERM
-    encoding: vars/terms pass through, IRI() wraps in angle brackets,
-    a lexical becomes a plain literal (N-Triples \\ and \" escapes
-    applied), an integer expression an xsd:integer literal."""
-    if kind == _Parser._VAR:
-        return _col(sql)
-    if kind == _Parser._ENC:
-        return sql
-    if kind == _Parser._TERM:
-        return _sql_str(sql)
-    if kind == _Parser._IRI:
-        return f"concat('<', {sql}, '>')"
-    if kind == _Parser._NUMERIC:
-        # a numeric CONSTANT keeps its XSD type per the SPARQL token
-        # rules (integer / decimal / double); non-constant numeric
-        # expressions (STRLEN) are integer-valued
-        if re.fullmatch(r"[+-]?\d+\.\d+", sql):
-            dt = "decimal"
-        elif re.fullmatch(r"[+-]?(?:\d+\.\d+[eE][+-]?\d+"
-                          r"|\d+[eE][+-]?\d+)", sql):
-            dt = "double"
-        else:
-            dt = "integer"
-        return ("concat('\"', CAST(" + sql + " AS STRING), "
-                f"'\"^^<http://www.w3.org/2001/XMLSchema#{dt}>')")
-    assert kind == _Parser._LEX, kind
-    esc = (f"replace(replace({sql}, '\\\\', '\\\\\\\\'), "
-           f"'\"', '\\\\\"')")
-    return f"concat('\"', {esc}, '\"')"
-
-
 def _run_bgp(triples, patterns, filters, stats) -> DataFrame:
     try:
-        return kg_query(triples, patterns, filters=filters,
+        return kg_query(triples, patterns,
+                        filters=[(_column(f), f.vars) for f in filters],
                         select=None, distinct=False, stats=stats)
     except BGPError as e:
         raise SPARQLError(f"unexecutable SPARQL BGP: {e}") from e
@@ -2382,8 +2355,8 @@ def _bindings(triples: DataFrame, pq: ParsedQuery, stats) -> DataFrame:
                 and all(r[0] is not None for r in v_rows)):
             # single already-bound variable, no UNDEF: a plain IN filter
             # — reaches the scans via the compiler-visible column
-            out = out.filter(
-                F.col(v_names[0]).isin([r[0] for r in v_rows]))
+            out = out.filter(_column(Call(
+                "IN", (Var(v_names[0]),), tuple(r[0] for r in v_rows))))
             continue
         from pyspark.sql import types as T
         vdf = triples.sparkSession.createDataFrame(
@@ -2416,8 +2389,8 @@ def _bindings(triples: DataFrame, pq: ParsedQuery, stats) -> DataFrame:
             out = triples.sparkSession.range(1).select()
         else:
             raise SPARQLError("empty WHERE group")
-    for alias, kind, sql in pq.binds:
-        out = out.withColumn(alias, F.expr(_bind_encode_sql(kind, sql)))
+    for alias, e in pq.binds:
+        out = out.withColumn(alias, _column(e, "enc"))
     if pq.bind_patterns:
         # patterns over BIND aliases: their own compiled BGP (the alias
         # is an ordinary scan variable there), equi-joined on the
@@ -2426,8 +2399,8 @@ def _bindings(triples: DataFrame, pq: ParsedQuery, stats) -> DataFrame:
         right = _run_bgp(triples, pq.bind_patterns, [], stats)
         shared = [c for c in right.columns if c in out.columns]
         out = out.join(right, on=shared)
-    for f_expr in pq.post_filters:
-        out = out.filter(F.expr(f_expr))
+    for f in pq.post_filters:
+        out = out.filter(_column(f))
     # EXISTS/MINUS evaluate against the required-group bag (their shared
     # variables must be bound there — OPTIONAL-introduced NULLs have
     # SPARQL "compatible" semantics an SQL join key cannot express)
@@ -2475,10 +2448,10 @@ def _bindings(triples: DataFrame, pq: ParsedQuery, stats) -> DataFrame:
                 "such keys is outside the supported subset; bind the "
                 "variable in the required group")
         out = out.join(right, on=shared, how="left")
-    for alias, kind, sql in pq.optional_binds:
-        out = out.withColumn(alias, F.expr(_bind_encode_sql(kind, sql)))
-    for f_expr in pq.optional_filters:
-        out = out.filter(F.expr(f_expr))
+    for alias, e in pq.optional_binds:
+        out = out.withColumn(alias, _column(e, "enc"))
+    for f in pq.optional_filters:
+        out = out.filter(_column(f))
     if pq.hidden_vars:
         keep = [c for c in out.columns if c not in pq.hidden_vars]
         out = out.select(*keep)
@@ -2488,7 +2461,7 @@ def _bindings(triples: DataFrame, pq: ParsedQuery, stats) -> DataFrame:
 # xsd numeric datatypes whose typed literals ORDER BY compares by VALUE
 # (SPARQL operator mapping: "9"^^xsd:integer < "10"^^xsd:integer)
 _XSD_NUMERIC_DT_RE = (
-    r'\\^\\^<http://www\\.w3\\.org/2001/XMLSchema#'
+    r'\^\^<http://www\.w3\.org/2001/XMLSchema#'
     r'(?:integer|decimal|double|float|long|int|short|byte|'
     r'nonNegativeInteger|nonPositiveInteger|negativeInteger|'
     r'positiveInteger|unsignedLong|unsignedInt|unsignedShort|'
@@ -2502,12 +2475,11 @@ def _order_keys(v: str, asc: bool):
     every non-numeric term (ascending); ties and all other terms fall
     back to codepoint order on the encoded N-Triples form.  Simple
     literals like ``"9"`` are NOT numeric (spec: plain literals order
-    by codepoint).  TRY_CAST so a malformed numeric lexical degrades to
-    the lexical fallback instead of an ANSI cast error."""
-    num = F.expr(
-        f"CASE WHEN {_col(v)} RLIKE '{_XSD_NUMERIC_DT_RE}' "
-        f"THEN TRY_CAST({_lex_sql(v)} AS DOUBLE) END")
+    by codepoint).  ``try_cast`` so a malformed numeric lexical degrades
+    to the lexical fallback instead of an ANSI cast error."""
     enc = F.col(v)
+    num = F.when(enc.rlike(_XSD_NUMERIC_DT_RE),
+                 _lexical(enc).try_cast("double"))
     if asc:
         return [num.asc_nulls_last(), enc.asc()]
     return [num.desc_nulls_first(), enc.desc()]
@@ -2547,15 +2519,14 @@ def _agg_column(a: Aggregate):
         # concatenation is then over the lexical forms in
         # codepoint-sorted order — the spec leaves order undefined, a
         # distributed engine must pick a deterministic one
-        coll = "collect_set" if a.distinct else "collect_list"
-        lex_of_t = _lex_sql_of("t")
+        coll = F.collect_set if a.distinct else F.collect_list
         sep = a.sep if a.sep is not None else " "
-        return F.expr(
-            f"array_join(sort_array(transform({coll}(`{a.var}`), "
-            f"t -> {lex_of_t})), {_sql_str(sep)})").alias(a.alias)
-    # numeric aggregates over the lexical form; TRY_CAST skips
+        return F.array_join(
+            F.sort_array(F.transform(coll(F.col(a.var)), _lexical)),
+            sep).alias(a.alias)
+    # numeric aggregates over the lexical form; try_cast skips
     # non-numeric terms (SPARQL's error-term elision in SUM/AVG/MIN/MAX)
-    num = F.expr(f"TRY_CAST({_lex_sql(a.var)} AS DOUBLE)")
+    num = _lexical(F.col(a.var)).try_cast("double")
     fn = {"SUM": F.sum, "AVG": F.avg, "MIN": F.min, "MAX": F.max}[a.fn]
     return fn(num).alias(a.alias)
 
@@ -2601,7 +2572,7 @@ def _execute_select(triples: DataFrame, pq: ParsedQuery, stats) -> DataFrame:
                    else out.groupBy())
         out = grouped.agg(*aggs)
         for cond in pq.having:
-            out = out.filter(F.expr(cond))
+            out = out.filter(_column(cond))
         cols = ((pq.select_vars or []) +
                 [a.alias for a in pq.aggregates])
         out = out.select(*cols)

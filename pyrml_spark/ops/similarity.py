@@ -322,6 +322,9 @@ ORACLE_ANN_LSH_BUCKETS = _lsh_buckets_oracle()
 LSH_NEARDUP_THRESHOLD = 0.9
 LSH_NEARDUP_BANDS = 16
 LSH_NEARDUP_BITS = 10
+# largest embedding matrix (rows × dim float32 elements, ≈ 256 MB) that
+# lsh_cosine_neardup pulls to the driver and ships inside its prune closure
+CAPTURED_MATRIX_MAX_ELEMENTS = 64_000_000
 
 
 def lsh_cosine_neardup(emb: DataFrame,
@@ -422,7 +425,11 @@ def lsh_cosine_neardup(emb: DataFrame,
     # row. float32 round-off on a 64-dim cosine is bounded well under 1e-5;
     # the prune margin is 100× wider, so no pair the exact float64 filter
     # would keep can be pruned.
-    n_emb_hint = emb.limit(BROADCAST_MAX_ROWS + 1).count()
+    # one probe serves both gates below, so it counts past the larger row
+    # ceiling (capped at the broadcast one, a low-dim table of any size
+    # would pass the matrix gate and be collected whole)
+    max_rows = max(BROADCAST_MAX_ROWS, CAPTURED_MATRIX_MAX_ELEMENTS // dim)
+    n_emb_hint = emb.limit(max_rows + 1).count()
     prune_margin = 1e-3
 
     # Candidate rows are (vec_a, vec_b) — 16 bytes. Attaching both float32
@@ -432,7 +439,7 @@ def lsh_cosine_neardup(emb: DataFrame,
     # matrix itself is small, ship IT once per task inside the prune
     # closure instead and keep the candidate stream id-only — guide §8:
     # move decisions over a lightweight proxy, attach payloads exactly
-    # once. Ceiling: 64M float32 elements ≈ 256 MB — the attach path under
+    # once. Ceiling: CAPTURED_MATRIX_MAX_ELEMENTS — the attach path under
     # BROADCAST_MAX_ROWS holds the same bytes TWICE (one broadcast per
     # side), so the single captured copy is strictly lighter; above the
     # ceiling the attach-join shape (broadcast or AQE shuffle join) is the
@@ -440,7 +447,7 @@ def lsh_cosine_neardup(emb: DataFrame,
     # an empty table has no matrix to capture (np.stack needs a row): it
     # takes the attach-join path, which returns the empty result
     captured = None
-    if 0 < n_emb_hint * dim <= 64_000_000:
+    if 0 < n_emb_hint * dim <= CAPTURED_MATRIX_MAX_ELEMENTS:
         epdf = emb.select(
             "vec_id",
             F.col("embedding").cast("array<float>").alias("e")).toPandas()

@@ -129,3 +129,32 @@ def test_lsh_cosine_neardup_empty_input(spark):
     assert out.dtypes == [("vec_a", "bigint"), ("vec_b", "bigint"),
                           ("sim", "double")]
     assert out.count() == 0
+
+
+def test_lsh_cosine_neardup_probe_covers_matrix_ceiling(spark, monkeypatch):
+    """The captured-matrix gate (rows × dim ≤ its element ceiling) must see
+    a row count that can exceed the ceiling: a probe capped at the
+    broadcast row ceiling let a low-dim table of any size pass the gate and
+    be collected to the driver whole. Above the ceiling the operator takes
+    the attach-join path, with the same result."""
+    import math
+
+    import pyrml_spark.ops.similarity as S
+    import pyrml_spark.plans.tuning as tuning
+
+    emb = spark.createDataFrame(
+        [(i, [math.cos(0.05 * i), math.sin(0.05 * i)]) for i in range(20)],
+        "vec_id long, embedding array<double>")
+    expected = S.lsh_cosine_neardup(emb, dim=2)
+    want = sorted(tuple(r) for r in expected.collect())
+    assert want  # the fixture has near-duplicate pairs
+
+    def no_collect(self):
+        raise AssertionError("embedding table collected to the driver")
+
+    monkeypatch.setattr(tuning, "BROADCAST_MAX_ROWS", 3)
+    monkeypatch.setattr(S, "CAPTURED_MATRIX_MAX_ELEMENTS", 20)
+    monkeypatch.setattr(type(emb), "toPandas", no_collect)
+    out = S.lsh_cosine_neardup(emb, dim=2)
+    assert out.schema == expected.schema
+    assert sorted(tuple(r) for r in out.collect()) == want

@@ -5,9 +5,15 @@ equivalence with the hand-built BGP rows."""
 import pytest
 
 from pyrml_spark.kg.sparql import (
+    AggRef,
+    Call,
+    Compare,
+    Const,
+    Logic,
     ParsedQuery,
     SPARQLError,
     SPARQLUnsupportedError,
+    Var,
     parse_select,
     sparql_select,
 )
@@ -87,8 +93,8 @@ def test_filter_conjunction_splits():
         "SELECT ?a ?b WHERE { ?a <http://e/p> ?b "
         'FILTER(STRSTARTS(?a, "x") && ?b != <http://e/o>) }')
     assert len(pq.filters) == 2
-    assert "startswith" in pq.filters[0]
-    assert pq.filters[1] == "(`b` <> '<http://e/o>')"
+    assert pq.filters[0].fn == "STRSTARTS"
+    assert pq.filters[1] == Compare("!=", Var("b"), Const("<http://e/o>"))
 
 
 def test_filter_disjunction_stays_one_expression():
@@ -96,7 +102,9 @@ def test_filter_disjunction_stays_one_expression():
         "SELECT ?a WHERE { ?a <http://e/p> ?b "
         'FILTER(?b = "x" || ?b = "y" && ?b != "z") }')
     assert len(pq.filters) == 1
-    assert " OR " in pq.filters[0] and " AND " in pq.filters[0]
+    (f,) = pq.filters
+    assert isinstance(f, Logic) and f.op == "||"
+    assert any(isinstance(a, Logic) and a.op == "&&" for a in f.args)
 
 
 def test_filter_unbound_variable_is_loud():
@@ -498,7 +506,9 @@ def test_parse_path_desugar():
     pq = parse_select(
         "PREFIX e: <http://e/> SELECT ?s WHERE { ?s !(e:p) ?o }")
     assert len(pq.patterns) == 1 and len(pq.filters) == 1
-    assert "NOT IN ('<http://e/p>')" in pq.filters[0]
+    (f,) = pq.filters
+    assert isinstance(f, Logic) and f.op == "!"
+    assert f.args[0].fn == "IN" and f.args[0].params == ("<http://e/p>",)
     # closures inside OPTIONAL are loud
     with pytest.raises(SPARQLUnsupportedError, match="OPTIONAL"):
         parse_select(
@@ -976,7 +986,10 @@ def test_parse_having_constraints_and_hidden_aggs():
     pq = parse_select(
         "SELECT ?s (COUNT(?o) AS ?n) WHERE { ?s ?p ?o } GROUP BY ?s "
         "HAVING (COUNT(?o) > 3) (COUNT(?o) < 10 && MAX(?o) != 5)")
-    assert pq.having == ["(`_h0` > 3)", "((`_h0` < 10) AND (`_h1` <> 5))"]
+    assert pq.having == [
+        Compare(">", AggRef("_h0"), Const("3", "num")),
+        Logic("&&", (Compare("<", AggRef("_h0"), Const("10", "num")),
+                     Compare("!=", AggRef("_h1"), Const("5", "num"))))]
     # COUNT(?o) appears three times but is computed once
     assert [(a.fn, a.var, a.alias) for a in pq.having_aggs] == [
         ("COUNT", "o", "_h0"), ("MAX", "o", "_h1")]
@@ -1005,6 +1018,12 @@ def test_exec_having_filters_groups(triples):
         PFX + "SELECT (AVG(?a) AS ?avg) WHERE { ?s e:age ?a } "
         "HAVING (COUNT(*) > 2)")
     assert out.count() == 0
+    # HAVING shares the FILTER grammar: negation and nested parentheses
+    out = sparql_select(
+        triples,
+        PFX + "SELECT ?s (COUNT(?o) AS ?n) WHERE { ?s ?p ?o } "
+        "GROUP BY ?s HAVING (!(COUNT(?o) > 3)) ORDER BY ?s")
+    assert _rows(out) == [("<http://e/club>", 2)]
     # a HAVING aggregate need not appear in SELECT
     out = sparql_select(
         triples,
@@ -1072,9 +1091,16 @@ def test_exec_bind_alias_in_pattern(triples):
 
 
 def test_exec_bind_only_group(triples):
-    out = sparql_select(triples, "SELECT ?x WHERE { BIND(7 AS ?x) }")
-    assert _rows(out) == [
-        ('"7"^^<http://www.w3.org/2001/XMLSchema#integer>',)]
+    # a numeric constant keeps its token text and its XSD type
+    for token, encoded in [
+        ("7", '"7"^^<http://www.w3.org/2001/XMLSchema#integer>'),
+        ("1.50", '"1.50"^^<http://www.w3.org/2001/XMLSchema#decimal>'),
+        ("1e3", '"1e3"^^<http://www.w3.org/2001/XMLSchema#double>'),
+        ("-0.0", '"-0.0"^^<http://www.w3.org/2001/XMLSchema#decimal>'),
+    ]:
+        out = sparql_select(
+            triples, f"SELECT ?x WHERE {{ BIND({token} AS ?x) }}")
+        assert _rows(out) == [(encoded,)]
 
 
 # ------------------------------------------ r8: negated property sets
@@ -1086,9 +1112,10 @@ def test_parse_negated_property_set():
     assert len(pq.patterns) == 1
     s, p, o = pq.patterns[0]
     assert s == "?s" and o == "?o" and p.startswith("?_path")
-    assert pq.filters == [
-        f"(`{p[1:]}` NOT IN ('<http://e/name>', "
-        "'<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>'))"]
+    assert pq.filters == [Logic("!", (Call(
+        "IN", (Var(p[1:]),),
+        ("<http://e/name>",
+         "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>")),))]
     assert p[1:] in pq.hidden_vars
     # single-IRI form, also as a sequence step
     pq = parse_select(
@@ -1289,7 +1316,8 @@ def test_parse_optional_filter_placement():
     # the BOUND filter defers to optional scope; the ?s filter stays
     # in the BGP for scan pushdown
     assert len(pq.optional_filters) == 1 and len(pq.filters) == 1
-    assert "IS NOT NULL" in pq.optional_filters[0]
+    (f,) = pq.optional_filters
+    assert isinstance(f, Logic) and f.op == "!" and f.args[0].fn == "BOUND"
 
 
 def test_exec_string_functions(triples):
