@@ -130,7 +130,7 @@ class RMLCompiler:
     def _parent_is_small(self, tm: TriplesMap) -> bool:
         total = 0
         for ls in tm.sources:
-            p = ls.source
+            p = self.loader.path(ls)  # size the file the loader reads
             if os.path.isfile(p):
                 total += os.path.getsize(p)
             elif os.path.isdir(p):
@@ -177,43 +177,49 @@ class RMLCompiler:
     def _compile_for_subject(
         self, tm: TriplesMap, df: DataFrame, ctx: CompileCtx, sm: SubjectMap
     ) -> List[DataFrame]:
+        # every term Column is compiled once here and shared by the plain
+        # branch and the ROM joins: each compile is many Py4J round trips
         s_col = compile_term(ctx, sm.term_map)
         subject_graphs = self._graph_cols(ctx, sm.graph_maps)
+        # (pom, predicate Columns, effective graph Columns)
+        poms = [
+            (pom, [compile_term(ctx, ptm) for ptm in pom.predicates],
+             self._effective_graphs(subject_graphs,
+                                    self._graph_cols(ctx, pom.graph_maps)))
+            for pom in tm.poms if pom.objects or pom.ref_objects
+        ]
         branches: List[DataFrame] = []
 
         # ---- branch 1: plain POMs + rr:class, one scan, one explode ----
-        plain = self._plain_pairs_df(tm, df, ctx, sm, s_col, subject_graphs)
+        plain = self._plain_pairs_df(df, ctx, sm, s_col, subject_graphs, poms)
         if plain is not None:
             branches.append(plain)
 
         # ---- referencing object maps: one join per ROM ----
-        for pom in tm.poms:
-            pom_graphs = self._graph_cols(ctx, pom.graph_maps)
-            graphs = self._effective_graphs(subject_graphs, pom_graphs)
+        for pom, p_cols, graphs in poms:
             for rom in pom.ref_objects:
                 branches.append(
-                    self._ref_object_df(tm, df, ctx, sm, pom, rom, graphs)
+                    self._ref_object_df(tm, df, ctx, s_col, p_cols, rom, graphs)
                 )
         return branches
 
     # .. plain pairs .............................................................
     def _plain_pairs_df(
         self,
-        tm: TriplesMap,
         df: DataFrame,
         ctx: CompileCtx,
         sm: SubjectMap,
         s_col: Column,
         subject_graphs: List[Column],
+        poms: List[Tuple[PredicateObjectMap, List[Column], List[Column]]],
     ) -> Optional[DataFrame]:
         # materialize raw object values first so we can detect array-valued
         # (multi-valued) objects from the schema — drives explode fan-out (D2)
         tmp_cols: Dict[int, str] = {}
         obj_raws: List[Tuple[int, int, object]] = []  # (pom_idx, obj_idx, tm)
-        sel = list(df.columns)
         proj = df
         idx = 0
-        for pi, pom in enumerate(tm.poms):
+        for pi, (pom, _, _) in enumerate(poms):
             for oi, otm in enumerate(pom.objects):
                 if otm.kind in ("function",):
                     name = f"__raw_{idx}"
@@ -235,12 +241,7 @@ class RMLCompiler:
                 pair_arrays.append(F.array(pair(
                     F.lit(f"<{R.RDF_TYPE}>"), F.lit(f"<{cls}>"), g)))
 
-        for pi, pom in enumerate(tm.poms):
-            if not pom.objects:
-                continue
-            pom_graphs = self._graph_cols(ctx, pom.graph_maps)
-            graphs = self._effective_graphs(subject_graphs, pom_graphs)
-            p_cols = [compile_term(ctx, ptm) for ptm in pom.predicates]
+        for pi, (pom, p_cols, graphs) in enumerate(poms):
             for oi, otm in enumerate(pom.objects):
                 key = (pi, oi)
                 if key in tmp_cols:
@@ -297,15 +298,13 @@ class RMLCompiler:
         tm: TriplesMap,
         df: DataFrame,
         ctx: CompileCtx,
-        sm: SubjectMap,
-        pom: PredicateObjectMap,
+        s_col: Column,
+        p_cols: List[Column],
         rom: ReferencingObjectMap,
         graphs: List[Column],
     ) -> DataFrame:
         parent_tm = self.plan.by_iri(rom.parent_triples_map)
         parent_sm = parent_tm.subject_maps[0]
-        s_col = compile_term(ctx, sm.term_map)
-        p_cols = [compile_term(ctx, ptm) for ptm in pom.predicates]
 
         if not rom.joins:
             # join-less ROM (D6): well-defined only when child and parent share
@@ -426,6 +425,13 @@ def convert(
     Mirrors ``PyRML.get_mapper().convert(rml_file)`` (README.md:28-47 of the
     reference) but returns a lazy, distributed DataFrame instead of an
     eager rdflib graph.
+
+    Every call re-compiles. Once a session has read a local source file
+    its schema is memoized (``sources`` module docstring), so a re-compile
+    starts no Spark job; what it still costs is Py4J round trips, one or
+    more per Column built. Sessions from
+    :func:`pyrml_spark.plans.tuning.build_session` switch off PySpark's
+    per-call call-site capture and so compile with about half as many.
     """
     from .parse_mapping import parse_mapping_file
 

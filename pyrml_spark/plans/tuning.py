@@ -43,6 +43,20 @@ def build_session(
     shuffle_partitions: int | None = None,
     driver_memory: str | None = None,
 ) -> SparkSession:
+    """The engine's session (``getOrCreate``), tuned for the knobs above.
+
+    It switches PySpark's DataFrame call-site capture off
+    (``spark.python.sql.dataFrameDebugging.enabled=false``). With
+    capture on, every ``F.*`` call and DataFrame method sets and clears
+    a JVM-side origin around itself: on the perfbench star mapping that
+    is about 4 600 of the 10 400 Py4J round trips of an RML re-compile.
+    The trade-off: an analysis error no longer names the Python line
+    that built the failing Column. For Columns the engine builds that
+    line is inside ``pyrml_spark/terms.py``, which tells a user nothing
+    about their mapping. Sessions that callers build themselves keep
+    their own setting; PySpark reads it once per process, from the
+    session active at the first DataFrame call.
+    """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "4"))
     b = (
         SparkSession.builder.master(master or f"local[{cpus}]")
@@ -55,6 +69,7 @@ def build_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if driver_memory:
         b = b.config("spark.driver.memory", driver_memory)

@@ -12,12 +12,13 @@ group each.
 ``read_parquet_parallel`` therefore round-robin-repartitions the scan to
 the session's shuffle parallelism, but ONLY when the input is small enough
 that the scan cannot reach that parallelism on its own: the gate estimates
-the split count from the input's byte size against the default 128 MB split
-(``spark.sql.files.maxPartitionBytes``), so any input larger than
-``partitions × 128 MB`` — every production table — skips the repartition
-and keeps its native splits (no extra exchange in the plan).  The target
-derives from ``spark.sql.shuffle.partitions`` — never a hard-coded core
-count — so the same code is right on ``local[4]``, 32 and a cluster.
+the split count from the input's byte size against the session's
+``spark.sql.files.maxPartitionBytes`` (128 MB by default), so any input
+larger than ``partitions × maxPartitionBytes`` — every production table —
+skips the repartition and keeps its native splits (no extra exchange in
+the plan). The target derives from ``spark.sql.shuffle.partitions`` —
+never a hard-coded core count — so the same code is right on ``local[4]``,
+32 and a cluster.
 
 Connect-pure by design (no ``sparkContext``/``rdd``): the byte probe uses
 plain ``os`` on the path and silently skips for non-local URIs (object
@@ -27,10 +28,21 @@ stores), where inputs are production-sized anyway.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-_SPLIT_BYTES = 128 * 1024 * 1024  # spark.sql.files.maxPartitionBytes default
+# Spark byte-size strings: "134217728", "128MB", "64m", "1g" (a bare number
+# is bytes for spark.sql.files.maxPartitionBytes)
+_BYTE_STRING = re.compile(r"\s*(\d+)\s*([kmgtp]?)b?\s*", re.IGNORECASE)
+
+
+def _parse_bytes(value: str) -> int | None:
+    """Bytes of a Spark byte-size string; None if it is not one."""
+    m = _BYTE_STRING.fullmatch(value)
+    if m is None:
+        return None
+    return int(m.group(1)) << (10 * " kmgtp".index(m.group(2).lower() or " "))
 
 
 def _local_input_bytes(path: str) -> int | None:
@@ -54,14 +66,16 @@ def parallelize_scan(spark: SparkSession, df: DataFrame,
     """Floor an already-built scan's parallelism (see module docstring)."""
     try:
         target = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        split_bytes = _parse_bytes(
+            spark.conf.get("spark.sql.files.maxPartitionBytes"))
     except Exception:  # noqa: BLE001 — parallelism floor is best-effort
         return df
-    if target <= 1:
+    if target <= 1 or not split_bytes:
         return df
     n_bytes = _local_input_bytes(path)
     if n_bytes is None:
         return df
-    est_splits = max(1, n_bytes // _SPLIT_BYTES)
+    est_splits = max(1, n_bytes // split_bytes)
     if est_splits < target:
         df = df.repartition(target)
     return df

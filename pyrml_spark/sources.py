@@ -12,12 +12,26 @@ predicate-pushdown-capable). The JSONPath iterator subset compiles to
 ``wholetext`` rows and parsed on executors inside ``mapInPandas``
 (namespace-aware ElementTree XPath; parallel across files — the realistic
 100 TB XML layout), with a one-file driver-side schema probe.
+
+Schema memo: ``spark.read`` runs one Spark job per CSV/JSON/Parquet read
+just to discover the schema, and ``convert`` builds a fresh loader per
+call, so without a memo every re-compile of an unchanged mapping would run
+those jobs again. :func:`_read_file` therefore remembers the raw reader
+schema (before the scan floor and the JSONPath iterator) of each local
+single file, per ``SparkSession`` (a ``WeakKeyDictionary``, freed with the
+session), keyed by kind, resolved path and reader options and stamped with
+``(st_size, st_mtime_ns)``. A later read of an unchanged file passes that
+schema to ``reader.schema(...)`` and starts no job; a changed file
+replaces its entry, so the memo holds one entry per distinct file.
+Directories, tables, JDBC, SPARQL, XML and non-local URIs are read by
+plain ``spark.read`` every time.
 """
 
 from __future__ import annotations
 
 import os
 import re
+import weakref
 from typing import Dict, List, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -25,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .model import LogicalSource
-from .scan import parallelize_scan, read_parquet_parallel
+from .scan import parallelize_scan
 
 
 class SourceError(ValueError):
@@ -48,6 +62,31 @@ def _find_file(path: str, search_roots: List[str]) -> str:
         if os.path.exists(cand):
             return cand
     return path
+
+
+# session → {(format, abspath, options): ((st_size, st_mtime_ns), schema)}
+_SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+    weakref.WeakKeyDictionary())
+
+
+def _read_file(spark: SparkSession, fmt: str, path: str,
+               **options) -> DataFrame:
+    """``spark.read.format(fmt).options(**options).load(path)``, with the
+    schema of an unchanged local file taken from the session's memo (see
+    module docstring) so that only its first read runs a Spark job."""
+    reader = spark.read.format(fmt).options(**options)
+    if not os.path.isfile(path):
+        return reader.load(path)
+    st = os.stat(path)  # before the read: a later rewrite gets a new stamp
+    stamp = (st.st_size, st.st_mtime_ns)
+    key = (fmt, os.path.abspath(path), tuple(sorted(options.items())))
+    memo = _SCHEMAS.setdefault(spark, {})
+    hit = memo.get(key)
+    if hit is not None and hit[0] == stamp:
+        return reader.schema(hit[1]).load(path)
+    df = reader.load(path)
+    memo[key] = (stamp, df.schema)
+    return df
 
 
 def _flatten_struct_cols(df: DataFrame) -> DataFrame:
@@ -662,7 +701,7 @@ def load_json_source(
     ``spark.read.json(multiLine)`` yields one row per top-level value; the
     iterator's ``.field`` steps become struct access and ``[*]`` becomes
     ``explode`` — all JVM-side (SURVEY.md S3)."""
-    df = spark.read.option("multiLine", True).json(path)
+    df = _read_file(spark, "json", path, multiLine=True)
     return apply_json_iterator(df, iterator)
 
 
@@ -884,9 +923,9 @@ def load_xml_source(
 
 
 class SourceLoader:
-    """Loads and memoizes logical sources (reference: one read per source id,
-    pyrml_core.py:875-876; Spark-side we additionally ``persist()`` sources
-    referenced by more than one compiled branch — see compiler)."""
+    """Loads and memoizes logical sources per loader (reference: one read
+    per source id, pyrml_core.py:875-876). Raw reader schemas are memoized
+    per session across loaders (module docstring)."""
 
     def __init__(self, spark: SparkSession, search_roots: Optional[List[str]] = None):
         self.spark = spark
@@ -901,29 +940,31 @@ class SourceLoader:
         self._cache[key] = df
         return df
 
+    def path(self, ls: LogicalSource) -> str:
+        """The file ``ls`` reads: its source as given, else under a search
+        root, else its basename under a search root (``_find_file``)."""
+        return _find_file(ls.source, self.search_roots)
+
     def _load(self, ls: LogicalSource) -> DataFrame:
         spark = self.spark
         if ls.kind in ("csv", "csvw"):
-            path = _find_file(ls.source, self.search_roots)
-            reader = (
-                spark.read.option("header", True)
-                .option("sep", ls.separator)
-                .option("inferSchema", False)
-            )
+            path = self.path(ls)
+            options = {"header": True, "sep": ls.separator,
+                       "inferSchema": False}
             if ls.encoding:
-                reader = reader.option("encoding", ls.encoding)
+                options["encoding"] = ls.encoding
             # benchmark-scale single files scan as ONE partition, starving
             # the whole term-map pipeline of parallelism (pyrml_spark.scan)
-            return parallelize_scan(spark, reader.csv(path), path)
+            return parallelize_scan(
+                spark, _read_file(spark, "csv", path, **options), path)
         if ls.kind == "json":
-            path = _find_file(ls.source, self.search_roots)
-            return load_json_source(spark, path, ls.iterator)
+            return load_json_source(spark, self.path(ls), ls.iterator)
         if ls.kind == "xml":
-            path = _find_file(ls.source, self.search_roots)
-            return load_xml_source(spark, path, ls.iterator)
+            return load_xml_source(spark, self.path(ls), ls.iterator)
         if ls.kind == "parquet":
-            path = _find_file(ls.source, self.search_roots)
-            return read_parquet_parallel(spark, path)
+            path = self.path(ls)
+            return parallelize_scan(
+                spark, _read_file(spark, "parquet", path), path)
         if ls.kind == "table":
             return spark.read.table(ls.source)
         if ls.kind == "sql":

@@ -49,7 +49,6 @@ from ..model import LogicalSource, MappingPlan
 from ..sources import (
     SourceError,
     SourceLoader,
-    _find_file,
     apply_json_iterator,
 )
 
@@ -120,7 +119,7 @@ class StreamSourceLoader(SourceLoader):
             return super()._load(ls)
         spark = self.spark
         if ls.kind in ("csv", "csvw"):
-            path = _find_file(ls.source, self.search_roots)
+            path = self.path(ls)
             # streaming reads need a fixed schema: probe it with one static
             # read (all-string, same options), then stream with it
             opts = {"header": True, "sep": ls.separator,
@@ -134,7 +133,7 @@ class StreamSourceLoader(SourceLoader):
                 .csv(path)
             )
         if ls.kind == "json":
-            path = _find_file(ls.source, self.search_roots)
+            path = self.path(ls)
             probe = spark.read.option("multiLine", True).json(path)
             sdf = (
                 spark.readStream.schema(probe.schema)

@@ -2,6 +2,7 @@
 column pruning reaches the parquet scan, small parents broadcast, no
 row-at-a-time Python UDFs in RML plans, whole-stage codegen present."""
 
+import os
 import re
 
 from pyrml_spark.testdata_rml import (
@@ -55,6 +56,89 @@ def test_refobj_join_is_broadcast(spark):
     df = q_orders_customer_join(spark, SF_DIR)
     plan = plan_of(df)
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
+
+
+_ROOTS_MAP = """
+@prefix rr: <http://www.w3.org/ns/r2rml#> .
+@prefix rml: <http://semweb.mmlab.be/ns/rml#> .
+@prefix ql: <http://semweb.mmlab.be/ns/ql#> .
+@prefix ex: <http://ex.com/> .
+
+<#Child> rml:logicalSource [ rml:source "child.csv" ;
+    rml:referenceFormulation ql:CSV ] ;
+  rr:subjectMap [ rr:template "http://ex.com/c/{id}" ] ;
+  rr:predicateObjectMap [ rr:predicate ex:parent ;
+    rr:objectMap [ rr:parentTriplesMap <#Parent> ;
+      rr:joinCondition [ rr:child "pid" ; rr:parent "id" ] ] ] .
+<#Parent> rml:logicalSource [ rml:source "parent.csv" ;
+    rml:referenceFormulation ql:CSV ] ;
+  rr:subjectMap [ rr:template "http://ex.com/p/{id}" ] .
+"""
+
+
+def test_small_parent_found_through_search_roots_is_broadcast(spark,
+                                                              tmp_path):
+    """The broadcast decision sizes the file the loader reads: a parent
+    resolvable only through ``search_roots`` still gets the hint."""
+    from pyrml_spark import convert
+
+    maps, data = tmp_path / "maps", tmp_path / "data"
+    maps.mkdir()
+    data.mkdir()
+    (maps / "m.ttl").write_text(_ROOTS_MAP, encoding="utf-8")
+    (data / "child.csv").write_text("id,pid\n1,10\n2,20\n", encoding="utf-8")
+    (data / "parent.csv").write_text("id\n10\n20\n", encoding="utf-8")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")  # only the compiler's hint can broadcast
+    try:
+        df = convert(spark, str(maps / "m.ttl"), search_roots=[str(data)])
+        plan = formatted(df)
+        assert "BroadcastHashJoin" in plan, plan
+        assert len(df.collect()) == 2
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_scan_floor_reads_split_size_from_session(spark, tmp_path):
+    """A 3 MB parquet file is 3 splits at maxPartitionBytes=1MB — enough
+    for 3 shuffle partitions, so no rebalance — and one split at the
+    128MB default, so the floor repartitions it."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyrml_spark.scan import read_parquet_parallel
+
+    path = str(tmp_path / "wide.parquet")
+    rng = np.random.default_rng(0)
+    pq.write_table(pa.table({"v": pa.array(
+        [rng.bytes(1024) for _ in range(3 * 1024)], pa.binary())}),
+        path, compression="none", row_group_size=512)
+    assert 3 << 20 <= os.path.getsize(path) < 4 << 20
+    prev = {k: spark.conf.get(k) for k in (
+        "spark.sql.shuffle.partitions", "spark.sql.files.maxPartitionBytes")}
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+        default = formatted(read_parquet_parallel(spark, path))
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1MB")
+        small = formatted(read_parquet_parallel(spark, path))
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    assert "RoundRobinPartitioning" in default, default
+    assert "RoundRobinPartitioning" not in small, small
+
+
+def test_parse_spark_byte_strings():
+    from pyrml_spark.scan import _parse_bytes
+
+    assert _parse_bytes("128MB") == 128 << 20
+    assert _parse_bytes("64m") == 64 << 20
+    assert _parse_bytes("134217728") == 134217728
+    assert _parse_bytes("1g") == 1 << 30
+    assert _parse_bytes("1.5g") is None
+    assert _parse_bytes("lots") is None
 
 
 def test_no_python_udf_in_rml_core_plans(spark):
