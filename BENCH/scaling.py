@@ -199,9 +199,10 @@ spark.sparkContext.setLogLevel("ERROR")
 # destination on a real cluster is a distributed object store whose write
 # bandwidth scales with executor count — this VM's single virtio disk does
 # not, so writing it there would measure the disk, not the engine.
-# final_repartition=True: bucket-aligned output tasks (32 clean files; an
-# unaligned partitionBy write forks tasks×buckets small files whose commit
-# is driver-serial).
+# final_repartition=True: the bucket exchange (kg/table.bucket_clustered)
+# puts each bucket in one write task (32 clean files; an unaligned
+# partitionBy write forks tasks×buckets small files whose commit is
+# driver-serial), and AQE sizes the write tasks from the data.
 # use_pandas_extractor is a no-op (the extractor is native Columns, whole-
 # stage codegen); it stays here as the field these recorded runs passed.
 # The Arrow/pandas extractor it once selected ran python workers that fought

@@ -86,8 +86,11 @@ class StageRunner:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
         out = self.spark.read.parquet(path)
-        # one job yields BOTH the per-partition lineage and (by summing) the
-        # total row count — a separate count() job would be redundant
+        # one job yields the per-partition lineage, the total row count (its
+        # sum) and the partition count (its length, i.e. the partitions that
+        # hold rows: every split of a read-back whose files are each smaller
+        # than one split) — no count() job, and no ``DataFrame.rdd``, which
+        # Spark Connect does not have
         per_partition = [
             {"partition": r["pid"], "rows": r["rows"]}
             for r in out.groupBy(
@@ -98,7 +101,7 @@ class StageRunner:
             stage=name,
             input_fingerprint=input_fp,
             rows=sum(p["rows"] for p in per_partition),
-            partitions=out.rdd.getNumPartitions(),
+            partitions=len(per_partition),
             elapsed_sec=round(time.perf_counter() - t0, 3),
             path=path,
             extra=extra_metrics(out) if extra_metrics else {},

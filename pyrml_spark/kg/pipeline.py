@@ -25,7 +25,9 @@ The canonical mapping goes through the single union-find gate,
 ``DRIVER_UNION_FIND_MAX_EDGES`` edges, the distributed min-label loop above.
 The output table is partitioned by a subject hash bucket
 (``pmod(xxhash64(s), N)``) so downstream point lookups and joins prune
-partitions. AQE + range repartitioning handle skew on hot subjects at scale.
+partitions. Rows reach the write through the same bucket exchange as the RML
+sink (:func:`~.table.bucket_clustered`): one file per bucket, and AQE sizes
+the write tasks from the data.
 """
 
 from __future__ import annotations
@@ -45,6 +47,7 @@ from .extract import (
     sameas_candidates,
 )
 from .lineage import StageRunner, fingerprint
+from .table import bucket_clustered, subject_bucket
 
 
 @dataclass
@@ -58,8 +61,8 @@ class KGPipelineConfig:
     cc_max_iter: int = 25
     gen_partitions: int = 0                 # fixed datagen partitioning (benches)
     final_repartition: bool = True          # False: skip the bucket exchange
-                                            # (dedup's own shuffle already
-                                            # colocates rows)
+                                            # (each write task then writes
+                                            # into every bucket it holds)
 
 
 def _public_input_tag(documents: DataFrame) -> str:
@@ -271,28 +274,10 @@ def _build(spark: SparkSession, config: KGPipelineConfig,
         # shuffled bytes (see assemble_canonical_triples)
         canon = assemble_canonical_triples(mentions, media, mapping,
                                            mapping_rows=mapping_rows)
-        out = canon.withColumn(
-            "subject_bucket",
-            F.pmod(F.xxhash64("s"), F.lit(config.n_subject_buckets)).cast("int"),
-        )
         if not config.final_repartition:
-            return out
-        # cluster rows by bucket before partitionBy: without this every task
-        # writes into every bucket dir (tasks × buckets small files).
-        # RANGE partitioning on (bucket, s) instead of hash-on-bucket: with
-        # only n_buckets distinct values, hash placement collides (birthday)
-        # and the biggest write task carried ~3× the rows of the smallest
-        # (event-log measured); the range sampler balances row counts while
-        # keeping each task inside one bucket (a boundary task may straddle
-        # two → at most one extra file per boundary).
-        #
-        # lazy localCheckpoint first (r9): repartitionByRange SAMPLES its
-        # child to pick range bounds, which executed the whole assembly
-        # subtree a second time before the write — checkpointed, the
-        # sampler and the write share one materialization (guide §1.2)
-        out = out.localCheckpoint(eager=False)
-        return out.repartitionByRange(config.n_subject_buckets,
-                                      "subject_bucket", "s")
+            return canon.withColumn(
+                "subject_bucket", subject_bucket(config.n_subject_buckets))
+        return bucket_clustered(canon, config.n_subject_buckets)
 
     return keep.run("triples", triples_fp, build_triples,
                     partition_by=["subject_bucket"],

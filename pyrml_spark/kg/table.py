@@ -13,9 +13,9 @@ Two paths behind one function:
 * **Path fallback** (this sandbox — no Iceberg runtime jar is installed):
   the SAME layout as an explicit column — ``subject_bucket =
   pmod(xxhash64(s), n)`` — written as ``partitionBy("subject_bucket")``
-  parquet, rows repartitioned by bucket first so each bucket gets one
-  writer task (an unaligned partitionBy forks tasks×buckets small files
-  whose commit is driver-serial).
+  parquet, rows first clustered by :func:`bucket_clustered` so each bucket
+  is written by exactly one task, as one file (an unaligned partitionBy
+  forks tasks×buckets small files whose commit is driver-serial).
 
 Both paths cluster by a deterministic subject hash, which is what the
 100 TB design needs: downstream per-subject reads touch 1/n of the files,
@@ -61,6 +61,21 @@ def subject_bucket(n_buckets: int = DEFAULT_BUCKETS):
     return F.pmod(F.xxhash64("s"), F.lit(n_buckets)).cast("int")
 
 
+def bucket_clustered(df: DataFrame,
+                     n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
+    """``df`` plus its ``subject_bucket`` column, hash-clustered by it: the
+    one layout both triple sinks (:func:`write_triples_table` and the KG
+    pipeline's ``triples`` stage) hand to ``partitionBy("subject_bucket")``.
+
+    A column-only ``repartition`` sends each bucket value to exactly one
+    shuffle partition, so every bucket directory gets one file. With no
+    fixed partition count AQE may coalesce the exchange, so the number of
+    write tasks follows the data size, not ``n_buckets``: on a small table
+    a task per bucket spends more time starting than writing."""
+    return (df.withColumn("subject_bucket", subject_bucket(n_buckets))
+            .repartition("subject_bucket"))
+
+
 def write_triples_table(
     df: DataFrame,
     target: str,
@@ -101,9 +116,7 @@ def write_triples_table(
             raise ValueError(f"unsupported mode {mode!r} for iceberg")
         return
 
-    out = (df.select(*TRIPLE_COLS)
-           .withColumn("subject_bucket", subject_bucket(n_buckets))
-           .repartition(n_buckets, "subject_bucket"))
+    out = bucket_clustered(df.select(*TRIPLE_COLS), n_buckets)
     (out.write.mode(mode)
         .partitionBy("subject_bucket")
         .parquet(target))

@@ -1,35 +1,20 @@
-"""N-Quads sink + reader + triple-set comparison.
+"""N-Quads sink and the collected-rows view of a triple table.
 
 Sink (SURVEY.md S8): the reference serializes via rdflib
 (``pyrml_mapper.py:137-140``); here the formatter is a single JVM-side concat
 over the (s,p,o,g) string table, written with the distributed text writer.
 The primary large-scale sink is the partitioned Parquet/Iceberg writer in
-:mod:`pyrml_spark.kg.sink`; N-Quads text is the interchange/golden format.
-
-The reader is driver-side (goldens are tiny). Comparison canonicalizes blank
-node labels (the reference emits random BNode ids, pyrml_api.py:65) by
-signature hashing — SURVEY.md §5 "blank-node-isomorphism-lite".
+:mod:`pyrml_spark.kg.table`; N-Quads text is the interchange/golden format.
 """
 
 from __future__ import annotations
 
-import hashlib
-import re
-from collections import defaultdict
-from typing import Iterable, List, Optional, Set, Tuple
+from typing import List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 Quad = Tuple[str, str, str, Optional[str]]
-
-_TERM_RE = re.compile(
-    r"""(<[^>]*>
-        |_:[^\s]+
-        |"(?:[^"\\]|\\.)*"(?:@[A-Za-z0-9\-]+|\^\^<[^>]*>)?
-        )""",
-    re.VERBOSE,
-)
 
 
 def nquads_line_col(g_nullable: bool = True) -> Column:
@@ -53,89 +38,9 @@ def write_nquads(df: DataFrame, path: str, coalesce: Optional[int] = None) -> No
     out.write.mode("overwrite").text(path)
 
 
-def parse_nquads(text: str) -> List[Quad]:
-    quads: List[Quad] = []
-    for line in text.splitlines():
-        line = line.strip()
-        if not line or line.startswith("#"):
-            continue
-        if not line.endswith("."):
-            raise ValueError(f"bad N-Quads line: {line!r}")
-        body = line[:-1].strip()
-        terms = _TERM_RE.findall(body)
-        if len(terms) == 3:
-            quads.append((terms[0], terms[1], terms[2], None))
-        elif len(terms) == 4:
-            quads.append((terms[0], terms[1], terms[2], terms[3]))
-        else:
-            raise ValueError(f"bad N-Quads line ({len(terms)} terms): {line!r}")
-    return quads
-
-
-# ---------------------------------------------------------------------------
-# blank-node canonicalization + set comparison
-# ---------------------------------------------------------------------------
-
-def _is_bnode(t: Optional[str]) -> bool:
-    return t is not None and t.startswith("_:")
-
-
-def canonicalize_bnodes(quads: Iterable[Quad]) -> Set[Quad]:
-    """Relabel blank nodes by a structural signature (one-round WL hash):
-    good enough for the reference corpus (bnodes appear as graph labels and
-    simple subjects/objects, not deep anonymous structures)."""
-    quads = list(quads)
-    sig = defaultdict(list)
-    for s, p, o, g in quads:
-        s_w = "_:*" if _is_bnode(s) else s
-        o_w = "_:*" if _is_bnode(o) else o
-        g_w = "_:*" if _is_bnode(g) else (g or "")
-        if _is_bnode(s):
-            sig[s].append(("S", p, o_w, g_w))
-        if _is_bnode(o):
-            sig[o].append(("O", s_w, p, g_w))
-        if _is_bnode(g):
-            sig[g].append(("G", s_w, p, o_w))
-    mapping = {}
-    for label, edges in sig.items():
-        h = hashlib.sha256(repr(sorted(edges)).encode()).hexdigest()[:16]
-        mapping[label] = f"_:c{h}"
-    # disambiguate collisions deterministically
-    seen: defaultdict = defaultdict(int)
-    final = {}
-    for label in sorted(mapping, key=lambda l: (mapping[l], l)):
-        base = mapping[label]
-        n = seen[base]
-        seen[base] += 1
-        final[label] = base if n == 0 else f"{base}_{n}"
-
-    def rl(t):
-        return final.get(t, t) if t else t
-
-    return {(rl(s), rl(p), rl(o), rl(g)) for s, p, o, g in quads}
-
-
 def df_to_quads(df: DataFrame) -> List[Quad]:
     cols = df.columns
     rows = df.collect()
     if "g" in cols:
         return [(r["s"], r["p"], r["o"], r["g"]) for r in rows]
     return [(r["s"], r["p"], r["o"], None) for r in rows]
-
-
-def precision_recall(
-    produced: Iterable[Quad], golden: Iterable[Quad], ignore_graph: bool = False
-) -> Tuple[float, float]:
-    def norm(qs):
-        qs = canonicalize_bnodes(qs)
-        if ignore_graph:
-            qs = {(s, p, o, None) for s, p, o, _ in qs}
-        return qs
-
-    a, b = norm(produced), norm(golden)
-    if not a and not b:
-        return 1.0, 1.0
-    tp = len(a & b)
-    precision = tp / len(a) if a else 0.0
-    recall = tp / len(b) if b else 0.0
-    return precision, recall

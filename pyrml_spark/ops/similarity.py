@@ -327,6 +327,21 @@ LSH_NEARDUP_BITS = 10
 CAPTURED_MATRIX_MAX_ELEMENTS = 64_000_000
 
 
+def _captured_rows(ids_sorted, ids):
+    """Row of each id in a captured matrix whose ids are ``ids_sorted``
+    (ascending). An id the matrix lacks raises: ``searchsorted`` alone would
+    score it against a neighbour's vector, or index past the end."""
+    import numpy as np
+
+    rows = np.minimum(np.searchsorted(ids_sorted, ids), len(ids_sorted) - 1)
+    missing = ids_sorted[rows] != ids
+    if missing.any():
+        raise ValueError(f"candidate vec_id {ids[missing][0]} is not in the "
+                         "captured embedding matrix (did the embedding input "
+                         "change between its collect and the candidate join?)")
+    return rows
+
+
 def lsh_cosine_neardup(emb: DataFrame,
                        threshold: float = LSH_NEARDUP_THRESHOLD,
                        n_bands: int = LSH_NEARDUP_BANDS,
@@ -467,8 +482,8 @@ def lsh_cosine_neardup(emb: DataFrame,
                     yield pd.DataFrame({"vec_a": pd.Series(dtype="int64"),
                                         "vec_b": pd.Series(dtype="int64")})
                     continue
-                ia = np.searchsorted(ids_sorted, pdf["vec_a"].to_numpy())
-                ib = np.searchsorted(ids_sorted, pdf["vec_b"].to_numpy())
+                ia = _captured_rows(ids_sorted, pdf["vec_a"].to_numpy())
+                ib = _captured_rows(ids_sorted, pdf["vec_b"].to_numpy())
                 s = np.einsum("ij,ij->i", M[ia], M[ib]) / (nrm[ia] * nrm[ib])
                 keep = s >= threshold - prune_margin
                 yield pd.DataFrame({"vec_a": pdf["vec_a"].to_numpy()[keep],

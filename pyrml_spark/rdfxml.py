@@ -1,4 +1,4 @@
-"""RDF/XML, pretty RDF/XML and TriX serialization (+ round-trip parsers).
+"""RDF/XML, pretty RDF/XML and TriX serialization.
 
 Closes the reference CLI's remaining format list (``pyrml-mapper.py:37-52``:
 xml, pretty-xml, trix — rdflib ``Dataset.serialize`` backends). Like
@@ -20,18 +20,18 @@ Format notes:
   element, graphs are explicit blocks. The only one of the three that
   carries named graphs; xml/pretty-xml flatten to the union graph.
 
-All three round-trip through the parsers in this module (tested).
+All three round-trip through the test suite's parsers
+(``tests/rdf_readers.py``).
 """
 
 from __future__ import annotations
 
 import re
-import xml.etree.ElementTree as ET
 from collections import defaultdict
 from typing import Dict, Iterable, List, Optional, Tuple
 
 from .nquads import Quad
-from .rdfterms import RDF, XSD, escape_nt, unescape_nt
+from .rdfterms import RDF, unescape_nt
 from .rdfserialize import _LITERAL_RE, prefix_table_from_quads
 
 TRIX_NS = "http://www.w3.org/2004/03/trix/trix-1/"
@@ -155,47 +155,6 @@ def serialize_rdfxml(
             f"<rdf:RDF{decls}>\n" + "\n".join(body) + "\n</rdf:RDF>\n")
 
 
-def parse_rdfxml(text: str) -> List[Quad]:
-    """Round-trip parser for the subset this module emits (Description or
-    typed nodes; resource/nodeID/literal objects)."""
-    root = ET.fromstring(text)
-
-    def expand(tag: str) -> str:
-        # ElementTree gives '{ns}local'
-        if tag.startswith("{"):
-            ns, local = tag[1:].split("}", 1)
-            return ns + local
-        return tag
-
-    out: List[Quad] = []
-    for node in root:
-        about = node.get(f"{{{RDF}}}about")
-        node_id = node.get(f"{{{RDF}}}nodeID")
-        s = f"<{about}>" if about is not None else f"_:{node_id}"
-        node_type = expand(node.tag)
-        if node_type != RDF + "Description":
-            out.append((s, f"<{RDF}type>", f"<{node_type}>", None))
-        for prop in node:
-            p = f"<{expand(prop.tag)}>"
-            res = prop.get(f"{{{RDF}}}resource")
-            oid = prop.get(f"{{{RDF}}}nodeID")
-            if res is not None:
-                o = f"<{res}>"
-            elif oid is not None:
-                o = f"_:{oid}"
-            else:
-                lex = escape_nt(prop.text or "")
-                lang = prop.get("{http://www.w3.org/XML/1998/namespace}lang")
-                dt = prop.get(f"{{{RDF}}}datatype")
-                o = f'"{lex}"'
-                if lang:
-                    o += f"@{lang}"
-                elif dt:
-                    o += f"^^<{dt}>"
-            out.append((s, p, o, None))
-    return out
-
-
 # ---------------------------------------------------------------------------
 # TriX
 # ---------------------------------------------------------------------------
@@ -236,36 +195,3 @@ def serialize_trix(quads: Iterable[Quad]) -> str:
         parts.append("  </graph>")
     parts.append("</TriX>")
     return "\n".join(parts) + "\n"
-
-
-def parse_trix(text: str) -> List[Quad]:
-    root = ET.fromstring(text)
-    ns = {"t": TRIX_NS}
-
-    def term_nt(el) -> str:
-        tag = el.tag.rsplit("}", 1)[-1]
-        if tag == "uri":
-            return f"<{el.text or ''}>"
-        if tag == "id":
-            return f"_:{el.text or ''}"
-        lex = escape_nt(el.text or "")
-        if tag == "typedLiteral":
-            return f'"{lex}"^^<{el.get("datatype")}>'
-        lang = el.get("{http://www.w3.org/XML/1998/namespace}lang")
-        return f'"{lex}"@{lang}' if lang else f'"{lex}"'
-
-    out: List[Quad] = []
-    for graph in root.findall("t:graph", ns):
-        children = list(graph)
-        g: Optional[str] = None
-        triples = []
-        for ch in children:
-            tag = ch.tag.rsplit("}", 1)[-1]
-            if tag == "uri":
-                g = f"<{ch.text or ''}>"
-            elif tag == "triple":
-                triples.append(ch)
-        for tr in triples:
-            s, p, o = (term_nt(t) for t in tr)
-            out.append((s, p, o, g))
-    return out

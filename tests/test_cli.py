@@ -6,7 +6,7 @@ import subprocess
 import sys
 import tempfile
 
-from pyrml_spark.nquads import parse_nquads
+from rdf_readers import parse_nquads
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 

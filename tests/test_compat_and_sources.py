@@ -498,11 +498,11 @@ def test_compat_serialize_all_formats(spark, tmp_path):
     format list (pyrml_mapper.py:137-140): every format emits parseable
     text with the full triple set."""
     from pyrml_spark.compat import serialize
-    from pyrml_spark.nquads import df_to_quads, parse_nquads
+    from pyrml_spark.nquads import df_to_quads
     from pyrml_spark.rdfserialize import parse_trig
-    from pyrml_spark.rdfxml import parse_rdfxml, parse_trix
     from pyrml_spark.turtle import parse_turtle
     from pyrml_spark.rdfserialize import _term_to_nt
+    from rdf_readers import parse_nquads, parse_rdfxml, parse_trix
 
     df = convert(spark, "/root/reference/examples/artists/artist-map.ttl",
                  search_roots=["/root/reference"])

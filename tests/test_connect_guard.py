@@ -1,8 +1,8 @@
 """Spark Connect smoke-readiness guard (VERDICT r3 #7): the engine must be
 Column/DataFrame-pure — no py4j private handles (``_jdf``/``_jvm``/``_jc``/
-``_jsparkSession``) and no ``sparkContext`` outside session bootstrap. These
-APIs do not exist under Spark Connect, which is the 100×-scale deployment
-surface (serverless / Connect clusters).
+``_jsparkSession``), no ``DataFrame.rdd`` and no ``sparkContext`` outside
+session bootstrap. These APIs do not exist under Spark Connect, which is the
+100×-scale deployment surface (serverless / Connect clusters).
 
 AST-based (attribute accesses only), so docstrings that *mention* the
 private APIs don't trip it."""
@@ -12,7 +12,8 @@ import pathlib
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "pyrml_spark"
 
-BANNED_ATTRS = {"_jdf", "_jvm", "_jc", "_jsparkSession", "_sc", "sparkContext"}
+BANNED_ATTRS = {"_jdf", "_jvm", "_jc", "_jsparkSession", "_sc", "sparkContext",
+                "rdd"}
 
 # file name → attrs allowed there (session bootstrap only)
 ALLOW = {

@@ -1,9 +1,10 @@
 """Unit tests for the corpus-shaping ops beyond the oracle-parity sweep:
 URL canonicalization edge cases, boilerplate-chunk semantics and the LSH
-near-dup operator on an empty input."""
+near-dup operator on an empty input and on unknown candidate ids."""
 
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
@@ -129,6 +130,22 @@ def test_lsh_cosine_neardup_empty_input(spark):
     assert out.dtypes == [("vec_a", "bigint"), ("vec_b", "bigint"),
                           ("sim", "double")]
     assert out.count() == 0
+
+
+def test_lsh_cosine_neardup_rejects_unknown_candidate_id():
+    """The prune looks candidate ids up in the captured matrix; an id the
+    embeddings lack must raise and name the id, not be scored against a
+    neighbour's vector (id between two known ids) or index past the end
+    (id above the largest)."""
+    import numpy as np
+
+    from pyrml_spark.ops.similarity import _captured_rows
+
+    ids_sorted = np.array([2, 5, 9], dtype=np.int64)
+    assert _captured_rows(ids_sorted, np.array([9, 2, 5])).tolist() == [2, 0, 1]
+    for unknown in (7, 11, 0):
+        with pytest.raises(ValueError, match=f"vec_id {unknown} "):
+            _captured_rows(ids_sorted, np.array([5, unknown, 2]))
 
 
 def test_lsh_cosine_neardup_probe_covers_matrix_ceiling(spark, monkeypatch):

@@ -7,12 +7,8 @@ blank-node canonicalization (SURVEY.md §5)."""
 import os
 
 from pyrml_spark import convert
-from pyrml_spark.nquads import (
-    canonicalize_bnodes,
-    df_to_quads,
-    parse_nquads,
-    precision_recall,
-)
+from pyrml_spark.nquads import df_to_quads
+from rdf_readers import canonicalize_bnodes, parse_nquads, precision_recall
 
 REF = "/root/reference"
 XSD_DATE = "http://www.w3.org/2001/XMLSchema#date"

@@ -168,6 +168,11 @@ def test_pipeline_end_to_end_and_resume(spark):
         assert {"mentions", "canonical_mapping", "triples"} <= stages
         full = [r for r in recs if "rows" in r]
         assert all(r["rows"] >= 0 and "per_partition" in r for r in full)
+        # the partition count comes from the per-partition aggregate; on
+        # a Parquet read-back it equals the scan's partition count
+        for r in full:
+            assert r["partitions"] == \
+                spark.read.parquet(r["path"]).rdd.getNumPartitions(), r
         # resume: second run must reuse checkpoints (no recompute) and match
         out2 = run_pipeline(spark, d, cfg)
         assert out2.count() == n1

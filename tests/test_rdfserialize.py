@@ -119,7 +119,7 @@ def test_serialize_nt_dedups_triples_across_graphs(spark):
 def test_trig_roundtrip_rmltc0006a():
     """The reference's committed named-graph golden (output.nq) → TriG →
     parse → same quad set."""
-    from pyrml_spark.nquads import parse_nquads
+    from rdf_readers import parse_nquads
 
     path = os.path.join(REF, "tests/test-cases-bkp/RMLTC0006a-CSV/output.nq")
     with open(path, encoding="utf-8") as fh:
@@ -160,7 +160,8 @@ def test_cli_turtle_format(tmp_path):
 # ---------------------------------------------------------------------------
 
 def test_rdfxml_roundtrip_artists(spark):
-    from pyrml_spark.rdfxml import parse_rdfxml, serialize_rdfxml
+    from pyrml_spark.rdfxml import serialize_rdfxml
+    from rdf_readers import parse_rdfxml
 
     quads = df_to_quads(_artists_df(spark))
     for pretty in (False, True):
@@ -174,7 +175,8 @@ def test_rdfxml_roundtrip_artists(spark):
 
 
 def test_rdfxml_literals_langs_bnodes():
-    from pyrml_spark.rdfxml import parse_rdfxml, serialize_rdfxml
+    from pyrml_spark.rdfxml import serialize_rdfxml
+    from rdf_readers import parse_rdfxml
 
     quads = [
         ("<http://ex.com/s>", "<http://ex.com/says>", '"a<b>&\\"c\\""', None),
@@ -199,7 +201,8 @@ def test_rdfxml_unrepresentable_predicate_is_loud():
 
 
 def test_trix_roundtrip_named_graphs():
-    from pyrml_spark.rdfxml import parse_trix, serialize_trix
+    from pyrml_spark.rdfxml import serialize_trix
+    from rdf_readers import parse_trix
 
     quads = [
         ("<http://ex.com/s>", "<http://ex.com/p>", '"v"', None),
@@ -213,7 +216,7 @@ def test_trix_roundtrip_named_graphs():
 
 
 def test_cli_xml_and_trix_formats(tmp_path):
-    from pyrml_spark.rdfxml import parse_rdfxml, parse_trix
+    from rdf_readers import parse_rdfxml, parse_trix
 
     for fmt, parse in (("pretty-xml", parse_rdfxml), ("trix", parse_trix)):
         proc = subprocess.run(

@@ -6,11 +6,10 @@ call-site-capture setting, the other half of a cheap re-compile."""
 
 import glob
 import os
-import time
-import uuid
 
 import pytest
 
+from jobcount import count_jobs
 from perfbench import gen
 from pyrml_spark.compiler import RMLCompiler
 from pyrml_spark.model import LogicalSource
@@ -18,29 +17,6 @@ from pyrml_spark.parse_mapping import parse_mapping, parse_mapping_file
 from pyrml_spark.sources import SourceLoader, apply_json_iterator
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _count_jobs(spark, fn):
-    """``(fn(), number of Spark jobs fn started)``. The status tracker is
-    fed by the listener bus, so wait until a later marker job is visible:
-    events arrive in order, so fn's jobs are visible by then too."""
-    sc = spark.sparkContext
-    group = f"schema-memo-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "schema memo test")
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(group + "-marker", "schema memo test")
-        spark.range(1).count()
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    tracker = sc.statusTracker()
-    deadline = time.monotonic() + 60
-    while (not tracker.getJobIdsForGroup(group + "-marker")
-           and time.monotonic() < deadline):
-        time.sleep(0.05)
-    assert tracker.getJobIdsForGroup(group + "-marker")
-    return out, len(tracker.getJobIdsForGroup(group))
 
 
 def _spark_read(spark, ls: LogicalSource):
@@ -63,7 +39,7 @@ def _rows(df):
 
 def _assert_memoized_read_matches_spark(spark, ls: LogicalSource):
     SourceLoader(spark).load(ls)  # first read fills the memo
-    df, jobs = _count_jobs(spark, lambda: SourceLoader(spark).load(ls))
+    df, jobs = count_jobs(spark, lambda: SourceLoader(spark).load(ls))
     assert jobs == 0, f"{ls.source}: memoized load ran {jobs} jobs"
     ref = _spark_read(spark, ls)
     assert df.schema == ref.schema, ls.source
@@ -78,7 +54,7 @@ def star(tmp_path_factory):
 def test_recompile_starts_no_job(spark, star):
     plan = parse_mapping_file(star["mapping"])
     RMLCompiler(spark, plan).compile()
-    _, jobs = _count_jobs(spark, lambda: RMLCompiler(spark, plan).compile())
+    _, jobs = count_jobs(spark, lambda: RMLCompiler(spark, plan).compile())
     assert jobs == 0
 
 
@@ -154,9 +130,9 @@ def test_new_session_does_not_reuse_entries(spark, tmp_path):
     path.write_text("a,b\n1,2\n", encoding="utf-8")
     ls = LogicalSource("csv", str(path))
     SourceLoader(spark).load(ls)
-    _, same = _count_jobs(spark, lambda: SourceLoader(spark).load(ls))
+    _, same = count_jobs(spark, lambda: SourceLoader(spark).load(ls))
     other = spark.newSession()
-    _, fresh = _count_jobs(spark, lambda: SourceLoader(other).load(ls))
+    _, fresh = count_jobs(spark, lambda: SourceLoader(other).load(ls))
     assert same == 0 and fresh >= 1
 
 
@@ -166,7 +142,7 @@ def test_directory_source_reads_schema_every_time(spark, tmp_path):
     (d / "part-0.csv").write_text("a,b\n1,2\n", encoding="utf-8")
     ls = LogicalSource("csv", str(d))
     SourceLoader(spark).load(ls)
-    _, jobs = _count_jobs(spark, lambda: SourceLoader(spark).load(ls))
+    _, jobs = count_jobs(spark, lambda: SourceLoader(spark).load(ls))
     assert jobs >= 1
 
 
