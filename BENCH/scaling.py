@@ -202,7 +202,7 @@ spark.sparkContext.setLogLevel("ERROR")
 # final_repartition=True: the bucket exchange (kg/table.bucket_clustered)
 # puts each bucket in one write task (32 clean files; an unaligned
 # partitionBy write forks tasks×buckets small files whose commit is
-# driver-serial), and AQE sizes the write tasks from the data.
+# driver-serial), the buckets spread evenly over the write tasks.
 # use_pandas_extractor is a no-op (the extractor is native Columns, whole-
 # stage codegen); it stays here as the field these recorded runs passed.
 # The Arrow/pandas extractor it once selected ran python workers that fought

@@ -41,6 +41,9 @@ class StageRecord:
     stage: str
     input_fingerprint: str
     rows: int
+    # read-back partitions that hold rows: 0 for an empty stage, and a
+    # split that gets no row group of a file larger than one split is not
+    # counted, so this can be below the scan's partition count
     partitions: int
     elapsed_sec: float
     path: str
@@ -87,10 +90,9 @@ class StageRunner:
         writer.parquet(path)
         out = self.spark.read.parquet(path)
         # one job yields the per-partition lineage, the total row count (its
-        # sum) and the partition count (its length, i.e. the partitions that
-        # hold rows: every split of a read-back whose files are each smaller
-        # than one split) — no count() job, and no ``DataFrame.rdd``, which
-        # Spark Connect does not have
+        # sum) and the count of partitions that hold rows (its length) — no
+        # count() job, and no ``DataFrame.rdd``, which Spark Connect does
+        # not have
         per_partition = [
             {"partition": r["pid"], "rows": r["rows"]}
             for r in out.groupBy(

@@ -26,8 +26,8 @@ The canonical mapping goes through the single union-find gate,
 The output table is partitioned by a subject hash bucket
 (``pmod(xxhash64(s), N)``) so downstream point lookups and joins prune
 partitions. Rows reach the write through the same bucket exchange as the RML
-sink (:func:`~.table.bucket_clustered`): one file per bucket, and AQE sizes
-the write tasks from the data.
+sink (:func:`~.table.bucket_clustered`): one file per bucket, and the write
+tasks share the buckets evenly.
 """
 
 from __future__ import annotations

@@ -14,8 +14,9 @@ Two paths behind one function:
   the SAME layout as an explicit column — ``subject_bucket =
   pmod(xxhash64(s), n)`` — written as ``partitionBy("subject_bucket")``
   parquet, rows first clustered by :func:`bucket_clustered` so each bucket
-  is written by exactly one task, as one file (an unaligned partitionBy
-  forks tasks×buckets small files whose commit is driver-serial).
+  is written by exactly one task, as one file, and the write tasks share
+  the buckets evenly (an unaligned partitionBy forks tasks×buckets small
+  files whose commit is driver-serial).
 
 Both paths cluster by a deterministic subject hash, which is what the
 100 TB design needs: downstream per-subject reads touch 1/n of the files,
@@ -63,17 +64,21 @@ def subject_bucket(n_buckets: int = DEFAULT_BUCKETS):
 
 def bucket_clustered(df: DataFrame,
                      n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
-    """``df`` plus its ``subject_bucket`` column, hash-clustered by it: the
-    one layout both triple sinks (:func:`write_triples_table` and the KG
+    """``df`` plus its ``subject_bucket`` column, clustered by it: the one
+    layout both triple sinks (:func:`write_triples_table` and the KG
     pipeline's ``triples`` stage) hand to ``partitionBy("subject_bucket")``.
 
-    A column-only ``repartition`` sends each bucket value to exactly one
-    shuffle partition, so every bucket directory gets one file. With no
-    fixed partition count AQE may coalesce the exchange, so the number of
-    write tasks follows the data size, not ``n_buckets``: on a small table
-    a task per bucket spends more time starting than writing."""
+    The exchange passes the bucket through as the partition id
+    (``repartitionById``): bucket ``b`` goes to write task ``b % T``, with
+    ``T = min(n_buckets, spark.sql.shuffle.partitions)``. Each bucket is
+    written by one task, as one file, and every task holds the same number
+    of buckets (±1), so the tasks are as even as the subject hash. Hashing
+    the bucket column instead collides: 32 buckets in 32 partitions fill
+    only 18, one task carrying 3 buckets."""
+    tasks = min(n_buckets,
+                int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")))
     return (df.withColumn("subject_bucket", subject_bucket(n_buckets))
-            .repartition("subject_bucket"))
+            .repartitionById(tasks, "subject_bucket"))
 
 
 def write_triples_table(

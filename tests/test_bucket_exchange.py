@@ -4,15 +4,18 @@ stage, in both ``run_pipeline`` and ``run_pipeline_fused``.
 
 * Layout: every ``subject_bucket=`` directory holds exactly one Parquet
   file, and every row sits in bucket ``pmod(xxhash64(s), n)``.
-* Plan: the write is a column-only hash exchange on ``subject_bucket``
-  (``REPARTITION_BY_COL``, which AQE may coalesce) — no fixed-count
-  ``REPARTITION_BY_NUM`` exchange and no range partitioning, whose sampler
-  ran the whole assembly an extra time.
+* Plan: the write is one exchange that passes ``subject_bucket`` through as
+  the partition id, into ``min(n, spark.sql.shuffle.partitions)`` tasks —
+  no hash exchange on the bucket (its placement collides) and no range
+  partitioning, whose sampler ran the whole assembly an extra time.
+* Placement: bucket ``b`` lands in write task ``b % tasks``, so the tasks
+  share the buckets evenly.
 * Jobs: a ``run_pipeline`` recovery (final stage lost, four stages resumed)
   runs a pinned number of Spark jobs.
 """
 
 import os
+import re
 import shutil
 
 import pytest
@@ -24,7 +27,7 @@ from pyrml_spark.kg.pipeline import (
     run_pipeline,
     run_pipeline_fused,
 )
-from pyrml_spark.kg.table import write_triples_table
+from pyrml_spark.kg.table import bucket_clustered, write_triples_table
 
 N_BUCKETS = 8
 CFG = KGPipelineConfig(n_docs=300, n_subject_buckets=N_BUCKETS)
@@ -60,9 +63,12 @@ def _plan(df) -> str:
 
 def _assert_bucket_exchange(df):
     plan = _plan(df)
-    assert "hashpartitioning(subject_bucket" in plan, plan
-    assert "REPARTITION_BY_COL" in plan, plan
-    assert "REPARTITION_BY_NUM" not in plan, plan
+    exchanges = re.findall(
+        r"shufflepartitionidpassthrough\(direct_shuffle_partition_id\("
+        r"subject_bucket#\d+\), (\d+)\)", plan)
+    # N_BUCKETS tasks: the test session has as many shuffle partitions
+    assert exchanges == [str(N_BUCKETS)], plan
+    assert "hashpartitioning(subject_bucket" not in plan, plan
     assert "rangepartitioning" not in plan, plan
 
 
@@ -80,6 +86,23 @@ def _assert_layout(spark, table_dir, n_buckets=N_BUCKETS):
         F.col("subject_bucket")
         != F.pmod(F.xxhash64("s"), F.lit(n_buckets)).cast("int"))
     assert misplaced.count() == 0
+
+
+@pytest.mark.parametrize("n_buckets", [4, 32])
+def test_bucket_goes_to_task_bucket_mod_tasks(spark, n_buckets):
+    """Under the test session's 8 shuffle partitions: 4 buckets get a task
+    each, 32 buckets share 8 tasks 4 apiece."""
+    tasks = min(n_buckets,
+                int(spark.conf.get("spark.sql.shuffle.partitions")))
+    df = spark.range(2000).select(
+        F.concat(F.lit("<http://ex.com/s/"), F.col("id"),
+                 F.lit(">")).alias("s"))
+    placed = {(r["pid"], r["subject_bucket"]) for r in
+              bucket_clustered(df, n_buckets).select(
+                  F.spark_partition_id().alias("pid"),
+                  "subject_bucket").distinct().collect()}
+    assert {b for _, b in placed} == set(range(n_buckets))
+    assert all(pid == b % tasks for pid, b in placed), placed
 
 
 def test_rml_sink_writes_one_file_per_bucket(spark, tmp_path, written):

@@ -168,8 +168,9 @@ def test_pipeline_end_to_end_and_resume(spark):
         assert {"mentions", "canonical_mapping", "triples"} <= stages
         full = [r for r in recs if "rows" in r]
         assert all(r["rows"] >= 0 and "per_partition" in r for r in full)
-        # the partition count comes from the per-partition aggregate; on
-        # a Parquet read-back it equals the scan's partition count
+        # the partition count comes from the per-partition aggregate; every
+        # read-back split of these small stages holds rows, so it equals
+        # the scan's partition count (an empty stage records 0, below)
         for r in full:
             assert r["partitions"] == \
                 spark.read.parquet(r["path"]).rdd.getNumPartitions(), r
@@ -179,6 +180,20 @@ def test_pipeline_end_to_end_and_resume(spark):
         with open(os.path.join(d, "manifest.jsonl")) as f:
             recs2 = [json.loads(line) for line in f]
         assert len([r for r in recs2 if "rows" in r]) == len(full)  # no new stage runs
+
+
+def test_stage_runner_records_an_empty_stage(spark, tmp_path):
+    """A stage that writes no rows records 0 rows in 0 partitions: the
+    manifest counts the read-back partitions that hold rows."""
+    from pyrml_spark.kg.lineage import StageRunner
+
+    runner = StageRunner(spark, str(tmp_path))
+    empty = spark.range(10).filter(F.col("id") < 0)
+    out = runner.run("empty", "fp-empty", lambda: empty)
+    assert out.count() == 0
+    with open(runner.manifest_path) as f:
+        (rec,) = [json.loads(line) for line in f]
+    assert (rec["rows"], rec["partitions"], rec["per_partition"]) == (0, 0, [])
 
 
 def test_pipeline_no_orphan_aliases(spark):
