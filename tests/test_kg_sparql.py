@@ -137,6 +137,40 @@ def test_filter_unbound_variable_is_loud():
      "entire constraint"),
     ("SELECT ?s WHERE { ?s <http://e/p> ?o OPTIONAL { "
      "?s <http://e/q> ?a MINUS { ?s <http://e/r> ?a } } }", "MINUS"),
+    # every other loud parse-time boundary, one row each
+    ("SELECT ?s WHERE { SERVICE <http://e/x> { ?s <http://e/p> ?o } }",
+     "SERVICE .offset \\d+. is outside the supported SPARQL subset"),
+    ("SELECT ?s WHERE { ?s / ?o }", "property path operator '/'"),
+    ("SELECT (STR(?s) AS ?x) WHERE { ?s <http://e/p> ?o }",
+     "SELECT expression 'STR'"),
+    ("SELECT (SUM(DISTINCT ?o) AS ?x) WHERE { ?s <http://e/p> ?o }",
+     "SUM\\(DISTINCT \\?o\\) is outside"),
+    ("SELECT (COUNT(*) AS ?n) WHERE { ?s <http://e/p> ?o } "
+     "GROUP BY (STR(?s))", "GROUP BY expressions"),
+    ("SELECT ?s WHERE { { ?s <http://e/p>+ ?o } UNION "
+     "{ ?s <http://e/q> ?o } }", "paths inside UNION sides"),
+    ("SELECT ?s WHERE { ?s <http://e/p> ?o BIND(?o AS ?x) "
+     "?x <http://e/q>+ ?z }", "BIND alias \\?x as a closure-path endpoint"),
+    ("SELECT ?s WHERE { ?s <http://e/p> ?o OPTIONAL { ?s <http://e/q> ?a "
+     "FILTER EXISTS { ?s <http://e/r> ?a } } }",
+     "FILTER \\[NOT\\] EXISTS at offset \\d+ inside OPTIONAL/UNION"),
+    ("SELECT ?s WHERE { ?s <http://e/p> ?o "
+     "FILTER NOT EXISTS { ?s <http://e/q>+ ?o } }",
+     "paths inside FILTER \\[NOT\\] EXISTS"),
+    ("SELECT ?s WHERE { ?s <http://e/p> ?o OPTIONAL { ?s <http://e/q> ?a "
+     "VALUES ?a { 1 } } }", "VALUES at offset \\d+ inside OPTIONAL/UNION"),
+    ("SELECT ?s WHERE { GRAPH ?g { ?s <http://e/p>* ?o } }",
+     "paths inside GRAPH"),
+    ("SELECT ?s WHERE { ?s <http://e/p> ?o "
+     "MINUS { ?s <http://e/q>|<http://e/r> ?o } }", "paths inside MINUS"),
+    ("SELECT ?s WHERE { ?s <http://e/p> ?o { ?s <http://e/q> ?a } }",
+     "nested group at offset \\d+"),
+    ("SELECT ?s WHERE { ?s !^<http://e/p> ?o }",
+     "inverse member \\^ in a negated property set"),
+    ("SELECT ?s WHERE { ?s <http://e/p> ?o } ORDER BY ASC(STR(?s))",
+     "ORDER BY expressions"),
+    ('SELECT ?s WHERE { ?s <http://e/p> ?o FILTER(REGEX(?o, "a", "x")) }',
+     "REGEX flags other than"),
 ])
 def test_unsupported_constructs_are_loud(query, construct):
     with pytest.raises(SPARQLUnsupportedError, match=construct):
