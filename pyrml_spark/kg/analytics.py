@@ -302,9 +302,9 @@ def kg_sparql_having(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kg_sparql_bind(spark: SparkSession, sf_dir: str) -> DataFrame:
     """General BIND through the SPARQL surface: ``?entity`` is the
     computed copy of ``?canon`` joined against the mentions pattern
-    (bind_patterns path), ``?clen`` a derived integer consumed by a
-    deferred FILTER (post_filters path). Bag semantics: one row per
-    (alias, mention) pair projected to (doc, canon, clen)."""
+    (the BGP of patterns over a BIND alias), ``?clen`` a derived integer
+    consumed by a FILTER placed right after its BIND. Bag semantics: one
+    row per (alias, mention) pair projected to (doc, canon, clen)."""
     from .sparql import sparql_select
 
     return sparql_select(_sink_triples(spark, sf_dir), SPARQL_BIND_QUERY)

@@ -32,12 +32,29 @@ at parse time — loud, never a silent approximation):
   ``GROUP BY ?v ...``.
 * ``WHERE { ... }`` with triple patterns, ``;`` predicate lists, ``,``
   object lists, ``a`` for rdf:type, ``FILTER(...)``, any number of
-  flat ``OPTIONAL { patterns FILTER... }`` blocks (left joins on the
-  shared variables — an OPTIONAL sharing no variable with the required
-  group is rejected, and top-level FILTERs may only reference required
-  variables), and the top-level union form
-  ``{ group } UNION { group } ...`` (bag union, columns aligned by
-  variable name, NULL where a side does not bind).
+  ``OPTIONAL { patterns FILTER... }`` blocks, and the top-level union
+  form ``{ group } UNION { group } ...`` (bag union, columns aligned by
+  variable name, NULL where a side does not bind). UNION sides and the
+  bodies of OPTIONAL, EXISTS, MINUS and GRAPH hold only patterns and
+  FILTERs (one level of compounding, loud otherwise).
+* The WHERE clause parses into one tree of the SPARQL 1.1 algebra
+  (§18.2): BGP, a path leaf, Join, LeftJoin (OPTIONAL), semi/anti join
+  (FILTER [NOT] EXISTS), Minus, Filter, Union, Extend (BIND), Table
+  (VALUES) and a subquery leaf. A group evaluates in a fixed order: the
+  one BGP of its plain patterns, paths, subqueries, VALUES, BINDs, the
+  BGP of the patterns that read a BIND alias, EXISTS/MINUS, OPTIONALs,
+  then the BINDs and FILTERs over OPTIONAL variables. Placement rule: a
+  FILTER conjunct over the plain BGP's variables is pushed into its
+  scans; every other conjunct and every BIND goes right after the last
+  element that binds one of its variables (SPARQL's group scope —
+  ``FILTER(!BOUND(?x))`` after an OPTIONAL is the negation idiom).
+* One shared-variable join (inner, left, semi, anti, minus). A join
+  sharing no variable is a loud cartesian product, except MINUS, which
+  then removes nothing (the spec's compatibility rule). Every shared
+  variable must be bound in every solution of both sides: an SQL join
+  key never matches NULL, so SPARQL's unbound-is-compatible rule — a
+  key bound only by an OPTIONAL, an UNDEF cell — is a loud subset
+  boundary, not an approximation.
 * Terms: ``?var``, ``<iri>``, ``pfx:local``, ``"lit"``, ``"lit"@lang``,
   ``"lit"^^dt``, integer/decimal/double shorthand (typed per the XSD
   rules SPARQL gives numeric tokens). Constants are rendered to the
@@ -67,9 +84,6 @@ at parse time — loud, never a silent approximation):
   STRLANG isIRI isURI isLiteral isBlank`` (COALESCE/IF return terms — usable in BIND and
   comparisons; IF's NULL-condition case yields unbound, per the
   spec's error propagation).
-  Top-level filters over OPTIONAL-introduced variables evaluate after
-  the left joins (group scope) — ``FILTER(!BOUND(?x))`` is the
-  supported negation idiom.
 * ``GRAPH ?g { ... }`` / ``GRAPH <iri> { ... }`` over a quads
   DataFrame (s, p, o, g): the graph term extends every pattern of the
   group to a quad — one more pruned/bound scan column, handled by the
@@ -81,39 +95,32 @@ at parse time — loud, never a silent approximation):
   solutions — ``DISTINCT`` collapses them), the common store behavior
   rather than SPARQL's empty-default-graph strictness.
 * ``BIND(expr AS ?alias)`` — the alias may feed SELECT, aggregates,
-  ORDER BY, a CONSTRUCT template, top-level FILTERs (deferred until
-  the bind materializes — SPARQL's whole-group filter scope), and
-  triple patterns: a required-group pattern referencing an alias
-  compiles into its own BGP equi-joined on the computed value after
-  the binds apply (a pattern connected to the required group only
-  through such a pattern leaves the BGP disconnected — loud cartesian,
-  reorder or add a bridging pattern). ``expr`` is any FILTER operand
+  ORDER BY, a CONSTRUCT template, FILTERs and triple patterns: those
+  patterns form their own BGP, equi-joined on the computed value (a
+  NULL/errored value matches nothing and its row drops; a pattern
+  connected to the plain BGP only through such a pattern leaves it
+  disconnected — loud cartesian, reorder or add a bridging pattern).
+  ``expr`` is any FILTER operand
   plus the constructors ``CONCAT(...)`` and ``IRI(...)``; results
   re-enter the term encoding (lexical → plain literal with N-Triples
   escapes, ``IRI()`` → ``<...>``, ``STRLEN`` → ``xsd:integer``,
   numeric constants keep their XSD type). BIND inside OPTIONAL/UNION
-  sides and aliases as closure-path endpoints stay loud.
-* ``{ SELECT ... }`` subqueries in the required group: each runs as a
-  complete SELECT in a FRESH scope (SPARQL bottom-up evaluation — no
-  outer bindings flow in) with its own modifiers (a ``LIMIT``/``ORDER``
-  inside the subquery is the top-k-then-join idiom), then inner-joins
-  the outer solutions on the shared PROJECTED variables. Aggregate
-  aliases flow out as plain values: usable in FILTERs (deferred past
-  the join) and projection, loud in triple patterns (a raw value never
-  equi-matches an encoded term). ``SELECT *`` subqueries and subqueries
-  inside OPTIONAL/UNION stay loud.
+  sides, aliases as closure-path endpoints, and aliases over OPTIONAL
+  variables used in any pattern stay loud.
+* ``{ SELECT ... }`` subqueries: each runs as a complete SELECT in a
+  FRESH scope (SPARQL bottom-up evaluation — no outer bindings flow in)
+  with its own modifiers (a ``LIMIT``/``ORDER`` inside the subquery is
+  the top-k-then-join idiom), joined on the shared PROJECTED variables.
+  Aggregate aliases flow out as plain values: usable in FILTERs and
+  projection, loud in triple patterns (a raw value never equi-matches
+  an encoded term). ``SELECT *`` subqueries stay loud.
 * ``VALUES ?x { t ... }`` / ``VALUES (?x ?y) { (t t) (t UNDEF) ... }``
   — a single bound variable without UNDEF becomes a plain ``IN``
   filter; otherwise an inline table joined on the shared variables
   (UNDEF allowed in extension columns, loud in join columns).
 * ``FILTER [NOT] EXISTS { patterns FILTER... }`` as a whole constraint
-  (semi/anti join on the shared variables — uncorrelated EXISTS is
-  loud) and ``MINUS { ... }`` (anti join; a MINUS side sharing no
-  variable removes nothing, per the spec's compatibility rule). Both
-  evaluate against the required-group bag — their shared variables
-  must be bound there, not introduced by an OPTIONAL (an SQL join key
-  cannot express SPARQL's unbound-is-compatible rule; loud subset
-  boundary, not an approximation).
+  (uncorrelated EXISTS is loud) and ``MINUS { ... }``: semi/anti joins
+  on the shared variables.
 * ``HAVING (constraint) ...`` after GROUP BY (or over the implicit
   group when SELECT has aggregates): constraints use the FILTER
   grammar (``&& || !``, parentheses, comparisons) over **aggregate
@@ -155,8 +162,8 @@ FILTER semantics (documented, SPARQL-faithful where it matters):
   the XPath dialect SPARQL specifies); the optional flags (``i s m``
   combinations) map to an inline ``(?flags)``. Other flags are rejected.
 * FILTER, HAVING and BIND expressions parse into one expression tree,
-  lowered once to Spark Columns; a filter's scope and its placement in
-  the BGP come from the exact variable set of its tree.
+  lowered once to Spark Columns; a filter's placement comes from the
+  exact variable set of its tree.
 
 ``LIMIT`` without ``ORDER BY`` over all output columns is accepted (it
 is valid SPARQL — any n rows satisfy it) but the choice of rows is then
@@ -176,11 +183,12 @@ import re
 from dataclasses import dataclass, field
 from decimal import Decimal
 from functools import reduce
-from typing import Dict, List, Optional, Tuple, Union
+from typing import Dict, List, Optional, Tuple
 from urllib.parse import urljoin
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .fixpoint import fixpoint
 from .query import BGPError, is_var, kg_query
@@ -199,11 +207,6 @@ class SPARQLUnsupportedError(SPARQLError):
 
 # ---------------------------------------------------------------- lexer
 
-_KEYWORDS = {
-    "select", "distinct", "reduced", "where", "filter", "prefix", "base",
-    "order", "by", "limit", "offset", "asc", "desc", "a", "optional",
-    "union", "ask", "construct", "group", "as",
-}
 # recognized-and-rejected: name the construct in the error instead of a
 # generic parse failure (these are the SPARQL features OUTSIDE the subset)
 _UNSUPPORTED_KEYWORDS = {
@@ -449,70 +452,90 @@ class Logic(_Node):
     kind = _BOOL
 
 
-Expr = Union[Var, Const, AggRef, Call, Compare, Logic]
+Expr = _Node  # any of the expression nodes above
+
+
+# --- WHERE-clause algebra (SPARQL 1.1 §18.2) -------------------------
+#
+# Each ``{ … }`` group parses into one tree of these nodes (see
+# :func:`_assemble`); :func:`_evaluate` runs a tree.
+
+@dataclass
+class BGP:
+    """Plain triple patterns plus the FILTER conjuncts over their own
+    variables: one :func:`kg_query` call."""
+    patterns: List[Tuple[str, ...]]
+    filters: List[Expr] = field(default_factory=list)
+
+
+@dataclass
+class Path:
+    """An alternation/closure path pattern (an edge-frame leaf)."""
+    s: str
+    path: PathNode
+    o: str
+
+
+@dataclass
+class Table:
+    """``VALUES`` rows of encoded terms (None is UNDEF); no names and
+    one empty row is the empty solution µ0."""
+    names: List[str]
+    rows: List[tuple]
+
+
+@dataclass
+class SubSelect:
+    query: "ParsedQuery"
+
+
+@dataclass
+class Join:
+    """``kind``: ``inner``, ``left`` (OPTIONAL), ``semi`` / ``anti``
+    (FILTER [NOT] EXISTS) or ``minus``."""
+    kind: str
+    left: "Node"
+    right: "Node"
+
+
+@dataclass
+class Filter:
+    expr: Expr
+    inner: "Node"
+
+
+@dataclass
+class Extend:
+    """``BIND(expr AS ?alias)``."""
+    inner: "Node"
+    alias: str
+    expr: Expr
+
+
+@dataclass
+class Union:
+    sides: List["Node"]
+
+
+Node = object  # union of the eight dataclasses above
 
 
 @dataclass
 class ParsedQuery:
-    """Inspectable parse result — everything the executors hand to the
-    BGP compiler, plus the solution modifiers they apply themselves."""
-    form: str                               # SELECT | ASK | CONSTRUCT
-    select_vars: Optional[List[str]]        # None == SELECT *
+    """Inspectable parse result: the WHERE clause's algebra tree plus
+    the solution modifiers and the CONSTRUCT/DESCRIBE parts."""
+    form: str                        # SELECT | ASK | CONSTRUCT | DESCRIBE
+    select_vars: Optional[List[str]]  # None == SELECT *
     distinct: bool
-    patterns: List[Tuple[str, str, str]]    # required-group patterns
-    filters: List[Expr]                     # FILTER expression trees
-    # each OPTIONAL block: (patterns, filters) — left-joined in order
-    optionals: List[Tuple[List[Tuple[str, str, str]], List[Expr]]] = field(
-        default_factory=list)
-    # top-level { g } UNION { g }: list of (patterns, filters) sides;
-    # when set, patterns/filters/optionals above are empty
-    union_groups: Optional[
-        List[Tuple[List[Tuple[str, str, str]], List[Expr]]]] = None
+    where: Optional[Node] = None     # None: DESCRIBE without WHERE
+    # fresh variables introduced by path desugaring — dropped from the
+    # solutions before projection/aggregation
+    hidden_vars: List[str] = field(default_factory=list)
     aggregates: List[Aggregate] = field(default_factory=list)
     group_by: List[str] = field(default_factory=list)
     template: List[Tuple[str, str, str]] = field(default_factory=list)
-    # non-BGP-expressible property paths (alternation / closures) in the
-    # required group: (s_term, PathNode, o_term)
-    path_patterns: List[Tuple[str, object, str]] = field(
-        default_factory=list)
-    # MINUS { … } groups: anti-joined on shared vars (spec: a MINUS
-    # side sharing no variable removes nothing)
-    minus_groups: List[Tuple[List[Tuple[str, str, str]], List[Expr]]] = \
-        field(default_factory=list)
-    # FILTER [NOT] EXISTS { … }: (positive?, patterns, filters) —
-    # semi/anti join on the shared variables
-    exists_filters: List[
-        Tuple[bool, List[Tuple[str, str, str]], List[Expr]]] = field(
-        default_factory=list)
-    # VALUES clauses: (var names, rows of encoded terms / None=UNDEF)
-    values_clauses: List[
-        Tuple[List[str], List[Tuple[Optional[str], ...]]]] = field(
-        default_factory=list)
-    # BIND(expr AS ?alias): (alias, expression)
-    binds: List[Tuple[str, Expr]] = field(default_factory=list)
-    # required-group patterns that reference a BIND alias: executed as
-    # an equi-join on the computed alias column after binds materialize
-    bind_patterns: List[Tuple[str, ...]] = field(default_factory=list)
-    # top-level FILTERs referencing a BIND alias: applied after the
-    # binds (and bind_patterns) instead of inside the BGP
-    post_filters: List[Expr] = field(default_factory=list)
-    # top-level FILTERs referencing OPTIONAL-introduced variables:
-    # applied after every OPTIONAL left-joins (SPARQL group scope — the
-    # filter sees the extended solutions; enables FILTER(!BOUND(?x)))
-    optional_filters: List[Expr] = field(default_factory=list)
-    # BINDs whose expression references OPTIONAL-introduced variables
-    # (directly or via an earlier deferred alias): applied after the
-    # left joins, before optional_filters — COALESCE-over-OPTIONAL
-    optional_binds: List[Tuple[str, Expr]] = field(default_factory=list)
-    # { SELECT ... } subqueries in the required group: each runs as its
-    # own full SELECT (fresh scope — SPARQL bottom-up evaluation) and
-    # inner-joins the outer bag on the shared PROJECTED variables
-    subqueries: List["ParsedQuery"] = field(default_factory=list)
     # DESCRIBE resources: encoded IRIs and/or ?var names
     describe_terms: List[str] = field(default_factory=list)
-    # fresh variables introduced by path desugaring — dropped from the
-    # solution bag before projection/aggregation
-    hidden_vars: List[str] = field(default_factory=list)
     order_by: List[Tuple[str, bool]] = field(default_factory=list)  # (var, asc)
     limit: Optional[int] = None
     offset: Optional[int] = None
@@ -529,18 +552,10 @@ class _Parser:
         self.i = 0
         self.prefixes: Dict[str, str] = {}
         self.base: Optional[str] = None
-        self.vars_seen: List[str] = []
+        self.vars_seen: set = set()   # variable names in scope
         self._fresh = 0
-        self._pending_paths: List[Tuple[str, object, str]] = []
+        # every fresh path variable of the parse (subqueries included)
         self._hidden: List[str] = []
-        self._pending_minus: List[tuple] = []
-        self._pending_exists: List[tuple] = []
-        self._pending_values: List[tuple] = []
-        self._pending_binds: List[Tuple[str, Expr]] = []
-        # scan filters emitted by path desugaring (negated property
-        # sets) — drained into the enclosing group's FILTER list
-        self._pending_scan_filters: List[Expr] = []
-        self._pending_subqueries: List[ParsedQuery] = []
         # HAVING's hidden aggregates while its constraints parse; None
         # elsewhere (aggregate operands are allowed only in HAVING)
         self._having_aggs: Optional[List[Aggregate]] = None
@@ -595,6 +610,14 @@ class _Parser:
                 f"relative IRI <{iri}> without a BASE declaration")
         return f"<{iri}>"
 
+    def _iri(self, t: _Tok) -> Optional[str]:
+        """An IRIREF or prefixed-name token → its encoded IRI, else None."""
+        if t.kind == "IRIREF":
+            return self._resolve_iriref(t.text)
+        if t.kind == "PNAME":
+            return self._expand_pname(t.text, t.pos)
+        return None
+
     def _string_term(self, text: str) -> str:
         """SPARQL string literal (+ optional @lang / ^^dt) → the engine's
         encoded term. xsd:string collapses to the plain form, matching
@@ -620,14 +643,10 @@ class _Parser:
         t = self.next()
         self._reject_unsupported(t)
         if t.kind == "VAR":
-            v = t.text[1:]
-            if v not in self.vars_seen:
-                self.vars_seen.append(v)
+            self.vars_seen.add(t.text[1:])
             return t.text
-        if t.kind == "IRIREF":
-            return self._resolve_iriref(t.text)
-        if t.kind == "PNAME":
-            return self._expand_pname(t.text, t.pos)
+        if iri := self._iri(t):
+            return iri
         if t.kind == "NAME" and t.text == "a" and position == "predicate":
             return RDF_TYPE
         if position == "predicate" and t.kind == "OP" and t.text in "/|^*+?":
@@ -731,7 +750,7 @@ class _Parser:
         pq.having, pq.having_aggs = self._having(bool(aggregates))
         if aggregates:
             aliases = [a.alias for a in aggregates]
-            dup = set(aliases) & set(self.vars_seen)
+            dup = set(aliases) & self.vars_seen
             if dup:
                 raise SPARQLError(
                     f"aggregate alias{'es' if len(dup) > 1 else ''} "
@@ -892,7 +911,7 @@ class _Parser:
         # query itself binds, or the aggregated frame would carry two
         # columns of that name (ambiguous-reference at execution —
         # ADVICE r8)
-        taken = set(self.vars_seen) | {a.alias for a in self._having_aggs}
+        taken = self.vars_seen | {a.alias for a in self._having_aggs}
         n = len(self._having_aggs)
         while f"_h{n}" in taken:
             n += 1
@@ -922,35 +941,26 @@ class _Parser:
     def _describe_query(self) -> ParsedQuery:
         self.expect_kw("describe")
         terms: List[str] = []
-        while True:
-            t = self.peek()
-            if t.kind == "VAR":
-                terms.append(self.next().text)
-            elif t.kind == "IRIREF":
-                terms.append(self._resolve_iriref(self.next().text))
-            elif t.kind == "PNAME":
-                terms.append(self._expand_pname(self.next().text, t.pos))
-            else:
-                break
+        while self.peek().kind in ("VAR", "IRIREF", "PNAME"):
+            t = self.next()
+            terms.append(t.text if t.kind == "VAR" else self._iri(t))
         if not terms:
             t = self.peek()
             raise SPARQLError(
                 f"expected IRIs or ?vars after DESCRIBE at offset "
                 f"{t.pos} (DESCRIBE * is outside the supported subset)")
-        has_vars = any(is_var(t) for t in terms)
+        var_names = [t[1:] for t in terms if is_var(t)]
         if self.at_kw("where") or (
                 self.peek().kind == "OP" and self.peek().text == "{"):
             pq = self._where_clause()
         else:
-            if has_vars:
+            if var_names:
                 raise SPARQLError(
                     "DESCRIBE with variables needs a WHERE clause to "
                     "bind them")
-            pq = ParsedQuery(form="", select_vars=None, distinct=False,
-                             patterns=[], filters=[])
-        bound = _bound_vars(pq)
-        unbound = sorted(t[1:] for t in terms
-                         if is_var(t) and t[1:] not in bound)
+            pq = ParsedQuery(form="", select_vars=None, distinct=False)
+        unbound = sorted(
+            set(var_names) - (_vars(pq.where)[0] if var_names else set()))
         if unbound:
             raise SPARQLError(
                 f"DESCRIBE variables {unbound} are not bound in WHERE")
@@ -964,7 +974,7 @@ class _Parser:
         # template variables are NOT in-scope bindings — they must not
         # block a WHERE-side BIND alias of the same name (the template
         # consumes bindings, it doesn't create them)
-        scope_before = list(self.vars_seen)
+        scope_before = set(self.vars_seen)
         template: List[Tuple[str, str, str]] = []
         while True:
             t = self.peek()
@@ -981,23 +991,23 @@ class _Parser:
                 raise SPARQLError(
                     f"FILTER inside a CONSTRUCT template at offset "
                     f"{t.pos} (filters belong in WHERE)")
-            template.extend(self._triples_block())
-            if self._pending_scan_filters:
+            items = self._triples_block()
+            extra = [i for i in items if not isinstance(i, tuple)]
+            if extra:
+                what = ("an alternation/closure path"
+                        if isinstance(extra[0], Path)
+                        else "a negated property set")
                 raise SPARQLUnsupportedError(
-                    "a negated property set inside a CONSTRUCT template "
-                    "makes no sense (templates instantiate, they don't "
-                    "match)")
+                    f"{what} inside a CONSTRUCT template makes no sense "
+                    "(templates instantiate, they don't match)")
+            template.extend(items)
         if not template:
             raise SPARQLError("empty CONSTRUCT template")
-        template_vars = {v for pat in template for v in pat
-                         if is_var(v)}
         self.vars_seen = scope_before
         pq = self._where_clause()
         pq.form = "CONSTRUCT"
         pq.template = template
-        bound = _bound_vars(pq)
-        unbound = sorted(
-            v[1:] for v in template_vars if v[1:] not in bound)
+        unbound = sorted(_pattern_vars(template) - _vars(pq.where)[0])
         if unbound:
             raise SPARQLError(
                 f"CONSTRUCT template variables {unbound} are not bound "
@@ -1011,181 +1021,50 @@ class _Parser:
         if self.at_kw("where"):
             self.next()
         self.expect_op("{")
-        pq = ParsedQuery(form="", select_vars=None, distinct=False,
-                         patterns=[], filters=[])
-        nxt = (self.toks[self.i + 1]
-               if self.i + 1 < len(self.toks) else None)
         if (self.peek().kind == "OP" and self.peek().text == "{"
-                and not (nxt is not None and nxt.kind == "NAME"
-                         and nxt.text.lower() == "select")):
+                and not self._at_subquery()):
             sides = []
             while True:
                 self.expect_op("{")
-                pats, fils, opts = self._group(allow_compound=False)
-                assert not opts
-                sides.append((pats, fils))
-                if self.at_kw("union"):
-                    self.next()
-                    continue
-                break
+                sides.append(self._group(compound=False))
+                if not self.at_kw("union"):
+                    break
+                self.next()
             self.expect_op("}")
-            if len(sides) == 1:
-                # a single braced group is just a group
-                pq.patterns, pq.filters = sides[0]
-            else:
-                if self._pending_paths:
-                    raise SPARQLUnsupportedError(
-                        "alternation/closure property paths inside "
-                        "UNION sides are outside the supported subset "
-                        "(use them in a non-union group)")
-                pq.union_groups = sides
+            # a single braced group is just a group
+            where = (sides[0] if len(sides) == 1 else
+                     Union([_flat(s, "UNION sides") for s in sides]))
         else:
-            pq.patterns, pq.filters, pq.optionals = self._group(
-                allow_compound=True)
-        pq.path_patterns = self._pending_paths
-        pq.hidden_vars = self._hidden
-        pq.minus_groups = self._pending_minus
-        pq.exists_filters = self._pending_exists
-        pq.values_clauses = self._pending_values
-        pq.binds = self._pending_binds
-        pq.subqueries = self._pending_subqueries
-        self._pending_paths = []
-        self._hidden = []
-        self._pending_minus = []
-        self._pending_exists = []
-        self._pending_values = []
-        self._pending_binds = []
-        self._pending_subqueries = []
-        # top-level FILTERs over OPTIONAL-introduced variables evaluate
-        # AFTER the left joins (SPARQL's group scope): !BOUND(?x) is the
-        # negation idiom, and any comparison over an unbound var is a
-        # type error that drops the row — both need the joined bag
-        opt_vars = {t[1:] for pats, _ in pq.optionals for pat in pats
-                    for t in pat if is_var(t)}
-        req_vars = ({t[1:] for pat in pq.patterns for t in pat
-                     if is_var(t)}
-                    | {t[1:] for st, _, ot in pq.path_patterns
-                       for t in (st, ot) if is_var(t)}
-                    | {v for names, _ in pq.values_clauses
-                       for v in names}
-                    | {a for a, _ in pq.binds}
-                    | {v for sub in pq.subqueries
-                       for v in _subquery_proj(sub)})
-        opt_only = opt_vars - req_vars
-        deferred_aliases: set = set()
-        if opt_only and pq.binds:
-            kept = []
-            for alias, e in pq.binds:
-                if e.vars & (opt_only | deferred_aliases):
-                    pq.optional_binds.append((alias, e))
-                    deferred_aliases.add(alias)
-                else:
-                    kept.append((alias, e))
-            pq.binds = kept
-        pq.optional_filters = _take_filters(pq, opt_only | deferred_aliases)
-        if deferred_aliases:
-            # a deferred alias's column does not exist until AFTER the
-            # OPTIONAL left-joins — any pattern-side use joins on a
-            # missing column (silently dropped correlation): loud in
-            # EVERY pattern context, not just the required group
-            hazard = ([("a triple pattern", pq.patterns)]
-                      + [("an OPTIONAL group", pats)
-                         for pats, _ in pq.optionals]
-                      + [("a FILTER EXISTS group", pats)
-                         for _, pats, _ in pq.exists_filters]
-                      + [("a MINUS group", pats)
-                         for pats, _ in pq.minus_groups])
-            for where, pats in hazard:
-                for pat in pats:
-                    bad = [v for v in pat
-                           if is_var(v) and v[1:] in deferred_aliases]
-                    if bad:
-                        raise SPARQLUnsupportedError(
-                            f"BIND alias {bad[0]} depends on OPTIONAL "
-                            f"variables and cannot join {where} in "
-                            "this subset (bind it from required "
-                            "variables, or restructure the query)")
-        if pq.binds:
-            aliases = {a for a, _ in pq.binds}
-            # required-group patterns referencing an alias can't run in
-            # the BGP (the column doesn't exist at scan time): they move
-            # to bind_patterns and equi-join on the COMPUTED value after
-            # the binds materialize.  Patterns connected to the required
-            # group only THROUGH such a moved pattern leave the required
-            # BGP disconnected — kg_query's cartesian check stays loud
-            # for that shape (no silent wrong answer).
-            moved = [p for p in pq.patterns
-                     if any(is_var(v) and v[1:] in aliases for v in p)]
-            if moved:
-                pq.bind_patterns = moved
-                pq.patterns = [p for p in pq.patterns if p not in moved]
-            for s, _, o in pq.path_patterns:
-                bad = [t for t in (s, o)
-                       if is_var(t) and t[1:] in aliases]
-                if bad:
-                    raise SPARQLUnsupportedError(
-                        f"BIND alias {bad[0]} as a closure-path "
-                        "endpoint is outside the supported subset")
-            # top-level FILTERs referencing an alias defer to after the
-            # binds materialize (SPARQL scope: the whole group); filters
-            # INSIDE OPTIONAL/EXISTS/MINUS sides compile in their own
-            # BGP where the alias column either is re-bound by the
-            # side's patterns (fine) or is unknown (loud at analysis)
-            moved_only = ({t[1:] for pat in pq.bind_patterns
-                           for t in pat if is_var(t)}
-                          - {t[1:] for pat in pq.patterns
-                             for t in pat if is_var(t)} - aliases)
-            # filters over the alias OR over variables bound only by a
-            # moved pattern apply after the bind-pattern join (the
-            # required BGP no longer binds those columns)
-            pq.post_filters = _take_filters(pq, aliases | moved_only)
-        if pq.subqueries:
-            # an AGGREGATE alias column is a raw numeric, not an encoded
-            # term — as a triple-pattern key it would never equi-match
-            # ("3" vs '"3"^^xsd:integer'), which SPARQL value semantics
-            # would sometimes match: loud, not silently empty
-            agg_aliases = {a.alias for sub in pq.subqueries
-                           for a in sub.aggregates}
-            for pat in pq.patterns + pq.bind_patterns:
-                bad = [v for v in pat if is_var(v) and v[1:] in agg_aliases]
-                if bad:
-                    raise SPARQLUnsupportedError(
-                        f"subquery aggregate alias {bad[0]} used in a "
-                        "triple pattern is outside the supported subset "
-                        "(aggregate results are plain values, not "
-                        "terms; compare them in a FILTER)")
-            # outer FILTERs referencing variables bound ONLY by a
-            # subquery defer until after the subquery joins (they
-            # cannot compile inside the required BGP)
-            pattern_only = {t[1:] for pat in pq.patterns for t in pat
-                            if is_var(t)}
-            sub_only = {v for sub in pq.subqueries
-                        for v in _subquery_proj(sub)} - pattern_only
-            pq.post_filters += _take_filters(pq, sub_only)
-        if pq.union_groups is not None and (pq.minus_groups
-                                            or pq.exists_filters
-                                            or pq.values_clauses):
-            raise SPARQLUnsupportedError(
-                "MINUS / FILTER EXISTS / VALUES combined with the "
-                "top-level UNION form is outside the supported subset")
-        return pq
+            where = self._group(compound=True)
+        return ParsedQuery(form="", select_vars=None, distinct=False,
+                           where=where, hidden_vars=self._hidden)
 
-    def _group(self, allow_compound: bool) -> Tuple[
-            List[Tuple[str, str, str]], List[Expr],
-            List[Tuple[List[Tuple[str, str, str]], List[Expr]]]]:
-        """One brace-delimited group body → (patterns, filters,
-        optionals). ``allow_compound=False`` (UNION sides, OPTIONAL
-        bodies) rejects OPTIONAL — one level of compounding only, loud.
-        Consumes the closing '}'."""
-        patterns: List[Tuple[str, str, str]] = []
+    def _at_subquery(self) -> bool:
+        nxt = self.toks[self.i + 1] if self.i + 1 < len(self.toks) else None
+        return (nxt is not None and nxt.kind == "NAME"
+                and nxt.text.lower() == "select")
+
+    def _compound_only(self, compound: bool, what: str, t: _Tok) -> None:
+        if not compound:
+            raise SPARQLUnsupportedError(
+                f"{what} at offset {t.pos} inside OPTIONAL/UNION is outside "
+                "the supported subset")
+
+    def _group(self, compound: bool) -> Node:
+        """One brace-delimited group body → its algebra node (see
+        :func:`_assemble`). A non-compound group — a UNION side, or the
+        body of OPTIONAL, FILTER [NOT] EXISTS, MINUS or GRAPH — holds
+        only triple patterns and FILTERs: one level of compounding,
+        loud otherwise. Consumes the closing '}'."""
+        patterns: List[Tuple[str, ...]] = []
         filters: List[Expr] = []
-        optionals: List[
-            Tuple[List[Tuple[str, str, str]], List[Expr]]] = []
+        binds: List[Tuple[str, Expr]] = []
+        parts: List[Tuple[str, Node]] = []   # (join kind, element)
         while True:
             t = self.peek()
             if t.kind == "OP" and t.text == "}":
                 self.next()
-                return patterns, filters, optionals
+                return _assemble(patterns, filters, binds, parts)
             if t.kind == "EOF":
                 raise SPARQLError("unterminated group (missing '}')")
             if t.kind == "OP" and t.text == ".":
@@ -1193,143 +1072,50 @@ class _Parser:
                 continue
             if self.at_kw("filter"):
                 self.next()
-                positive = None
-                if self.at_kw("exists"):
-                    self.next()
-                    positive = True
-                elif self.at_kw("not"):
-                    self.next()
-                    self.expect_kw("exists")
-                    positive = False
-                if positive is not None:
-                    if not allow_compound:
-                        raise SPARQLUnsupportedError(
-                            f"FILTER [NOT] EXISTS at offset {t.pos} "
-                            "inside OPTIONAL/UNION is outside the "
-                            "supported subset")
-                    self.expect_op("{")
-                    n_paths = len(self._pending_paths)
-                    e_pats, e_fils, _ = self._group(allow_compound=False)
-                    if len(self._pending_paths) > n_paths:
-                        raise SPARQLUnsupportedError(
-                            "alternation/closure property paths inside "
-                            "FILTER [NOT] EXISTS are outside the "
-                            "supported subset")
-                    if not e_pats:
-                        raise SPARQLError(
-                            "FILTER [NOT] EXISTS group contains no "
-                            "triple patterns")
-                    self._pending_exists.append(
-                        (positive, e_pats, e_fils))
+                if self.at_kw("exists", "not"):
+                    positive = self.next().text.lower() == "exists"
+                    if not positive:
+                        self.expect_kw("exists")
+                    self._compound_only(compound, "FILTER [NOT] EXISTS", t)
+                    parts.append(("semi" if positive else "anti",
+                                  self._nested_group("FILTER [NOT] EXISTS",
+                                                     t)))
                     continue
                 filters.extend(self._filter_exprs())
                 continue
             if self.at_kw("values"):
-                if not allow_compound:
-                    raise SPARQLUnsupportedError(
-                        f"VALUES at offset {t.pos} inside OPTIONAL/"
-                        "UNION is outside the supported subset")
+                self._compound_only(compound, "VALUES", t)
                 self.next()
-                self._pending_values.append(self._values_clause())
+                parts.append(("inner", self._values_clause()))
                 continue
             if self.at_kw("bind"):
-                if not allow_compound:
-                    raise SPARQLUnsupportedError(
-                        f"BIND at offset {t.pos} inside OPTIONAL/UNION "
-                        "is outside the supported subset")
+                self._compound_only(compound, "BIND", t)
                 self.next()
-                self.expect_op("(")
-                e = self._operand()
-                self.expect_kw("as")
-                al = self.next()
-                if al.kind != "VAR":
-                    raise SPARQLError(
-                        f"expected ?alias after AS at offset {al.pos}")
-                name = al.text[1:]
-                if name in self.vars_seen:
-                    raise SPARQLError(
-                        f"BIND rebinds ?{name}, already in scope "
-                        "(SPARQL forbids rebinding)")
-                self.expect_op(")")
-                if e.kind == _BOOL:
-                    raise SPARQLUnsupportedError(
-                        "BIND of a boolean expression is outside the "
-                        "supported subset")
-                self._pending_binds.append((name, e))
-                self.vars_seen.append(name)
+                binds.append(self._bind())
                 continue
             if self.at_kw("graph"):
-                if not allow_compound:
-                    raise SPARQLUnsupportedError(
-                        f"GRAPH at offset {t.pos} inside OPTIONAL/UNION "
-                        "is outside the supported subset")
+                self._compound_only(compound, "GRAPH", t)
                 self.next()
-                gt = self.next()
-                if gt.kind == "VAR":
-                    g_term = gt.text
-                    if g_term[1:] not in self.vars_seen:
-                        self.vars_seen.append(g_term[1:])
-                elif gt.kind == "IRIREF":
-                    g_term = self._resolve_iriref(gt.text)
-                elif gt.kind == "PNAME":
-                    g_term = self._expand_pname(gt.text, gt.pos)
-                else:
-                    raise SPARQLError(
-                        f"expected ?var or IRI after GRAPH at offset "
-                        f"{gt.pos}")
-                self.expect_op("{")
-                n_paths = len(self._pending_paths)
-                g_pats, g_fils, _ = self._group(allow_compound=False)
-                if len(self._pending_paths) > n_paths:
-                    raise SPARQLUnsupportedError(
-                        "alternation/closure property paths inside "
-                        "GRAPH are outside the supported subset")
-                if not g_pats:
-                    raise SPARQLError(
-                        "GRAPH group contains no triple patterns")
+                g_term = self._graph_term()
+                body = self._nested_group("GRAPH", t)
                 # quad patterns: the graph term joins every pattern of
                 # the group (kg_query scans then prune/bind on g too)
-                patterns.extend(tuple(pat) + (g_term,) for pat in g_pats)
-                filters.extend(g_fils)
+                patterns.extend(tuple(p) + (g_term,) for p in body.patterns)
+                filters.extend(body.filters)
                 continue
             if self.at_kw("minus"):
-                if not allow_compound:
-                    raise SPARQLUnsupportedError(
-                        f"MINUS at offset {t.pos} inside OPTIONAL/UNION "
-                        "is outside the supported subset")
+                self._compound_only(compound, "MINUS", t)
                 self.next()
-                self.expect_op("{")
-                n_paths = len(self._pending_paths)
-                m_pats, m_fils, _ = self._group(allow_compound=False)
-                if len(self._pending_paths) > n_paths:
-                    raise SPARQLUnsupportedError(
-                        "alternation/closure property paths inside "
-                        "MINUS are outside the supported subset")
-                if not m_pats:
-                    raise SPARQLError(
-                        "MINUS group contains no triple patterns")
-                self._pending_minus.append((m_pats, m_fils))
+                parts.append(("minus", self._nested_group("MINUS", t)))
                 continue
             if self.at_kw("optional"):
-                if not allow_compound:
+                if not compound:
                     raise SPARQLUnsupportedError(
                         f"OPTIONAL at offset {t.pos} inside another "
                         "OPTIONAL or UNION side is outside the "
                         "supported subset (one level of compounding)")
                 self.next()
-                self.expect_op("{")
-                n_paths = len(self._pending_paths)
-                o_pats, o_fils, _ = self._group(allow_compound=False)
-                if len(self._pending_paths) > n_paths:
-                    raise SPARQLUnsupportedError(
-                        "alternation/closure property paths inside "
-                        "OPTIONAL are outside the supported subset "
-                        "(use them in the required group)")
-                if not o_pats:
-                    raise SPARQLError(
-                        f"OPTIONAL group at offset {t.pos} contains no "
-                        "triple patterns")
-                optionals.append((o_pats, o_fils))
+                parts.append(("left", self._nested_group("OPTIONAL", t)))
                 continue
             if self.at_kw("union"):
                 raise SPARQLUnsupportedError(
@@ -1337,73 +1123,85 @@ class _Parser:
                     "top-level form {{ group }} UNION {{ group }}")
             self._reject_unsupported(t)
             if t.kind == "OP" and t.text == "{":
-                nxt = (self.toks[self.i + 1]
-                       if self.i + 1 < len(self.toks) else None)
-                if (nxt is not None and nxt.kind == "NAME"
-                        and nxt.text.lower() == "select"):
-                    if not allow_compound:
-                        raise SPARQLUnsupportedError(
-                            f"subquery at offset {t.pos} inside "
-                            "OPTIONAL/UNION is outside the supported "
-                            "subset")
-                    self.next()
-                    self._pending_subqueries.append(self._subquery())
-                    continue
-                raise SPARQLUnsupportedError(
-                    f"nested group at offset {t.pos} is outside the "
-                    "supported subset (UNION is only supported as the "
-                    "top-level {{ group }} UNION {{ group }} form)")
-            patterns.extend(self._triples_block())
-            if self._pending_scan_filters:
-                filters.extend(self._pending_scan_filters)
-                self._pending_scan_filters = []
+                if not self._at_subquery():
+                    raise SPARQLUnsupportedError(
+                        f"nested group at offset {t.pos} is outside the "
+                        "supported subset (UNION is only supported as the "
+                        "top-level {{ group }} UNION {{ group }} form)")
+                self._compound_only(compound, "subquery", t)
+                self.next()
+                parts.append(("inner", SubSelect(self._subquery())))
+                continue
+            for item in self._triples_block():
+                if isinstance(item, tuple):
+                    patterns.append(item)
+                elif isinstance(item, Path):
+                    parts.append(("inner", item))
+                else:
+                    filters.append(item)
+
+    def _nested_group(self, what: str, t: _Tok) -> BGP:
+        """The ``{ … }`` body of OPTIONAL, FILTER [NOT] EXISTS, MINUS or
+        GRAPH (keyword token ``t``): a non-compound group with at least
+        one triple pattern and no alternation/closure path."""
+        self.expect_op("{")
+        body = _flat(self._group(compound=False), what)
+        if not body.patterns:
+            raise SPARQLError(
+                f"{what} group at offset {t.pos} contains no triple "
+                "patterns")
+        return body
+
+    def _bind(self) -> Tuple[str, Expr]:
+        """``(expr AS ?alias)`` after BIND."""
+        self.expect_op("(")
+        e = self._operand()
+        self.expect_kw("as")
+        al = self.next()
+        if al.kind != "VAR":
+            raise SPARQLError(
+                f"expected ?alias after AS at offset {al.pos}")
+        name = al.text[1:]
+        if name in self.vars_seen:
+            raise SPARQLError(
+                f"BIND rebinds ?{name}, already in scope "
+                "(SPARQL forbids rebinding)")
+        self.expect_op(")")
+        if e.kind == _BOOL:
+            raise SPARQLUnsupportedError(
+                "BIND of a boolean expression is outside the "
+                "supported subset")
+        self.vars_seen.add(name)
+        return name, e
+
+    def _graph_term(self) -> str:
+        gt = self.next()
+        if gt.kind == "VAR":
+            self.vars_seen.add(gt.text[1:])
+            return gt.text
+        if iri := self._iri(gt):
+            return iri
+        raise SPARQLError(
+            f"expected ?var or IRI after GRAPH at offset {gt.pos}")
 
     def _subquery(self) -> ParsedQuery:
-        """``{ SELECT ... }`` in a group — parsed with a FRESH scope and
-        pending state (SPARQL evaluates subqueries bottom-up; nothing
-        flows in, only the PROJECTED variables flow out, becoming
-        in-scope join variables for the enclosing group)."""
-        saved = (self._pending_paths, self._hidden, self._pending_minus,
-                 self._pending_exists, self._pending_values,
-                 self._pending_binds, self._pending_subqueries,
-                 self._pending_scan_filters, self.vars_seen)
-        self._pending_paths = []
-        self._hidden = []
-        self._pending_minus = []
-        self._pending_exists = []
-        self._pending_values = []
-        self._pending_binds = []
-        self._pending_subqueries = []
-        self._pending_scan_filters = []
-        self.vars_seen = []
+        """``{ SELECT ... }`` in a group, after its '{' — parsed in a
+        FRESH variable scope (SPARQL evaluates subqueries bottom-up;
+        nothing flows in, only the PROJECTED variables flow out,
+        becoming in-scope join variables for the enclosing group)."""
+        outer, self.vars_seen = self.vars_seen, set()
         sub = self._select_query()
         self.expect_op("}")
-        (self._pending_paths, self._hidden, self._pending_minus,
-         self._pending_exists, self._pending_values, self._pending_binds,
-         self._pending_subqueries, self._pending_scan_filters,
-         self.vars_seen) = saved
+        self.vars_seen = outer
         if sub.select_vars is None and not sub.aggregates:
             raise SPARQLUnsupportedError(
                 "SELECT * in a subquery is outside the supported subset "
                 "(project the join variables explicitly — the outer "
                 "join key set must be deterministic at parse time)")
-        pending_aliases = {a for a, _ in self._pending_binds}
-        for v in _subquery_proj(sub):
-            # a projection colliding with an earlier BIND alias would
-            # execute as the subquery join followed by a withColumn that
-            # silently OVERWRITES the subquery's column (ADVICE r8) —
-            # loud instead, like the reverse order's "BIND rebinds".
-            # Collision with pattern variables stays allowed: that is
-            # the join key.
-            if v in pending_aliases:
-                raise SPARQLError(
-                    f"subquery projects ?{v}, already bound by BIND in "
-                    "the enclosing group (SPARQL forbids rebinding)")
-            if v not in self.vars_seen:
-                self.vars_seen.append(v)
+        self.vars_seen.update(_subquery_proj(sub))
         return sub
 
-    def _values_clause(self) -> Tuple[List[str], List[tuple]]:
+    def _values_clause(self) -> Table:
         """``VALUES ?x { t ... }`` or ``VALUES (?x ?y) { (t t) ... }``;
         UNDEF cells become None."""
         t = self.peek()
@@ -1424,9 +1222,7 @@ class _Parser:
             raise SPARQLError(
                 f"expected ?var or (?var ...) after VALUES at offset "
                 f"{t.pos}")
-        for v in names:
-            if v not in self.vars_seen:
-                self.vars_seen.append(v)
+        self.vars_seen.update(names)
         self.expect_op("{")
         rows: List[tuple] = []
         while not (self.peek().kind == "OP" and self.peek().text == "}"):
@@ -1441,17 +1237,15 @@ class _Parser:
         self.next()  # }
         if not rows:
             raise SPARQLError("empty VALUES block")
-        return names, rows
+        return Table(names, rows)
 
     def _data_term(self) -> Optional[str]:
         """One VALUES data cell → encoded term, or None for UNDEF."""
         t = self.next()
         if t.kind == "NAME" and t.text.upper() == "UNDEF":
             return None
-        if t.kind == "IRIREF":
-            return self._resolve_iriref(t.text)
-        if t.kind == "PNAME":
-            return self._expand_pname(t.text, t.pos)
+        if iri := self._iri(t):
+            return iri
         if t.kind == "STRING":
             return self._string_term(t.text)
         if t.kind == "NUMBER":
@@ -1460,12 +1254,12 @@ class _Parser:
             f"unexpected {t.text!r} in VALUES data at offset {t.pos} "
             "(terms and UNDEF only — no variables)")
 
-    def _triples_block(self) -> List[Tuple[str, str, str]]:
+    def _triples_block(self) -> list:
         """subject predObjList — one triples block starting at the
-        current token. Property paths in verb position desugar here:
-        sequences/inverses into plain patterns (fresh hidden variables),
-        alternations/closures into ``self._pending_paths`` entries."""
-        out: List[Tuple[str, str, str]] = []
+        current token → its items: plain pattern tuples, :class:`Path`
+        nodes and scan FILTER expressions. Property paths in verb
+        position desugar here (see :meth:`_desugar_path`)."""
+        out: list = []
         subj = self._term("subject")
         while True:  # verb objectList (';' verb objectList)*
             if self.peek().kind == "VAR":
@@ -1576,11 +1370,12 @@ class _Parser:
                 self._hidden.append(name)
                 return name
 
-    def _desugar_path(self, subj: str, path, obj: str) -> List[
-            Tuple[str, str, str]]:
+    def _desugar_path(self, subj: str, path, obj: str) -> list:
         """(subj, path, obj) → plain patterns where statically possible
-        (PathIri, PathInv leaf, PathSeq chains) plus pending path
-        patterns for alternation/closure segments."""
+        (PathIri, PathInv leaf, PathSeq chains, fresh hidden variables
+        between the steps), a pattern plus its ``NOT IN`` scan filter
+        for a negated property set, and a :class:`Path` node for each
+        alternation/closure segment."""
         if isinstance(path, PathIri):
             return [(subj, path.iri, obj)]
         if isinstance(path, PathInv):
@@ -1588,11 +1383,10 @@ class _Parser:
             return [(obj, path.inner.iri, subj)]
         if isinstance(path, PathNeg):
             pv = self._fresh_var()
-            self._pending_scan_filters.append(
-                Logic("!", (Call("IN", (Var(pv),), tuple(path.iris)),)))
-            return [(subj, "?" + pv, obj)]
+            return [(subj, "?" + pv, obj),
+                    Logic("!", (Call("IN", (Var(pv),), tuple(path.iris)),))]
         if isinstance(path, PathSeq):
-            out: List[Tuple[str, str, str]] = []
+            out: list = []
             cur = subj
             for k, part in enumerate(path.parts):
                 last = k == len(path.parts) - 1
@@ -1600,21 +1394,16 @@ class _Parser:
                 out.extend(self._desugar_path(cur, part, nxt))
                 cur = nxt
             return out
-        # alternation / closure: an edge-frame pattern for the executor.
-        # A PathNeg nested under a closure/alternation has no edge-frame
-        # evaluator — loud, never approximated.
+        # alternation / closure: an edge-frame pattern. A PathNeg nested
+        # under a closure/alternation has no edge-frame evaluator — loud,
+        # never approximated.
         if _contains_neg(path):
             raise SPARQLUnsupportedError(
                 "a negated property set inside a closure/alternation "
                 "path is outside the supported subset (use it as a "
                 "plain path step)")
-        self._pending_paths.append((subj, path, obj))
-        for t in (subj, obj):
-            if is_var(t):
-                v = t[1:]
-                if v not in self.vars_seen:
-                    self.vars_seen.append(v)
-        return []
+        self.vars_seen.update(t[1:] for t in (subj, obj) if is_var(t))
+        return [Path(subj, path, obj)]
 
     def _order_by(self) -> List[Tuple[str, bool]]:
         if not self.at_kw("order"):
@@ -1722,10 +1511,8 @@ class _Parser:
             # (term-equal only to another plain "x"); comparison against
             # a lexical (STR()) compares lexical forms
             return Const(self._string_term(t.text))
-        if t.kind == "IRIREF":
-            return Const(self._resolve_iriref(t.text))
-        if t.kind == "PNAME":
-            return Const(self._expand_pname(t.text, t.pos))
+        if iri := self._iri(t):
+            return Const(iri)
         if t.kind == "NAME":
             return self._function(t)
         raise SPARQLError(
@@ -2071,12 +1858,7 @@ def _call_column(e: Call) -> Column:
     return F.when(i > 0, part).otherwise(F.lit(""))
 
 
-def _take_filters(pq: ParsedQuery, names) -> List[Expr]:
-    """Remove and return the filters of ``pq`` that read any of
-    ``names``."""
-    taken = [f for f in pq.filters if f.vars & names]
-    pq.filters = [f for f in pq.filters if not f.vars & names]
-    return taken
+# ------------------------------------------------- WHERE-clause tree
 
 
 def _subquery_proj(sub: ParsedQuery) -> List[str]:
@@ -2084,21 +1866,159 @@ def _subquery_proj(sub: ParsedQuery) -> List[str]:
     return (sub.select_vars or []) + [a.alias for a in sub.aggregates]
 
 
-def _bound_vars(pq: ParsedQuery) -> set:
-    """Variable names bound by any pattern or BIND of the WHERE
-    clause."""
-    groups = ([pq.patterns, pq.bind_patterns]
-              + [p for p, _ in pq.optionals]
-              + [p for p, _ in (pq.union_groups or [])])
-    out = {t[1:] for pats in groups for pat in pats for t in pat
-           if is_var(t)}
-    for s, _, o in pq.path_patterns:
-        out |= {t[1:] for t in (s, o) if is_var(t)}
-    for v_names, _ in pq.values_clauses:
-        out |= set(v_names)
-    for sub in pq.subqueries:
-        out |= set(_subquery_proj(sub))
-    return out | {a for a, _ in pq.binds + pq.optional_binds}
+def _pattern_vars(patterns) -> set:
+    return {t[1:] for pat in patterns for t in pat if is_var(t)}
+
+
+def _vars(node: Node) -> Tuple[set, set]:
+    """(possibly bound, certainly bound) variables of a node's solutions:
+    certainly bound means bound in every solution — not only through an
+    OPTIONAL, an UNDEF cell or a BIND over such a variable."""
+    if isinstance(node, (BGP, Path)):
+        v = _pattern_vars(node.patterns if isinstance(node, BGP)
+                          else [(node.s, node.o)])
+        return v, v
+    if isinstance(node, Table):
+        return set(node.names), {
+            v for k, v in enumerate(node.names)
+            if all(r[k] is not None for r in node.rows)}
+    if isinstance(node, SubSelect):
+        q = node.query
+        proj = set(_subquery_proj(q))
+        return proj, proj & (_vars(q.where)[1]
+                             | {a.alias for a in q.aggregates})
+    if isinstance(node, Filter):
+        return _vars(node.inner)
+    if isinstance(node, Extend):
+        maybe, certain = _vars(node.inner)
+        if node.expr.vars <= certain:
+            certain = certain | {node.alias}
+        return maybe | {node.alias}, certain
+    if isinstance(node, Union):
+        sides = [_vars(s) for s in node.sides]
+        return (set().union(*(m for m, _ in sides)),
+                set.intersection(*(c for _, c in sides)))
+    maybe, certain = _vars(node.left)
+    if node.kind == "inner":
+        r_maybe, r_certain = _vars(node.right)
+        return maybe | r_maybe, certain | r_certain
+    if node.kind == "left":
+        return maybe | _vars(node.right)[0], certain
+    return maybe, certain  # semi / anti / minus bind nothing
+
+
+def _flat(body: Node, what: str) -> BGP:
+    """A non-compound group (patterns and FILTERs only) is one BGP
+    unless it holds an alternation/closure path, which is loud there."""
+    if not isinstance(body, BGP):
+        hint = {"OPTIONAL": " (use them in the required group)",
+                "UNION sides": " (use them in a non-union group)"}
+        raise SPARQLUnsupportedError(
+            f"alternation/closure property paths inside {what} are "
+            f"outside the supported subset{hint.get(what, '')}")
+    return body
+
+
+# evaluation rank of a group's elements after its plain BGP (the BGP of
+# patterns over BIND aliases goes between VALUES and EXISTS/MINUS)
+_RANK = {Path: 0, SubSelect: 1, Table: 2, "semi": 3, "anti": 3,
+         "minus": 4, "left": 5}
+# what each outer join's group is called in a loud message
+_GROUP_NAMES = {"inner": "a triple pattern", "left": "an OPTIONAL group",
+                "semi": "a FILTER EXISTS group",
+                "anti": "a FILTER EXISTS group", "minus": "a MINUS group"}
+
+
+def _assemble(patterns, filters: List[Expr], binds: List[Tuple[str, Expr]],
+              parts: List[Tuple[str, Node]]) -> Node:
+    """One group's elements → its algebra node.
+
+    Evaluation order: the one BGP of the plain patterns (those reading
+    no BIND alias), paths, subqueries, VALUES, the BGP of the patterns
+    that read a BIND alias, EXISTS, MINUS, then the OPTIONALs. A group
+    with BINDs but neither plain patterns, paths, subqueries nor VALUES
+    starts from the empty solution µ0.
+
+    Placement: a FILTER conjunct over the plain BGP's own variables
+    stays in that BGP (scan pushdown in :func:`kg_query`). Every other
+    conjunct, and every BIND, goes right after the last element that
+    binds one of its variables — for variables bound by an OPTIONAL,
+    after the last OPTIONAL. One reading a variable no element of the
+    group binds goes on top (Spark rejects the unknown column)."""
+    aliases = {a for a, _ in binds}
+    plain = [p for p in patterns if not _pattern_vars([p]) & aliases]
+    moved = [p for p in patterns if _pattern_vars([p]) & aliases]
+    for _, node in parts:
+        if isinstance(node, Path):
+            bad = [t for t in (node.s, node.o)
+                   if is_var(t) and t[1:] in aliases]
+            if bad:
+                raise SPARQLUnsupportedError(
+                    f"BIND alias {bad[0]} as a closure-path "
+                    "endpoint is outside the supported subset")
+        if isinstance(node, SubSelect):
+            # a BIND before the subquery (one after it is "BIND rebinds")
+            for v in set(_subquery_proj(node.query)) & aliases:
+                raise SPARQLError(
+                    f"subquery projects ?{v}, already bound by BIND in "
+                    "the enclosing group (SPARQL forbids rebinding)")
+            # an aggregate alias column is a raw numeric, not an encoded
+            # term — as a triple-pattern key it would never equi-match
+            # ("3" vs '"3"^^xsd:integer'): loud, not silently empty
+            agg = {a.alias for a in node.query.aggregates}
+            for pat in patterns:
+                bad = [v for v in pat if is_var(v) and v[1:] in agg]
+                if bad:
+                    raise SPARQLUnsupportedError(
+                        f"subquery aggregate alias {bad[0]} used in a "
+                        "triple pattern is outside the supported subset "
+                        "(aggregate results are plain values, not "
+                        "terms; compare them in a FILTER)")
+    order = sorted(parts, key=lambda p: _RANK[
+        type(p[1]) if p[0] == "inner" else p[0]])
+    n_inner = sum(kind == "inner" for kind, _ in parts)
+    if moved:
+        order.insert(n_inner, ("inner", BGP(moved)))
+    if plain or not (n_inner or binds):
+        # empty only in a group with nothing else that yields solutions:
+        # evaluating it is the loud "empty WHERE group"
+        bgp = BGP(plain)
+        own = _pattern_vars(plain)
+        elsewhere = set().union(aliases, *(
+            _vars(n)[0] for k, n in order if k in ("inner", "left")))
+        bgp.filters = [f for f in filters if not (f.vars - own) & elsewhere]
+        filters = [f for f in filters if (f.vars - own) & elsewhere]
+        order.insert(0, ("inner", bgp))
+    elif not n_inner:
+        order.insert(0, ("inner", Table([], [()])))
+    todo = list(binds) + [(None, f) for f in filters]
+    have: set = set()
+
+    def place(node: Node, final: bool = False) -> Node:
+        for alias, e in list(todo):
+            if final or e.vars <= have:
+                todo.remove((alias, e))
+                node = (Filter(e, node) if alias is None
+                        else Extend(node, alias, e))
+                have.add(alias)
+        return node
+
+    node = None
+    for kind, right in order:
+        late = (_pattern_vars(right.patterns) & aliases - have
+                if isinstance(right, BGP) else None)
+        if late:
+            raise SPARQLUnsupportedError(
+                f"BIND alias ?{min(late)} depends on OPTIONAL "
+                f"variables and cannot join {_GROUP_NAMES[kind]} in "
+                "this subset (bind it from required variables, or "
+                "restructure the query)")
+        node = right if node is None else Join(kind, node, right)
+        if kind in ("inner", "left"):
+            have |= _vars(right)[0]
+        if kind != "left":
+            node = place(node)
+    return place(node, final=True)
 
 
 # ------------------------------------------------- property-path eval
@@ -2269,193 +2189,105 @@ def parse_select(query: str) -> ParsedQuery:
     return _Parser(query).parse()
 
 
-def _run_bgp(triples, patterns, filters, stats) -> DataFrame:
-    try:
-        return kg_query(triples, patterns,
-                        filters=[(_column(f), f.vars) for f in filters],
-                        select=None, distinct=False, stats=stats)
-    except BGPError as e:
-        raise SPARQLError(f"unexecutable SPARQL BGP: {e}") from e
+def _evaluate(triples: DataFrame, node: Node, stats) -> DataFrame:
+    """A WHERE-clause tree → its solution bag, one column per bound
+    variable (bag semantics; NULL is unbound)."""
+    def ev(n: Node) -> DataFrame:
+        return _evaluate(triples, n, stats)
 
-
-def _bindings(triples: DataFrame, pq: ParsedQuery, stats) -> DataFrame:
-    """The WHERE clause's solution bag over all its variables.
-
-    * required group → the BGP compiler (bag semantics);
-    * each OPTIONAL → its own compiled BGP LEFT-joined on the shared
-      variables (its FILTERs apply inside the optional side, per
-      SPARQL's group scoping);
-    * the union form → each side compiled independently, columns
-      aligned by variable name (NULL where a side does not bind),
-      ``unionByName`` bag union — at scale each side is its own
-      predicate-pruned scan+join tree and the union is a zero-shuffle
-      concatenation.
-    """
-    if pq.union_groups is not None:
-        if stats == "auto":
-            from .query import predicate_stats
-            stats = predicate_stats(triples)
-        sides = [_run_bgp(triples, p, f, stats)
-                 for p, f in pq.union_groups]
-        all_vars: List[str] = []
-        for df in sides:
-            for c in df.columns:
-                if c not in all_vars:
-                    all_vars.append(c)
-        aligned = [
-            df.select(*[F.col(c) if c in df.columns
-                        else F.lit(None).cast("string").alias(c)
-                        for c in all_vars])
-            for df in sides]
-        out = aligned[0]
-        for df in aligned[1:]:
-            out = out.unionByName(df)
-        return out
-
-    if stats == "auto" and (pq.optionals or pq.path_patterns
-                            or pq.subqueries or pq.bind_patterns
-                            or pq.exists_filters or pq.minus_groups):
-        from .query import predicate_stats
-        stats = predicate_stats(triples)
-    out = None
-    if pq.patterns:
-        out = _run_bgp(triples, pq.patterns, pq.filters, stats)
-    elif pq.filters:
-        raise SPARQLError(
-            "FILTER with no plain triple pattern in the group (filters "
-            "over path-pattern variables are not yet placed — bind the "
-            "variable with a plain pattern too)")
-    for s_term, path, o_term in pq.path_patterns:
-        pdf = _path_pattern_df(triples, s_term, path, o_term)
-        if out is None:
-            out = pdf
-            continue
-        shared = [c for c in pdf.columns if c in out.columns]
-        if not shared:
-            raise SPARQLError(
-                f"path pattern ({s_term}, ..., {o_term}) shares no "
-                "variable with the preceding patterns — a cartesian "
-                "product; add a bridging pattern")
-        out = out.join(pdf, on=shared)
-    for sub in pq.subqueries:
-        sdf = _execute_select(triples, sub, stats)
-        if out is None:
-            out = sdf
-            continue
-        shared = [c for c in sdf.columns if c in out.columns]
-        if not shared:
-            raise SPARQLError(
-                f"subquery projecting {sdf.columns} shares no variable "
-                "with the outer group — a cartesian product; project a "
-                "joining variable")
-        out = out.join(sdf, on=shared)
-    for v_names, v_rows in pq.values_clauses:
-        if (out is not None and len(v_names) == 1
-                and v_names[0] in out.columns
-                and all(r[0] is not None for r in v_rows)):
-            # single already-bound variable, no UNDEF: a plain IN filter
-            # — reaches the scans via the compiler-visible column
-            out = out.filter(_column(Call(
-                "IN", (Var(v_names[0]),), tuple(r[0] for r in v_rows))))
-            continue
-        from pyspark.sql import types as T
-        vdf = triples.sparkSession.createDataFrame(
-            v_rows, T.StructType(
-                [T.StructField(v, T.StringType(), True)
-                 for v in v_names]))
-        if out is None:
-            out = vdf
-            continue
-        shared = [c for c in vdf.columns if c in out.columns]
-        if not shared:
-            raise SPARQLError(
-                f"VALUES {v_names} shares no variable with the "
-                "preceding patterns — a cartesian product; bind a "
-                "common variable")
-        if any(r[v_names.index(c)] is None
-               for c in shared for r in v_rows):
-            raise SPARQLUnsupportedError(
-                "UNDEF in a VALUES column that joins an already-bound "
-                "variable is outside the supported subset (an SQL join "
-                "key cannot express SPARQL's unbound-is-compatible "
-                "rule)")
-        out = out.join(vdf, on=shared)
-    if out is None:
-        if pq.binds:
-            # a group of only BINDs: SPARQL starts from the empty
-            # solution µ0 — one row, zero columns (the operands are
-            # necessarily constants: a variable operand would have
-            # required a pattern binding it at parse time)
-            out = triples.sparkSession.range(1).select()
-        else:
+    if isinstance(node, BGP):
+        if not node.patterns:
             raise SPARQLError("empty WHERE group")
-    for alias, e in pq.binds:
-        out = out.withColumn(alias, _column(e, "enc"))
-    if pq.bind_patterns:
-        # patterns over BIND aliases: their own compiled BGP (the alias
-        # is an ordinary scan variable there), equi-joined on the
-        # computed alias columns — a NULL/errored bind value matches
-        # nothing and the row drops, SPARQL's unbound-pattern rule
-        right = _run_bgp(triples, pq.bind_patterns, [], stats)
-        shared = [c for c in right.columns if c in out.columns]
-        out = out.join(right, on=shared)
-    for f in pq.post_filters:
-        out = out.filter(_column(f))
-    # EXISTS/MINUS evaluate against the required-group bag (their shared
-    # variables must be bound there — OPTIONAL-introduced NULLs have
-    # SPARQL "compatible" semantics an SQL join key cannot express)
-    for positive, e_pats, e_fils in pq.exists_filters:
-        right = _run_bgp(triples, e_pats, e_fils, stats)
-        shared = [c for c in right.columns if c in out.columns]
-        if not shared:
-            raise SPARQLError(
-                f"FILTER EXISTS group {e_pats} shares no variable with "
-                "the outer group (uncorrelated EXISTS is outside the "
-                "supported subset)")
-        out = out.join(right.select(*shared).distinct(), on=shared,
-                       how="left_semi" if positive else "left_anti")
-    for m_pats, m_fils in pq.minus_groups:
-        right = _run_bgp(triples, m_pats, m_fils, stats)
-        shared = [c for c in right.columns if c in out.columns]
-        if not shared:
-            # SPARQL spec: a MINUS side sharing no variable is never
-            # "compatible" with a solution, so it removes NOTHING
-            continue
-        out = out.join(right.select(*shared).distinct(), on=shared,
-                       how="left_anti")
-    # OPTIONAL join keys must be required-group-bound: a variable
-    # introduced by a PRIOR OPTIONAL can be NULL, and SPARQL's LeftJoin
-    # treats unbound as compatible-with-anything — an SQL left-join key
-    # cannot express that (NULL never equi-matches), so solutions would
-    # silently lose extensions.  Same subset boundary EXISTS/MINUS
-    # already enforce (they run above, before any OPTIONAL column
-    # exists).  Loud, not silently wrong.
-    required_cols = set(out.columns)
-    for o_pats, o_fils in pq.optionals:
-        right = _run_bgp(triples, o_pats, o_fils, stats)
-        shared = [c for c in right.columns if c in out.columns]
-        if not shared:
-            raise SPARQLError(
-                f"OPTIONAL group {o_pats} shares no variable with the "
+        try:
+            return kg_query(
+                triples, node.patterns,
+                filters=[(_column(f), f.vars) for f in node.filters],
+                select=None, distinct=False, stats=stats)
+        except BGPError as e:
+            raise SPARQLError(f"unexecutable SPARQL BGP: {e}") from e
+    if isinstance(node, Path):
+        return _path_pattern_df(triples, node.s, node.path, node.o)
+    if isinstance(node, SubSelect):
+        return _execute_select(triples, node.query, stats)
+    if isinstance(node, Table):
+        return triples.sparkSession.createDataFrame(node.rows, T.StructType(
+            [T.StructField(v, T.StringType(), True) for v in node.names]))
+    if isinstance(node, Filter):
+        return ev(node.inner).filter(_column(node.expr))
+    if isinstance(node, Extend):
+        return ev(node.inner).withColumn(node.alias, _column(node.expr, "enc"))
+    if isinstance(node, Union):
+        # each side is its own pruned scan+join tree; the union is a
+        # zero-shuffle concatenation
+        return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                      [ev(s) for s in node.sides])
+    left, right = ev(node.left), node.right
+    if (node.kind == "inner" and isinstance(right, Table)
+            and len(right.names) == 1 and right.names[0] in left.columns
+            and all(r[0] is not None for r in right.rows)):
+        # VALUES over one bound variable without UNDEF: a plain IN
+        # filter, which reaches the scans
+        return left.filter(_column(Call(
+            "IN", (Var(right.names[0]),), tuple(r[0] for r in right.rows))))
+    return _join(left, ev(right), node)
+
+
+def _join(left: DataFrame, right: DataFrame, node: Join) -> DataFrame:
+    """The one shared-variable join (``node.kind``: inner, left, semi,
+    anti or minus). With no shared variable a MINUS removes nothing
+    (the spec's compatibility rule) and any other join, a cartesian
+    product, is loud. Every shared variable must be certainly bound on
+    both sides: an SQL join key never matches NULL, so SPARQL's
+    unbound-is-compatible rule is outside the subset — loud, never
+    silently lossy."""
+    shared = [c for c in right.columns if c in left.columns]
+    if not shared:
+        if node.kind == "minus":
+            return left
+        raise SPARQLError(_no_shared(node, right.columns))
+    loose = set(shared) - (_vars(node.left)[1] & _vars(node.right)[1])
+    if loose:
+        raise SPARQLUnsupportedError(
+            f"join variables {sorted(loose)} may be unbound (introduced "
+            "by a prior OPTIONAL, or UNDEF in a VALUES column): SPARQL's "
+            "unbound-is-compatible join semantics for such keys is "
+            "outside the supported subset (an SQL join key never matches "
+            "NULL); bind the variable in the required group")
+    if node.kind in ("inner", "left"):
+        return left.join(right, on=shared, how=node.kind)
+    return left.join(right.select(*shared).distinct(), on=shared,
+                     how="left_semi" if node.kind == "semi" else "left_anti")
+
+
+def _no_shared(node: Join, columns: List[str]) -> str:
+    r = node.right
+    if node.kind == "left":
+        return (f"OPTIONAL group {r.patterns} shares no variable with the "
                 "required group — a cartesian extension; add a joining "
                 "variable")
-        opt_only = [c for c in shared if c not in required_cols]
-        if opt_only:
-            raise SPARQLUnsupportedError(
-                f"OPTIONAL group {o_pats} joins through "
-                f"{sorted(opt_only)}, introduced by a prior OPTIONAL — "
-                "SPARQL's unbound-is-compatible LeftJoin semantics for "
-                "such keys is outside the supported subset; bind the "
-                "variable in the required group")
-        out = out.join(right, on=shared, how="left")
-    for alias, e in pq.optional_binds:
-        out = out.withColumn(alias, _column(e, "enc"))
-    for f in pq.optional_filters:
-        out = out.filter(_column(f))
-    if pq.hidden_vars:
-        keep = [c for c in out.columns if c not in pq.hidden_vars]
-        out = out.select(*keep)
-    return out
+    if node.kind != "inner":
+        return (f"FILTER EXISTS group {r.patterns} shares no variable with "
+                "the outer group (uncorrelated EXISTS is outside the "
+                "supported subset)")
+    if isinstance(r, SubSelect):
+        return (f"subquery projecting {columns} shares no variable with the "
+                "outer group — a cartesian product; project a joining "
+                "variable")
+    if isinstance(r, Path):
+        return (f"path pattern ({r.s}, ..., {r.o}) shares no variable with "
+                "the preceding patterns — a cartesian product; add a "
+                "bridging pattern")
+    return (f"VALUES {r.names} shares no variable with the preceding "
+            "patterns — a cartesian product; bind a common variable")
+
+
+def _solutions(triples: DataFrame, pq: ParsedQuery, stats) -> DataFrame:
+    """The WHERE clause's solutions, hidden path variables dropped."""
+    if stats == "auto" and not isinstance(pq.where, BGP):
+        # several scans share one histogram
+        from .query import predicate_stats
+        stats = predicate_stats(triples)
+    return _evaluate(triples, pq.where, stats).drop(*pq.hidden_vars)
 
 
 # xsd numeric datatypes whose typed literals ORDER BY compares by VALUE
@@ -2555,7 +2387,7 @@ def _execute_select(triples: DataFrame, pq: ParsedQuery, stats) -> DataFrame:
     """A parsed SELECT → result DataFrame (shared by :func:`sparql_select`
     and subquery evaluation — a subquery is a full SELECT, modifiers
     included, per SPARQL's bottom-up semantics)."""
-    out = _bindings(triples, pq, stats)
+    out = _solutions(triples, pq, stats)
     unknown = [v for v in (pq.select_vars or [])
                + [a.var for a in pq.aggregates if a.var]
                if v not in out.columns]
@@ -2599,7 +2431,7 @@ def sparql_ask(triples: DataFrame, query: str, stats=None) -> bool:
     pq = parse_select(query)
     if pq.form != "ASK":
         raise SPARQLError(f"sparql_ask got a {pq.form} query")
-    return len(_bindings(triples, pq, stats).take(1)) > 0
+    return len(_solutions(triples, pq, stats).take(1)) > 0
 
 
 def sparql_describe(triples: DataFrame, query: str, stats=None) -> DataFrame:
@@ -2620,7 +2452,7 @@ def sparql_describe(triples: DataFrame, query: str, stats=None) -> DataFrame:
             [(c,) for c in consts], ["_r"]))
     var_names = [t[1:] for t in pq.describe_terms if is_var(t)]
     if var_names:
-        sols = _bindings(triples, pq, stats)
+        sols = _solutions(triples, pq, stats)
         for v in var_names:
             frames.append(sols.select(F.col(v).alias("_r")))
     res = frames[0]
@@ -2645,7 +2477,7 @@ def sparql_construct(triples: DataFrame, query: str, stats=None) -> DataFrame:
     pq = parse_select(query)
     if pq.form != "CONSTRUCT":
         raise SPARQLError(f"sparql_construct got a {pq.form} query")
-    sols = _apply_modifiers(_bindings(triples, pq, stats), pq)
+    sols = _apply_modifiers(_solutions(triples, pq, stats), pq)
     parts = []
     for s, p, o in pq.template:
         cols = [

@@ -136,32 +136,6 @@ def extract_features(media: DataFrame, feat_dim: int = 16) -> DataFrame:
     return media.mapInPandas(run, FEATURE_SCHEMA)
 
 
-def resize_images(media: DataFrame, max_side: int = 64) -> DataFrame:
-    """Resize stage: metadata math natively (JVM), payload transform stubbed
-    as identity (a real resize would re-encode in the UDF)."""
-    scale = F.when(
-        F.greatest("width", "height") > max_side,
-        F.lit(max_side) / F.greatest("width", "height").cast("double"),
-    ).otherwise(F.lit(1.0))
-    return media.filter(F.col("kind") == "image").select(
-        "media_ref",
-        "payload",
-        F.round(F.col("width") * scale).cast("int").alias("out_width"),
-        F.round(F.col("height") * scale).cast("int").alias("out_height"),
-        F.round(scale, 6).alias("scale"),
-    )
-
-
-def sample_frames(media: DataFrame, every_n: int = 4000) -> DataFrame:
-    """Frame/sample selection for audio: pick sample indices natively
-    (sequence), leaving decode to the UDF stage — partition-prunable."""
-    return media.filter(F.col("kind") == "audio").select(
-        "media_ref",
-        F.sequence(F.lit(0), F.col("n_samples") - 1,
-                   F.lit(every_n)).alias("sample_indices"),
-    )
-
-
 def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-facing query: media refs from the interleaved corpus → fake
     payloads → Arrow-batched feature extraction.

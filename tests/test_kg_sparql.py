@@ -5,14 +5,23 @@ equivalence with the hand-built BGP rows."""
 import pytest
 
 from pyrml_spark.kg.sparql import (
+    BGP,
     AggRef,
     Call,
     Compare,
     Const,
+    Extend,
+    Filter,
+    Join,
     Logic,
-    ParsedQuery,
+    Path,
+    PathIri,
+    PathMod,
     SPARQLError,
     SPARQLUnsupportedError,
+    SubSelect,
+    Table,
+    Union,
     Var,
     parse_select,
     sparql_select,
@@ -28,10 +37,10 @@ def test_prefix_expansion_and_rdf_type():
     pq = parse_select(
         "PREFIX ex: <http://ex.com/> "
         "SELECT ?s WHERE { ?s a ex:Person . ?s ex:name ?n }")
-    assert pq.patterns == [
+    assert pq.where == BGP([
         ("?s", RDF_TYPE, "<http://ex.com/Person>"),
         ("?s", "<http://ex.com/name>", "?n"),
-    ]
+    ])
     assert pq.select_vars == ["s"]
     assert not pq.distinct
 
@@ -40,11 +49,11 @@ def test_predicate_and_object_lists():
     pq = parse_select(
         "PREFIX e: <http://e/> SELECT * WHERE "
         "{ ?s e:p ?a , ?b ; e:q ?c . }")
-    assert pq.patterns == [
+    assert pq.where == BGP([
         ("?s", "<http://e/p>", "?a"),
         ("?s", "<http://e/p>", "?b"),
         ("?s", "<http://e/q>", "?c"),
-    ]
+    ])
     assert pq.select_vars is None  # SELECT *
 
 
@@ -57,7 +66,7 @@ def test_literal_forms_encode_like_the_engine():
         '?s <http://e/t> "s"^^x:string . '
         "?s <http://e/u> 7 . ?s <http://e/v> 1.5 . "
         "?s <http://e/w> 2e3 }")
-    objs = [p[2] for p in pq.patterns]
+    objs = [p[2] for p in pq.where.patterns]
     assert objs == [
         '"plain"',
         '"hi"@en',
@@ -72,8 +81,8 @@ def test_literal_forms_encode_like_the_engine():
 def test_base_resolution_and_relative_iri_rejection():
     pq = parse_select(
         "BASE <http://ex.com/dir/> SELECT ?s WHERE { ?s <p> <../o> }")
-    assert pq.patterns == [("?s", "<http://ex.com/dir/p>",
-                            "<http://ex.com/o>")]
+    assert pq.where == BGP([("?s", "<http://ex.com/dir/p>",
+                              "<http://ex.com/o>")])
     with pytest.raises(SPARQLError, match="relative IRI"):
         parse_select("SELECT ?s WHERE { ?s <p> ?o }")
 
@@ -92,17 +101,19 @@ def test_filter_conjunction_splits():
     pq = parse_select(
         "SELECT ?a ?b WHERE { ?a <http://e/p> ?b "
         'FILTER(STRSTARTS(?a, "x") && ?b != <http://e/o>) }')
-    assert len(pq.filters) == 2
-    assert pq.filters[0].fn == "STRSTARTS"
-    assert pq.filters[1] == Compare("!=", Var("b"), Const("<http://e/o>"))
+    # both conjuncts reach the BGP's scans
+    assert isinstance(pq.where, BGP) and len(pq.where.filters) == 2
+    assert pq.where.filters[0].fn == "STRSTARTS"
+    assert pq.where.filters[1] == Compare(
+        "!=", Var("b"), Const("<http://e/o>"))
 
 
 def test_filter_disjunction_stays_one_expression():
     pq = parse_select(
         "SELECT ?a WHERE { ?a <http://e/p> ?b "
         'FILTER(?b = "x" || ?b = "y" && ?b != "z") }')
-    assert len(pq.filters) == 1
-    (f,) = pq.filters
+    assert isinstance(pq.where, BGP) and len(pq.where.filters) == 1
+    (f,) = pq.where.filters
     assert isinstance(f, Logic) and f.op == "||"
     assert any(isinstance(a, Logic) and a.op == "&&" for a in f.args)
 
@@ -193,7 +204,7 @@ def test_fully_bound_pattern_rejected_at_execution_layer():
     pq = parse_select(
         "SELECT ?s WHERE { ?s <http://e/p> ?o . "
         "<http://e/a> <http://e/b> <http://e/c> }")
-    assert len(pq.patterns) == 2
+    assert len(pq.where.patterns) == 2
 
 
 # ----------------------------------------------------------- execution
@@ -355,15 +366,18 @@ def test_parse_optional_union_aggregates():
     pq = parse_select(
         "SELECT ?s ?o WHERE { ?s <http://e/p> ?x "
         "OPTIONAL { ?s <http://e/q> ?o FILTER(?o != 1) } }")
-    assert len(pq.optionals) == 1
-    opats, ofils = pq.optionals[0]
-    assert opats == [("?s", "<http://e/q>", "?o")] and len(ofils) == 1
+    # the OPTIONAL's filter stays inside its side of the left join
+    assert pq.where == Join(
+        "left", BGP([("?s", "<http://e/p>", "?x")]),
+        BGP([("?s", "<http://e/q>", "?o")],
+            [Compare("!=", Var("o"), Const("1", "num"))]))
 
     pq = parse_select(
         "SELECT ?s WHERE { { ?s <http://e/p> ?a } UNION "
         "{ ?s <http://e/q> ?b } }")
-    assert pq.union_groups is not None and len(pq.union_groups) == 2
-    assert not pq.patterns
+    # two sides and no required group
+    assert pq.where == Union([BGP([("?s", "<http://e/p>", "?a")]),
+                              BGP([("?s", "<http://e/q>", "?b")])])
 
     pq = parse_select(
         "SELECT ?t (COUNT(*) AS ?n) (SUM(?a) AS ?tot) WHERE "
@@ -421,6 +435,26 @@ def test_exec_union(triples):
     # name side has NULL t, type side has NULL n
     assert sum(1 for r in rows if r[1] is None and r[2] is not None) == 3
     assert sum(1 for r in rows if r[2] is None and r[1] is not None) == 3
+
+
+def test_exec_union_drops_hidden_path_variables(triples):
+    # a sequence path's fresh chain variable is not a query variable:
+    # SELECT * over a union does not show it, and it does not keep
+    # DISTINCT from collapsing two identical sides
+    out = sparql_select(
+        triples,
+        PFX + "SELECT * WHERE { { ?s e:knows/e:knows ?o } UNION "
+        "{ ?s e:name ?o } }")
+    assert out.columns == ["s", "o"]
+    out = sparql_select(
+        triples,
+        PFX + "SELECT DISTINCT * WHERE { { ?s e:knows/e:age ?o } UNION "
+        "{ ?s e:knows/e:age ?o } }")
+    assert _rows(out) == [
+        ("<http://e/alice>",
+         '"7"^^<http://www.w3.org/2001/XMLSchema#integer>'),
+        ("<http://e/bob>",
+         '"31"^^<http://www.w3.org/2001/XMLSchema#integer>')]
 
 
 def test_exec_aggregates(triples):
@@ -513,34 +547,38 @@ def test_parse_path_desugar():
     pq = parse_select(
         "PREFIX e: <http://e/> SELECT ?s ?k WHERE "
         "{ ?s e:p/e:q/e:r ?k }")
-    assert len(pq.patterns) == 3 and not pq.path_patterns
-    assert pq.patterns[0][0] == "?s" and pq.patterns[2][2] == "?k"
-    mid = pq.patterns[0][2]
+    # a plain BGP: no path node
+    assert isinstance(pq.where, BGP) and len(pq.where.patterns) == 3
+    pats = pq.where.patterns
+    assert pats[0][0] == "?s" and pats[2][2] == "?k"
+    mid = pats[0][2]
     assert mid.startswith("?_path") and pq.hidden_vars
     # inverse leaf swaps subject/object
     pq = parse_select(
         "PREFIX e: <http://e/> SELECT ?s WHERE { ?s ^e:p ?o }")
-    assert pq.patterns == [("?o", "<http://e/p>", "?s")]
+    assert pq.where == BGP([("?o", "<http://e/p>", "?s")])
     # inverse distributes over a sequence: x ^(p/q) y ≡ y p ?m . ?m q x
     pq = parse_select(
         "PREFIX e: <http://e/> SELECT ?s WHERE { ?s ^(e:p/e:q) ?o }")
-    assert len(pq.patterns) == 2 and not pq.path_patterns
-    by_pred = {p[1]: p for p in pq.patterns}
+    assert isinstance(pq.where, BGP) and len(pq.where.patterns) == 2
+    by_pred = {p[1]: p for p in pq.where.patterns}
     mid = by_pred["<http://e/p>"][2]
     assert by_pred["<http://e/p>"][0] == "?o" and mid.startswith("?_path")
     assert by_pred["<http://e/q>"] == (mid, "<http://e/q>", "?s")
     # closure → path pattern, no plain pattern
     pq = parse_select(
         "PREFIX e: <http://e/> SELECT ?a ?b WHERE { ?a e:p+ ?b }")
-    assert not pq.patterns and len(pq.path_patterns) == 1
+    assert pq.where == Path("?a", PathMod(PathIri("<http://e/p>"), "+"),
+                            "?b")
     # variable predicate followed by a path operator is loud
     with pytest.raises(SPARQLError, match="variable predicate"):
         parse_select("SELECT ?s WHERE { ?s ?p+ ?o }")
     # negated property set (r8: supported) — scan + NOT IN filter
     pq = parse_select(
         "PREFIX e: <http://e/> SELECT ?s WHERE { ?s !(e:p) ?o }")
-    assert len(pq.patterns) == 1 and len(pq.filters) == 1
-    (f,) = pq.filters
+    assert isinstance(pq.where, BGP)
+    assert len(pq.where.patterns) == 1 and len(pq.where.filters) == 1
+    (f,) = pq.where.filters
     assert isinstance(f, Logic) and f.op == "!"
     assert f.args[0].fn == "IN" and f.args[0].params == ("<http://e/p>",)
     # closures inside OPTIONAL are loud
@@ -608,6 +646,20 @@ def test_exec_path_nested_closure(chain):
                         "{ <http://c/2> (c:next|c:alt)+ ?b }")
     assert _rows(out) == [("<http://c/3>",), ("<http://c/4>",),
                           ("<http://c/5>",)]
+
+
+def test_exec_filter_over_path_variables(chain):
+    # a FILTER over variables only a closure binds applies after the
+    # closure: 1 reaches 2, 3 and 4 over next+, minus the filtered 3
+    out = sparql_select(chain, CPFX + "SELECT ?b WHERE { <http://c/1> "
+                        "c:next+ ?b FILTER(?b != <http://c/3>) }")
+    assert _rows(out) == [("<http://c/2>",), ("<http://c/4>",)]
+    # a conjunct over a plain pattern's and a closure's variables
+    # applies after their join: ?a reaches ?b, and ?b has an alt edge
+    out = sparql_select(chain, CPFX + "SELECT ?a ?c WHERE "
+                        "{ ?a c:next+ ?b . ?b c:alt ?c "
+                        'FILTER(STRENDS(STR(?a), "1") || ?c = ?a) }')
+    assert _rows(out) == [("<http://c/1>", "<http://c/5>")]
 
 
 def test_exec_path_construct_combo(chain):
@@ -678,14 +730,14 @@ def test_parse_values():
     pq = parse_select(
         'SELECT ?x WHERE { ?x <http://e/p> ?o VALUES ?x '
         '{ <http://e/a> <http://e/b> } }')
-    assert pq.values_clauses == [
-        (["x"], [("<http://e/a>",), ("<http://e/b>",)])]
+    bgp = BGP([("?x", "<http://e/p>", "?o")])
+    assert pq.where == Join("inner", bgp, Table(
+        ["x"], [("<http://e/a>",), ("<http://e/b>",)]))
     pq = parse_select(
         'SELECT * WHERE { ?x <http://e/p> ?o VALUES (?x ?z) '
         '{ (<http://e/a> "v1") (<http://e/b> UNDEF) } }')
-    assert pq.values_clauses == [
-        (["x", "z"], [("<http://e/a>", '"v1"'),
-                      ("<http://e/b>", None)])]
+    assert pq.where == Join("inner", bgp, Table(
+        ["x", "z"], [("<http://e/a>", '"v1"'), ("<http://e/b>", None)]))
     with pytest.raises(SPARQLError, match="empty VALUES"):
         parse_select("SELECT ?x WHERE { ?x <http://e/p> ?o "
                      "VALUES ?x { } }")
@@ -745,12 +797,13 @@ def test_parse_graph_extends_patterns_to_quads():
     pq = parse_select(
         "PREFIX e: <http://e/> SELECT ?s ?g WHERE "
         "{ GRAPH ?g { ?s a e:Person ; e:name ?n } }")
-    assert all(len(p) == 4 and p[3] == "?g" for p in pq.patterns)
+    assert isinstance(pq.where, BGP)
+    assert all(len(p) == 4 and p[3] == "?g" for p in pq.where.patterns)
     pq = parse_select(
         "PREFIX e: <http://e/> SELECT ?s WHERE "
         "{ GRAPH <http://g/one> { ?s e:name ?n } }")
-    assert pq.patterns == [
-        ("?s", "<http://e/name>", "?n", "<http://g/one>")]
+    assert pq.where == BGP([
+        ("?s", "<http://e/name>", "?n", "<http://g/one>")])
     with pytest.raises(SPARQLUnsupportedError, match="GRAPH"):
         parse_select("SELECT ?s WHERE { ?s <http://e/p> ?o OPTIONAL "
                      "{ GRAPH ?g { ?s <http://e/q> ?a } } }")
@@ -788,15 +841,20 @@ def test_parse_bind_validation():
     with pytest.raises(SPARQLError, match="rebinds"):
         parse_select("SELECT ?s WHERE { ?s <http://e/p> ?o "
                      'BIND("x" AS ?o) }')
-    # r8: alias-in-pattern and alias-in-FILTER are now supported — they
-    # parse into bind_patterns / post_filters instead of raising
+    # r8: alias-in-pattern and alias-in-FILTER are supported: the
+    # pattern joins on the computed alias after the BIND (here over the
+    # empty solution µ0), the filter applies after the BIND
     pq = parse_select('SELECT ?s WHERE { BIND("x" AS ?x) . '
                       "?s <http://e/p> ?x }")
-    assert pq.patterns == [] and pq.bind_patterns == [
-        ("?s", "<http://e/p>", "?x")]
+    assert pq.where == Join(
+        "inner", Extend(Table([], [()]), "x", Const('"x"')),
+        BGP([("?s", "<http://e/p>", "?x")]))
     pq = parse_select("SELECT ?s WHERE { ?s <http://e/p> ?o "
                       'BIND(STR(?o) AS ?x) FILTER(?x = "a") }')
-    assert pq.filters == [] and len(pq.post_filters) == 1
+    assert pq.where == Filter(
+        Compare("=", Var("x"), Const('"a"')),
+        Extend(BGP([("?s", "<http://e/p>", "?o")]), "x",
+               Call("STR", (Var("o"),))))
     with pytest.raises(SPARQLUnsupportedError, match="boolean"):
         parse_select("SELECT ?s WHERE { ?s <http://e/p> ?o "
                      "BIND(isIRI(?o) AS ?x) }")
@@ -1143,10 +1201,10 @@ def test_exec_bind_only_group(triples):
 def test_parse_negated_property_set():
     pq = parse_select(
         "PREFIX e: <http://e/> SELECT ?s ?o WHERE { ?s !(e:name|a) ?o }")
-    assert len(pq.patterns) == 1
-    s, p, o = pq.patterns[0]
+    assert isinstance(pq.where, BGP) and len(pq.where.patterns) == 1
+    s, p, o = pq.where.patterns[0]
     assert s == "?s" and o == "?o" and p.startswith("?_path")
-    assert pq.filters == [Logic("!", (Call(
+    assert pq.where.filters == [Logic("!", (Call(
         "IN", (Var(p[1:]),),
         ("<http://e/name>",
          "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>")),))]
@@ -1154,7 +1212,8 @@ def test_parse_negated_property_set():
     # single-IRI form, also as a sequence step
     pq = parse_select(
         "PREFIX e: <http://e/> SELECT ?s ?x WHERE { ?s !e:name/e:age ?x }")
-    assert len(pq.patterns) == 2 and len(pq.filters) == 1
+    assert isinstance(pq.where, BGP)
+    assert len(pq.where.patterns) == 2 and len(pq.where.filters) == 1
 
 
 def test_negated_property_set_loud_boundaries():
@@ -1251,16 +1310,21 @@ def test_parse_subquery_scope_and_guards():
         "PREFIX e: <http://e/> SELECT ?s ?mx WHERE { ?s e:knows ?o . "
         "{ SELECT ?o (MAX(?a) AS ?mx) WHERE { ?o e:age ?a } "
         "GROUP BY ?o } }")
-    assert len(pq.subqueries) == 1
-    sub = pq.subqueries[0]
+    join = pq.where
+    assert isinstance(join, Join) and join.kind == "inner"
+    assert isinstance(join.right, SubSelect)
+    sub = join.right.query
     assert sub.select_vars == ["o"] and sub.aggregates[0].alias == "mx"
-    assert pq.patterns == [("?s", "<http://e/knows>", "?o")]
+    assert join.left == BGP([("?s", "<http://e/knows>", "?o")])
     # outer filter on the subquery aggregate defers past the join
     pq = parse_select(
         "PREFIX e: <http://e/> SELECT ?s WHERE { ?s e:knows ?o . "
         "{ SELECT ?o (MAX(?a) AS ?mx) WHERE { ?o e:age ?a } GROUP BY ?o }"
         " FILTER(?mx > 10) }")
-    assert pq.filters == [] and len(pq.post_filters) == 1
+    assert isinstance(pq.where, Filter)
+    assert pq.where.expr == Compare(">", Var("mx"), Const("10", "num"))
+    assert pq.where.inner.kind == "inner"
+    assert pq.where.inner.left.filters == []
     # aggregate alias as a pattern term is loud
     with pytest.raises(SPARQLUnsupportedError, match="triple pattern"):
         parse_select(
@@ -1349,8 +1413,11 @@ def test_parse_optional_filter_placement():
         'FILTER(STRSTARTS(STR(?s), "http://")) }')
     # the BOUND filter defers to optional scope; the ?s filter stays
     # in the BGP for scan pushdown
-    assert len(pq.optional_filters) == 1 and len(pq.filters) == 1
-    (f,) = pq.optional_filters
+    assert isinstance(pq.where, Filter)
+    left_join = pq.where.inner
+    assert isinstance(left_join, Join) and left_join.kind == "left"
+    assert len(left_join.left.filters) == 1
+    f = pq.where.expr
     assert isinstance(f, Logic) and f.op == "!" and f.args[0].fn == "BOUND"
 
 
@@ -1571,8 +1638,10 @@ def test_bind_of_bare_optional_var_defers(triples):
     pq = parse_select(
         PFX + "SELECT ?s ?y WHERE { ?s a e:Person "
         "OPTIONAL { ?s e:age ?a } BIND(?a AS ?y) }")
-    assert [b[0] for b in pq.optional_binds] == ["y"]
-    assert pq.binds == []
+    # the only BIND applies after the left join
+    assert pq.where == Extend(Join(
+        "left", BGP([("?s", RDF_TYPE, "<http://e/Person>")]),
+        BGP([("?s", "<http://e/age>", "?a")])), "y", Var("a"))
     out = sparql_select(
         triples, PFX + "SELECT ?s ?y WHERE { ?s a e:Person "
         "OPTIONAL { ?s e:age ?a } BIND(?a AS ?y) }")
@@ -1586,7 +1655,11 @@ def test_bind_of_bare_deferred_alias_chains(triples):
     pq = parse_select(
         PFX + "SELECT ?s ?z WHERE { ?s a e:Person "
         "OPTIONAL { ?s e:age ?a } BIND(?a AS ?y) BIND(?y AS ?z) }")
-    assert [b[0] for b in pq.optional_binds] == ["y", "z"]
+    # both BINDs apply after the left join, in order
+    ext = pq.where
+    assert (ext.alias, ext.inner.alias) == ("z", "y")
+    assert isinstance(ext.inner.inner, Join)
+    assert ext.inner.inner.kind == "left"
 
 
 def test_subquery_projection_colliding_with_bind_is_loud(triples):

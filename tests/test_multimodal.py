@@ -1,7 +1,6 @@
 """Multimodal plumbing tests: schema, batch shape, determinism, stub codec."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from pyrml_spark.kg.datagen import generate_documents
 from pyrml_spark.kg.extract import media_spans
@@ -9,8 +8,6 @@ from pyrml_spark.ops.multimodal import (
     FAKE_FORMAT_MAGIC,
     decode_payload,
     extract_features,
-    resize_images,
-    sample_frames,
     synth_media_table,
 )
 
@@ -49,12 +46,3 @@ def test_decode_rejects_real_formats():
     with pytest.raises(NotImplementedError):
         decode_payload(b"\x89PNG\r\n\x1a\n....", "image")
 
-
-def test_resize_and_frame_sample(media):
-    rs = resize_images(media, max_side=64).collect()
-    for r in rs:
-        assert max(r["out_width"], r["out_height"]) <= 64
-    fs = sample_frames(media, every_n=4000).collect()
-    for r in fs:
-        idx = r["sample_indices"]
-        assert idx[0] == 0 and all(b - a == 4000 for a, b in zip(idx, idx[1:]))

@@ -1,10 +1,13 @@
-"""SQL-text guard: the SPARQL front-end builds Spark Columns from its
-expression tree and never hands SQL text to Spark — no ``expr`` /
-``selectExpr`` call, and no ``filter`` / ``where`` / ``withColumn``
-whose expression argument is a string constant or an f-string.
+"""AST guards on the SPARQL front-end (call sites only, so docstrings
+that *mention* the calls don't trip them):
 
-AST-based (call sites only), so docstrings that *mention* the calls don't
-trip it."""
+* SQL text: it builds Spark Columns from its expression tree and never
+  hands SQL text to Spark — no ``expr`` / ``selectExpr`` call, and no
+  ``filter`` / ``where`` / ``withColumn`` whose expression argument is a
+  string constant or an f-string.
+* Joins: solution bags meet in one shared-variable join, ``_join``; the
+  only other ``.join(`` calls are the property-path edge joins and
+  DESCRIBE's semi join against the triples table."""
 
 import ast
 import pathlib
@@ -51,3 +54,38 @@ def test_guard_catches_sql_text():
            "df.withColumn('x', F.col('a')); df.filter(F.col('a'))\n")
     assert [name for _, name in _sql_text_sites(ast.parse(src))] == [
         "expr", "selectExpr", "filter", "where", "withColumn"]
+
+
+# functions allowed to call DataFrame.join
+JOIN_SITES = {"_join", "_closure", "_path_edges", "_seeded_reach",
+              "sparql_describe"}
+
+
+def _join_sites(tree):
+    """(enclosing top-level function, line) of every ``.join(`` call."""
+    for fn in tree.body:
+        for node in ast.walk(fn):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "join"):
+                yield getattr(fn, "name", "<module>"), node.lineno
+
+
+def test_sparql_module_joins_solutions_in_one_place():
+    tree = ast.parse(SPARQL.read_text(encoding="utf-8"))
+    sites = list(_join_sites(tree))
+    offenders = [f"kg/sparql.py:{line} in {fn}()" for fn, line in sites
+                 if fn not in JOIN_SITES]
+    assert not offenders, "join outside _join:\n" + "\n".join(offenders)
+    assert "_join" in {fn for fn, _ in sites}
+
+
+def test_guard_catches_stray_join():
+    """The join guard is not vacuous: a join in any other function, or at
+    module level, is reported with its function."""
+    src = ("def _join(l, r):\n    return l.join(r, on=['x'])\n"
+           "def _bindings(out, right):\n"
+           "    return out.join(right, on=['s'], how='left')\n"
+           "x = a.join(b)\n")
+    assert [fn for fn, _ in _join_sites(ast.parse(src))
+            if fn not in JOIN_SITES] == ["_bindings", "<module>"]
