@@ -554,8 +554,10 @@ class _Parser:
         self.base: Optional[str] = None
         self.vars_seen: set = set()   # variable names in scope
         self._fresh = 0
-        # every fresh path variable of the parse (subqueries included)
+        # every fresh path variable of the parse (subqueries included);
+        # none is a name the query text uses anywhere
         self._hidden: List[str] = []
+        self._text_vars = {t.text[1:] for t in self.toks if t.kind == "VAR"}
         # HAVING's hidden aggregates while its constraints parse; None
         # elsewhere (aggregate operands are allowed only in HAVING)
         self._having_aggs: Optional[List[Aggregate]] = None
@@ -1366,7 +1368,7 @@ class _Parser:
         while True:
             name = f"_path{self._fresh}"
             self._fresh += 1
-            if name not in self.vars_seen:
+            if name not in self._text_vars:
                 self._hidden.append(name)
                 return name
 
@@ -1948,24 +1950,25 @@ def _assemble(patterns, filters: List[Expr], binds: List[Tuple[str, Expr]],
     aliases = {a for a, _ in binds}
     plain = [p for p in patterns if not _pattern_vars([p]) & aliases]
     moved = [p for p in patterns if _pattern_vars([p]) & aliases]
-    for _, node in parts:
-        if isinstance(node, Path):
-            bad = [t for t in (node.s, node.o)
+    for _, part in parts:
+        if isinstance(part, Path):
+            bad = [t for t in (part.s, part.o)
                    if is_var(t) and t[1:] in aliases]
             if bad:
                 raise SPARQLUnsupportedError(
                     f"BIND alias {bad[0]} as a closure-path "
                     "endpoint is outside the supported subset")
-        if isinstance(node, SubSelect):
+        if isinstance(part, SubSelect):
             # a BIND before the subquery (one after it is "BIND rebinds")
-            for v in set(_subquery_proj(node.query)) & aliases:
+            clash = sorted(set(_subquery_proj(part.query)) & aliases)
+            if clash:
                 raise SPARQLError(
-                    f"subquery projects ?{v}, already bound by BIND in "
-                    "the enclosing group (SPARQL forbids rebinding)")
+                    f"subquery projects ?{clash[0]}, already bound by BIND "
+                    "in the enclosing group (SPARQL forbids rebinding)")
             # an aggregate alias column is a raw numeric, not an encoded
             # term — as a triple-pattern key it would never equi-match
             # ("3" vs '"3"^^xsd:integer'): loud, not silently empty
-            agg = {a.alias for a in node.query.aggregates}
+            agg = {a.alias for a in part.query.aggregates}
             for pat in patterns:
                 bad = [v for v in pat if is_var(v) and v[1:] in agg]
                 if bad:
@@ -1998,9 +2001,11 @@ def _assemble(patterns, filters: List[Expr], binds: List[Tuple[str, Expr]],
         for alias, e in list(todo):
             if final or e.vars <= have:
                 todo.remove((alias, e))
-                node = (Filter(e, node) if alias is None
-                        else Extend(node, alias, e))
-                have.add(alias)
+                if alias is None:
+                    node = Filter(e, node)
+                else:
+                    node = Extend(node, alias, e)
+                    have.add(alias)
         return node
 
     node = None
@@ -2281,10 +2286,21 @@ def _no_shared(node: Join, columns: List[str]) -> str:
             "patterns — a cartesian product; bind a common variable")
 
 
+def _leaves(node: Node) -> List[Node]:
+    if isinstance(node, Join):
+        return _leaves(node.left) + _leaves(node.right)
+    if isinstance(node, (Filter, Extend)):
+        return _leaves(node.inner)
+    if isinstance(node, Union):
+        return [leaf for side in node.sides for leaf in _leaves(side)]
+    return [node]
+
+
 def _solutions(triples: DataFrame, pq: ParsedQuery, stats) -> DataFrame:
     """The WHERE clause's solutions, hidden path variables dropped."""
-    if stats == "auto" and not isinstance(pq.where, BGP):
-        # several scans share one histogram
+    if stats == "auto" and sum(isinstance(leaf, (BGP, SubSelect))
+                               for leaf in _leaves(pq.where)) > 1:
+        # the BGPs and subqueries share one histogram
         from .query import predicate_stats
         stats = predicate_stats(triples)
     return _evaluate(triples, pq.where, stats).drop(*pq.hidden_vars)

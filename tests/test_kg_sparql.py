@@ -457,6 +457,20 @@ def test_exec_union_drops_hidden_path_variables(triples):
          '"31"^^<http://www.w3.org/2001/XMLSchema#integer>')]
 
 
+def test_exec_hidden_path_variable_never_takes_a_query_name(triples):
+    # the sequence's chain variable must not capture ?_path0, which the
+    # query binds later in its text
+    out = sparql_select(
+        triples,
+        PFX + "SELECT * WHERE { ?s e:knows/e:knows ?o . ?s e:age ?_path0 }")
+    assert sorted(out.columns) == ["_path0", "o", "s"]
+    assert _rows(out.select("s", "o", "_path0")) == [
+        ("<http://e/alice>", "<http://e/alice>",
+         '"31"^^<http://www.w3.org/2001/XMLSchema#integer>'),
+        ("<http://e/bob>", "<http://e/bob>",
+         '"7"^^<http://www.w3.org/2001/XMLSchema#integer>')]
+
+
 def test_exec_aggregates(triples):
     out = sparql_select(
         triples,
