@@ -1588,8 +1588,8 @@ def test_coalesce_nested_numeric_keeps_xsd_type(triples):
 
 
 def test_filter_over_bind_pattern_variable(triples):
-    # ?z is bound by a pattern that moved to bind_patterns — its filter
-    # must ride along (was: 'references no query variable')
+    # ?z is bound only by the BGP of patterns over a BIND alias — its
+    # filter must apply after that BGP joins
     out = sparql_select(
         triples,
         PFX + "SELECT ?s ?z WHERE { ?s a e:Person . BIND(?s AS ?w) . "
