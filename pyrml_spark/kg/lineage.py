@@ -7,12 +7,23 @@ the same writer API an Iceberg catalog would take) and appends a manifest
 record::
 
     {stage, input_fingerprint, rows, partitions, elapsed_sec, path,
-     extra: {...}, per_partition: [{partition, rows}, ...]}
+     extra: {...}, per_partition: [{file, rows}, ...], schema: {...}}
+
+``per_partition`` has one entry per Parquet file that holds rows (for the
+bucketed ``triples`` stage: one per subject bucket), ``file`` relative to the
+stage directory. The counts come from the footers the write just produced
+(``FileMetaData.num_rows``, read on the driver), so the lineage costs no
+Spark job. ``rows`` is their sum and ``partitions`` their number. ``schema``
+is the StructType JSON of the written frame as Spark reads it back (every
+field nullable, partition columns last).
 
 On re-run, a stage whose (name, input_fingerprint) matches the manifest is
 served from its checkpoint — the pipeline resumes mid-DAG after a crash.
 Fingerprints are driver-side hashes of the stage's declared inputs (config +
-upstream fingerprints), not data scans, so resume decisions are O(1).
+upstream fingerprints), not data scans, so resume decisions are O(1). Resume
+and the fresh read-back read with the recorded schema, so Spark reads no
+footer and starts no job; a record without ``schema`` (an older work dir)
+is read with schema inference.
 """
 
 from __future__ import annotations
@@ -24,8 +35,9 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable, Dict, List, Optional
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def fingerprint(*parts) -> str:
@@ -36,19 +48,58 @@ def fingerprint(*parts) -> str:
     return h.hexdigest()[:16]
 
 
+def written_schema(df: DataFrame,
+                   partition_by: Optional[List[str]] = None) -> StructType:
+    """The schema Spark infers when it reads back ``df`` written as Parquet
+    with ``partitionBy(*partition_by)``: every field nullable at every
+    depth (the writer makes the files nullable) and the partition columns
+    last, in directory order. Reading with it skips the footer job."""
+    last = list(partition_by or [])
+    fields = ([f for f in df.schema.fields if f.name not in last]
+              + [df.schema[c] for c in last])
+    return StructType.fromJson(_nullable(StructType(fields).jsonValue()))
+
+
+def _nullable(node):
+    if isinstance(node, list):
+        return [_nullable(v) for v in node]
+    if not isinstance(node, dict):
+        return node
+    return {k: (True if k in ("nullable", "containsNull", "valueContainsNull")
+                else v if k == "metadata" else _nullable(v))
+            for k, v in node.items()}
+
+
+def _file_lineage(path: str) -> List[dict]:
+    """``{file, rows}`` for each Parquet data file under ``path`` that holds
+    rows, from its footer. Names starting with ``_`` or ``.`` (``_SUCCESS``,
+    checksum files) are skipped, as Spark's reader skips them."""
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for name in sorted(files):
+            if name.startswith(("_", ".")):
+                continue
+            f = os.path.join(root, name)
+            rows = pq.read_metadata(f).num_rows
+            if rows:
+                out.append({"file": os.path.relpath(f, path), "rows": rows})
+    return out
+
+
 @dataclass
 class StageRecord:
     stage: str
     input_fingerprint: str
     rows: int
-    # read-back partitions that hold rows: 0 for an empty stage, and a
-    # split that gets no row group of a file larger than one split is not
-    # counted, so this can be below the scan's partition count
+    # Parquet files that hold rows (0 for an empty stage): one per
+    # per_partition entry
     partitions: int
     elapsed_sec: float
     path: str
     extra: dict = field(default_factory=dict)
     per_partition: list = field(default_factory=list)
+    schema: Optional[dict] = None
 
 
 class StageRunner:
@@ -80,25 +131,20 @@ class StageRunner:
         path = os.path.join(self.stage_dir, name)
         rec = self._manifest.get(key)
         if rec is not None and os.path.exists(rec["path"]):
-            return self.spark.read.parquet(rec["path"])
+            if rec.get("schema") is None:  # written before schemas were kept
+                return self.spark.read.parquet(rec["path"])
+            return self.spark.read.schema(
+                StructType.fromJson(rec["schema"])).parquet(rec["path"])
 
         t0 = time.perf_counter()
         df = build()
+        schema = written_schema(df, partition_by)
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
-        out = self.spark.read.parquet(path)
-        # one job yields the per-partition lineage, the total row count (its
-        # sum) and the count of partitions that hold rows (its length) — no
-        # count() job, and no ``DataFrame.rdd``, which Spark Connect does
-        # not have
-        per_partition = [
-            {"partition": r["pid"], "rows": r["rows"]}
-            for r in out.groupBy(
-                F.spark_partition_id().alias("pid")
-            ).agg(F.count(F.lit(1)).alias("rows")).collect()
-        ]
+        out = self.spark.read.schema(schema).parquet(path)
+        per_partition = _file_lineage(path)
         record = StageRecord(
             stage=name,
             input_fingerprint=input_fp,
@@ -108,6 +154,7 @@ class StageRunner:
             path=path,
             extra=extra_metrics(out) if extra_metrics else {},
             per_partition=per_partition,
+            schema=schema.jsonValue(),
         )
         with open(self.manifest_path, "a") as f:
             f.write(json.dumps(record.__dict__) + "\n")

@@ -1014,6 +1014,7 @@ class _Parser:
             raise SPARQLError(
                 f"CONSTRUCT template variables {unbound} are not bound "
                 "in WHERE")
+        pq.order_by = self._order_by()
         self._limit_offset(pq)
         return pq
 

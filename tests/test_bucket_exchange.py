@@ -10,8 +10,9 @@ stage, in both ``run_pipeline`` and ``run_pipeline_fused``.
   partitioning, whose sampler ran the whole assembly an extra time.
 * Placement: bucket ``b`` lands in write task ``b % tasks``, so the tasks
   share the buckets evenly.
-* Jobs: a ``run_pipeline`` recovery (final stage lost, four stages resumed)
-  runs a pinned number of Spark jobs.
+* Jobs: a ``run_pipeline`` first build, a full resume and a recovery
+  (final stage lost, four stages resumed) each run a pinned number of
+  Spark jobs.
 """
 
 import os
@@ -32,13 +33,16 @@ from pyrml_spark.kg.table import bucket_clustered, write_triples_table
 N_BUCKETS = 8
 CFG = KGPipelineConfig(n_docs=300, n_subject_buckets=N_BUCKETS)
 
-# Spark jobs of a run_pipeline recovery of CFG under the test session's
-# conf (8 shuffle partitions, AQE on, so each shuffle stage of the triple
-# assembly is its own job), counting the write, the read-back lineage
-# aggregate and the table metrics. The range-partitioned write this
-# replaced ran 21: 2 more for its lazy localCheckpoint and its range
-# sampler.
-RECOVERY_JOBS = 19
+# Spark jobs of run_pipeline over CFG under the test session's conf (8
+# shuffle partitions, AQE on, so each shuffle stage of the triple assembly
+# is its own job). Stage checkpoints are read with their recorded schemas
+# and lineage comes from the Parquet footers, so a stage costs its write
+# and nothing else; the recovery counts the write and the table metrics.
+# Reading checkpoints with schema inference and counting rows with a
+# per-partition aggregate job cost 37 / 6 / 19.
+FIRST_BUILD_JOBS = 19
+RESUME_JOBS = 0
+RECOVERY_JOBS = 11
 
 
 @pytest.fixture
@@ -122,11 +126,15 @@ def test_rml_sink_writes_one_file_per_bucket(spark, tmp_path, written):
 def test_checkpointed_pipeline_bucket_exchange_and_recovery_jobs(
         spark, tmp_path, written):
     work = str(tmp_path / "work")
-    run_pipeline(spark, work, CFG)
+    _, jobs = count_jobs(spark, lambda: run_pipeline(spark, work, CFG))
+    assert jobs == FIRST_BUILD_JOBS
     _assert_bucket_exchange(written[-1])
     table = os.path.join(work, "stages", "triples")
     _assert_layout(spark, table)
     rows = spark.read.parquet(table).count()
+
+    _, jobs = count_jobs(spark, lambda: run_pipeline(spark, work, CFG))
+    assert jobs == RESUME_JOBS
 
     shutil.rmtree(table)
     out, jobs = count_jobs(spark, lambda: run_pipeline(spark, work, CFG))

@@ -7,8 +7,12 @@ import os
 import re
 import tempfile
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from jobcount import count_jobs
 
 from pyrml_spark.kg.canonicalize import canonical_mapping, connected_components
 from pyrml_spark.kg.datagen import generate_documents
@@ -168,12 +172,17 @@ def test_pipeline_end_to_end_and_resume(spark):
         assert {"mentions", "canonical_mapping", "triples"} <= stages
         full = [r for r in recs if "rows" in r]
         assert all(r["rows"] >= 0 and "per_partition" in r for r in full)
-        # the partition count comes from the per-partition aggregate; every
-        # read-back split of these small stages holds rows, so it equals
-        # the scan's partition count (an empty stage records 0, below)
+        # per_partition has one entry per Parquet file that holds rows,
+        # read from its footer; rows and partitions are its sum and length
         for r in full:
-            assert r["partitions"] == \
-                spark.read.parquet(r["path"]).rdd.getNumPartitions(), r
+            back = spark.read.parquet(r["path"])
+            assert r["partitions"] == _non_empty_parquet_files(r["path"]), r
+            assert sum(p["rows"] for p in r["per_partition"]) == r["rows"]
+            assert r["rows"] == back.count(), r
+            # the schema-pinned read-back is what schema inference returns
+            pinned = spark.read.schema(StructType.fromJson(r["schema"])) \
+                .parquet(r["path"])
+            assert pinned.schema == back.schema, r["stage"]
         # resume: second run must reuse checkpoints (no recompute) and match
         out2 = run_pipeline(spark, d, cfg)
         assert out2.count() == n1
@@ -182,9 +191,28 @@ def test_pipeline_end_to_end_and_resume(spark):
         assert len([r for r in recs2 if "rows" in r]) == len(full)  # no new stage runs
 
 
+def _non_empty_parquet_files(path):
+    return sum(1 for root, _, files in os.walk(path) for f in files
+               if f.endswith(".parquet")
+               and pq.read_metadata(os.path.join(root, f)).num_rows)
+
+
+def _stage_records(work):
+    with open(os.path.join(work, "manifest.jsonl")) as f:
+        return [r for r in map(json.loads, f) if "input_fingerprint" in r]
+
+
+def _table_hash(df):
+    """Row count plus an order-independent hash of the (s,p,o,g) rows."""
+    row = df.agg(F.count(F.lit(1)).alias("n"),
+                 F.sum(F.xxhash64("s", "p", "o", "g")
+                       .cast("decimal(38,0)")).alias("h")).collect()[0]
+    return row["n"], row["h"]
+
+
 def test_stage_runner_records_an_empty_stage(spark, tmp_path):
     """A stage that writes no rows records 0 rows in 0 partitions: the
-    manifest counts the read-back partitions that hold rows."""
+    manifest counts the Parquet files that hold rows."""
     from pyrml_spark.kg.lineage import StageRunner
 
     runner = StageRunner(spark, str(tmp_path))
@@ -194,6 +222,86 @@ def test_stage_runner_records_an_empty_stage(spark, tmp_path):
     with open(runner.manifest_path) as f:
         (rec,) = [json.loads(line) for line in f]
     assert (rec["rows"], rec["partitions"], rec["per_partition"]) == (0, 0, [])
+
+
+def test_stage_runner_empty_partitioned_stage_records_and_resumes(
+        spark, tmp_path):
+    """``partitionBy`` writes no data file for 0 rows, so there is nothing
+    to infer a schema from: the stage reads back with the recorded schema,
+    records 0 rows, and a later run resumes it without building."""
+    from pyrml_spark.kg.lineage import StageRunner
+
+    empty = spark.range(10).filter(F.col("id") < 0) \
+        .select((F.col("id") % 2).alias("b"), "id")
+    out = StageRunner(spark, str(tmp_path)).run(
+        "empty", "fp-empty", lambda: empty, partition_by=["b"])
+    assert out.count() == 0 and out.columns == ["id", "b"]
+
+    def build():
+        raise AssertionError("a recorded stage must resume")
+
+    runner = StageRunner(spark, str(tmp_path))
+    again = runner.run("empty", "fp-empty", build, partition_by=["b"])
+    assert again.count() == 0 and again.columns == ["id", "b"]
+    (rec,) = _stage_records(str(tmp_path))
+    assert (rec["rows"], rec["partitions"], rec["per_partition"]) == (0, 0, [])
+
+
+def _empty_corpus(spark):
+    return generate_documents(spark, 10).filter(F.lit(False))
+
+
+def test_empty_corpus_checkpointed_build_and_resume(spark, tmp_path):
+    cfg = KGPipelineConfig(n_docs=10, n_subject_buckets=4)
+    work = str(tmp_path / "work")
+    out = run_pipeline(spark, work, cfg, documents=_empty_corpus(spark),
+                       input_tag="empty")
+    assert out.count() == 0
+    assert out.columns == ["s", "p", "o", "g", "subject_bucket"]
+    recs = _stage_records(work)
+    assert {r["stage"]: r["rows"] for r in recs}["triples"] == 0
+    again = run_pipeline(spark, work, cfg, documents=_empty_corpus(spark),
+                         input_tag="empty")
+    assert again.count() == 0
+    assert again.columns == ["s", "p", "o", "g", "subject_bucket"]
+    assert _stage_records(work) == recs  # no stage recomputed
+
+
+def test_empty_corpus_fused_build(spark, tmp_path):
+    from pyrml_spark.kg.pipeline import run_pipeline_fused
+
+    out = run_pipeline_fused(spark, str(tmp_path / "out"),
+                             KGPipelineConfig(n_docs=10, n_subject_buckets=4),
+                             documents=_empty_corpus(spark))
+    assert out.count() == 0
+    assert out.columns == ["s", "p", "o", "g", "subject_bucket"]
+
+
+def test_resume_with_and_without_recorded_schemas(spark, tmp_path):
+    """A work dir with recorded schemas resumes with no Spark job; one
+    written before schemas were recorded (no ``schema`` in any record)
+    still resumes every stage, through schema inference."""
+    cfg = KGPipelineConfig(n_docs=N_DOCS, n_subject_buckets=8)
+    work = str(tmp_path / "work")
+    expected = _table_hash(run_pipeline(spark, work, cfg))
+    recs = _stage_records(work)
+    assert all(r["schema"] for r in recs)
+
+    out, jobs = count_jobs(spark, lambda: run_pipeline(spark, work, cfg))
+    assert jobs == 0
+    assert _stage_records(work) == recs
+    assert _table_hash(out) == expected
+
+    manifest = os.path.join(work, "manifest.jsonl")
+    with open(manifest) as f:
+        lines = [json.loads(line) for line in f]
+    with open(manifest, "w") as f:
+        for rec in lines:
+            rec.pop("schema", None)
+            f.write(json.dumps(rec) + "\n")
+    out = run_pipeline(spark, work, cfg)
+    assert len(_stage_records(work)) == len(recs)  # every stage resumed
+    assert _table_hash(out) == expected
 
 
 def test_pipeline_no_orphan_aliases(spark):

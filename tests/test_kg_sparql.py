@@ -685,6 +685,20 @@ def test_exec_path_construct_combo(chain):
     assert out.count() == 6  # 3+2+1 reachable pairs
 
 
+def test_exec_construct_order_by_limit(chain):
+    from pyrml_spark.kg.sparql import sparql_construct
+
+    # the template over the first 3 solutions in (?a, ?b) order: node 1
+    # reaches 2, 3 and 4 before any pair that starts at node 2
+    out = sparql_construct(
+        chain, CPFX + "CONSTRUCT { ?a c:reaches ?b } WHERE "
+        "{ ?a c:next+ ?b } ORDER BY ?a ?b LIMIT 3")
+    reaches = "<http://c/reaches>"
+    assert _rows(out) == [("<http://c/1>", reaches, "<http://c/2>"),
+                          ("<http://c/1>", reaches, "<http://c/3>"),
+                          ("<http://c/1>", reaches, "<http://c/4>")]
+
+
 # -------------------------------------------------- MINUS / EXISTS
 
 
