@@ -44,6 +44,7 @@ from .model import (
     SubjectMap,
     TriplesMap,
 )
+from .scan import local_input_bytes
 from .sources import SourceLoader
 from .terms import CompileCtx, compile_term, render_value, raw_value
 
@@ -130,14 +131,11 @@ class RMLCompiler:
     def _parent_is_small(self, tm: TriplesMap) -> bool:
         total = 0
         for ls in tm.sources:
-            p = self.loader.path(ls)  # size the file the loader reads
-            if os.path.isfile(p):
-                total += os.path.getsize(p)
-            elif os.path.isdir(p):
-                for root, _, files in os.walk(p):
-                    total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-            else:
+            # size the file the loader reads; unknown size is not small
+            n_bytes = local_input_bytes(self.loader.path(ls))
+            if n_bytes is None:
                 return False
+            total += n_bytes
         return total < self.broadcast_threshold
 
     # -- term helpers ----------------------------------------------------------

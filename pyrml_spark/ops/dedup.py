@@ -9,6 +9,9 @@ n-gram Jaccard). All scale paths are shuffle-on-key designs:
 * n-gram jaccard: exact verification over candidate pairs from a shared-
   shingle inverted index (explode + self-join on shingle key)
 
+MinHash and SimHash meet their candidates in ``banding.band_join``, which
+emits each pair once, at its lowest shared band.
+
 No Python in the row path: shingling/hashing use native F.* expressions
 (md5, transform, explode) end to end. The hash family is md5 (not
 xxhash64): engine-portable, so every dedup operator's exact pair set is
@@ -21,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..scan import read_parquet_parallel
+from .banding import band_join
 
 N_MINHASH = 16           # minhash permutations
 LSH_BANDS = 4            # bands of 4 rows each
@@ -32,12 +36,13 @@ def _tokens(col):
 
 
 def _word_shingles(col, n: int = SHINGLE_N):
-    """Distinct word n-grams as strings, JVM-side."""
+    """Distinct word n-grams as strings, JVM-side. A text of fewer than
+    ``n`` words has none (``sequence`` would count down and slice at 0)."""
     toks = _tokens(col)
     idx = F.sequence(F.lit(0), F.size(toks) - n)
-    return F.array_distinct(
+    return F.when(F.size(toks) >= n, F.array_distinct(
         F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " "))
-    )
+    )).otherwise(F.array().cast("array<string>"))
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -287,48 +292,20 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str,
     """MinHash+LSH candidate pairs with estimated Jaccard.
 
     Banding: signature split into LSH_BANDS bands; docs sharing any band
-    bucket become candidates (join key = (band_idx, band_hash) — bounded
-    bucket sizes, no all-pairs). Estimated J = fraction of matching minhashes.
-    md5 hash family throughout ⇒ the DuckDB oracle reproduces the exact pair
-    set (ORACLE_MINHASH_LSH)."""
+    bucket become candidates (``band_join`` on (band, md5 of the band's
+    minhashes), each pair once). Estimated J = fraction of matching
+    minhashes. md5 hash family throughout ⇒ the DuckDB oracle reproduces
+    the exact pair set (ORACLE_MINHASH_LSH)."""
     docs = read_parquet_parallel(spark, f"{sf_dir}/documents.parquet")
     sigs = minhash_signatures(docs)
     rows_per_band = N_MINHASH // LSH_BANDS
-    banded = sigs.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(F.concat_ws(
-                            "|",
-                            *[F.col("sig")[b * rows_per_band + r]
-                              for r in range(rows_per_band)]
-                        )).alias("bucket"),
-                    )
-                    for b in range(LSH_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "sig", "bb.band", "bb.bucket")
-    # materialize the banded signatures once: with one side broadcast
-    # there is no pair of identical exchanges for ReusedExchange to dedup
-    # (the plan showed TWO full Scan→explode→SortAggregate signature
-    # subtrees), so both self-join sides re-ran the corpus-wide minhash
-    # aggregation (guide §1.2: don't compute things twice)
-    banded = banded.localCheckpoint(eager=False)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    # jaccard_est is a pure function of the pair's signatures, so computing
-    # it in the join projection and filtering BEFORE dropDuplicates yields
-    # the identical pair set — but the dedup exchange then carries
-    # (doc_a, doc_b, est) ≈ 24 bytes per row instead of two 16×32-char
-    # signature arrays (~1.1 KB per row), and only threshold-passing pairs
-    # at that (guide §2.3: project before the exchange / shuffle fewer
-    # bytes). Duplicate-heavy corpora put whole clusters in one band bucket,
-    # so the pre-dedup candidate set is the d²-sized part.
+    keys = F.array(*[
+        F.md5(F.concat_ws("|", *[F.col("sig")[b * rows_per_band + r]
+                                 for r in range(rows_per_band)]))
+        for b in range(LSH_BANDS)
+    ])
+    pairs = band_join(sigs.select("doc_id", "sig", keys.alias("keys")),
+                      "doc_id", LSH_BANDS)
     est = (
         F.size(
             F.filter(
@@ -340,23 +317,17 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str,
         / N_MINHASH
     )
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
+        pairs.select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
             F.round(est, 6).alias("jaccard_est"),
         )
         .filter(F.col("jaccard_est") >= threshold)
-        .dropDuplicates(["doc_a", "doc_b"])
     )
 
 
 N_SIMHASH_BITS = 60   # 15 hex chars of md5 — fits BIGINT in every engine
+SIMHASH_CHUNKS = 4    # 15-bit band keys
 
 
 def simhash64(docs: DataFrame) -> DataFrame:
@@ -409,70 +380,22 @@ def dedup_simhash(spark: SparkSession, sf_dir: str,
     (ORACLE_SIMHASH)."""
     docs = read_parquet_parallel(spark, f"{sf_dir}/documents.parquet")
     sh = simhash64(docs)
-    chunks = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("chunk"),
-                F.shiftright(F.col("simhash"), c * 15)
-                .bitwiseAND(F.lit(0x7FFF))
-                .alias("val"),
-            )
-            for c in range(4)
-        ]
-    )
-    banded = sh.select("doc_id", "simhash",
-                       F.explode(chunks).alias("cc")).select(
-        "doc_id", "simhash", "cc.chunk", "cc.val"
-    )
-    # materialize the banded signatures once: the self-join broadcasts one
-    # side, so there is no exchange for ReuseExchange to dedup and BOTH
-    # sides would otherwise re-run the corpus-wide simhash aggregation
-    # (two full Scan→explode→60-sum HashAggregate subtrees in the plan;
-    # guide §1.2 "don't compute things twice" — measured ~1.5-2 s at 50k
-    # docs, and a whole corpus pass at production scale)
-    banded = banded.localCheckpoint(eager=False)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    # Two join-shape changes, both result-preserving (the pair set and each
-    # pair's hamming are pure functions of the two simhashes):
-    #
-    # 1. The hamming predicate lives INSIDE the join condition. 15-bit chunk
-    #    values collide heavily on templated corpora (measured at 50k docs:
-    #    one (chunk,val) bucket of 15,678 docs, 294M intra-bucket pairs) —
-    #    the old shape materialized every candidate with both 8-byte hashes
-    #    and shuffled them through dropDuplicates before filtering (590 s at
-    #    50k docs). With the predicate in the join, the d² comparisons happen
-    #    inside the SMJ's codegen'd condition and only true near-dup pairs
-    #    ever leave the join.
-    # 2. Minimal-shared-chunk emission replaces dropDuplicates: a pair that
-    #    shares k chunks would surface k times; instead of deduplicating
-    #    ~10⁸ surviving rows through another exchange + hash aggregate, the
-    #    join condition additionally requires every chunk BELOW the current
-    #    one to differ (bits [15i, 15i+15) of the xor non-zero), so each
-    #    pair is emitted exactly once — at its lowest shared chunk — and the
-    #    post-join dedup disappears from the plan.
-    xor_ab = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    hamming_ab = F.bit_count(xor_ab)
-    min_chunk = F.lit(True)
-    for i in range(3):
-        earlier_differs = (
-            F.shiftright(xor_ab, i * 15).bitwiseAND(F.lit(0x7FFF)) != 0
-        )
-        min_chunk = min_chunk & ((F.col("a.chunk") <= i) | earlier_differs)
-    return (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (hamming_ab <= max_hamming)
-            & min_chunk,
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming_ab.alias("hamming"),
-        )
+    keys = F.array(*[
+        F.shiftright(F.col("simhash"), c * 15).bitwiseAND(F.lit(0x7FFF))
+        for c in range(SIMHASH_CHUNKS)
+    ])
+    # the hamming predicate lives INSIDE the join condition: 15-bit chunk
+    # values collide heavily on templated corpora (measured at 50k docs:
+    # one (chunk,val) bucket of 15,678 docs, 294M intra-bucket pairs), so
+    # the d² comparisons happen in the join's codegen'd condition and only
+    # true near-dup pairs ever leave the join
+    hamming_ab = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+    pairs = band_join(sh.select("doc_id", "simhash", keys.alias("keys")),
+                      "doc_id", SIMHASH_CHUNKS, on=hamming_ab <= max_hamming)
+    return pairs.select(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        hamming_ab.alias("hamming"),
     )
 
 

@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..scan import read_parquet_parallel
+from .banding import band_join
 
 N_QUERIES = 8       # vec_id < N_QUERIES are the query vectors
 TOP_K = 5
@@ -358,11 +359,12 @@ def lsh_cosine_neardup(emb: DataFrame,
     per-band p≈0.52, miss ≈ 0.48^16 ≈ 8.5e-6 — effectively exact recall —
     while unrelated pairs (sim≈0, p_bit=0.5) collide per band with prob
     2^-10, so expected candidate volume is 16·n²/2¹¹ = n²/128, not n²/2.
-    Candidates meet via an equi-join on (band, signature) — bounded buckets,
-    no all-pairs — then the exact JVM-side dot product verifies (candidates
-    are id-pairs only; vectors re-join after dedup so the band shuffle never
-    carries arrays). Recall vs exact brute force is asserted in
-    tests/test_plan_quality.py / test_oracle_parity.py at test scale.
+    Candidates meet in :func:`~pyrml_spark.ops.banding.band_join` on
+    (band, signature) — bounded buckets, no all-pairs, each pair once at
+    its lowest shared band — then the exact JVM-side dot product verifies
+    (candidates are id-pairs only; vectors re-join after the band join, so
+    the band shuffle never carries embeddings). Recall vs exact brute force
+    is asserted in tests/test_oracle_parity.py at test scale.
 
     For EXACT low-threshold joins (θ=0.4, where LSH cannot prune — see
     :func:`embedding_cosine_neardup`) use the block-matmul operator instead.
@@ -391,35 +393,14 @@ def lsh_cosine_neardup(emb: DataFrame,
             E = np.stack(pdf["embedding"].to_numpy())
             signs = (E @ planes.T) >= 0            # (n, n_bands*bits)
             sigs = signs.reshape(len(pdf), n_bands, bits_per_band) @ weights
-            yield pd.DataFrame({
-                "vec_id": np.repeat(pdf["vec_id"].to_numpy(), n_bands),
-                "band": np.tile(np.arange(n_bands, dtype=np.int32), len(pdf)),
-                "sig": sigs.reshape(-1),
-            })
+            yield pd.DataFrame({"vec_id": pdf["vec_id"].to_numpy(),
+                                "keys": list(sigs)})
 
-    # persist: `banded` feeds both sides of the candidate self-join —
-    # without a persist each side re-runs the signature matmul
-    # (ReusedExchange only sometimes saves the self-join). MEMORY_AND_DISK
-    # so big corpora spill instead of OOM; callers may clearCache().
-    from pyspark import StorageLevel
-
-    banded = (
-        emb.mapInPandas(banded_sigs, "vec_id long, band int, sig long")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    # candidates keep multi-band duplicates: deduplicating 10⁶-10⁷ candidate
-    # rows through an exchange cost more than scoring the ~4% duplicates
-    # twice in the prune below — dropDuplicates moves AFTER the prune, onto
-    # the (tiny) survivor set (guide §2.4: remove shuffles outright).
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.sig") == F.col("b.sig"))
-               & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .select(F.col("a.vec_id").alias("vec_a"),
-                F.col("b.vec_id").alias("vec_b"))
-    )
+    pairs = band_join(
+        emb.mapInPandas(banded_sigs, "vec_id long, keys array<long>"),
+        "vec_id", n_bands)
+    cand = pairs.select(F.col("a.vec_id").alias("vec_a"),
+                        F.col("b.vec_id").alias("vec_b"))
     # Two-stage verify (r9, guide §4.2): the exact per-pair JVM fold
     # (F.aggregate — interpreted, outside codegen) dominated the whole
     # operator at ~1 µs × |candidates|. Stage 1 PRUNES with one vectorized
@@ -461,7 +442,6 @@ def lsh_cosine_neardup(emb: DataFrame,
     # scale-safe fallback.
     # an empty table has no matrix to capture (np.stack needs a row): it
     # takes the attach-join path, which returns the empty result
-    captured = None
     if 0 < n_emb_hint * dim <= CAPTURED_MATRIX_MAX_ELEMENTS:
         epdf = emb.select(
             "vec_id",
@@ -471,28 +451,11 @@ def lsh_cosine_neardup(emb: DataFrame,
         ids_sorted = ids[order]
         M = np.stack(epdf["e"].to_numpy()).astype(np.float32)[order]
         nrm = np.sqrt(np.einsum("ij,ij->i", M, M))
-        captured = (ids_sorted, M, nrm)
 
-    if captured is not None:
-        ids_sorted, M, nrm = captured
-
-        def prune(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    yield pd.DataFrame({"vec_a": pd.Series(dtype="int64"),
-                                        "vec_b": pd.Series(dtype="int64")})
-                    continue
-                ia = _captured_rows(ids_sorted, pdf["vec_a"].to_numpy())
-                ib = _captured_rows(ids_sorted, pdf["vec_b"].to_numpy())
-                s = np.einsum("ij,ij->i", M[ia], M[ib]) / (nrm[ia] * nrm[ib])
-                keep = s >= threshold - prune_margin
-                yield pd.DataFrame({"vec_a": pdf["vec_a"].to_numpy()[keep],
-                                    "vec_b": pdf["vec_b"].to_numpy()[keep]})
-
-        survivors = (
-            cand.mapInPandas(prune, "vec_a long, vec_b long")
-            .dropDuplicates(["vec_a", "vec_b"])
-        )
+        def score(pdf):
+            ia = _captured_rows(ids_sorted, pdf["vec_a"].to_numpy())
+            ib = _captured_rows(ids_sorted, pdf["vec_b"].to_numpy())
+            return np.einsum("ij,ij->i", M[ia], M[ib]) / (nrm[ia] * nrm[ib])
     else:
         eat = maybe_broadcast(
             emb.select(F.col("vec_id").alias("vec_a"),
@@ -502,28 +465,24 @@ def lsh_cosine_neardup(emb: DataFrame,
             emb.select(F.col("vec_id").alias("vec_b"),
                        F.col("embedding").cast("array<float>").alias("e_b")),
             row_hint=n_emb_hint)
+        cand = cand.join(eat, "vec_a").join(ebt, "vec_b")
 
-        def prune(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    yield pd.DataFrame({"vec_a": pd.Series(dtype="int64"),
-                                        "vec_b": pd.Series(dtype="int64")})
-                    continue
-                A = np.stack(pdf["e_a"].to_numpy())
-                B = np.stack(pdf["e_b"].to_numpy())
-                s = np.einsum("ij,ij->i", A, B) / (
-                    np.sqrt(np.einsum("ij,ij->i", A, A))
-                    * np.sqrt(np.einsum("ij,ij->i", B, B)))
-                keep = s >= threshold - prune_margin
-                yield pd.DataFrame({"vec_a": pdf["vec_a"].to_numpy()[keep],
-                                    "vec_b": pdf["vec_b"].to_numpy()[keep]})
+        def score(pdf):
+            A = np.stack(pdf["e_a"].to_numpy())
+            B = np.stack(pdf["e_b"].to_numpy())
+            return np.einsum("ij,ij->i", A, B) / (
+                np.sqrt(np.einsum("ij,ij->i", A, A))
+                * np.sqrt(np.einsum("ij,ij->i", B, B)))
 
-        survivors = (
-            cand.join(eat, "vec_a")
-            .join(ebt, "vec_b")
-            .mapInPandas(prune, "vec_a long, vec_b long")
-            .dropDuplicates(["vec_a", "vec_b"])
-        )
+    def prune(batches):
+        for pdf in batches:
+            keep = np.zeros(len(pdf), dtype=bool)
+            if len(pdf):
+                keep = score(pdf) >= threshold - prune_margin
+            yield pd.DataFrame({"vec_a": pdf["vec_a"].to_numpy()[keep],
+                                "vec_b": pdf["vec_b"].to_numpy()[keep]})
+
+    survivors = cand.mapInPandas(prune, "vec_a long, vec_b long")
     # exact verify on the survivor set only: norms folded once per side,
     # the same sequential float64 fold order as the DuckDB oracle
     withnorm = emb.select("vec_id", "embedding",

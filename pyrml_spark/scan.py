@@ -45,8 +45,8 @@ def _parse_bytes(value: str) -> int | None:
     return int(m.group(1)) << (10 * " kmgtp".index(m.group(2).lower() or " "))
 
 
-def _local_input_bytes(path: str) -> int | None:
-    """Total bytes of a local parquet file or directory; None if unknown."""
+def local_input_bytes(path: str) -> int | None:
+    """Total bytes of a local file or directory; None if unknown."""
     try:
         if os.path.isfile(path):
             return os.path.getsize(path)
@@ -72,7 +72,7 @@ def parallelize_scan(spark: SparkSession, df: DataFrame,
         return df
     if target <= 1 or not split_bytes:
         return df
-    n_bytes = _local_input_bytes(path)
+    n_bytes = local_input_bytes(path)
     if n_bytes is None:
         return df
     est_splits = max(1, n_bytes // split_bytes)

@@ -52,3 +52,35 @@ def test_fixpoint_is_the_loop_that_materializes():
     tree = ast.parse(path.read_text(encoding="utf-8"))
     assert any(n.func.attr == "localCheckpoint"
                for n in _loop_materializations(tree))
+
+
+# the LSH operators share one candidate join, which owns their one
+# materialization of the banded rows
+BAND_OPS = {PKG / "ops" / "dedup.py": {"dedup_minhash_lsh", "dedup_simhash"},
+            PKG / "ops" / "similarity.py": {"lsh_cosine_neardup"}}
+BANDING = PKG / "ops" / "banding.py"
+
+
+def _materializations(node):
+    return [n for n in ast.walk(node)
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+            and n.func.attr in MATERIALIZE]
+
+
+def test_band_ops_leave_materialization_to_the_band_join():
+    for path, names in BAND_OPS.items():
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        funcs = {f.name: f for f in ast.walk(tree)
+                 if isinstance(f, ast.FunctionDef) and f.name in names}
+        assert set(funcs) == names, (path, names - set(funcs))
+        for name, f in funcs.items():
+            assert not _materializations(f), (path, name)
+
+
+def test_band_join_is_the_one_place_that_materializes():
+    """The rule above is not vacuous: the band join materializes, exactly
+    once, and the walker sees a call written inside a function body."""
+    tree = ast.parse(BANDING.read_text(encoding="utf-8"))
+    assert len(_materializations(tree)) == 1
+    probe = ast.parse("def f(df):\n    return df.localCheckpoint(eager=False)")
+    assert len(_materializations(probe)) == 1

@@ -168,6 +168,37 @@ def test_neardup_plans_have_no_cartesian_or_bnlj(spark):
         assert "CartesianProduct" not in plan, plan
 
 
+def _ancestors(plan: str, node: str) -> list:
+    """Operator names on the path from the first line matching ``node`` up
+    to the plan root (the tree string indents a child below its parent)."""
+    lines = plan.splitlines()
+    i = next(i for i, line in enumerate(lines) if re.search(node, line))
+
+    def depth(line):
+        return len(re.match(r"[\s:+\-]*", line).group(0))
+
+    names, d = [], depth(lines[i])
+    for line in reversed(lines[:i]):
+        if depth(line) < d:
+            d = depth(line)
+            names.append(re.match(r"\w+", line[d:]).group(0))
+    return names
+
+
+def test_band_join_has_no_dedup_above_it(spark):
+    """Each pair leaves the band join once, at its lowest shared band, so
+    no aggregate or exchange re-groups the pairs above the join."""
+    from pyrml_spark.ops.dedup import dedup_minhash_lsh, dedup_simhash
+    from pyrml_spark.ops.similarity import ann_lsh_neardup
+
+    for q in (dedup_minhash_lsh, dedup_simhash, ann_lsh_neardup):
+        plan = plan_of(q(spark, SF_DIR))
+        above = _ancestors(plan, r"Join \[band#")
+        assert "AdaptiveSparkPlan" in above, (q.__name__, above)
+        bad = [n for n in above if "Aggregate" in n or "Exchange" in n]
+        assert not bad, (q.__name__, bad, plan)
+
+
 def test_jaccard_broadcasts_hot_not_rare_side(spark):
     """The broadcast must be the small HOT-shingle set (anti-join), never the
     rare set (≈ all shingles at corpus scale)."""
