@@ -1,5 +1,8 @@
 """Query and analytics operators OVER the constructed knowledge graph —
 the "use the KG" side of the north rule's construct→materialize story.
+Nothing here constructs: every operator reads the (s, p, o, g) table that
+``run_pipeline_fused`` wrote (through ``entry._fused``), either afresh
+(:func:`kg_bgp_query`) or as the per-session sink (:func:`_sink_quads`).
 
 * :func:`kg_bgp_query` — a basic-graph-pattern (SPARQL BGP) join over the
   materialized (s, p, o, g) triples: each triple pattern is a
@@ -9,7 +12,8 @@ the "use the KG" side of the north rule's construct→materialize story.
   and a pattern joining on the subject lands bucket-aligned.
 
 * :func:`kg_pagerank` — fixed-iteration PageRank over the entity
-  co-mention graph in FIXED-POINT integer arithmetic: ranks are BIGINT
+  co-mention graph (the sink's canonical mentions triples, self-joined on
+  the document) in FIXED-POINT integer arithmetic: ranks are BIGINT
   micro-units, contributions use integer division, damping is
   ``150000 + (85 * s) // 100``. Integer sums are order-independent, so
   the DuckDB oracle reproduces every rank bit-for-bit — float PageRank
@@ -29,7 +33,8 @@ MENTIONS_P = "<http://kg.ex/p/mentions>"
 HASMEDIA_P = "<http://kg.ex/p/hasMedia>"
 MEDIAKIND_P = "<http://kg.ex/p/mediaKind>"
 SAMEAS_P = "<http://www.w3.org/2002/07/owl#sameAs>"
-PERSON_PREFIX = "<http://kg.ex/ent/person/"
+ENT_PREFIX = "<http://kg.ex/ent/"
+PERSON_PREFIX = ENT_PREFIX + "person/"
 
 PR_SCALE = 1_000_000  # rank fixed-point: 1.0 == 1e6 micro-units
 PR_ITERS = 2
@@ -67,22 +72,16 @@ def kg_bgp_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     "Which canonical persons are co-documented with a media asset, and
     what kind of asset" — the canonical join-three-scans shape of a
-    SPARQL BGP compiled onto a triples table. Each pattern is a
-    predicate-pruned projection of the same scan (Catalyst collapses the
-    three filters into one pass over the cached/bucketed table at scale);
-    the joins are equi-joins on the shared variables (?doc, ?media), so
-    they shuffle on high-cardinality keys and AQE handles any hot
-    document."""
+    SPARQL BGP compiled onto a triples table. The graph is built afresh
+    by the fused pipeline and the three patterns are predicate-pruned
+    scans of its Parquet read-back, so the construction runs once, not
+    once per pattern; the joins are equi-joins on the shared variables
+    (?doc, ?media), so they shuffle on high-cardinality keys and AQE
+    handles any hot document."""
     from .entry import kg_pipeline_fused_triples  # lazy: avoid cycle
 
-    # lazy localCheckpoint (r9): the BGP compiles to one scan of `t` PER
-    # PATTERN — without the cut each of the three scans re-derives the
-    # whole construction pipeline (datagen → extraction → assembly);
-    # checkpointed, the pipeline materializes once and the pattern scans
-    # read its partitions (guide §1.2: don't compute things three times)
-    t = (kg_pipeline_fused_triples(spark, sf_dir).select("s", "p", "o")
-         .localCheckpoint(eager=False))
-    return _bgp_over(t)
+    return _bgp_over(kg_pipeline_fused_triples(spark, sf_dir)
+                     .select("s", "p", "o"))
 
 
 def _bgp_over(t: DataFrame) -> DataFrame:
@@ -102,18 +101,18 @@ def _bgp_over(t: DataFrame) -> DataFrame:
 _SINK_CACHE: dict = {}
 
 
-def _sink_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MATERIALIZED (s,p,o) triples: write the subject-bucketed sink
-    once per (session, input) via the fused pipeline, read it back for
-    every query — the construct-once / query-many access path the sink
+def _sink_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The MATERIALIZED (s,p,o,g) quads: the fused pipeline writes its
+    subject-bucketed table once per (session, input), and every query
+    reads it back — the construct-once / query-many access path the sink
     exists for. Queries over this are pure predicate-pruned parquet
     scans + equi-joins, no datagen / mention-extraction stages in the
     plan."""
     import os
     import tempfile
 
-    from .entry import kg_pipeline_fused_triples  # lazy: avoid cycle
-    from .table import read_triples_table, write_triples_table
+    from .entry import _fused  # lazy: avoid cycle
+    from .table import read_triples_table
 
     # Connect-safe session identity (no sparkContext): spark.app.id via
     # conf, falling back to the session object id. sf_dir is part of the
@@ -151,10 +150,14 @@ def _sink_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "the server runs in local mode", stacklevel=2)
         path = (tempfile.mkdtemp(prefix="kg_sink_", dir=base)
                 + "/triples")
-        write_triples_table(
-            kg_pipeline_fused_triples(spark, sf_dir), path, fmt="parquet")
+        _fused(spark, path)
         _SINK_CACHE[key] = path
-    return read_triples_table(spark, path, fmt="parquet").select("s", "p", "o")
+    return read_triples_table(spark, path, fmt="parquet")
+
+
+def _sink_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The materialized sink as (s,p,o) triples."""
+    return _sink_quads(spark, sf_dir).select("s", "p", "o")
 
 
 # predicate histogram per materialized sink: the sink is immutable for
@@ -363,18 +366,6 @@ SELECT ?g (COUNT(*) AS ?n) WHERE {
 """
 
 
-def _sink_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The materialized sink WITH the graph column (quads): reuse the
-    table `_sink_triples` wrote (it caches the path per session+input),
-    reading all four columns."""
-    from .table import read_triples_table
-
-    _sink_triples(spark, sf_dir)  # ensure written + cached
-    key = (spark.conf.get("spark.app.id", None) or str(id(spark)), sf_dir)
-    return read_triples_table(spark, _SINK_CACHE[key],
-                              fmt="parquet").select("s", "p", "o", "g")
-
-
 def kg_sparql_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GRAPH ?g over the quads sink + GROUP BY aggregation: triple
     counts per named graph — one pruned scan of the bucketed table and
@@ -424,41 +415,20 @@ def kg_query_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
                     select=TWOHOP_SELECT, stats=_sink_stats(spark, sf_dir))
 
 
-def _co_mention_edges(spark: SparkSession) -> DataFrame:
+def _co_mention_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct symmetric (src, dst) edges between canonical entities
-    co-mentioned in the same document (persons resolved through the
-    sameAs canonical mapping, places by surface)."""
-    from .canonicalize import connected_components_auto
-    from .entry import _docs  # lazy: avoid cycle
-    from .extract import mentions_native, sameas_candidates
-
-    docs = _docs(spark)
-    mentions = mentions_native(docs)
-    # auto crossover (r9): the alias edge set is tiny relative to the
-    # corpus, so the mapping solves on the driver below the gate instead
-    # of paying the iterative loop's per-round job latency; identical
-    # labels either way (equality pinned by tests)
-    cc, _ = connected_components_auto(sameas_candidates(mentions))
-    mapping = cc.select(F.col("node").alias("entity"),
-                        F.col("component").alias("canonical"))
-    ents = (
-        mentions.join(
-            mapping,
-            (mentions["surface"] == mapping["entity"])
-            & (mentions["etype"] == "person"),
-            "left",
-        )
-        .select(
-            "doc_id",
-            F.concat_ws(
-                "/", "etype", F.coalesce("canonical", "surface")
-            ).alias("ent"),
-        )
-        .distinct()
-    )
+    co-mentioned in the same document, read from the sink's mentions
+    triples: their objects are already canonical (persons resolved through
+    the sameAs mapping, places by surface), and an entity is its object IRI
+    without the entity prefix and the closing ``>``."""
+    ent = F.expr(f"substr(o, {len(ENT_PREFIX) + 1}, "
+                 f"length(o) - {len(ENT_PREFIX) + 1})")
+    ents = (_sink_triples(spark, sf_dir)
+            .filter(F.col("p") == MENTIONS_P)
+            .select(F.col("s").alias("doc"), ent.alias("ent")))
     a, b = ents.alias("a"), ents.alias("b")
     return (
-        a.join(b, "doc_id")
+        a.join(b, "doc")
         .filter(F.col("a.ent") != F.col("b.ent"))
         .select(F.col("a.ent").alias("src"), F.col("b.ent").alias("dst"))
         .distinct()
@@ -476,8 +446,8 @@ def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge set guarantees no dangling nodes."""
     # materialize the edge list once (lazy localCheckpoint, same pattern as
     # the CC loop): edges feed deg AND every round's join — without the cut
-    # each round re-derives the whole mention→mapping lineage
-    edges = _co_mention_edges(spark).localCheckpoint(eager=False)
+    # each round re-runs the sink scan and the self-join
+    edges = _co_mention_edges(spark, sf_dir).localCheckpoint(eager=False)
     deg = edges.groupBy("src").agg(F.count("*").alias("degree"))
     ranks = deg.select(
         F.col("src").alias("node"),

@@ -4,6 +4,9 @@ canonicalization → full triple materialization) is checked against a DuckDB
 oracle that REGENERATES the corpus independently and re-derives the expected
 output in pure SQL (the canonical mapping via the alias-suffix closed form,
 which the engine's iterative min-label CC must agree with byte-for-byte).
+The two triples rows are the pipeline's own entry points, ``run_pipeline``
+and ``run_pipeline_fused``; :func:`_fused` also builds the sink that the
+query rows in ``analytics.py`` read.
 
 This works because the driver queries use the generator's md5 hash family
 (engine-portable); benches keep the faster xxhash64 family — the structure
@@ -18,9 +21,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .datagen import MAX_SPANS, MIN_SPANS, N_PERSONS, N_PLACES, generate_documents
-from .extract import mentions_native, sameas_candidates
+from .extract import _text_spans, mentions_native, sameas_candidates
 from .canonicalize import canonical_mapping
-from .pipeline import KGPipelineConfig, run_pipeline
+from .pipeline import KGPipelineConfig, run_pipeline, run_pipeline_fused
 
 _N_DOCS_CHECK = 300
 
@@ -29,25 +32,11 @@ def _docs(spark: SparkSession) -> DataFrame:
     return generate_documents(spark, _N_DOCS_CHECK, hash_family="md5")
 
 
-def _flat(docs: DataFrame) -> DataFrame:
-    """Exploded scalar columns — the driver's canonicalizer sorts with pandas,
-    which cannot hash an array<struct<…>> column. Span-sequence equality with
-    the nested form is pytest-verified in tests/test_kg_pipeline.py."""
-    return docs.select(
-        "doc_id", F.posexplode("spans").alias("span_idx", "span")
-    ).select(
-        "doc_id",
-        F.col("span_idx").cast("int").alias("span_idx"),
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
-    )
-
-
 def kg_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The north-rule input table itself (deterministic synthesis)."""
-    return _flat(_docs(spark))
+    """The north-rule input table itself (deterministic synthesis), one
+    row per span — the driver's canonicalizer sorts with pandas, which
+    cannot hash an array<struct<…>> column."""
+    return _text_spans(_docs(spark))
 
 
 def kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -106,27 +95,24 @@ def kg_stream_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out_dir).select("s", "p", "o", "g").distinct()
 
 
-def kg_pipeline_fused_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fused/throughput assembly against the SAME oracle as the
-    checkpointed mode: driver union-find canonicalization + single-DAG
-    category-wise assembly, no checkpoints. kg_pipeline_triples also solves
-    its 300-doc edge set with driver union-find (through the gate), so the
-    two rows differ in orchestration, not in canonicalization algorithm;
-    the distributed min-label loop is checked by kg_canonical_mapping. Each
-    must agree byte-for-byte with one independent SQL rederivation."""
-    from .canonicalize import _driver_union_find
-    from .extract import assemble_canonical_triples, media_spans
+def _fused(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The md5 corpus through :func:`run_pipeline_fused`, written to
+    ``out_dir`` and read back: the fused row and the query sink
+    (``analytics._sink_quads``) are this one build."""
+    return run_pipeline_fused(spark, out_dir,
+                              KGPipelineConfig(n_docs=_N_DOCS_CHECK),
+                              documents=_docs(spark))
 
-    docs = _docs(spark)
-    mentions = mentions_native(docs)
-    # ungated collect is fine HERE ONLY: _N_DOCS_CHECK bounds the edge set.
-    # Production code must go through the single union-find gate,
-    # canonicalize.connected_components_auto, which counts the edges BEFORE
-    # collecting and falls back to distributed CC.
-    rows = [(r["src"], r["dst"]) for r in sameas_candidates(mentions).collect()]
-    mapping = spark.createDataFrame(_driver_union_find(rows),
-                                    ["entity", "canonical"])
-    return assemble_canonical_triples(mentions, media_spans(docs), mapping)
+
+def kg_pipeline_fused_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fused mode (``run_pipeline_fused``: stages kept in memory, one
+    partitioned write) against the SAME oracle as the checkpointed mode.
+    Both go through the one union-find gate, so the two rows differ in
+    materialization policy only; the distributed min-label loop is checked
+    by kg_canonical_mapping. The written table outlives this call (mkdtemp)
+    because the driver re-reads the returned DataFrame lazily."""
+    return _fused(spark, tempfile.mkdtemp(prefix="kg_fused_")).select(
+        "s", "p", "o", "g")
 
 
 # ---------------------------------------------------------------------------

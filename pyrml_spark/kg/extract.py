@@ -29,10 +29,13 @@ PLACE_RE = r"PLACE:([A-Za-z0-9_]+)"
 
 
 def _text_spans(docs: DataFrame) -> DataFrame:
+    """One row per span. Every input column but ``spans`` is carried
+    through, so a stream keeps its event-time column."""
+    keep = [c for c in docs.columns if c != "spans"]
     return docs.select(
-        "doc_id", F.posexplode("spans").alias("span_idx", "span")
+        *keep, F.posexplode("spans").alias("span_idx", "span")
     ).select(
-        "doc_id",
+        *keep,
         F.col("span_idx").cast("int").alias("span_idx"),
         F.col("span.kind").alias("kind"),
         F.col("span.text").alias("text"),
@@ -42,15 +45,18 @@ def _text_spans(docs: DataFrame) -> DataFrame:
 
 
 def mentions_native(docs: DataFrame) -> DataFrame:
-    """(doc_id, span_idx, offset, etype, surface) — one row per mention."""
+    """(doc_id, span_idx, offset, etype, surface) — one row per mention.
+    Input columns other than ``spans`` come first (a batch corpus has only
+    ``doc_id``; a document stream also carries ``ingest_ts``)."""
     spans = _text_spans(docs).filter(F.col("kind") == "text")
+    keep = [c for c in docs.columns if c != "spans"]
     persons = spans.select(
-        "doc_id", "span_idx", "offset", F.lit("person").alias("etype"),
+        *keep, "span_idx", "offset", F.lit("person").alias("etype"),
         F.explode(F.regexp_extract_all(F.col("text"), F.lit(PERSON_RE), 1))
         .alias("surface"),
     )
     places = spans.select(
-        "doc_id", "span_idx", "offset", F.lit("place").alias("etype"),
+        *keep, "span_idx", "offset", F.lit("place").alias("etype"),
         F.explode(F.regexp_extract_all(F.col("text"), F.lit(PLACE_RE), 1))
         .alias("surface"),
     )

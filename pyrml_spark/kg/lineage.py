@@ -7,7 +7,7 @@ the same writer API an Iceberg catalog would take) and appends a manifest
 record::
 
     {stage, input_fingerprint, rows, partitions, elapsed_sec, path,
-     extra: {...}, per_partition: [{file, rows}, ...], schema: {...}}
+     per_partition: [{file, rows}, ...], schema: {...}}
 
 ``per_partition`` has one entry per Parquet file that holds rows (for the
 bucketed ``triples`` stage: one per subject bucket), ``file`` relative to the
@@ -23,7 +23,8 @@ Fingerprints are driver-side hashes of the stage's declared inputs (config +
 upstream fingerprints), not data scans, so resume decisions are O(1). Resume
 and the fresh read-back read with the recorded schema, so Spark reads no
 footer and starts no job; a record without ``schema`` (an older work dir)
-is read with schema inference.
+is read with schema inference. Older records may also carry an ``extra``
+field; it loads and is ignored.
 """
 
 from __future__ import annotations
@@ -97,7 +98,6 @@ class StageRecord:
     partitions: int
     elapsed_sec: float
     path: str
-    extra: dict = field(default_factory=dict)
     per_partition: list = field(default_factory=list)
     schema: Optional[dict] = None
 
@@ -124,7 +124,6 @@ class StageRunner:
         input_fp: str,
         build: Callable[[], DataFrame],
         partition_by: Optional[List[str]] = None,
-        extra_metrics: Optional[Callable[[DataFrame], dict]] = None,
     ) -> DataFrame:
         """Run (or resume) a stage. Returns the checkpointed DataFrame."""
         key = (name, input_fp)
@@ -152,7 +151,6 @@ class StageRunner:
             partitions=len(per_partition),
             elapsed_sec=round(time.perf_counter() - t0, 3),
             path=path,
-            extra=extra_metrics(out) if extra_metrics else {},
             per_partition=per_partition,
             schema=schema.jsonValue(),
         )

@@ -47,7 +47,7 @@ from .extract import (
     sameas_candidates,
 )
 from .lineage import StageRunner, fingerprint, written_schema
-from .table import bucket_clustered, subject_bucket
+from .table import bucket_clustered
 
 
 @dataclass
@@ -60,9 +60,10 @@ class KGPipelineConfig:
     n_subject_buckets: int = 32
     cc_max_iter: int = 25
     gen_partitions: int = 0                 # fixed datagen partitioning (benches)
-    final_repartition: bool = True          # False: skip the bucket exchange
-                                            # (each write task then writes
-                                            # into every bucket it holds)
+    # No-op: the triples stage always goes through the bucket exchange.
+    # Kept because the frozen bench harness passes it; it is in no
+    # fingerprint.
+    final_repartition: bool = True
 
 
 def _public_input_tag(documents: DataFrame) -> str:
@@ -175,8 +176,7 @@ class _InMemory:
         self.persisted[name] = df = df.persist()
         return df
 
-    def run(self, name, input_fp, build, partition_by=None,
-            extra_metrics=None) -> DataFrame:
+    def run(self, name, input_fp, build, partition_by=None) -> DataFrame:
         df = build()
         if not partition_by:
             return self.persist(name, df) if name in self.REUSED else df
@@ -196,17 +196,6 @@ class _InMemory:
     def unpersist(self) -> None:
         for df in self.persisted.values():
             df.unpersist()
-
-
-def _table_metrics(df: DataFrame) -> dict:
-    """Manifest extras for the final table: ONE multi-aggregate job, not
-    one full-table job per metric."""
-    row = df.agg(
-        F.countDistinct("s").alias("distinct_subjects"),
-        F.countDistinct("g").alias("graphs"),
-    ).collect()[0]
-    return {"distinct_subjects": row["distinct_subjects"],
-            "graphs": row["graphs"]}
 
 
 def _build(spark: SparkSession, config: KGPipelineConfig,
@@ -277,11 +266,7 @@ def _build(spark: SparkSession, config: KGPipelineConfig,
         # shuffled bytes (see assemble_canonical_triples)
         canon = assemble_canonical_triples(mentions, media, mapping,
                                            mapping_rows=mapping_rows)
-        if not config.final_repartition:
-            return canon.withColumn(
-                "subject_bucket", subject_bucket(config.n_subject_buckets))
         return bucket_clustered(canon, config.n_subject_buckets)
 
     return keep.run("triples", triples_fp, build_triples,
-                    partition_by=["subject_bucket"],
-                    extra_metrics=_table_metrics)
+                    partition_by=["subject_bucket"])

@@ -80,9 +80,18 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str,
     turns the self-join into an O(df²) blowup — the cap bounds every join
     bucket, and the oracle applies the identical cap."""
     docs = read_parquet_parallel(spark, f"{sf_dir}/documents.parquet")
+    # materialized once: FOUR consumers (the df counts, the sizes and both
+    # self-join sides) would each re-run the scan + explode otherwise. A
+    # lazy localCheckpoint, as in ops/banding.band_join: its blocks are
+    # freed with the frame, while a persist stays in the session's cache
+    # manager after the call and serves later calls cached rows. The cut
+    # sits below the anti-join, a broadcast probe that is cheap to repeat
+    # and stays visible in the plan. Warm reps at sf0.1 on 4 cores, cache
+    # cleared before each: this cut 3.6-4.6 s; the same cut after the
+    # anti-join 4.5-5.6 s; persist after it 5.5-6.4 s; no cut 7.4-9.5 s.
     sh_all = docs.select(
         "doc_id", F.explode(_word_shingles(F.col("text"))).alias("shingle")
-    )
+    ).localCheckpoint(eager=False)
     df_counts = sh_all.groupBy("shingle").agg(
         F.count(F.lit(1)).alias("df"))
     # broadcast the HOT set (df > cap), not the rare set: at corpus scale the
@@ -91,14 +100,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str,
     # exceed a df cap). Keep-everything-not-hot is a broadcast anti-join.
     hot = df_counts.filter(F.col("df") > max_df).select("shingle")
     sh = sh_all.join(F.broadcast(hot), "shingle", "left_anti")
-    # persisted: THREE consumers (sizes, both self-join sides) would each
-    # re-run the scan + explode + anti-join subtree otherwise — measured
-    # 1.5× on the whole query at sf0.1. MEMORY_AND_DISK: the exploded
-    # shingle table can exceed executor memory at corpus scale; spilling a
-    # cached block still beats recomputing the explode.
-    from pyspark import StorageLevel
-
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     # attach each doc's shingle count BEFORE the self-join (broadcast join
     # against the doc-cardinality sizes table) so (1) the size-compatibility

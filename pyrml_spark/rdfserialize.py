@@ -6,8 +6,8 @@ xml, pretty-xml, nt, nquads (``pyrml-mapper.py:37-52``,
 text sink (:mod:`pyrml_spark.nquads`) and Parquet/Iceberg the scale sink
 (:mod:`pyrml_spark.kg.table`); Turtle/TriG is the *human interchange*
 format — pretty, prefixed, subject-grouped. n3 is served by turtle (every
-Turtle doc is valid N3); RDF/XML is intentionally out (no consumer in the
-corpus, rdflib unavailable).
+Turtle doc is valid N3); xml, pretty-xml and trix are served by
+:mod:`pyrml_spark.rdfxml`, through ``compat.serialize`` and the CLI.
 
 Scale posture: prefix discovery is a distributed aggregate (namespace
 frequency over all term positions) and rows are streamed to the writer

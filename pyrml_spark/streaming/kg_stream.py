@@ -2,9 +2,10 @@
 
 The reference is batch-only (SURVEY.md §2 "not present in the reference");
 this is the Spark-native continuous-ingest path a production KG needs:
-documents arrive as files (or Kafka at deployment), mention extraction and
-triple expansion run as stateless streaming transforms, and duplicate
-mentions within the watermark window are dropped with
+documents arrive as files (or Kafka at deployment), mention extraction (the
+batch extractor, ``kg/extract.mentions_native``) and triple expansion run as
+stateless streaming transforms, and duplicate mentions within the watermark
+window are dropped with
 ``withWatermark + dropDuplicatesWithinWatermark`` (state evicted as the
 watermark advances, so dedup state is bounded).
 
@@ -19,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..kg.extract import mention_triples, mentions_native
 
 DOCS_SCHEMA = T.StructType(
     [
@@ -52,34 +55,14 @@ def read_document_stream(spark: SparkSession, input_dir: str,
 
 def stream_mentions(docs_stream: DataFrame,
                     watermark: str = "10 minutes") -> DataFrame:
-    """Stateless extraction + watermarked dedup of repeated mentions.
-    (The ingest timestamp is carried through the explode rather than
-    re-joined — stream-stream self-joins would need their own watermarks.)"""
+    """The batch extractor (:func:`~pyrml_spark.kg.extract.mentions_native`)
+    over the stream, then watermarked dedup of repeated mentions. The
+    extractor carries ``ingest_ts`` through the explode, so no
+    stream-stream self-join (which would need its own watermarks) is
+    needed to get it back."""
     with_ts = docs_stream.withColumn(
         "ingest_ts", F.coalesce(F.col("ingest_ts"), F.current_timestamp())
     )
-    spans = with_ts.select(
-        "doc_id", "ingest_ts", F.posexplode("spans").alias("span_idx", "span")
-    ).filter(F.col("span.kind") == "text")
-    persons = spans.select(
-        "doc_id", "ingest_ts", "span_idx",
-        F.col("span.offset").alias("offset"),
-        F.lit("person").alias("etype"),
-        F.explode(
-            F.regexp_extract_all(F.col("span.text"),
-                                 F.lit(r"PERSON:([A-Za-z0-9_]+)"), 1)
-        ).alias("surface"),
-    )
-    places = spans.select(
-        "doc_id", "ingest_ts", "span_idx",
-        F.col("span.offset").alias("offset"),
-        F.lit("place").alias("etype"),
-        F.explode(
-            F.regexp_extract_all(F.col("span.text"),
-                                 F.lit(r"PLACE:([A-Za-z0-9_]+)"), 1)
-        ).alias("surface"),
-    )
-    out = persons.unionByName(places)
     # dropDuplicatesWithinWatermark: plain dropDuplicates on keys that
     # exclude the event-time column never expires its state (the watermark
     # only prunes when event time is part of the key) — state would grow
@@ -87,18 +70,15 @@ def stream_mentions(docs_stream: DataFrame,
     # evicts dedup state once the watermark passes each key's first-seen
     # event time, which is the semantics we want: duplicates arrive close
     # together (re-delivered files), not weeks apart.
-    return out.withWatermark("ingest_ts", watermark).dropDuplicatesWithinWatermark(
-        ["doc_id", "span_idx", "etype", "surface"]
-    )
+    return (mentions_native(with_ts).withWatermark("ingest_ts", watermark)
+            .dropDuplicatesWithinWatermark(
+                ["doc_id", "span_idx", "etype", "surface"]))
 
 
 def stream_kg_triples(docs_stream: DataFrame,
                       watermark: str = "10 minutes") -> DataFrame:
     """Streaming (s,p,o,g) bronze triples from the mention stream."""
-    from ..kg.extract import mention_triples
-
-    mentions = stream_mentions(docs_stream, watermark)
-    return mention_triples(mentions)
+    return mention_triples(stream_mentions(docs_stream, watermark))
 
 
 def write_triples_stream(triples: DataFrame, out_dir: str,

@@ -37,12 +37,13 @@ CFG = KGPipelineConfig(n_docs=300, n_subject_buckets=N_BUCKETS)
 # shuffle partitions, AQE on, so each shuffle stage of the triple assembly
 # is its own job). Stage checkpoints are read with their recorded schemas
 # and lineage comes from the Parquet footers, so a stage costs its write
-# and nothing else; the recovery counts the write and the table metrics.
+# and nothing else; the recovery counts the write of the triples stage.
 # Reading checkpoints with schema inference and counting rows with a
-# per-partition aggregate job cost 37 / 6 / 19.
-FIRST_BUILD_JOBS = 19
+# per-partition aggregate job cost 37 / 6 / 19; a distinct-subjects and
+# distinct-graphs metrics job on the triples stage cost 19 / 0 / 11.
+FIRST_BUILD_JOBS = 16
 RESUME_JOBS = 0
-RECOVERY_JOBS = 11
+RECOVERY_JOBS = 8
 
 
 @pytest.fixture

@@ -95,14 +95,10 @@ def test_boilerplate_removed_only_from_hot_chunks(spark):
     assert BOILERPLATE_MIN_DOCS <= len(docs) // 3
 
 
-def test_ngram_jaccard_size_filter_keeps_boundary_pair(spark, tmp_path):
-    """The join-side size-compatibility predicate (min >= t*max - eps) must
-    not drop a pair sitting exactly on the boundary: two docs with 4 and 5
-    shingles sharing all 4 (J = 4/5 = 0.8 exactly at threshold 0.8)."""
+def _boundary_corpus(tmp_path) -> str:
+    """Two docs with 4 and 5 shingles sharing all 4: J = 4/5 = 0.8."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from pyrml_spark.ops.dedup import dedup_ngram_jaccard
 
     base = "alpha beta gamma delta epsilon zeta"          # 4 shingles
     longer = base + " eta"                                # 5 shingles
@@ -117,9 +113,30 @@ def test_ngram_jaccard_size_filter_keeps_boundary_pair(spark, tmp_path):
             "n_chars": pa.array([len(base), len(longer)], pa.int64()),
         }),
         str(d / "documents.parquet"))
-    out = dedup_ngram_jaccard(spark, str(d), threshold=0.8).collect()
+    return str(d)
+
+
+def test_ngram_jaccard_size_filter_keeps_boundary_pair(spark, tmp_path):
+    """The join-side size-compatibility predicate (min >= t*max - eps) must
+    not drop a pair sitting exactly on the boundary (J = 0.8 exactly at
+    threshold 0.8)."""
+    from pyrml_spark.ops.dedup import dedup_ngram_jaccard
+
+    out = dedup_ngram_jaccard(spark, _boundary_corpus(tmp_path),
+                              threshold=0.8).collect()
     assert [(r["doc_a"], r["doc_b"], r["jaccard"]) for r in out] == \
         [(1, 2, 0.8)]
+
+
+def test_ngram_jaccard_leaves_the_cache_manager_empty(spark, tmp_path):
+    """The shingle table's materialization is freed with the result: a
+    persist would stay in the session's cache manager and serve a later
+    call cached rows."""
+    from pyrml_spark.ops.dedup import dedup_ngram_jaccard
+
+    spark.catalog.clearCache()
+    dedup_ngram_jaccard(spark, _boundary_corpus(tmp_path)).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_lsh_cosine_neardup_empty_input(spark):

@@ -84,3 +84,21 @@ def test_band_join_is_the_one_place_that_materializes():
     assert len(_materializations(tree)) == 1
     probe = ast.parse("def f(df):\n    return df.localCheckpoint(eager=False)")
     assert len(_materializations(probe)) == 1
+
+
+KG = PKG / "kg"
+
+
+def test_kg_entry_points_materialize_only_the_pagerank_edges():
+    """The KG rows build the graph through the pipeline, whose policies
+    own materialization: kg/entry.py makes no call, and kg/analytics.py
+    makes one, the cut of PageRank's edge list (read by the degree table
+    and both rounds)."""
+    entry = ast.parse((KG / "entry.py").read_text(encoding="utf-8"))
+    assert not _materializations(entry)
+    tree = ast.parse((KG / "analytics.py").read_text(encoding="utf-8"))
+    (cut,) = _materializations(tree)
+    (pagerank,) = [f for f in ast.walk(tree)
+                   if isinstance(f, ast.FunctionDef)
+                   and f.name == "kg_pagerank"]
+    assert cut in list(ast.walk(pagerank))

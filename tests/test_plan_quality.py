@@ -5,6 +5,8 @@ row-at-a-time Python UDFs in RML plans, whole-stage codegen present."""
 import os
 import re
 
+import pytest
+
 from pyrml_spark.testdata_rml import (
     q_customer_terms,
     q_orders_customer_join,
@@ -450,6 +452,31 @@ def test_bgp_from_sink_scans_parquet_not_pipeline(spark):
     assert "PushedFilters" in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
+
+
+@pytest.mark.parametrize(
+    "name", ["kg_pipeline_fused_triples", "kg_bgp_query", "kg_pagerank"])
+def test_kg_rows_read_the_written_graph(spark, monkeypatch, name):
+    """The fused row, the recompute-mode BGP and PageRank build the graph
+    through the fused pipeline and query its Parquet read-back: a parquet
+    FileScan and none of the datagen (Range) below it. PageRank's rounds
+    read a localCheckpoint of its edge list (a ``Scan ExistingRDD``), so
+    its plan to check is that of the edges it cuts."""
+    from pyrml_spark.kg import analytics
+    from pyrml_spark.kg.entry import KG_QUERIES
+
+    cut = []
+    edges = analytics._co_mention_edges
+
+    def recording(*args):
+        cut.append(edges(*args))
+        return cut[-1]
+
+    monkeypatch.setattr(analytics, "_co_mention_edges", recording)
+    df = KG_QUERIES[name](spark, SF_DIR)
+    plan = plan_of(cut[-1] if cut else df)
+    assert "FileScan parquet" in plan, plan
+    assert "Range" not in plan, plan
 
 
 def test_sparql_query_plan_is_pruned_sink_scan(spark):

@@ -1,7 +1,9 @@
 """Structured-Streaming KG ingest: file source → extraction → watermarked
 dedup → parquet sink, drained with availableNow."""
 
+import ast
 import os
+import pathlib
 import tempfile
 
 from pyspark.sql import functions as F
@@ -58,3 +60,44 @@ def test_stream_mentions_schema(spark):
         m = stream_mentions(read_document_stream(spark, in_dir))
         assert {"doc_id", "etype", "surface", "offset"} <= set(m.columns)
         assert m.isStreaming
+
+
+def test_stream_mentions_equal_batch_extractor(spark, tmp_path):
+    """The stream runs the batch extractor: drained mentions equal
+    ``mentions_native`` on the same documents, and keep ``ingest_ts``."""
+    in_dir = str(tmp_path / "in")
+    docs = generate_documents(spark, 60).withColumn(
+        "ingest_ts", F.timestamp_seconds(F.lit(1700000000)))
+    docs.write.parquet(in_dir)
+    m = stream_mentions(read_document_stream(spark, in_dir))
+    # the append sink takes any frame, not only triples
+    write_triples_stream(m, str(tmp_path / "out"),
+                         str(tmp_path / "ckpt")).awaitTermination(120)
+    got = spark.read.parquet(str(tmp_path / "out"))
+    assert got.filter(F.col("ingest_ts").isNull()).count() == 0
+    cols = ["doc_id", "span_idx", "offset", "etype", "surface"]
+    got_rows = sorted(tuple(r) for r in got.select(*cols).collect())
+    exp_rows = sorted(tuple(r) for r in mentions_native(
+        docs.select("doc_id", "spans")).select(*cols).collect())
+    assert got_rows == exp_rows and got_rows
+
+
+PKG = pathlib.Path(__file__).resolve().parent.parent / "pyrml_spark"
+
+
+def test_regexp_extract_all_only_in_the_extractor():
+    """One mention extractor: under kg/ and streaming/, only kg/extract.py
+    calls ``regexp_extract_all`` (calls only — the DuckDB oracle SQL
+    strings in kg/entry.py do not count)."""
+    callers = set()
+    for path in sorted([*(PKG / "kg").rglob("*.py"),
+                        *(PKG / "streaming").rglob("*.py")]):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                f = n.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(
+                    f, "id", None)
+                if name == "regexp_extract_all":
+                    callers.add(path.relative_to(PKG).as_posix())
+    assert callers == {"kg/extract.py"}, callers
