@@ -8,7 +8,8 @@ dump .explain("formatted") plans.
 Usage:
     python bench_extra.py [--sf DIR] [--reps N] [--plans OUTDIR] [query ...]
 
-With no query names, runs every declared query (all_queries()).
+With no query names, runs every declared query (all_queries()). ``--sf``
+defaults to $SPARK_GRAFT_SF_DIR, else /root/testdata/sf0.1, as in bench.py.
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ from pyrml_spark.plans.tuning import build_session  # noqa: E402
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0"))
+        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--reps", type=int, default=2)
     ap.add_argument("--plans", default=None,
                     help="directory to write <query>.txt explain dumps")

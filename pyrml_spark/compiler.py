@@ -14,8 +14,10 @@ Catalyst optimizes end-to-end:
     → ONE wide projection: subject term + array<struct<p,o,g>> of all
       (predicate, object, graph) combinations incl. rr:class pairs
     → explode(pairs)                      [D2+D3+D4 in one shuffle-free pass]
-    → per referencing-object-map: equi-join child×parent (broadcast when the
-      parent is small, AQE skew-join otherwise)                        [D5/D6]
+    → per referencing-object-map: equi-join child×parent; Spark's planner
+      picks broadcast or shuffle from the pruned parent's size estimate
+      (spark.sql.autoBroadcastJoinThreshold), AQE splits skewed
+      partitions, salt_joins salts celebrity keys                        [D5/D6]
     → unionByName across TriplesMaps                                     [D7]
     → s/p/o null drop [D9] → dropDuplicates (RDF set semantics)          [D8]
 
@@ -44,7 +46,7 @@ from .model import (
     SubjectMap,
     TriplesMap,
 )
-from .scan import local_input_bytes
+from .plans.salting import salted_join
 from .sources import SourceLoader
 from .terms import CompileCtx, compile_term, render_value, raw_value
 
@@ -93,7 +95,6 @@ class RMLCompiler:
         plan: MappingPlan,
         search_roots: Optional[List[str]] = None,
         functions=None,
-        broadcast_threshold: int = 64 << 20,
         salt_joins: int = 0,
         irify: bool = False,
         infer_literal_datatypes: bool = False,
@@ -106,7 +107,6 @@ class RMLCompiler:
 
             functions = default_registry()
         self.functions = functions
-        self.broadcast_threshold = broadcast_threshold
         # explicit salting for pathological skew; AQE skew-join covers the
         # general case (SURVEY.md §4, north_rule skew requirement)
         self.salt_joins = salt_joins
@@ -127,16 +127,6 @@ class RMLCompiler:
         if tm.condition:
             df = df.filter(F.expr(translate_condition(tm.condition)))
         return df
-
-    def _parent_is_small(self, tm: TriplesMap) -> bool:
-        total = 0
-        for ls in tm.sources:
-            # size the file the loader reads; unknown size is not small
-            n_bytes = local_input_bytes(self.loader.path(ls))
-            if n_bytes is None:
-                return False
-            total += n_bytes
-        return total < self.broadcast_threshold
 
     # -- term helpers ----------------------------------------------------------
     def _graph_cols(self, ctx: CompileCtx, graph_maps) -> List[Column]:
@@ -345,25 +335,7 @@ class RMLCompiler:
             c = left.eqNullSafe(right) & left.isNotNull()
             cond = c if cond is None else (cond & c)
 
-        right = parent_sel
-        parent_small = self._parent_is_small(parent_tm)
-        if parent_small:
-            right = F.broadcast(right)
-        elif self.salt_joins > 1:
-            # celebrity-key salting: child rows spread over salt buckets
-            # (deterministic hash, resumable), parent replicated per bucket
-            salt = self.salt_joins
-            df = df.withColumn(
-                "__salt_l",
-                F.pmod(F.xxhash64(*[F.col("`" + c.replace("`", "``") + "`")
-                                    for c in df.columns]),
-                       F.lit(salt)).cast("int"),
-            )
-            right = right.withColumn(
-                "__salt_r", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
-            )
-            cond = cond & (F.col("__salt_l") == F.col("__salt_r"))
-        joined = df.join(right, cond, "inner")
+        joined = salted_join(df, parent_sel, cond, self.salt_joins)
         return self._emit(joined, s_col, p_cols, o_col, graphs)
 
     @staticmethod

@@ -111,7 +111,7 @@ def _sink_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from .entry import _fused  # lazy: avoid cycle
+    from .entry import _fused, _tmp_dir  # lazy: avoid cycle
     from .table import read_triples_table
 
     # Connect-safe session identity (no sparkContext): spark.app.id via
@@ -148,8 +148,8 @@ def _sink_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "visible (Spark Connect?): defaulting to a "
                     "driver-local tempdir, which is correct only when "
                     "the server runs in local mode", stacklevel=2)
-        path = (tempfile.mkdtemp(prefix="kg_sink_", dir=base)
-                + "/triples")
+        path = (_tmp_dir("kg_sink_") if base is None
+                else tempfile.mkdtemp(prefix="kg_sink_", dir=base)) + "/triples"
         _fused(spark, path)
         _SINK_CACHE[key] = path
     return read_triples_table(spark, path, fmt="parquet")

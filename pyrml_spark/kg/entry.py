@@ -14,6 +14,8 @@ is identical (kg/datagen.py)."""
 
 from __future__ import annotations
 
+import atexit
+import shutil
 import tempfile
 from typing import Callable, Dict
 
@@ -26,6 +28,22 @@ from .canonicalize import canonical_mapping
 from .pipeline import KGPipelineConfig, run_pipeline, run_pipeline_fused
 
 _N_DOCS_CHECK = 300
+
+# the one per-process parent of every directory these rows write; see
+# _tmp_dir
+_TMP_BASE: list = []
+
+
+def _tmp_dir(prefix: str) -> str:
+    """A fresh directory for a row's written tables. The rows return
+    frames that the caller reads lazily, after the call, so nothing can
+    remove the directory sooner than interpreter exit: all of them live
+    under one base directory, made on first use and removed at exit."""
+    if not _TMP_BASE:
+        base = tempfile.mkdtemp(prefix="pyrml_kg_")
+        atexit.register(shutil.rmtree, base, ignore_errors=True)
+        _TMP_BASE.append(base)
+    return tempfile.mkdtemp(prefix=prefix, dir=_TMP_BASE[0])
 
 
 def _docs(spark: SparkSession) -> DataFrame:
@@ -57,9 +75,8 @@ def kg_pipeline_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     far below the gate, so the mapping comes from driver union-find; the
     distributed min-label loop has its own oracle row,
     kg_canonical_mapping."""
-    # mkdtemp (not TemporaryDirectory): the checkpoint parquet must outlive
-    # this call — the driver re-reads the returned DataFrame lazily
-    d = tempfile.mkdtemp(prefix="kg_entry_")
+    # the checkpoint parquet must outlive this call (_tmp_dir)
+    d = _tmp_dir("kg_entry_")
     df = run_pipeline(
         spark, d,
         KGPipelineConfig(n_docs=_N_DOCS_CHECK),
@@ -85,7 +102,7 @@ def kg_stream_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark).withColumn(
         "ingest_ts", F.timestamp_seconds(F.lit(1_700_000_000)))
-    base = tempfile.mkdtemp(prefix="kg_stream_entry_")
+    base = _tmp_dir("kg_stream_entry_")
     in_dir, out_dir, ckpt = base + "/in", base + "/out", base + "/ckpt"
     docs.write.mode("overwrite").parquet(in_dir)
     write_triples_stream(
@@ -109,9 +126,9 @@ def kg_pipeline_fused_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned write) against the SAME oracle as the checkpointed mode.
     Both go through the one union-find gate, so the two rows differ in
     materialization policy only; the distributed min-label loop is checked
-    by kg_canonical_mapping. The written table outlives this call (mkdtemp)
-    because the driver re-reads the returned DataFrame lazily."""
-    return _fused(spark, tempfile.mkdtemp(prefix="kg_fused_")).select(
+    by kg_canonical_mapping. The written table outlives this call
+    (_tmp_dir) because the caller reads the returned DataFrame lazily."""
+    return _fused(spark, _tmp_dir("kg_fused_")).select(
         "s", "p", "o", "g")
 
 

@@ -307,16 +307,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str,
     ])
     pairs = band_join(sigs.select("doc_id", "sig", keys.alias("keys")),
                       "doc_id", LSH_BANDS)
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("a.sig"), F.col("b.sig"),
-                           lambda x, y: x == y),
-                lambda m: m,
-            )
-        )
-        / N_MINHASH
-    )
+    # Spark pushes the threshold filter into the band join's condition, so
+    # the estimate is unrolled into N_MINHASH element comparisons, not a
+    # higher-order function: it stays inside the join's generated code
+    est = sum(
+        F.when(F.col("a.sig")[i] == F.col("b.sig")[i], 1).otherwise(0)
+        for i in range(N_MINHASH)
+    ) / N_MINHASH
     return (
         pairs.select(
             F.col("a.doc_id").alias("doc_a"),

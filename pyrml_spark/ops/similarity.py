@@ -404,27 +404,21 @@ def lsh_cosine_neardup(emb: DataFrame,
     # Two-stage verify (r9, guide §4.2): the exact per-pair JVM fold
     # (F.aggregate — interpreted, outside codegen) dominated the whole
     # operator at ~1 µs × |candidates|. Stage 1 PRUNES with one vectorized
-    # numpy pass per Arrow batch: attach both embeddings via broadcast
-    # joins, score sim vectorized, keep pairs within the margin of the
+    # numpy pass per Arrow batch: look up both embeddings (see below),
+    # score sim vectorized, keep pairs within the margin of the
     # threshold. The float32 cast + einsum reordering bound the score error
     # at ~4e-6 relative (n·eps32 for a 64-dim normalized dot); the margin
     # is ~250× wider, so the prune can never drop a pair the exact float64
     # filter would keep. Stage 2 re-scores the surviving pairs
     # (≈ the true near-dup set) with the SAME sequential JVM fold as
     # before, so every emitted sim is bit-identical to the oracle's.
-    # the attach joins broadcast the embedding side only when it is provably
-    # small (one bounded probe shared by both sides); above the ceiling they
-    # degrade to shuffle joins with AQE — the 100 TB-safe behavior
-    from ..plans.tuning import BROADCAST_MAX_ROWS, maybe_broadcast
-
     # float32 copies for the prune: halves the Arrow bytes per candidate
     # row. float32 round-off on a 64-dim cosine is bounded well under 1e-5;
     # the prune margin is 100× wider, so no pair the exact float64 filter
     # would keep can be pruned.
-    # one probe serves both gates below, so it counts past the larger row
-    # ceiling (capped at the broadcast one, a low-dim table of any size
-    # would pass the matrix gate and be collected whole)
-    max_rows = max(BROADCAST_MAX_ROWS, CAPTURED_MATRIX_MAX_ELEMENTS // dim)
+    # the gate below needs the row count only up to the matrix ceiling: a
+    # bounded probe counts one row past it, never the whole table
+    max_rows = CAPTURED_MATRIX_MAX_ELEMENTS // dim
     n_emb_hint = emb.limit(max_rows + 1).count()
     prune_margin = 1e-3
 
@@ -435,11 +429,10 @@ def lsh_cosine_neardup(emb: DataFrame,
     # matrix itself is small, ship IT once per task inside the prune
     # closure instead and keep the candidate stream id-only — guide §8:
     # move decisions over a lightweight proxy, attach payloads exactly
-    # once. Ceiling: CAPTURED_MATRIX_MAX_ELEMENTS — the attach path under
-    # BROADCAST_MAX_ROWS holds the same bytes TWICE (one broadcast per
-    # side), so the single captured copy is strictly lighter; above the
-    # ceiling the attach-join shape (broadcast or AQE shuffle join) is the
-    # scale-safe fallback.
+    # once. Ceiling: CAPTURED_MATRIX_MAX_ELEMENTS; above it the attach
+    # joins are the scale-safe fallback, and Spark's planner picks their
+    # strategy (at ≥ 1 M rows a broadcast per side would ship the matrix
+    # twice, so expect AQE shuffle joins).
     # an empty table has no matrix to capture (np.stack needs a row): it
     # takes the attach-join path, which returns the empty result
     if 0 < n_emb_hint * dim <= CAPTURED_MATRIX_MAX_ELEMENTS:
@@ -457,14 +450,10 @@ def lsh_cosine_neardup(emb: DataFrame,
             ib = _captured_rows(ids_sorted, pdf["vec_b"].to_numpy())
             return np.einsum("ij,ij->i", M[ia], M[ib]) / (nrm[ia] * nrm[ib])
     else:
-        eat = maybe_broadcast(
-            emb.select(F.col("vec_id").alias("vec_a"),
-                       F.col("embedding").cast("array<float>").alias("e_a")),
-            row_hint=n_emb_hint)
-        ebt = maybe_broadcast(
-            emb.select(F.col("vec_id").alias("vec_b"),
-                       F.col("embedding").cast("array<float>").alias("e_b")),
-            row_hint=n_emb_hint)
+        eat = emb.select(F.col("vec_id").alias("vec_a"),
+                         F.col("embedding").cast("array<float>").alias("e_a"))
+        ebt = emb.select(F.col("vec_id").alias("vec_b"),
+                         F.col("embedding").cast("array<float>").alias("e_b"))
         cand = cand.join(eat, "vec_a").join(ebt, "vec_b")
 
         def score(pdf):

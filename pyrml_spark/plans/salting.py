@@ -16,34 +16,34 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_key: str,
-    right_key: str,
-    salt: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with the right side replicated over ``salt`` buckets.
+def salted_join(left: DataFrame, right: DataFrame, on: Column, salt: int,
+                how: str = "inner") -> DataFrame:
+    """``left.join(right, on, how)``, with the right side replicated over
+    ``salt`` buckets when ``salt > 1``.
+
+    ``on`` may be any join condition over the two sides' column names
+    (the RML compiler passes its null-safe multi-key condition). The
+    bucket columns are ``__salt_l`` and ``__salt_r``, so the two sides'
+    own columns must not use those names. The join strategy is Spark's:
+    a salted side small enough under ``spark.sql.autoBroadcastJoinThreshold``
+    is still broadcast.
 
     Deterministic: the left salt comes from xxhash64 over all left columns
     (not a RNG), so retries/recomputation produce identical partitions —
     required for checkpoint resumability."""
     if salt <= 1:
-        return left.join(right, left[left_key] == right[right_key], how)
+        return left.join(right, on, how)
     l = left.withColumn(
-        "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]),
-                         F.lit(salt)).cast("int")
+        "__salt_l",
+        F.pmod(F.xxhash64(*[F.col("`" + c.replace("`", "``") + "`")
+                            for c in left.columns]),
+               F.lit(salt)).cast("int"),
     )
     r = right.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
+        "__salt_r", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
     )
-    out = l.join(
-        r,
-        (l[left_key] == r[right_key]) & (l["__salt"] == r["__salt"]),
-        how,
-    )
-    return out.drop("__salt")
+    out = l.join(r, on & (F.col("__salt_l") == F.col("__salt_r")), how)
+    return out.drop("__salt_l", "__salt_r")
 
 
 def top_heavy_keys(df: DataFrame, key: str, threshold_rows: int) -> List:
@@ -56,8 +56,8 @@ def top_heavy_keys(df: DataFrame, key: str, threshold_rows: int) -> List:
         frac = 0.001
         hot = top_heavy_keys(df.sample(frac, seed=7), "domain",
                              threshold_rows=int(5_000_000 * frac))
-        out = salted_join(df, dims, "domain", "domain",
-                          salt=32) if hot else df.join(dims, "domain")
+        out = salted_join(df, dims, df.domain == dims.d_domain,
+                          salt=32 if hot else 1)
 
     (AQE's skew-join handles most cases without this; use it for the
     write-side exchanges AQE does not rebalance.)"""

@@ -8,12 +8,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Row-count ceiling for dimension-table broadcasts (canonical entity mapping,
-# small ROM parents). ~4M short string pairs ≈ low hundreds of MB per
-# executor — comfortably under a typical 4-8 GB executor heap; beyond it a
-# forced broadcast OOMs every executor at once, which is exactly the failure
-# mode at the north rule's 10^12-doc scale where the entity→canonical table
-# holds billions of aliases.
+# Row-count ceiling for the canonical entity mapping's broadcast. ~4M short
+# string pairs ≈ low hundreds of MB per executor — comfortably under a
+# typical 4-8 GB executor heap; beyond it a forced broadcast OOMs every
+# executor at once, which is exactly the failure mode at the north rule's
+# 10^12-doc scale where the entity→canonical table holds billions of
+# aliases.
 BROADCAST_MAX_ROWS = 4_000_000
 
 
@@ -21,14 +21,23 @@ def maybe_broadcast(df: DataFrame, row_hint: int | None = None,
                     max_rows: int = BROADCAST_MAX_ROWS) -> DataFrame:
     """Broadcast ``df`` only when it is provably small.
 
-    ``row_hint``: caller-known row count (e.g. from a checkpoint manifest or a
-    driver-side build) — avoids any extra job. When absent, a bounded
-    ``limit(max_rows+1).count()`` probe decides: CollectLimit early-exits, so
-    the probe touches at most one extra row past the ceiling instead of
-    scanning the full table. Above the ceiling the DataFrame is returned
-    as-is, letting Catalyst pick a shuffle hash/sort-merge join — with AQE
-    skew-split (and :func:`pyrml_spark.plans.salting.salted_join` for
-    pathological celebrity keys) carrying the skewed probe side.
+    One caller: the KG canonical mapping (``kg/extract.py``). That table is
+    a driver-built frame, the checkpointed output of the distributed
+    min-label loop or a stage checkpoint, so Spark's planner cannot size
+    it from its inputs, while its caller knows its row count (the
+    union-find gate or the lineage manifest). Every other join, the RML
+    referencing-object-map joins included, is left to Spark's own
+    ``spark.sql.autoBroadcastJoinThreshold`` decision over the pruned
+    size estimate.
+
+    ``row_hint``: caller-known row count — avoids any extra job. When
+    absent, a bounded ``limit(max_rows+1).count()`` probe decides:
+    CollectLimit early-exits, so the probe touches at most one extra row
+    past the ceiling instead of scanning the full table. Above the ceiling
+    the DataFrame is returned as-is, letting Catalyst pick a shuffle
+    hash/sort-merge join — with AQE skew-split (and
+    :func:`pyrml_spark.plans.salting.salted_join` for pathological
+    celebrity keys) carrying the skewed probe side.
     """
     if row_hint is None:
         row_hint = df.limit(max_rows + 1).count()

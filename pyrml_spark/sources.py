@@ -89,6 +89,23 @@ def _read_file(spark: SparkSession, fmt: str, path: str,
     return df
 
 
+# a JSON source file is one top-level value, not JSON Lines
+_JSON_OPTIONS = {"multiLine": True}
+
+
+def reader_options(ls: LogicalSource) -> Dict[str, object]:
+    """The ``spark.read`` options of a CSV/CSVW or JSON file source, one
+    definition for the batch and the streaming loader. CSV is read
+    all-string (the reference's ``dtype=str``, module docstring) with the
+    mapping's separator and encoding."""
+    if ls.kind == "json":
+        return dict(_JSON_OPTIONS)
+    options = {"header": True, "sep": ls.separator, "inferSchema": False}
+    if ls.encoding:
+        options["encoding"] = ls.encoding
+    return options
+
+
 def _flatten_struct_cols(df: DataFrame) -> DataFrame:
     """Flatten nested struct columns into dotted names, json_normalize-style
     (pyrml_core.py:894 — `pd.json_normalize` dotted paths like location.city).
@@ -701,7 +718,7 @@ def load_json_source(
     ``spark.read.json(multiLine)`` yields one row per top-level value; the
     iterator's ``.field`` steps become struct access and ``[*]`` becomes
     ``explode`` — all JVM-side (SURVEY.md S3)."""
-    df = _read_file(spark, "json", path, multiLine=True)
+    df = _read_file(spark, "json", path, **_JSON_OPTIONS)
     return apply_json_iterator(df, iterator)
 
 
@@ -949,14 +966,11 @@ class SourceLoader:
         spark = self.spark
         if ls.kind in ("csv", "csvw"):
             path = self.path(ls)
-            options = {"header": True, "sep": ls.separator,
-                       "inferSchema": False}
-            if ls.encoding:
-                options["encoding"] = ls.encoding
             # benchmark-scale single files scan as ONE partition, starving
             # the whole term-map pipeline of parallelism (pyrml_spark.scan)
             return parallelize_scan(
-                spark, _read_file(spark, "csv", path, **options), path)
+                spark, _read_file(spark, "csv", path, **reader_options(ls)),
+                path)
         if ls.kind == "json":
             return load_json_source(spark, self.path(ls), ls.iterator)
         if ls.kind == "xml":

@@ -50,6 +50,7 @@ from ..sources import (
     SourceError,
     SourceLoader,
     apply_json_iterator,
+    reader_options,
 )
 
 
@@ -117,31 +118,20 @@ class StreamSourceLoader(SourceLoader):
     def _load(self, ls: LogicalSource) -> DataFrame:
         if not self.is_stream(ls):
             return super()._load(ls)
-        spark = self.spark
-        if ls.kind in ("csv", "csvw"):
-            path = self.path(ls)
+        if ls.kind in ("csv", "csvw", "json"):
+            fmt = "json" if ls.kind == "json" else "csv"
+            path, options = self.path(ls), reader_options(ls)
             # streaming reads need a fixed schema: probe it with one static
-            # read (all-string, same options), then stream with it
-            opts = {"header": True, "sep": ls.separator,
-                    "inferSchema": False}
-            if ls.encoding:
-                opts["encoding"] = ls.encoding
-            probe = spark.read.options(**opts).csv(path)
-            return (
-                spark.readStream.schema(probe.schema).options(**opts)
-                .option("maxFilesPerTrigger", self.max_files_per_trigger)
-                .csv(path)
-            )
-        if ls.kind == "json":
-            path = self.path(ls)
-            probe = spark.read.option("multiLine", True).json(path)
+            # read (same options), then stream with it
+            probe = self.spark.read.format(fmt).options(**options).load(path)
             sdf = (
-                spark.readStream.schema(probe.schema)
-                .option("multiLine", True)
+                self.spark.readStream.schema(probe.schema).options(**options)
                 .option("maxFilesPerTrigger", self.max_files_per_trigger)
-                .json(path)
+                .format(fmt).load(path)
             )
-            return apply_json_iterator(sdf, ls.iterator)
+            if fmt == "json":
+                return apply_json_iterator(sdf, ls.iterator)
+            return sdf
         raise SourceError(
             f"streaming RML supports csv/csvw/json file sources; logical "
             f"source {ls.source!r} has kind {ls.kind!r} (xml needs a "

@@ -489,3 +489,24 @@ def test_connected_components_auto_matches_distributed(spark):
     assert len(via_driver) == 53  # 41 chain + 11 star + 1 singleton
     # the returned row count is exact on both sides of the gate
     assert rows_driver == rows_dist == 53
+
+
+def test_entry_row_temp_dirs_are_removed_at_exit(tmp_path):
+    """The KG entry rows write under one per-process base directory that
+    interpreter exit removes; nothing is left behind per call."""
+    import subprocess
+    import sys
+
+    code = ("from pyrml_spark.kg import entry\n"
+            "d = entry._tmp_dir('kg_entry_')\n"
+            "open(d + '/part', 'w').write('x')\n"
+            "assert entry._tmp_dir('kg_fused_').startswith(entry._TMP_BASE[0])\n"
+            "print(entry._TMP_BASE[0])\n")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=root, check=True,
+                         capture_output=True, text=True,
+                         env={**os.environ, "TMPDIR": str(tmp_path)})
+    base = out.stdout.strip().splitlines()[-1]
+    assert base.startswith(str(tmp_path))
+    assert not os.path.exists(base)
+    assert os.listdir(tmp_path) == []

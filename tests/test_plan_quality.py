@@ -78,10 +78,11 @@ _ROOTS_MAP = """
 """
 
 
-def test_small_parent_found_through_search_roots_is_broadcast(spark,
-                                                              tmp_path):
-    """The broadcast decision sizes the file the loader reads: a parent
-    resolvable only through ``search_roots`` still gets the hint."""
+def test_rom_join_strategy_follows_session_conf(spark, tmp_path):
+    """The engine adds no join hint of its own: the ROM join broadcasts
+    under the default ``spark.sql.autoBroadcastJoinThreshold`` and
+    shuffles at ``-1``. Either way the parent, resolvable only through
+    ``search_roots``, joins to the same rows."""
     from pyrml_spark import convert
 
     maps, data = tmp_path / "maps", tmp_path / "data"
@@ -92,14 +93,18 @@ def test_small_parent_found_through_search_roots_is_broadcast(spark,
     (data / "parent.csv").write_text("id\n10\n20\n", encoding="utf-8")
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")  # only the compiler's hint can broadcast
+    rows = {}
     try:
-        df = convert(spark, str(maps / "m.ttl"), search_roots=[str(data)])
-        plan = formatted(df)
-        assert "BroadcastHashJoin" in plan, plan
-        assert len(df.collect()) == 2
+        for conf, broadcast in ((prev, True), ("-1", False)):
+            spark.conf.set(key, conf)
+            df = convert(spark, str(maps / "m.ttl"), search_roots=[str(data)])
+            plan = formatted(df)
+            assert ("BroadcastHashJoin" in plan) == broadcast, plan
+            rows[conf] = {tuple(r) for r in df.collect()}
+            assert len(rows[conf]) == 2
     finally:
         spark.conf.set(key, prev)
+    assert rows[prev] == rows["-1"]
 
 
 def test_scan_floor_reads_split_size_from_session(spark, tmp_path):
@@ -199,6 +204,20 @@ def test_band_join_has_no_dedup_above_it(spark):
         assert "AdaptiveSparkPlan" in above, (q.__name__, above)
         bad = [n for n in above if "Aggregate" in n or "Exchange" in n]
         assert not bad, (q.__name__, bad, plan)
+
+
+def test_minhash_estimate_is_unrolled_in_the_join(spark):
+    """Spark pushes the ``jaccard_est`` threshold into the band join's
+    condition, so the estimate runs on every candidate row: it must be
+    plain element comparisons there, not a higher-order function that
+    falls out of the join's generated code."""
+    from pyrml_spark.ops.dedup import dedup_minhash_lsh
+
+    plan = plan_of(dedup_minhash_lsh(spark, SF_DIR))
+    join = next(line for line in plan.splitlines()
+                if re.search(r"Join \[band#", line))
+    assert "CASE WHEN" in join, join
+    assert "zip_with" not in plan and "lambda" not in plan, plan
 
 
 def test_jaccard_broadcasts_hot_not_rare_side(spark):

@@ -16,7 +16,7 @@ def test_salted_join_equals_plain_join(spark):
     plain = {tuple(r) for r in
              left.join(right, left.k == right.rk).select("lv", "rv").collect()}
     salted = {tuple(r) for r in
-              salted_join(left, right, "k", "rk", salt=4)
+              salted_join(left, right, left.k == right.rk, salt=4)
               .select("lv", "rv").collect()}
     assert plain == salted
 
@@ -47,12 +47,17 @@ def test_salted_rml_join_matches_unsalted(spark):
     sf = "/root/testdata/sf0.001"
     plan = parse_mapping(_MAP, template_vars={"sf": sf})
     plain = RMLCompiler(spark, plan).compile()
-    # force the salted path: zero broadcast threshold + salt buckets
-    salted = RMLCompiler(spark, plan, broadcast_threshold=0,
-                         salt_joins=4).compile()
-    a = {tuple(r) for r in plain.collect()}
-    b = {tuple(r) for r in salted.collect()}
-    assert a == b and len(a) > 0
-    # and the salted plan actually avoids broadcast on the parent
-    splan = salted._jdf.queryExecution().executedPlan().toString()
-    assert "__salt_l" in splan
+    # force the salted shuffle path: Spark broadcasts nothing + salt buckets
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        salted = RMLCompiler(spark, plan, salt_joins=4).compile()
+        a = {tuple(r) for r in plain.collect()}
+        b = {tuple(r) for r in salted.collect()}
+        assert a == b and len(a) > 0
+        # and the salted plan actually avoids broadcast on the parent
+        splan = salted._jdf.queryExecution().executedPlan().toString()
+        assert "__salt_l" in splan
+    finally:
+        spark.conf.set(key, prev)
