@@ -2,12 +2,15 @@
 with a NameError bug at pyrml-mapper.py:27; documented in SURVEY.md §7 and
 not replicated):
 
-    python -m pyrml_spark [-o OUTPUT] [-f {nquads,ntriples,parquet}]
-                          [-p N] [-v KEY=VALUE ...] mapping.ttl
+    python -m pyrml_spark [-o OUTPUT] [-f FORMAT] [-p N]
+                          [-v KEY=VALUE ...] mapping.ttl
 
 Default output format nt-like (the reference defaults to 'nt',
 pyrml-mapper.py:40). Parquet output is the scale path: partitioned
-(s,p,o,g) table.
+(s,p,o,g) table. Every RDF text format goes through
+:func:`pyrml_spark.rdfserialize.write_rdf` — streamed to stdout, or one
+file with ``-o`` — except ``-o`` with ntriples/nquads, which writes the
+distributed N-Quads directory sink.
 
 Query mode (`--sparql`, no reference counterpart — it only writes
 graphs): run a SPARQL SELECT/ASK/CONSTRUCT (kg/sparql.py's documented
@@ -52,7 +55,9 @@ def main(argv=None) -> int:
                     metavar="KEY=VALUE",
                     help="template variable (Jinja-style {{ KEY }})")
     ap.add_argument("--no-dedup", action="store_true",
-                    help="skip the distinct pass (RDF set semantics)")
+                    help="skip the distinct pass (RDF set semantics) of the "
+                         "parquet, table and -o N-Triples/N-Quads sinks; "
+                         "the other text outputs are always a set")
     args = ap.parse_args(argv)
 
     if args.mapping is None and args.triples is None:
@@ -76,7 +81,8 @@ def main(argv=None) -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from .nquads import nquads_line_col, write_nquads
+    from .nquads import write_nquads
+    from .rdfserialize import write_rdf
 
     if args.triples is not None:
         df = spark.read.parquet(args.triples)
@@ -129,58 +135,30 @@ def main(argv=None) -> int:
             df = sparql_construct(triples, query, stats="auto")
         df = df.withColumn("g", F.lit(None).cast("string"))
 
-    if args.format in ("ntriples", "turtle", "ttl", "n3", "xml",
-                       "pretty-xml"):
-        df = df.withColumn("g", F.lit(None).cast("string"))
-    if args.format == "parquet":
+    if args.format in ("parquet", "table"):
         if not args.output:
-            print("parquet output requires -o", file=sys.stderr)
+            print(f"{args.format} output requires -o", file=sys.stderr)
             return 2
-        df.write.mode("overwrite").parquet(args.output)
-    elif args.format == "table":
-        # the scale sink: subject-hash-bucketed partitioned table (Iceberg
-        # when a catalog is configured, identical parquet layout otherwise)
-        if not args.output:
-            print("table output requires -o", file=sys.stderr)
-            return 2
-        from .kg.table import write_triples_table
-
-        write_triples_table(df, args.output, n_buckets=args.buckets)
-    elif args.format in ("xml", "pretty-xml", "trix"):
-        # XML family (reference pyrml-mapper.py:37-52): driver-side pretty
-        # formats like turtle — see rdfxml.py module docstring
-        from .nquads import df_to_quads
-        from .rdfxml import serialize_rdfxml, serialize_trix
-
-        quads = df_to_quads(df)
-        if args.format == "trix":
-            text = serialize_trix(quads)
+        if args.format == "parquet":
+            df.write.mode("overwrite").parquet(args.output)
         else:
-            text = serialize_rdfxml(quads, pretty=args.format == "pretty-xml")
-        if args.output:
-            with open(args.output, "w", encoding="utf-8") as fh:
-                fh.write(text)
-        else:
-            sys.stdout.write(text)
-    elif args.format in ("turtle", "ttl", "n3", "trig"):
-        # pretty prefixed text (reference pyrml-mapper.py:37-52 formats;
-        # n3 ⊇ turtle). Single pretty file: bulk output belongs to
-        # nquads/parquet.
-        from .rdfserialize import serialize_trig, serialize_turtle, write_turtle
+            # the scale sink: subject-hash-bucketed partitioned table
+            # (Iceberg when a catalog is configured, identical parquet
+            # layout otherwise)
+            from .kg.table import write_triples_table
 
-        trig = args.format == "trig"
-        if args.output:
-            write_turtle(df, args.output, trig=trig)
-        else:
-            from .nquads import df_to_quads
-
-            ser = serialize_trig if trig else serialize_turtle
-            sys.stdout.write(ser(df_to_quads(df)))
-    elif args.output:
+            write_triples_table(df, args.output, n_buckets=args.buckets)
+    elif args.output and args.format in ("ntriples", "nquads"):
+        # the distributed text sink: a directory of part files
+        if args.format == "ntriples":
+            df = df.withColumn("g", F.lit(None).cast("string"))
         write_nquads(df, args.output)
+    elif args.output:
+        # one text file (reference pyrml-mapper.py:37-52 formats)
+        with open(args.output, "w", encoding="utf-8") as fh:
+            write_rdf(df, args.format, fh)
     else:
-        for row in df.select(nquads_line_col().alias("line")).toLocalIterator():
-            print(row["line"])
+        write_rdf(df, args.format, sys.stdout)
     return 0
 
 

@@ -14,6 +14,7 @@ TriplesMaps, pyrml_mapper.py:145-158, is subsumed by Spark task parallelism).
 
 from __future__ import annotations
 
+import io
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -88,39 +89,17 @@ def serialize(df: DataFrame, format: str = "nt",
     xml, pretty-xml, trix.
 
     Returns the text when ``destination`` is None, else writes one file.
-    Driver-side like rdflib (pretty formats are one-writer artifacts);
-    for bulk output use :func:`pyrml_spark.nquads.write_nquads` or
-    :func:`pyrml_spark.kg.table.write_triples_table`."""
-    from .nquads import df_to_quads
-    from .rdfserialize import serialize_trig, serialize_turtle
-    from .rdfxml import serialize_rdfxml, serialize_trix
+    The text is streamed from the DataFrame through
+    :func:`pyrml_spark.rdfserialize.write_rdf` (a set, like rdflib's
+    graph); for bulk output use :func:`pyrml_spark.nquads.write_nquads`
+    or :func:`pyrml_spark.kg.table.write_triples_table`."""
+    from .rdfserialize import rdf_format, write_rdf
 
-    fmt = format.lower().replace("_", "-")
-    quads = df_to_quads(df)
-    if fmt in ("nt", "ntriples", "nt11"):
-        # dedup over TRIPLES, not quads: the same (s,p,o) asserted in two
-        # named graphs is one N-Triples line (rdflib Graph semantics)
-        text = "\n".join(sorted(f"{s} {p} {o} ."
-                                for s, p, o in {(s, p, o)
-                                                for s, p, o, _g in quads})) + "\n"
-    elif fmt in ("nquads", "nq"):
-        text = "\n".join(sorted(
-            f"{s} {p} {o}{' ' + g if g else ''} ."
-            for s, p, o, g in set(quads))) + "\n"
-    elif fmt in ("turtle", "ttl", "n3"):
-        text = serialize_turtle(quads)
-    elif fmt == "trig":
-        text = serialize_trig(quads)
-    elif fmt == "xml":
-        text = serialize_rdfxml(quads)
-    elif fmt == "pretty-xml":
-        text = serialize_rdfxml(quads, pretty=True)
-    elif fmt == "trix":
-        text = serialize_trix(quads)
-    else:
-        raise ValueError(f"unsupported serialization format {format!r}")
     if destination is None:
-        return text
+        buf = io.StringIO()
+        write_rdf(df, format, buf)
+        return buf.getvalue()
+    rdf_format(format)  # an unsupported name fails before the file opens
     with open(destination, "w", encoding="utf-8") as fh:
-        fh.write(text)
+        write_rdf(df, format, fh)
     return None

@@ -55,6 +55,17 @@ def iceberg_catalogs(spark: SparkSession) -> list:
     return out
 
 
+def is_catalog_table(spark: SparkSession, target: str) -> bool:
+    """Whether ``target`` names a table of a configured Iceberg catalog: a
+    dotted name without ``/`` whose first segment is a catalog. The one
+    routing rule of every triples-table write and read, so a relative path
+    like ``out.parquet`` or ``local.d/kg`` is always a path (ADVICE r3: the
+    catalog reader failed on it with a confusing TABLE_OR_VIEW_NOT_FOUND).
+    Paths cost no catalog lookup."""
+    return ("/" not in target and "." in target
+            and target.split(".", 1)[0] in iceberg_catalogs(spark))
+
+
 def subject_bucket(n_buckets: int = DEFAULT_BUCKETS):
     """The fallback path's explicit bucket column (deterministic, matches
     re-runs; Iceberg's hidden ``bucket(n, s)`` transform plays this role on
@@ -101,14 +112,14 @@ def write_triples_table(
         raise ValueError(f"triples table needs columns {TRIPLE_COLS}; "
                          f"missing {missing}")
     if fmt is None:
-        cats = iceberg_catalogs(df.sparkSession)
-        fmt = "iceberg" if cats and target.split(".")[0] in cats else "parquet"
+        fmt = ("iceberg" if is_catalog_table(df.sparkSession, target)
+               else "parquet")
+    elif fmt == "iceberg" and not iceberg_catalogs(df.sparkSession):
+        raise RuntimeError(
+            "fmt='iceberg' but no Iceberg catalog is configured "
+            "(spark.sql.catalog.<name>); refusing to downgrade silently")
 
     if fmt == "iceberg":
-        if not iceberg_catalogs(df.sparkSession):
-            raise RuntimeError(
-                "fmt='iceberg' but no Iceberg catalog is configured "
-                "(spark.sql.catalog.<name>); refusing to downgrade silently")
         writer = (df.select(*TRIPLE_COLS)
                   .writeTo(target)
                   .using("iceberg")
@@ -133,16 +144,10 @@ def read_triples_table(spark: SparkSession, target: str,
     (either path), normalized to (s,p,o,g).
 
     ``fmt`` mirrors the writer: ``"iceberg"`` forces ``spark.read.table``,
-    ``"parquet"`` forces a path read, None = auto. Auto treats ``target``
-    as a catalog table ONLY when its first dotted segment names a
-    configured Iceberg catalog — a relative path like ``out.parquet`` must
-    never be routed to the catalog reader (ADVICE r3: it failed with a
-    confusing TABLE_OR_VIEW_NOT_FOUND)."""
+    ``"parquet"`` forces a path read, None = auto
+    (:func:`is_catalog_table`, the writer's rule)."""
     if fmt is None:
-        first = target.split(".", 1)[0]
-        is_table = ("/" not in target and "." in target
-                    and first in iceberg_catalogs(spark))
-        fmt = "iceberg" if is_table else "parquet"
+        fmt = "iceberg" if is_catalog_table(spark, target) else "parquet"
     df = (spark.read.table(target) if fmt == "iceberg"
           else spark.read.parquet(target))
     return df.select(*TRIPLE_COLS)

@@ -1,37 +1,53 @@
-"""Turtle / TriG text serialization for (s,p,o[,g]) string tables.
+"""RDF text serialization of (s,p,o[,g]) string tables: the one entry
+:func:`write_rdf` for every text format.
 
 Parity surface: the reference CLI serializes via rdflib to turtle, trig, n3,
 xml, pretty-xml, nt, nquads (``pyrml-mapper.py:37-52``,
-``pyrml_mapper.py:137-140``). Here N-Quads/N-Triples are the distributed
-text sink (:mod:`pyrml_spark.nquads`) and Parquet/Iceberg the scale sink
-(:mod:`pyrml_spark.kg.table`); Turtle/TriG is the *human interchange*
-format — pretty, prefixed, subject-grouped. n3 is served by turtle (every
-Turtle doc is valid N3); xml, pretty-xml and trix are served by
-:mod:`pyrml_spark.rdfxml`, through ``compat.serialize`` and the CLI.
+``pyrml_mapper.py:137-140``); ``compat.serialize`` and the CLI accept the
+same names (:data:`FORMATS`). N-Triples/N-Quads lines are formatted by
+Spark (:func:`pyrml_spark.nquads.nquads_line_col`); Turtle/TriG is the
+*human interchange* format — pretty, prefixed, subject-grouped (n3 is
+served by turtle: every Turtle doc is valid N3); xml, pretty-xml and trix
+are written by :mod:`pyrml_spark.rdfxml`.
 
-Scale posture: prefix discovery is a distributed aggregate (namespace
-frequency over all term positions) and rows are streamed to the writer
-through ``toLocalIterator`` over a Spark ``orderBy`` — driver memory is
-bounded by one subject group, not the table. Still, a single pretty text
-file is inherently a one-writer artifact; for bulk output use N-Quads or
-the partitioned table sink.
-
-Round-trip guarantee (tested): ``parse_turtle(serialize_turtle(quads))``
-yields the same triple set, and :func:`parse_trig` inverts
-:func:`serialize_trig`.
+Every format is streamed from the DataFrame: prefix discovery is a
+distributed aggregate (namespace frequency over all term positions), and
+the rows are one distinct, sorted stream read through ``toLocalIterator``,
+so driver memory is bounded by one subject group, not the table (RDF/XML
+alone buffers its body, because its namespace declarations come first).
+The output is a set, like rdflib's ``Dataset``. Still, a single text file
+is a one-writer artifact; for bulk output use
+:func:`pyrml_spark.nquads.write_nquads` or the partitioned table sink.
 """
 
 from __future__ import annotations
 
 import re
-from collections import defaultdict
-from typing import Dict, Iterable, Iterator, List, Optional, Tuple
+from itertools import groupby
+from operator import itemgetter
+from typing import Dict, Iterable, Iterator, List, Optional, TextIO, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .nquads import Quad
-from .rdfterms import RDF, XSD
+from .nquads import nquads_line_col
+from .rdfterms import NT_LITERAL_RE, RDF, XSD
+from .rdfxml import write_rdfxml, write_trix
+
+# rdflib format name or alias → the writer that serves it
+FORMATS = {
+    "nt": "nt", "ntriples": "nt", "nt11": "nt",
+    "nquads": "nq", "nq": "nq",
+    "turtle": "turtle", "ttl": "turtle", "n3": "turtle",
+    "trig": "trig",
+    "xml": "xml", "pretty-xml": "pretty-xml",
+    "trix": "trix",
+}
+
+# formats that keep the graph column; the others write the union graph
+_GRAPH_FORMATS = ("nq", "trig", "trix")
+
+MAX_PREFIXES = 16
 
 # well-known namespaces get their conventional prefix
 WELL_KNOWN = {
@@ -47,10 +63,53 @@ WELL_KNOWN = {
 # PN_LOCAL allows leading digits (Turtle grammar); keep the tail
 # conservative (no dots — trailing-dot ambiguity) for round-trip safety
 _PN_LOCAL_SAFE = re.compile(r"^[A-Za-z0-9_][A-Za-z0-9_-]*$")
-_LITERAL_RE = re.compile(
-    r'^"(?P<lex>(?:[^"\\]|\\.)*)"(?:@(?P<lang>[A-Za-z0-9\-]+)'
-    r"|\^\^<(?P<dt>[^>]*)>)?$"
-)
+
+
+def rdf_format(name: str) -> str:
+    """The writer for an rdflib format name or alias (``ValueError`` if
+    none serves it)."""
+    fmt = FORMATS.get(name.lower().replace("_", "-"))
+    if fmt is None:
+        raise ValueError(f"unsupported serialization format {name!r}")
+    return fmt
+
+
+def write_rdf(df: DataFrame, format: str, fh: TextIO) -> None:
+    """Serialize the (s,p,o[,g]) DataFrame as ``format`` text on ``fh``.
+
+    One path for every format: the prefix table (prefixed formats only),
+    then the distinct rows sorted by (g, s, p, o) — g NULL for the triple
+    formats, which write the union graph — streamed to the format's
+    writer. N-Triples/N-Quads stream their Spark-formatted lines in line
+    order instead."""
+    fmt = rdf_format(format)
+    g = (F.col("g") if fmt in _GRAPH_FORMATS and "g" in df.columns
+         else F.lit(None).cast("string"))
+    quads = df.select(g.alias("g"), "s", "p", "o")
+    if fmt in ("nt", "nq"):
+        lines = _sorted_rows(quads.select(nquads_line_col().alias("line")))
+        wrote = False
+        for (line,) in lines:
+            fh.write(line + "\n")
+            wrote = True
+        if not wrote:
+            fh.write("\n")  # an empty graph is one empty line
+        return
+    if fmt == "trix":
+        write_trix(_sorted_rows(quads), fh)
+        return
+    prefixes = prefix_table_from_df(df)
+    rows = _sorted_rows(quads)
+    if fmt in ("turtle", "trig"):
+        _write_turtle(rows, prefixes, fh)
+    else:
+        write_rdfxml(rows, prefixes, fh, pretty=fmt == "pretty-xml")
+
+
+def _sorted_rows(df: DataFrame) -> Iterator[Tuple]:
+    """The distinct rows of ``df`` ordered by its columns left to right
+    (NULL first), streamed to the driver one partition at a time."""
+    return df.distinct().orderBy(*df.columns).toLocalIterator()
 
 
 def _namespace_of(iri_value: str) -> Optional[str]:
@@ -66,21 +125,24 @@ def _namespace_of(iri_value: str) -> Optional[str]:
     return None
 
 
-def prefix_table_from_df(df: DataFrame, max_prefixes: int = 16) -> Dict[str, str]:
+def prefix_table_from_df(df: DataFrame) -> Dict[str, str]:
     """Distributed prefix discovery: namespace frequency over every IRI
-    position (s, o, and literal datatypes; predicates weighted by use), top
-    ``max_prefixes`` namespaces → generated prefixes. One aggregate job."""
-    terms = df.select(F.col("s").alias("t")).unionByName(
-        df.select(F.col("p").alias("t"))
-    ).unionByName(df.select(F.col("o").alias("t")))
+    position (s, p, o and literal datatypes, counted once per row), top
+    ``MAX_PREFIXES`` namespaces → generated prefixes. One aggregate job."""
+    t = F.col("t")
+    iris = (
+        df.select(F.explode(F.array("s", "p", "o")).alias("t"))
+        .select(
+            F.when(t.startswith("<"), F.regexp_extract(t, r"^<(.*)>$", 1))
+            .when(t.startswith('"'), F.regexp_extract(t, r"\^\^<([^>]*)>$", 1))
+            .alias("iri"))
+    )
     # Same namespace rule as _namespace_of: split at the last '#' when the
     # IRI contains one (no fallback to '/' if the local part is unsafe),
     # else at the last '/'. Keeping both paths on one rule means every
     # registered @prefix is actually usable by _shorten_iri.
-    iris = (
-        terms.filter(F.col("t").startswith("<"))
-        .select(F.regexp_replace("t", "^<|>$", "").alias("iri"))
-        .select(
+    top = (
+        iris.select(
             F.when(
                 F.col("iri").contains("#"),
                 F.regexp_extract("iri", r"^(.*#)[A-Za-z0-9_][A-Za-z0-9_-]*$", 1),
@@ -93,11 +155,10 @@ def prefix_table_from_df(df: DataFrame, max_prefixes: int = 16) -> Dict[str, str
         .filter(F.length("ns") > 8)  # len("http://x")
         .groupBy("ns").count()
         .orderBy(F.desc("count"), "ns")
-        .limit(max_prefixes)
     )
     table: Dict[str, str] = {}
     n = 0
-    for row in iris.collect():
+    for row in top.limit(MAX_PREFIXES).collect():
         ns = row["ns"]
         if ns in WELL_KNOWN:
             table[ns] = WELL_KNOWN[ns]
@@ -105,36 +166,6 @@ def prefix_table_from_df(df: DataFrame, max_prefixes: int = 16) -> Dict[str, str
             n += 1
             table[ns] = f"ns{n}"
     # always offer xsd for datatyped literals
-    table.setdefault(XSD, "xsd")
-    table.setdefault(RDF, "rdf")
-    return table
-
-
-def prefix_table_from_quads(quads: Iterable[Quad],
-                            max_prefixes: int = 16) -> Dict[str, str]:
-    """Driver-side counterpart of :func:`prefix_table_from_df`."""
-    counts: Dict[str, int] = defaultdict(int)
-    for s, p, o, _g in quads:
-        for t in (s, p, o):
-            if t.startswith("<"):
-                ns = _namespace_of(t[1:-1])
-                if ns:
-                    counts[ns] += 1
-            elif t.startswith('"'):
-                m = _LITERAL_RE.match(t)
-                if m and m.group("dt"):
-                    ns = _namespace_of(m.group("dt"))
-                    if ns:
-                        counts[ns] += 1
-    top = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:max_prefixes]
-    table: Dict[str, str] = {}
-    n = 0
-    for ns, _c in top:
-        if ns in WELL_KNOWN:
-            table[ns] = WELL_KNOWN[ns]
-        else:
-            n += 1
-            table[ns] = f"ns{n}"
     table.setdefault(XSD, "xsd")
     table.setdefault(RDF, "rdf")
     return table
@@ -157,7 +188,7 @@ def _format_term(term: str, prefixes: Dict[str, str],
         return _shorten_iri(value, prefixes)
     if term.startswith("_:"):
         return term
-    m = _LITERAL_RE.match(term)
+    m = NT_LITERAL_RE.match(term)
     if m:
         if m.group("dt"):
             return f'"{m.group("lex")}"^^{_shorten_iri(m.group("dt"), prefixes)}'
@@ -201,178 +232,21 @@ def _subject_blocks(
     yield from flush()
 
 
-def _header(prefixes: Dict[str, str], base: Optional[str]) -> List[str]:
-    out = []
-    if base:
-        out.append(f"@base <{base}> .")
+def _write_turtle(rows: Iterable[Tuple], prefixes: Dict[str, str],
+                  fh: TextIO) -> None:
+    """Rows sorted by (g, s, p, o) → Turtle (every g NULL) or TriG on
+    ``fh``: default-graph subject blocks at top level, then one
+    ``label { ... }`` block per named graph, opened and closed at column 0."""
     for ns, pfx in sorted(prefixes.items(), key=lambda kv: kv[1]):
-        out.append(f"@prefix {pfx}: <{ns}> .")
-    return out
-
-
-def serialize_turtle(
-    quads: Iterable[Quad],
-    prefixes: Optional[Dict[str, str]] = None,
-    base: Optional[str] = None,
-) -> str:
-    """Quads (graph ignored) → pretty Turtle text."""
-    quads = list(quads)
-    prefixes = prefixes if prefixes is not None else prefix_table_from_quads(quads)
-    triples = sorted({(s, p, o) for s, p, o, _g in quads})
-    parts = ["\n".join(_header(prefixes, base))]
-    parts.extend(_subject_blocks(triples, prefixes))
-    return "\n\n".join(parts) + "\n"
-
-
-def serialize_trig(
-    quads: Iterable[Quad],
-    prefixes: Optional[Dict[str, str]] = None,
-    base: Optional[str] = None,
-) -> str:
-    """Quads → TriG: default-graph triples at top level, one ``<g> { ... }``
-    block per named graph."""
-    quads = list(quads)
-    prefixes = prefixes if prefixes is not None else prefix_table_from_quads(quads)
-    by_graph: Dict[Optional[str], set] = defaultdict(set)
-    for s, p, o, g in quads:
-        by_graph[g or None].add((s, p, o))
-    parts = ["\n".join(_header(prefixes, base))]
-    default = by_graph.pop(None, None)
-    if default:
-        parts.extend(_subject_blocks(sorted(default), prefixes))
-    for g in sorted(by_graph):
-        blocks = list(_subject_blocks(sorted(by_graph[g]), prefixes,
-                                      indent="    "))
-        parts.append(_format_term(g, prefixes) + " {\n"
-                     + "\n\n".join(blocks) + "\n}")
-    return "\n\n".join(parts) + "\n"
-
-
-def write_turtle(df: DataFrame, path: str, trig: bool = False,
-                 base: Optional[str] = None) -> None:
-    """DataFrame (s,p,o[,g]) → one pretty Turtle/TriG file at ``path``.
-
-    The prefix table and the (g,s,p,o) ordering are computed distributed;
-    rows stream to the single writer via ``toLocalIterator`` (driver holds
-    one subject group). For bulk/sharded output use
-    :func:`pyrml_spark.nquads.write_nquads` or the table sink."""
-    prefixes = prefix_table_from_df(df)
-    has_g = trig and "g" in df.columns
-    # Turtle ignores the graph column entirely, so sort/dedup on (s,p,o)
-    # only; TriG needs graph-major order to stream one block at a time.
-    cols = ["g", "s", "p", "o"] if has_g else ["s", "p", "o"]
-    it = df.select(*cols).distinct().orderBy(*cols).toLocalIterator()
-
-    with open(path, "w", encoding="utf-8") as fh:
-        for line in _header(prefixes, base):
-            fh.write(line + "\n")
-        if not trig:
-            triples = ((r["s"], r["p"], r["o"]) for r in it)
-            for block in _subject_blocks(triples, prefixes):
-                fh.write("\n" + block + "\n")
-            return
-        cur_g: Optional[str] = "\x00unset"
-        buf: List[Tuple[str, str, str]] = []
-
-        def flush_graph():
-            if cur_g == "\x00unset":
-                return
-            if cur_g is None:
-                for block in _subject_blocks(buf, prefixes):
-                    fh.write("\n" + block + "\n")
-            else:
-                fh.write("\n" + _format_term(cur_g, prefixes) + " {\n")
-                first = True
-                for block in _subject_blocks(buf, prefixes, indent="    "):
-                    fh.write(("" if first else "\n") + block + "\n")
-                    first = False
-                fh.write("}\n")
-
-        for r in it:
-            g = r["g"] if has_g else None
-            if g != cur_g:
-                flush_graph()
-                cur_g, buf = g, []
-            buf.append((r["s"], r["p"], r["o"]))
-        flush_graph()
-
-
-# ---------------------------------------------------------------------------
-# TriG parsing (round-trip tests + golden comparison)
-# ---------------------------------------------------------------------------
-
-# Graph-block open/close are recognized LINE-WISE at column 0 — exactly how
-# serialize_trig/write_turtle emit them. Braces inside quoted literals sit on
-# indented triple lines and therefore can never open or close a block.
-_GRAPH_OPEN_RE = re.compile(
-    r"^(?P<label><[^>]*>|[A-Za-z_][\w.\-]*:[\w.\-%~]*)\s*\{\s*$"
-)
-
-
-def parse_trig(text: str) -> List[Quad]:
-    """Parse TriG produced by :func:`serialize_trig` (prefix header,
-    top-level default-graph triples, flat ``label { ... }`` blocks opened and
-    closed at column 0 — no nested or GRAPH-keyword forms) into NT-formatted
-    quads. Line-anchored scanning: ``{``/``}`` inside quoted literals cannot
-    be mistaken for block delimiters, and byte-identical duplicate blocks
-    are handled positionally."""
-    from .turtle import parse_turtle
-
-    lines = text.splitlines()
-    header_lines = [ln for ln in lines
-                    if ln.startswith(("@prefix", "@base", "PREFIX", "BASE"))]
-    header = "\n".join(header_lines) + "\n"
-
-    quads: List[Quad] = []
-    default_lines: List[str] = []
-    cur_label: Optional[str] = None
-    body: List[str] = []
-
-    def close_block() -> None:
-        triples, _base, _prefixes = parse_turtle(header + "\n".join(body))
-        # resolve the graph label through the same parser: make it the
-        # subject of a dummy triple and take the parsed subject term
-        ltriples, _b, _p = parse_turtle(
-            header + cur_label + " <urn:x:p> <urn:x:o> .")
-        g_nt = _term_to_nt(ltriples[0][0])
-        quads.extend((_term_to_nt(s), _term_to_nt(p), _term_to_nt(o), g_nt)
-                     for s, p, o in triples)
-
-    for ln in lines:
-        if cur_label is not None:
-            if ln.rstrip() == "}":
-                close_block()
-                cur_label, body = None, []
-            else:
-                body.append(ln)
-            continue
-        m = _GRAPH_OPEN_RE.match(ln)
-        if m:
-            cur_label = m.group("label")
-        else:
-            default_lines.append(ln)
-    if cur_label is not None:
-        raise ValueError(f"unterminated graph block {cur_label!r}")
-    # default graph = whatever parses outside the blocks
-    triples, _base, _prefixes = parse_turtle("\n".join(default_lines))
-    quads.extend((_term_to_nt(s), _term_to_nt(p), _term_to_nt(o), None)
-                 for s, p, o in triples)
-    return quads
-
-
-def _term_to_nt(term) -> str:
-    """rdfterms tuple → NT-formatted string (inverse of the parser's view)."""
-    from .rdfterms import escape_nt
-
-    kind = term[0]
-    if kind == "iri":
-        return f"<{term[1]}>"
-    if kind == "bnode":
-        return f"_:{term[1]}"
-    _k, lex, lang, dt = term
-    body = f'"{escape_nt(lex)}"'
-    if lang:
-        return f"{body}@{lang}"
-    if dt and dt != XSD + "string":
-        return f'{body}^^<{dt}>'
-    return body
+        fh.write(f"@prefix {pfx}: <{ns}> .\n")
+    for g, quads in groupby(rows, key=itemgetter(0)):
+        named = g is not None
+        if named:
+            fh.write("\n" + _format_term(g, prefixes) + " {\n")
+        sep = "" if named else "\n"
+        for block in _subject_blocks((q[1:] for q in quads), prefixes,
+                                     indent="    " if named else ""):
+            fh.write(sep + block + "\n")
+            sep = "\n"
+        if named:
+            fh.write("}\n")

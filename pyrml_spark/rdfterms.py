@@ -17,6 +17,7 @@ directly comparable with reference ``.nq`` goldens (see SURVEY.md §1.2).
 
 from __future__ import annotations
 
+import re
 from typing import Optional, Tuple
 
 Term = Tuple  # ("iri", v) | ("bnode", v) | ("literal", lex, lang, dt)
@@ -35,6 +36,12 @@ SD = "http://www.w3.org/ns/sparql-service-description#"
 D2RQ = "http://www.wiwiss.fu-berlin.de/suhl/bizer/D2RQ/0.1#"
 
 RDF_TYPE = RDF + "type"
+
+# one N-Triples literal: "lex" (escapes kept), then @lang or ^^<datatype>
+NT_LITERAL_RE = re.compile(
+    r'^"(?P<lex>(?:[^"\\]|\\.)*)"(?:@(?P<lang>[A-Za-z0-9\-]+)'
+    r"|\^\^<(?P<dt>[^>]*)>)?$"
+)
 
 _NT_ESCAPES = {
     "\\": "\\\\",

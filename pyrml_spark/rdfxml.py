@@ -1,10 +1,11 @@
 """RDF/XML, pretty RDF/XML and TriX serialization.
 
 Closes the reference CLI's remaining format list (``pyrml-mapper.py:37-52``:
-xml, pretty-xml, trix — rdflib ``Dataset.serialize`` backends). Like
-:mod:`pyrml_spark.rdfserialize`, these are *driver-side human/interchange
-formats* over the engine's NT-formatted (s,p,o[,g]) string rows; bulk output
-belongs to N-Quads text or the partitioned table sink.
+xml, pretty-xml, trix — rdflib ``Dataset.serialize`` backends). These are
+human/interchange formats over the engine's NT-formatted string rows,
+streamed from the DataFrame by :func:`pyrml_spark.rdfserialize.write_rdf`
+as one distinct (g, s, p, o)-sorted row stream; bulk output belongs to
+N-Quads text or the partitioned table sink.
 
 Format notes:
 
@@ -27,12 +28,11 @@ All three round-trip through the test suite's parsers
 from __future__ import annotations
 
 import re
-from collections import defaultdict
-from typing import Dict, Iterable, List, Optional, Tuple
+from itertools import groupby
+from operator import itemgetter
+from typing import Dict, Iterable, List, Optional, TextIO, Tuple
 
-from .nquads import Quad
-from .rdfterms import RDF, unescape_nt
-from .rdfserialize import _LITERAL_RE, prefix_table_from_quads
+from .rdfterms import NT_LITERAL_RE, RDF, unescape_nt
 
 TRIX_NS = "http://www.w3.org/2004/03/trix/trix-1/"
 
@@ -65,7 +65,7 @@ def _parse_nt_term(term: str):
         return ("iri", term[1:-1])
     if term.startswith("_:"):
         return ("bnode", term[2:])
-    m = _LITERAL_RE.match(term)
+    m = NT_LITERAL_RE.match(term)
     if not m:
         raise RdfXmlError(f"unparseable NT term {term!r}")
     return ("literal", unescape_nt(m.group("lex")), m.group("lang"),
@@ -77,21 +77,9 @@ def _xml_escape(s: str) -> str:
             .replace(">", "&gt;").replace('"', "&quot;"))
 
 
-def serialize_rdfxml(
-    quads: Iterable[Quad],
-    prefixes: Optional[Dict[str, str]] = None,
-    pretty: bool = False,
-) -> str:
-    """Quads (graph flattened) → RDF/XML text."""
-    quads = list(quads)
-    prefixes = dict(prefixes) if prefixes else prefix_table_from_quads(quads)
-    prefixes.setdefault(RDF, "rdf")
-
-    triples = sorted({(s, p, o) for s, p, o, _g in quads})
-    by_subject: Dict[str, List[Tuple[str, str]]] = defaultdict(list)
-    for s, p, o in triples:
-        by_subject[s].append((p, o))
-
+def write_rdfxml(rows: Iterable[Tuple], prefixes: Dict[str, str],
+                 fh: TextIO, pretty: bool = False) -> None:
+    """Rows sorted by (g, s, p, o), g ignored → RDF/XML text on ``fh``."""
     # collect namespaces used by predicates (and typed-node names) so every
     # QName prefix is declared; predicates that can't split → loud error
     used_ns: Dict[str, str] = {RDF: prefixes[RDF]}
@@ -114,9 +102,9 @@ def serialize_rdfxml(
         return f"{used_ns[ns]}:{local}"
 
     body: List[str] = []
-    for s in sorted(by_subject):
+    for s, quads in groupby(rows, key=itemgetter(1)):
         skind, sval = _parse_nt_term(s)[:2]
-        pos = by_subject[s]
+        pos = [(p, o) for _g, _s, p, o in quads]
         elem = "rdf:Description"
         if pretty:
             type_iris = [o for p, o in pos
@@ -151,20 +139,17 @@ def serialize_rdfxml(
     decls = "".join(
         f'\n    xmlns:{pfx}="{_xml_escape(ns)}"'
         for ns, pfx in sorted(used_ns.items(), key=lambda kv: kv[1]))
-    return ('<?xml version="1.0" encoding="utf-8"?>\n'
-            f"<rdf:RDF{decls}>\n" + "\n".join(body) + "\n</rdf:RDF>\n")
+    fh.write('<?xml version="1.0" encoding="utf-8"?>\n'
+             f"<rdf:RDF{decls}>\n" + "\n".join(body) + "\n</rdf:RDF>\n")
 
 
 # ---------------------------------------------------------------------------
 # TriX
 # ---------------------------------------------------------------------------
 
-def serialize_trix(quads: Iterable[Quad]) -> str:
-    """Quads → TriX (W3C note): named graphs kept, default graph = block
-    with no <uri> label."""
-    by_graph: Dict[Optional[str], List[Tuple[str, str, str]]] = defaultdict(list)
-    for s, p, o, g in quads:
-        by_graph[g or None].append((s, p, o))
+def write_trix(rows: Iterable[Tuple], fh: TextIO) -> None:
+    """Rows sorted by (g, s, p, o) → TriX (W3C note) on ``fh``: named graphs
+    kept, default graph = block with no <uri> label."""
 
     def term_xml(t: str) -> str:
         kind = _parse_nt_term(t)
@@ -181,17 +166,16 @@ def serialize_trix(quads: Iterable[Quad]) -> str:
                     f"{_xml_escape(lex)}</typedLiteral>")
         return f"      <plainLiteral>{_xml_escape(lex)}</plainLiteral>"
 
-    parts = ['<?xml version="1.0" encoding="utf-8"?>',
-             f'<TriX xmlns="{TRIX_NS}">']
-    for g in sorted(by_graph, key=lambda x: (x is not None, x or "")):
-        parts.append("  <graph>")
+    fh.write('<?xml version="1.0" encoding="utf-8"?>\n'
+             f'<TriX xmlns="{TRIX_NS}">\n')
+    for g, quads in groupby(rows, key=itemgetter(0)):
+        fh.write("  <graph>\n")
         if g is not None:
-            gv = _parse_nt_term(g)
-            parts.append(f"    <uri>{_xml_escape(gv[1])}</uri>")
-        for s, p, o in sorted(by_graph[g]):
-            parts.append("    <triple>")
-            parts.extend(term_xml(t) for t in (s, p, o))
-            parts.append("    </triple>")
-        parts.append("  </graph>")
-    parts.append("</TriX>")
-    return "\n".join(parts) + "\n"
+            fh.write(f"    <uri>{_xml_escape(_parse_nt_term(g)[1])}</uri>\n")
+        for quad in quads:
+            fh.write("    <triple>\n")
+            for t in quad[1:]:
+                fh.write(term_xml(t) + "\n")
+            fh.write("    </triple>\n")
+        fh.write("  </graph>\n")
+    fh.write("</TriX>\n")

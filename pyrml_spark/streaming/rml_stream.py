@@ -282,7 +282,7 @@ def write_triples_stream(
     from ..kg.table import (
         DEFAULT_BUCKETS,
         TRIPLE_COLS,
-        iceberg_catalogs,
+        is_catalog_table,
         subject_bucket,
         write_triples_table,
     )
@@ -294,8 +294,7 @@ def write_triples_stream(
         b = batch.select(*TRIPLE_COLS).dropDuplicates(TRIPLE_COLS)
         use_fmt = fmt
         if use_fmt is None:
-            cats = iceberg_catalogs(spark)
-            use_fmt = ("iceberg" if cats and target.split(".")[0] in cats
+            use_fmt = ("iceberg" if is_catalog_table(spark, target)
                        else "parquet")
         if use_fmt == "iceberg":
             if not spark.catalog.tableExists(target):

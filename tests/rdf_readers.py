@@ -1,10 +1,11 @@
 """Driver-side RDF readers and triple-set comparison used only by the tests:
-an N-Quads line parser, blank-node canonicalization with precision/recall
-over quad sets (goldens are compared order-insensitively; the reference
-emits random blank-node ids, SURVEY.md §5 "blank-node-isomorphism-lite"),
-and round-trip parsers for the RDF/XML and TriX serializers in
-:mod:`pyrml_spark.rdfxml`. Goldens and round-trip outputs are tiny, so
-everything here is plain Python."""
+the collected-rows view of a triple table, an N-Quads line parser,
+blank-node canonicalization with precision/recall over quad sets (goldens
+are compared order-insensitively; the reference emits random blank-node
+ids, SURVEY.md §5 "blank-node-isomorphism-lite"), and round-trip parsers
+for the TriG, RDF/XML and TriX text of :mod:`pyrml_spark.rdfserialize`.
+Goldens and round-trip outputs are tiny, so everything here is plain
+Python."""
 
 from __future__ import annotations
 
@@ -14,9 +15,11 @@ import xml.etree.ElementTree as ET
 from collections import defaultdict
 from typing import Iterable, List, Optional, Set, Tuple
 
-from pyrml_spark.nquads import Quad
-from pyrml_spark.rdfterms import RDF, escape_nt
+from pyrml_spark.rdfterms import RDF, escape_nt, to_nt
 from pyrml_spark.rdfxml import TRIX_NS
+from pyrml_spark.turtle import parse_turtle
+
+Quad = Tuple[str, str, str, Optional[str]]
 
 _TERM_RE = re.compile(
     r"""(<[^>]*>
@@ -25,6 +28,13 @@ _TERM_RE = re.compile(
         )""",
     re.VERBOSE,
 )
+
+
+def df_to_quads(df) -> List[Quad]:
+    """Collect a (s,p,o[,g]) DataFrame as quads (g None when absent)."""
+    if "g" in df.columns:
+        return [(r["s"], r["p"], r["o"], r["g"]) for r in df.collect()]
+    return [(r["s"], r["p"], r["o"], None) for r in df.collect()]
 
 
 def parse_nquads(text: str) -> List[Quad]:
@@ -179,3 +189,60 @@ def parse_trix(text: str) -> List[Quad]:
             s, p, o = (term_nt(t) for t in tr)
             out.append((s, p, o, g))
     return out
+
+
+# Graph-block open/close are recognized LINE-WISE at column 0 — exactly how
+# the TriG writer emits them. Braces inside quoted literals sit on indented
+# triple lines and therefore can never open or close a block.
+_GRAPH_OPEN_RE = re.compile(
+    r"^(?P<label><[^>]*>|[A-Za-z_][\w.\-]*:[\w.\-%~]*)\s*\{\s*$"
+)
+
+
+def parse_trig(text: str) -> List[Quad]:
+    """Parse TriG as the serializer writes it (prefix header, top-level
+    default-graph triples, flat ``label { ... }`` blocks opened and closed
+    at column 0 — no nested or GRAPH-keyword forms) into NT-formatted
+    quads. Line-anchored scanning: ``{``/``}`` inside quoted literals cannot
+    be mistaken for block delimiters, and byte-identical duplicate blocks
+    are handled positionally."""
+    lines = text.splitlines()
+    header_lines = [ln for ln in lines
+                    if ln.startswith(("@prefix", "@base", "PREFIX", "BASE"))]
+    header = "\n".join(header_lines) + "\n"
+
+    quads: List[Quad] = []
+    default_lines: List[str] = []
+    cur_label: Optional[str] = None
+    body: List[str] = []
+
+    def close_block() -> None:
+        triples, _base, _prefixes = parse_turtle(header + "\n".join(body))
+        # resolve the graph label through the same parser: make it the
+        # subject of a dummy triple and take the parsed subject term
+        ltriples, _b, _p = parse_turtle(
+            header + cur_label + " <urn:x:p> <urn:x:o> .")
+        g_nt = to_nt(ltriples[0][0])
+        quads.extend((to_nt(s), to_nt(p), to_nt(o), g_nt)
+                     for s, p, o in triples)
+
+    for ln in lines:
+        if cur_label is not None:
+            if ln.rstrip() == "}":
+                close_block()
+                cur_label, body = None, []
+            else:
+                body.append(ln)
+            continue
+        m = _GRAPH_OPEN_RE.match(ln)
+        if m:
+            cur_label = m.group("label")
+        else:
+            default_lines.append(ln)
+    if cur_label is not None:
+        raise ValueError(f"unterminated graph block {cur_label!r}")
+    # default graph = whatever parses outside the blocks
+    triples, _base, _prefixes = parse_turtle("\n".join(default_lines))
+    quads.extend((to_nt(s), to_nt(p), to_nt(o), None)
+                 for s, p, o in triples)
+    return quads

@@ -7,7 +7,7 @@ import pytest
 
 from pyrml_spark import convert
 from pyrml_spark.compat import PyRML
-from pyrml_spark.nquads import df_to_quads
+from rdf_readers import df_to_quads
 
 PRELUDE = """
 @prefix rr: <http://www.w3.org/ns/r2rml#> .
@@ -501,11 +501,9 @@ def test_compat_serialize_all_formats(spark, tmp_path):
     format list (pyrml_mapper.py:137-140): every format emits parseable
     text with the full triple set."""
     from pyrml_spark.compat import serialize
-    from pyrml_spark.nquads import df_to_quads
-    from pyrml_spark.rdfserialize import parse_trig
+    from pyrml_spark.rdfterms import to_nt
     from pyrml_spark.turtle import parse_turtle
-    from pyrml_spark.rdfserialize import _term_to_nt
-    from rdf_readers import parse_nquads, parse_rdfxml, parse_trix
+    from rdf_readers import parse_nquads, parse_rdfxml, parse_trig, parse_trix
 
     df = convert(spark, "/root/reference/examples/artists/artist-map.ttl",
                  search_roots=["/root/reference"])
@@ -513,8 +511,7 @@ def test_compat_serialize_all_formats(spark, tmp_path):
 
     def turtle_triples(text):
         triples, _b, _p = parse_turtle(text)
-        return {(_term_to_nt(s), _term_to_nt(p), _term_to_nt(o))
-                for s, p, o in triples}
+        return {(to_nt(s), to_nt(p), to_nt(o)) for s, p, o in triples}
 
     parsers = {
         "nt": lambda t: {(s, p, o) for s, p, o, _ in parse_nquads(t)},

@@ -11,8 +11,8 @@ import os
 import pytest
 
 from pyrml_spark import convert
-from pyrml_spark.nquads import df_to_quads
-from rdf_readers import canonicalize_bnodes, parse_nquads, precision_recall
+from rdf_readers import (canonicalize_bnodes, df_to_quads, parse_nquads,
+                         precision_recall)
 
 REF = "/root/reference"
 FIX = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "rml")

@@ -1,5 +1,6 @@
-"""Turtle/TriG serialization round-trips (VERDICT r3 #4): serialize →
-re-parse with the repo's own Turtle parser → identical quad set. Goldens:
+"""Turtle/TriG serialization round-trips (VERDICT r3 #4): serialize a
+DataFrame through the one text entry (``compat.serialize``) → re-parse with
+the repo's own Turtle parser → identical quad set. Goldens:
 the artists example mapping (read from the pyRML checkout at REF; its tests
 skip where it is absent) and the RMLTC0006a named-graph quad case (the
 in-repo fixture under tests/fixtures/rml)."""
@@ -11,16 +12,11 @@ import sys
 import pytest
 
 from pyrml_spark import convert
-from pyrml_spark.nquads import df_to_quads
-from pyrml_spark.rdfserialize import (
-    parse_trig,
-    prefix_table_from_df,
-    serialize_trig,
-    serialize_turtle,
-    write_turtle,
-)
-from pyrml_spark.rdfterms import XSD
+from pyrml_spark.compat import serialize
+from pyrml_spark.rdfserialize import prefix_table_from_df
+from pyrml_spark.rdfterms import XSD, to_nt
 from pyrml_spark.turtle import parse_turtle
+from rdf_readers import df_to_quads, parse_trig
 
 REF = "/root/reference"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -28,14 +24,12 @@ FIX = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "rml"
 NEEDS_ARTIST_MAP = pytest.mark.skipif(
     not os.path.exists(os.path.join(REF, "examples/artists/artist-map.ttl")),
     reason=f"needs the pyRML checkout at {REF}")
+QUAD_SCHEMA = "s string, p string, o string, g string"
 
 
 def _reparse_turtle_to_triples(text):
-    from pyrml_spark.rdfserialize import _term_to_nt
-
     triples, _base, _prefixes = parse_turtle(text)
-    return {(_term_to_nt(s), _term_to_nt(p), _term_to_nt(o))
-            for s, p, o in triples}
+    return {(to_nt(s), to_nt(p), to_nt(o)) for s, p, o in triples}
 
 
 def _artists_df(spark):
@@ -47,7 +41,7 @@ def _artists_df(spark):
 def test_turtle_roundtrip_artists(spark):
     df = _artists_df(spark)
     quads = df_to_quads(df)
-    text = serialize_turtle(quads)
+    text = serialize(df, "turtle")
     assert "@prefix" in text and " a " in text  # prefixed + rdf:type kwd
     got = _reparse_turtle_to_triples(text)
     assert got == {(s, p, o) for s, p, o, _g in quads}
@@ -65,7 +59,7 @@ def test_trig_roundtrip_named_graphs(spark):
          "<http://ex.com/T>", "<http://ex.com/g1>"),
         ("_:b0", "<http://ex.com/p>", '"hola"@es', "<http://ex.com/g2>"),
     ]
-    text = serialize_trig(rows)
+    text = serialize(spark.createDataFrame(rows, QUAD_SCHEMA), "trig")
     back = parse_trig(text)
     assert set(back) == set(rows)
 
@@ -81,7 +75,7 @@ def test_trig_roundtrip_literal_with_brace_block(spark):
         ("<http://ex.com/s3>", "<http://ex.com/p>", '"} close only"',
          "<http://ex.com/g1>"),
     ]
-    text = serialize_trig(rows)
+    text = serialize(spark.createDataFrame(rows, QUAD_SCHEMA), "trig")
     assert set(parse_trig(text)) == set(rows)
 
 
@@ -92,7 +86,7 @@ def test_trig_duplicate_graph_blocks_positional(spark):
         ("<http://ex.com/s>", "<http://ex.com/p>", '"v"', "<http://ex.com/g1>"),
         ("<http://ex.com/s>", "<http://ex.com/p>", '"v"', "<http://ex.com/g2>"),
     ]
-    text = serialize_trig(rows)
+    text = serialize(spark.createDataFrame(rows, QUAD_SCHEMA), "trig")
     assert set(parse_trig(text)) == set(rows)
 
 
@@ -112,20 +106,18 @@ def test_prefix_table_hash_before_slash_not_registered(spark):
 def test_serialize_nt_dedups_triples_across_graphs(spark):
     """ADVICE r4: serialize(df,'nt') emits ONE line for the same (s,p,o)
     asserted in two named graphs (rdflib Graph semantics)."""
-    from pyrml_spark.compat import serialize
-
     df = spark.createDataFrame(
         [("<http://ex.com/s>", "<http://ex.com/p>", '"v"',
           "<http://ex.com/g1>"),
          ("<http://ex.com/s>", "<http://ex.com/p>", '"v"',
           "<http://ex.com/g2>")],
-        "s string, p string, o string, g string")
+        QUAD_SCHEMA)
     text = serialize(df, "nt")
     lines = [ln for ln in text.splitlines() if ln.strip()]
     assert lines == ['<http://ex.com/s> <http://ex.com/p> "v" .']
 
 
-def test_trig_roundtrip_rmltc0006a():
+def test_trig_roundtrip_rmltc0006a(spark):
     """The RMLTC0006a named-graph golden (output.nq, the in-repo fixture
     under tests/fixtures/rml, derived by hand from the case's mapping under
     R2RML §7.1/§9 as SURVEY.md §5 records) → TriG → parse → same quad set."""
@@ -135,7 +127,7 @@ def test_trig_roundtrip_rmltc0006a():
     with open(path, encoding="utf-8") as fh:
         quads = parse_nquads(fh.read())
     assert quads, "golden should be non-empty"
-    text = serialize_trig(quads)
+    text = serialize(spark.createDataFrame(quads, QUAD_SCHEMA), "trig")
     assert set(parse_trig(text)) == set(quads)
 
 
@@ -143,7 +135,7 @@ def test_trig_roundtrip_rmltc0006a():
 def test_write_turtle_streams_from_df(spark, tmp_path):
     df = _artists_df(spark)
     out = str(tmp_path / "artists.ttl")
-    write_turtle(df, out)
+    serialize(df, "turtle", out)
     with open(out, encoding="utf-8") as fh:
         text = fh.read()
     got = _reparse_turtle_to_triples(text)
@@ -173,22 +165,21 @@ def test_cli_turtle_format(tmp_path):
 
 @NEEDS_ARTIST_MAP
 def test_rdfxml_roundtrip_artists(spark):
-    from pyrml_spark.rdfxml import serialize_rdfxml
     from rdf_readers import parse_rdfxml
 
-    quads = df_to_quads(_artists_df(spark))
-    for pretty in (False, True):
-        text = serialize_rdfxml(quads, pretty=pretty)
+    df = _artists_df(spark)
+    quads = df_to_quads(df)
+    for fmt in ("xml", "pretty-xml"):
+        text = serialize(df, fmt)
         assert text.startswith('<?xml')
         got = {(s, p, o) for s, p, o, _g in parse_rdfxml(text)}
         assert got == {(s, p, o) for s, p, o, _g in quads}
     # pretty mode lifts rdf:type into the element name
-    assert "rdf:about" in serialize_rdfxml(quads, pretty=True)
-    assert ":Person rdf:about" in serialize_rdfxml(quads, pretty=True)
+    assert "rdf:about" in serialize(df, "pretty-xml")
+    assert ":Person rdf:about" in serialize(df, "pretty-xml")
 
 
-def test_rdfxml_literals_langs_bnodes():
-    from pyrml_spark.rdfxml import serialize_rdfxml
+def test_rdfxml_literals_langs_bnodes(spark):
     from rdf_readers import parse_rdfxml
 
     quads = [
@@ -198,23 +189,22 @@ def test_rdfxml_literals_langs_bnodes():
          '"5"^^<' + XSD + 'integer>', None),
         ("_:b1", "<http://ex.com/p>", "_:b2", None),
     ]
-    text = serialize_rdfxml(quads)
+    text = serialize(spark.createDataFrame(quads, QUAD_SCHEMA), "xml")
     assert {(s, p, o) for s, p, o, _ in parse_rdfxml(text)} \
         == {(s, p, o) for s, p, o, _ in quads}
 
 
-def test_rdfxml_unrepresentable_predicate_is_loud():
-    from pyrml_spark.rdfxml import RdfXmlError, serialize_rdfxml
+def test_rdfxml_unrepresentable_predicate_is_loud(spark):
+    from pyrml_spark.rdfxml import RdfXmlError
 
     quads = [("<http://ex.com/s>", "<http://ex.com/p/1badlocal!>", '"v"',
               None)]
     import pytest as _pytest
     with _pytest.raises(RdfXmlError):
-        serialize_rdfxml(quads)
+        serialize(spark.createDataFrame(quads, QUAD_SCHEMA), "xml")
 
 
-def test_trix_roundtrip_named_graphs():
-    from pyrml_spark.rdfxml import serialize_trix
+def test_trix_roundtrip_named_graphs(spark):
     from rdf_readers import parse_trix
 
     quads = [
@@ -224,7 +214,7 @@ def test_trix_roundtrip_named_graphs():
         ("_:b", "<http://ex.com/p>", '"7"^^<' + XSD + 'int>',
          "<http://ex.com/g1>"),
     ]
-    text = serialize_trix(quads)
+    text = serialize(spark.createDataFrame(quads, QUAD_SCHEMA), "trix")
     assert set(parse_trix(text)) == set(quads)
 
 

@@ -7,7 +7,7 @@ import tempfile
 import pytest
 
 from pyrml_spark import convert
-from pyrml_spark.nquads import df_to_quads
+from rdf_readers import df_to_quads
 
 PRELUDE = """
 @prefix rr: <http://www.w3.org/ns/r2rml#> .

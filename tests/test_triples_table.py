@@ -71,3 +71,32 @@ def test_auto_format_picks_parquet_without_catalog(spark, tmp_path):
     tgt = str(tmp_path / "auto")
     write_triples_table(_triples(spark, 10), tgt)  # fmt=None → parquet here
     assert read_triples_table(spark, tgt).count() == 10
+
+
+def test_relative_path_led_by_catalog_name_is_a_path(spark):
+    """Write and read share one routing rule: with an Iceberg catalog named
+    ``local`` configured (conf only; no runtime jar), the relative path
+    ``local.d<id>/kg`` is a parquet path both ways, never ``writeTo``.
+    Spark resolves relative paths against the JVM's working directory, so
+    the test finds its output through the read-back and removes it."""
+    import shutil
+    import uuid
+
+    conf = "spark.sql.catalog.local"
+    root = f"local.d{uuid.uuid4().hex[:8]}"
+    target = f"{root}/kg"
+    written = None
+    spark.conf.set(conf, "org.apache.iceberg.spark.SparkCatalog")
+    try:
+        assert "local" in iceberg_catalogs(spark)
+        df = _triples(spark, 10)
+        write_triples_table(df, target, n_buckets=4)
+        back = read_triples_table(spark, target)
+        written = back.inputFiles()[0]
+        assert {tuple(r) for r in back.collect()} \
+            == {tuple(r) for r in df.collect()}
+    finally:
+        spark.conf.unset(conf)
+        if written is not None:
+            local = written.split("file:", 1)[-1].lstrip("/")
+            shutil.rmtree("/" + local[: local.index(root) + len(root)])
