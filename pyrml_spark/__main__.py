@@ -151,7 +151,10 @@ def main(argv=None) -> int:
     elif args.output and args.format in ("ntriples", "nquads"):
         # the distributed text sink: a directory of part files
         if args.format == "ntriples":
+            # the union graph: a triple asserted in two graphs is one line
             df = df.withColumn("g", F.lit(None).cast("string"))
+            if not args.no_dedup:
+                df = df.distinct()
         write_nquads(df, args.output)
     elif args.output:
         # one text file (reference pyrml-mapper.py:37-52 formats)

@@ -72,7 +72,6 @@ def _driver_union_find(edges_rows) -> list:
 
 def connected_components_auto(
     edges: DataFrame,
-    max_driver_edges: Optional[int] = None,
     edge_rows: Optional[int] = None,
     **kw,
 ) -> Tuple[DataFrame, int]:
@@ -80,25 +79,23 @@ def connected_components_auto(
     the one gate every caller goes through. Returns ``(components, rows)``:
     the (node, component) table and its row count.
 
-    At most ``max_driver_edges`` edges (default
-    :data:`DRIVER_UNION_FIND_MAX_EDGES`, read at call time) are solved on the
-    driver (Arrow transfer both ways), where the iterative min-label loop's
-    per-round fixed job cost would dominate; above the gate the distributed
-    loop runs with ``kw`` — the 100 TB path. Identical output either way
-    (lexicographic-min labels; pinned by tests).
+    At most :data:`DRIVER_UNION_FIND_MAX_EDGES` edges (read at call time)
+    are solved on the driver (Arrow transfer both ways), where the
+    iterative min-label loop's per-round fixed job cost would dominate;
+    above the gate the distributed loop runs with ``kw`` — the 100 TB
+    path. Identical output either way (lexicographic-min labels; pinned
+    by tests).
 
     The edge count is known BEFORE any collect. A caller that already knows
     it (lineage manifest, count over a persisted table) passes ``edge_rows``
     and vouches that ``edges`` is materialized, so no job runs before the
     gate; otherwise the edges are checkpointed eagerly (the typically
     expensive upstream pair join runs exactly once) and counted."""
-    if max_driver_edges is None:
-        max_driver_edges = DRIVER_UNION_FIND_MAX_EDGES
     edges = edges.select("src", "dst")
     if edge_rows is None:
         edges = edges.localCheckpoint(eager=True)
         edge_rows = edges.count()
-    if edge_rows <= max_driver_edges:
+    if edge_rows <= DRIVER_UNION_FIND_MAX_EDGES:
         import pandas as pd
 
         epdf = edges.toPandas()

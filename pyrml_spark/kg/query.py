@@ -210,7 +210,7 @@ def compile_bgp(
             raise BGPError(
                 f"pattern {i} {pat!r} binds no variable — fully-bound "
                 "existence checks are not part of the BGP surface (use "
-                "table.subject_lookup / a direct filter)")
+                "a direct filter)")
 
     all_vars: List[str] = []
     for pat in pats:

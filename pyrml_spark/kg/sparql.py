@@ -102,8 +102,8 @@ at parse time — loud, never a silent approximation):
   disconnected — loud cartesian, reorder or add a bridging pattern).
   ``expr`` is any FILTER operand
   plus the constructors ``CONCAT(...)`` and ``IRI(...)``; results
-  re-enter the term encoding (lexical → plain literal with N-Triples
-  escapes, ``IRI()`` → ``<...>``, ``STRLEN`` → ``xsd:integer``,
+  re-enter the term encoding (lexical → plain literal with the writer's
+  N-Triples escapes, ``IRI()`` → ``<...>``, ``STRLEN`` → ``xsd:integer``,
   numeric constants keep their XSD type). BIND inside OPTIONAL/UNION
   sides, aliases as closure-path endpoints, and aliases over OPTIONAL
   variables used in any pattern stay loud.
@@ -154,10 +154,13 @@ FILTER semantics (documented, SPARQL-faithful where it matters):
   operand the comparison is codepoint order on the lexical form (the
   simple-literal case of SPARQL's operator table).
 * String functions operate on the **lexical form** (``STR`` semantics:
-  IRIs lose their brackets, literals lose quotes/lang/datatype and
-  their ``\\``-escapes are undone). A bare variable where SPARQL wants
-  a string is auto-coerced through ``STR`` — a documented convenience
-  superset, never a different answer for a query SPARQL accepts.
+  IRIs lose their brackets, literals lose quotes/lang/datatype, and
+  exactly the writer's escapes — ``\\\\ \\" \\n \\r \\t`` — are undone, by
+  the one codec in ``rdfterms.py``; string constants in a query are
+  decoded by SPARQL's escape rules and re-encoded by the same codec).
+  A bare variable where SPARQL wants a string is auto-coerced through
+  ``STR`` — a documented convenience superset, never a different answer
+  for a query SPARQL accepts.
 * ``REGEX`` runs as Spark ``rlike`` (Java regex — the closest engine to
   the XPath dialect SPARQL specifies); the optional flags (``i s m``
   combinations) map to an inline ``(?flags)``. Other flags are rejected.
@@ -190,11 +193,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..rdfterms import (RDF, XSD, literal, nt_datatype, nt_escape,
+                        nt_lang, nt_lexical, parse_nt, to_nt, unescape_nt)
 from .fixpoint import fixpoint
 from .query import BGPError, is_var, kg_query
 
-XSD = "http://www.w3.org/2001/XMLSchema#"
-RDF_TYPE = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
+RDF_TYPE = f"<{RDF}type>"
 
 
 class SPARQLError(ValueError):
@@ -221,7 +225,8 @@ _TOKEN_RE = re.compile(
     r"""
       (?P<WS>\s+|\#[^\n]*)
     | (?P<IRIREF><[^<>"{}|^`\\\s]*>)
-    | (?P<STRING>"(?:[^"\\\n]|\\.)*"
+    | (?P<STRING>"(?:[^"\\\n]
+                   |\\(?:[tbnrf"'\\]|u[0-9A-Fa-f]{4}|U[0-9A-Fa-f]{8}))*"
         (?:@[A-Za-z]+(?:-[A-Za-z0-9]+)*
          |\^\^(?:<[^<>"{}|^`\\\s]*>|[A-Za-z_][\w.-]*:[\w.-]*))?)
     | (?P<VAR>\?[A-Za-z_][A-Za-z0-9_]*)
@@ -622,22 +627,19 @@ class _Parser:
 
     def _string_term(self, text: str) -> str:
         """SPARQL string literal (+ optional @lang / ^^dt) → the engine's
-        encoded term. xsd:string collapses to the plain form, matching
-        the writer (terms.py: plain and xsd:string render identically)."""
-        m = re.match(r'^("(?:[^"\\\n]|\\.)*")(@[A-Za-z0-9-]+|\^\^.+)?$',
-                     text)
-        assert m, text  # the lexer only emits this shape
-        quoted, suffix = m.group(1), m.group(2)
-        if not suffix:
-            return quoted
+        encoded term: the body unescaped, then re-encoded by the writer's
+        codec (so ``\\'`` and ``\\u0041`` take their canonical form, and
+        xsd:string collapses to the plain form, as the writer renders it)."""
+        end = text.rindex('"')  # a suffix holds no quote
+        suffix = text[end + 1:]
+        lang = dt = None
         if suffix.startswith("@"):
-            return quoted + suffix
-        dt = suffix[2:]
-        dt_iri = (self._resolve_iriref(dt) if dt.startswith("<")
-                  else self._expand_pname(dt, 0))
-        if dt_iri == f"<{XSD}string>":
-            return quoted
-        return f"{quoted}^^{dt_iri}"
+            lang = suffix[1:]
+        elif suffix:
+            dt = suffix[2:]
+            dt = (self._resolve_iriref(dt) if dt.startswith("<")
+                  else self._expand_pname(dt, 0))[1:-1]
+        return to_nt(literal(unescape_nt(text[1:end]), lang, dt))
 
     def _term(self, position: str) -> str:
         """One pattern term → a kg_query term string (?var or encoded
@@ -832,7 +834,7 @@ class _Parser:
                 raise SPARQLError(
                     f"expected a plain string separator at offset "
                     f"{st.pos}")
-            sep = _unescape(st.text[1:-1])
+            sep = unescape_nt(st.text[1:-1])
         self.expect_op(")")
         return Aggregate(fn=name, var=var, distinct=agg_distinct, alias="",
                          sep=sep)
@@ -1647,7 +1649,7 @@ class _Parser:
 def _literal_arg(a: Expr) -> Optional[str]:
     """The lexical form of a string-literal argument, else None."""
     if isinstance(a, Const) and a.kind == _TERM and a.value.startswith('"'):
-        return _term_lexical(a.value)
+        return parse_nt(a.value)[1]
     return None
 
 
@@ -1677,48 +1679,14 @@ def _number_term(text: str) -> str:
     return f'"{text}"^^<{XSD}{dt}>'
 
 
-def _unescape(body: str) -> str:
-    """Undo the engine's N-Triples escapes (\\" and \\\\) in a quoted
-    literal body."""
-    return re.sub(r"\\(.)", r"\1", body)
-
-
-def _term_lexical(term: str) -> str:
-    """Lexical form of an ENCODED constant term (driver-side mirror of
-    :func:`_lexical`)."""
-    if term.startswith("<") and term.endswith(">"):
-        return term[1:-1]
-    m = re.match(r'^"((?:[^"\\]|\\.)*)"', term)
-    if m:
-        return _unescape(m.group(1))
-    return term
-
-
 # ------------------------------------------------------------- lowering
 
 
-def _lexical(c: Column) -> Column:
-    """Lexical form of an ENCODED term column (SPARQL ``STR``): brackets
-    off IRIs; quotes, ``@lang``/``^^dt`` and backslash-escapes off
-    literals; blank-node labels (and anything else) pass through.
-    ``regexp_replace(x, '\\\\(.)', '$1')`` is a correct full unescape —
-    left-to-right, non-overlapping, so ``\\\\`` → ``\\`` and ``\\"`` →
-    ``"`` in one pass."""
-    first = c.substr(1, 1)
-    return (F.when(first == "<", c.substr(F.lit(2), F.length(c) - 2))
-            .when(first == '"', F.regexp_replace(
-                F.regexp_extract(c, r'^"((?:[^"\\]|\\.)*)"', 1),
-                r"\\(.)", "$1"))
-            .otherwise(c))
-
-
 def _quoted(lex: Column, suffix: str) -> Column:
-    """A lexical form as an encoded literal: N-Triples ``\\`` and ``"``
-    escapes, the opening quote, then ``suffix`` (the closing quote plus
-    any ``@tag`` / ``^^<dt>``)."""
-    esc = F.replace(F.replace(lex, F.lit("\\"), F.lit("\\\\")),
-                    F.lit('"'), F.lit('\\"'))
-    return F.concat(F.lit('"'), esc, F.lit(suffix))
+    """A lexical form as an encoded literal: the opening quote, the
+    codec's escapes, then ``suffix`` (the closing quote plus any ``@tag``
+    / ``^^<dt>``)."""
+    return F.concat(F.lit('"'), nt_escape(lex), F.lit(suffix))
 
 
 def _number_column(text: str) -> Column:
@@ -1757,8 +1725,8 @@ def _column(e: Expr, to: Optional[str] = None) -> Column:
         return _quoted(_column(e), '"')
     if to == "lex" and k in (_VAR, _TERM, _ENC):
         if isinstance(e, Const):
-            return F.lit(_term_lexical(e.value))
-        return _lexical(_column(e))
+            return F.lit(parse_nt(e.value)[1])
+        return nt_lexical(_column(e))
     if to == "num" and k != _NUMERIC:
         return _column(e, "lex").try_cast("double")
     if isinstance(e, Var):
@@ -1805,21 +1773,17 @@ def _call_column(e: Call) -> Column:
         return (F.when(cond, _column(args[1], "enc"))
                 .when(~cond, _column(args[2], "enc")))
     if fn == "LANG":
-        c = _column(args[0])
-        return (F.when(c.rlike(r'^"(?:[^"\\]|\\.)*"@'),
-                       F.regexp_extract(c, "@([A-Za-z0-9-]+)$", 1))
-                .otherwise(F.lit("")))
+        return nt_lang(_column(args[0]))
     if fn == "DATATYPE":
         # literal → its datatype IRI (typed: the tag; lang-tagged:
         # rdf:langString; plain: xsd:string); non-literal → NULL (SPARQL
         # type error, the row drops out of comparisons)
         c = _column(args[0])
-        ext = F.regexp_extract(c, r"\^\^<([^>]*)>$", 1)
+        dt = nt_datatype(c)
         return F.when(
             c.substr(1, 1) == '"',
-            F.when(ext != "", ext)
-            .when(c.rlike("@[A-Za-z0-9-]+$"), F.lit(
-                "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"))
+            F.when(dt != "", dt)
+            .when(nt_lang(c) != "", F.lit(f"{RDF}langString"))
             .otherwise(F.lit(f"{XSD}string")))
     lex = [_column(a, "lex") for a in args]
     if fn in ("STR", "IRI"):
@@ -2309,12 +2273,11 @@ def _solutions(triples: DataFrame, pq: ParsedQuery, stats) -> DataFrame:
 
 # xsd numeric datatypes whose typed literals ORDER BY compares by VALUE
 # (SPARQL operator mapping: "9"^^xsd:integer < "10"^^xsd:integer)
-_XSD_NUMERIC_DT_RE = (
-    r'\^\^<http://www\.w3\.org/2001/XMLSchema#'
-    r'(?:integer|decimal|double|float|long|int|short|byte|'
-    r'nonNegativeInteger|nonPositiveInteger|negativeInteger|'
-    r'positiveInteger|unsignedLong|unsignedInt|unsignedShort|'
-    r'unsignedByte)>$')
+_XSD_NUMERIC_DTS = [XSD + t for t in (
+    "integer", "decimal", "double", "float", "long", "int", "short", "byte",
+    "nonNegativeInteger", "nonPositiveInteger", "negativeInteger",
+    "positiveInteger", "unsignedLong", "unsignedInt", "unsignedShort",
+    "unsignedByte")]
 
 
 def _order_keys(v: str, asc: bool):
@@ -2327,8 +2290,8 @@ def _order_keys(v: str, asc: bool):
     by codepoint).  ``try_cast`` so a malformed numeric lexical degrades
     to the lexical fallback instead of an ANSI cast error."""
     enc = F.col(v)
-    num = F.when(enc.rlike(_XSD_NUMERIC_DT_RE),
-                 _lexical(enc).try_cast("double"))
+    num = F.when(nt_datatype(enc).isin(_XSD_NUMERIC_DTS),
+                 nt_lexical(enc).try_cast("double"))
     if asc:
         return [num.asc_nulls_last(), enc.asc()]
     return [num.desc_nulls_first(), enc.desc()]
@@ -2371,11 +2334,11 @@ def _agg_column(a: Aggregate):
         coll = F.collect_set if a.distinct else F.collect_list
         sep = a.sep if a.sep is not None else " "
         return F.array_join(
-            F.sort_array(F.transform(coll(F.col(a.var)), _lexical)),
+            F.sort_array(F.transform(coll(F.col(a.var)), nt_lexical)),
             sep).alias(a.alias)
     # numeric aggregates over the lexical form; try_cast skips
     # non-numeric terms (SPARQL's error-term elision in SUM/AVG/MIN/MAX)
-    num = _lexical(F.col(a.var)).try_cast("double")
+    num = nt_lexical(F.col(a.var)).try_cast("double")
     fn = {"SUM": F.sum, "AVG": F.avg, "MIN": F.min, "MAX": F.max}[a.fn]
     return fn(num).alias(a.alias)
 

@@ -151,16 +151,3 @@ def read_triples_table(spark: SparkSession, target: str,
     df = (spark.read.table(target) if fmt == "iceberg"
           else spark.read.parquet(target))
     return df.select(*TRIPLE_COLS)
-
-
-def subject_lookup(spark: SparkSession, target: str, subject: str,
-                   n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
-    """Point lookup demonstrating partition pruning on the fallback layout:
-    the bucket predicate prunes to 1/n of the files before the subject
-    filter runs (Iceberg's hidden partitioning does this automatically)."""
-    df = spark.read.parquet(target)
-    if "subject_bucket" in df.columns:
-        df = df.filter(
-            F.col("subject_bucket")
-            == F.pmod(F.xxhash64(F.lit(subject)), F.lit(n_buckets)).cast("int"))
-    return df.filter(F.col("s") == subject).select(*TRIPLE_COLS)

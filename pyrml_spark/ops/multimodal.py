@@ -25,18 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("kind", T.StringType()),        # image | audio
-        T.StructField("payload", T.BinaryType()),      # opaque bytes
-        T.StructField("width", T.IntegerType()),       # image metadata
-        T.StructField("height", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),  # audio metadata
-        T.StructField("n_samples", T.IntegerType()),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("media_ref", T.StringType()),

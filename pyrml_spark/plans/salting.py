@@ -10,8 +10,6 @@ a hash of its full row, the right side is replicated ``salt`` times.
 
 from __future__ import annotations
 
-from typing import List
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -44,27 +42,3 @@ def salted_join(left: DataFrame, right: DataFrame, on: Column, salt: int,
     )
     out = l.join(r, on & (F.col("__salt_l") == F.col("__salt_r")), how)
     return out.drop("__salt_l", "__salt_r")
-
-
-def top_heavy_keys(df: DataFrame, key: str, threshold_rows: int) -> List:
-    """Diagnostic: keys whose row count exceeds a per-task threshold —
-    candidates for salting. Driver-side list; run on SAMPLES at scale:
-    the groupBy's key space is the column's full cardinality, so at
-    100 TB sample first and scale the threshold by the sampled
-    fraction — a heavy key is heavy in any uniform sample::
-
-        frac = 0.001
-        hot = top_heavy_keys(df.sample(frac, seed=7), "domain",
-                             threshold_rows=int(5_000_000 * frac))
-        out = salted_join(df, dims, df.domain == dims.d_domain,
-                          salt=32 if hot else 1)
-
-    (AQE's skew-join handles most cases without this; use it for the
-    write-side exchanges AQE does not rebalance.)"""
-    return [
-        r[key]
-        for r in df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > threshold_rows)
-        .collect()
-    ]

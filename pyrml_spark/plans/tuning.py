@@ -17,8 +17,7 @@ from pyspark.sql import functions as F
 BROADCAST_MAX_ROWS = 4_000_000
 
 
-def maybe_broadcast(df: DataFrame, row_hint: int | None = None,
-                    max_rows: int = BROADCAST_MAX_ROWS) -> DataFrame:
+def maybe_broadcast(df: DataFrame, row_hint: int | None = None) -> DataFrame:
     """Broadcast ``df`` only when it is provably small.
 
     One caller: the KG canonical mapping (``kg/extract.py``). That table is
@@ -31,17 +30,17 @@ def maybe_broadcast(df: DataFrame, row_hint: int | None = None,
     size estimate.
 
     ``row_hint``: caller-known row count — avoids any extra job. When
-    absent, a bounded ``limit(max_rows+1).count()`` probe decides:
-    CollectLimit early-exits, so the probe touches at most one extra row
-    past the ceiling instead of scanning the full table. Above the ceiling
-    the DataFrame is returned as-is, letting Catalyst pick a shuffle
-    hash/sort-merge join — with AQE skew-split (and
+    absent, a bounded ``limit(BROADCAST_MAX_ROWS + 1).count()`` probe
+    decides: CollectLimit early-exits, so the probe touches at most one
+    extra row past the ceiling instead of scanning the full table. Above
+    the ceiling the DataFrame is returned as-is, letting Catalyst pick a
+    shuffle hash/sort-merge join — with AQE skew-split (and
     :func:`pyrml_spark.plans.salting.salted_join` for pathological
     celebrity keys) carrying the skewed probe side.
     """
     if row_hint is None:
-        row_hint = df.limit(max_rows + 1).count()
-    if row_hint <= max_rows:
+        row_hint = df.limit(BROADCAST_MAX_ROWS + 1).count()
+    if row_hint <= BROADCAST_MAX_ROWS:
         return F.broadcast(df)
     return df
 

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .nquads import nquads_line_col
-from .rdfterms import NT_LITERAL_RE, RDF, XSD
+from .rdfterms import NT_LITERAL_RE, RDF, XSD, nt_datatype
 from .rdfxml import write_rdfxml, write_trix
 
 # rdflib format name or alias → the writer that serves it
@@ -134,7 +134,7 @@ def prefix_table_from_df(df: DataFrame) -> Dict[str, str]:
         df.select(F.explode(F.array("s", "p", "o")).alias("t"))
         .select(
             F.when(t.startswith("<"), F.regexp_extract(t, r"^<(.*)>$", 1))
-            .when(t.startswith('"'), F.regexp_extract(t, r"\^\^<([^>]*)>$", 1))
+            .when(t.startswith('"'), nt_datatype(t))
             .alias("iri"))
     )
     # Same namespace rule as _namespace_of: split at the last '#' when the
@@ -189,11 +189,9 @@ def _format_term(term: str, prefixes: Dict[str, str],
     if term.startswith("_:"):
         return term
     m = NT_LITERAL_RE.match(term)
-    if m:
-        if m.group("dt"):
-            return f'"{m.group("lex")}"^^{_shorten_iri(m.group("dt"), prefixes)}'
-        return term  # plain or @lang literal: NT form is valid Turtle
-    return term
+    if m and m.group("dt"):
+        return f'"{m.group("lex")}"^^{_shorten_iri(m.group("dt"), prefixes)}'
+    return term  # plain or @lang literal: NT form is valid Turtle
 
 
 def _subject_blocks(

@@ -32,7 +32,7 @@ from itertools import groupby
 from operator import itemgetter
 from typing import Dict, Iterable, List, Optional, TextIO, Tuple
 
-from .rdfterms import NT_LITERAL_RE, RDF, unescape_nt
+from .rdfterms import RDF, parse_nt
 
 TRIX_NS = "http://www.w3.org/2004/03/trix/trix-1/"
 
@@ -56,20 +56,6 @@ def _split_qname(iri_value: str) -> Optional[Tuple[str, str]]:
                 return iri_value[: idx + 1], local
             return None
     return None
-
-
-def _parse_nt_term(term: str):
-    """NT string → ("iri", v) | ("bnode", label) | ("literal", lex, lang, dt).
-    lex is UNescaped (real characters, ready for XML text)."""
-    if term.startswith("<"):
-        return ("iri", term[1:-1])
-    if term.startswith("_:"):
-        return ("bnode", term[2:])
-    m = NT_LITERAL_RE.match(term)
-    if not m:
-        raise RdfXmlError(f"unparseable NT term {term!r}")
-    return ("literal", unescape_nt(m.group("lex")), m.group("lang"),
-            m.group("dt"))
 
 
 def _xml_escape(s: str) -> str:
@@ -103,7 +89,7 @@ def write_rdfxml(rows: Iterable[Tuple], prefixes: Dict[str, str],
 
     body: List[str] = []
     for s, quads in groupby(rows, key=itemgetter(1)):
-        skind, sval = _parse_nt_term(s)[:2]
+        skind, sval = parse_nt(s)[:2]
         pos = [(p, o) for _g, _s, p, o in quads]
         elem = "rdf:Description"
         if pretty:
@@ -120,8 +106,8 @@ def write_rdfxml(rows: Iterable[Tuple], prefixes: Dict[str, str],
                  else f'rdf:nodeID="{_xml_escape(sval)}"')
         body.append(f'  <{elem} {ident}>')
         for p, o in pos:
-            pq = qname(_parse_nt_term(p)[1], "predicate")
-            ot = _parse_nt_term(o)
+            pq = qname(parse_nt(p)[1], "predicate")
+            ot = parse_nt(o)
             if ot[0] == "iri":
                 body.append(f'    <{pq} rdf:resource="{_xml_escape(ot[1])}"/>')
             elif ot[0] == "bnode":
@@ -152,7 +138,7 @@ def write_trix(rows: Iterable[Tuple], fh: TextIO) -> None:
     kept, default graph = block with no <uri> label."""
 
     def term_xml(t: str) -> str:
-        kind = _parse_nt_term(t)
+        kind = parse_nt(t)
         if kind[0] == "iri":
             return f"      <uri>{_xml_escape(kind[1])}</uri>"
         if kind[0] == "bnode":
@@ -171,7 +157,7 @@ def write_trix(rows: Iterable[Tuple], fh: TextIO) -> None:
     for g, quads in groupby(rows, key=itemgetter(0)):
         fh.write("  <graph>\n")
         if g is not None:
-            fh.write(f"    <uri>{_xml_escape(_parse_nt_term(g)[1])}</uri>\n")
+            fh.write(f"    <uri>{_xml_escape(parse_nt(g)[1])}</uri>\n")
         for quad in quads:
             fh.write("    <triple>\n")
             for t in quad[1:]:

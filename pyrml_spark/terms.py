@@ -521,19 +521,6 @@ def irify_full(col: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# N-Triples literal escaping as Column expressions
-# ---------------------------------------------------------------------------
-
-def nt_escape(col: Column) -> Column:
-    out = F.replace(col, F.lit("\\"), F.lit("\\\\"))
-    out = F.replace(out, F.lit('"'), F.lit('\\"'))
-    out = F.replace(out, F.lit("\n"), F.lit("\\n"))
-    out = F.replace(out, F.lit("\r"), F.lit("\\r"))
-    out = F.replace(out, F.lit("\t"), F.lit("\\t"))
-    return out
-
-
-# ---------------------------------------------------------------------------
 # datatype canonicalization (XSD lexical round-trip, pyrml_core.py:266-268)
 # ---------------------------------------------------------------------------
 
@@ -782,7 +769,7 @@ def render_value(ctx: CompileCtx, tm: TermMap, raw: Column) -> Column:
     lex = raw
     if datatype:
         lex = canonicalize_datatype(lex, datatype)
-    quoted = F.concat(F.lit('"'), nt_escape(lex), F.lit('"'))
+    quoted = F.concat(F.lit('"'), R.nt_escape(lex), F.lit('"'))
     if tm.language:
         out = F.concat(quoted, F.lit("@" + tm.language))
     elif tm.language_map is not None:

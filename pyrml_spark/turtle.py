@@ -203,10 +203,8 @@ class TurtleParser:
                 raise TurtleParseError(f"unknown prefix {prefix!r} in {v!r}")
             return iri(self.prefixes[prefix] + local)
         if kind == "string":
-            if v.startswith('"""'):
-                lex = v[3:-3]
-            else:
-                lex = unescape_nt(v[1:-1])
+            quote = 3 if v.startswith('"""') else 1
+            lex = unescape_nt(v[quote:-quote])
             nk, nv = self.tz.peek()
             if nk == "langtag":
                 self.tz.next()

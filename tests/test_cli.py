@@ -11,6 +11,8 @@ import pytest
 from rdf_readers import parse_nquads
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+STUDENT_CSV = os.path.join(REPO, "tests", "fixtures", "rml", "RMLTC0002a-CSV",
+                           "student.csv")
 ARTIST_MAP = "/root/reference/examples/artists/artist-map.ttl"
 NEEDS_ARTIST_MAP = pytest.mark.skipif(
     not os.path.exists(ARTIST_MAP),
@@ -114,3 +116,40 @@ def test_cli_sparql_arg_validation(tmp_path):
         main([ARTIST_MAP, "--triples", str(tmp_path)])  # both
     with pytest.raises(SystemExit):
         main(["--triples", str(tmp_path)])  # --triples without --sparql
+
+
+# one predicate-object map asserted into two named graphs
+TWO_GRAPHS = """
+@prefix rr: <http://www.w3.org/ns/r2rml#> .
+@prefix rml: <http://semweb.mmlab.be/ns/rml#> .
+@prefix ql: <http://semweb.mmlab.be/ns/ql#> .
+@prefix foaf: <http://xmlns.com/foaf/0.1/> .
+@prefix ex: <http://example.com/> .
+
+<#TM> rml:logicalSource [
+    rml:source "%s" ; rml:referenceFormulation ql:CSV ] ;
+  rr:subjectMap [ rr:template "http://example.com/{ID}" ] ;
+  rr:predicateObjectMap [
+    rr:predicate foaf:name ;
+    rr:objectMap [ rml:reference "Name" ] ;
+    rr:graphMap [ rr:constant ex:g1 ] ;
+    rr:graphMap [ rr:constant ex:g2 ] ] .
+"""
+
+
+def test_cli_ntriples_directory_is_a_set(spark, tmp_path):
+    """-f ntriples -o DIR writes the union graph once per triple: the
+    triple asserted in two graphs is one line across the part files, as
+    it is on stdout."""
+    from pyrml_spark.__main__ import main
+
+    mapping = tmp_path / "m.ttl"
+    mapping.write_text(TWO_GRAPHS % STUDENT_CSV, encoding="utf-8")
+    out = tmp_path / "nt"
+    assert main([str(mapping), "-f", "ntriples", "-o", str(out),
+                 "-p", "2"]) == 0
+    lines = [line for part in sorted(out.glob("part-*"))
+             for line in part.read_text(encoding="utf-8").splitlines()
+             if line]
+    assert lines == ['<http://example.com/10> <http://xmlns.com/foaf/0.1/name>'
+                     ' "Venus" .']

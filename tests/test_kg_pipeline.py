@@ -471,10 +471,11 @@ def test_external_documents_get_distinct_fingerprints(spark, tmp_path):
     assert n1 != n2  # t2 did NOT resume from t1's checkpoints
 
 
-def test_connected_components_auto_matches_distributed(spark):
+def test_connected_components_auto_matches_distributed(spark, monkeypatch):
     """The driver union-find crossover must produce the identical
     (node, component) table as the distributed min-label loop — on a
     chain (worst-case diameter), a star, and singleton self-loops."""
+    from pyrml_spark.kg import canonicalize as C
     from pyrml_spark.kg.canonicalize import connected_components_auto
 
     rows = ([(f"n{i+1:03d}", f"n{i:03d}") for i in range(40)]
@@ -482,7 +483,8 @@ def test_connected_components_auto_matches_distributed(spark):
             + [("z", "z")])
     edges = spark.createDataFrame(rows, ["src", "dst"])
     cc_driver, rows_driver = connected_components_auto(edges)
-    cc_dist, rows_dist = connected_components_auto(edges, max_driver_edges=0)
+    monkeypatch.setattr(C, "DRIVER_UNION_FIND_MAX_EDGES", 0)
+    cc_dist, rows_dist = connected_components_auto(edges)
     via_driver = {tuple(r) for r in cc_driver.collect()}
     via_dist = {tuple(r) for r in cc_dist.collect()}
     assert via_driver == via_dist

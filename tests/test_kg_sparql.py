@@ -78,6 +78,17 @@ def test_literal_forms_encode_like_the_engine():
     ]
 
 
+def test_string_escapes_follow_the_sparql_grammar():
+    """String escapes decode by SPARQL's rules (ECHAR and \\u / \\U) and
+    re-encode in the writer's form; anything else does not tokenize."""
+    pq = parse_select(
+        'SELECT ?s WHERE { ?s <http://e/p> "A\\u0042\\tC\\\'"@en }')
+    assert pq.where.patterns[0][2] == '"AB\\tC\'"@en'
+    for bad in ('"\\uZZZZ"', '"\\a"'):
+        with pytest.raises(SPARQLError, match="cannot tokenize"):
+            parse_select(f"SELECT ?s WHERE {{ ?s <http://e/p> {bad} }}")
+
+
 def test_base_resolution_and_relative_iri_rejection():
     pq = parse_select(
         "BASE <http://ex.com/dir/> SELECT ?s WHERE { ?s <p> <../o> }")
@@ -266,6 +277,57 @@ def test_exec_lexical_unescape(triples):
         triples,
         PFX + 'SELECT ?s WHERE { ?s e:name ?n FILTER(CONTAINS(?n, "o\\"b")) }')
     assert _rows(out) == [("<http://e/bob>",)]
+
+
+# The writer's escapes against SPARQL's: "a\nb" is the engine's encoding
+# of a, LF, b (the N-Triples two-character escape); "anb" is three letters.
+ESCAPES = [
+    ("<http://e/s>", "<http://e/p>", '"a\\nb"'),
+    ("<http://e/s2>", "<http://e/p>", '"anb"'),
+    ("<http://e/x>", "<http://e/q>", '"x"'),
+    ("<http://e/y>", "<http://e/q>", '"y"'),
+    ("<http://e/s3>", "<http://e/r>", '"it\'s"'),
+]
+
+
+@pytest.fixture(scope="module")
+def escapes(spark):
+    return spark.createDataFrame(ESCAPES, ["s", "p", "o"]).cache()
+
+
+@pytest.mark.parametrize("query, expected", [
+    # STR undoes the escape; BIND re-encodes the LF as the same escape
+    ("SELECT ?s ?x WHERE { ?s <http://e/p> ?o BIND(STR(?o) AS ?x) }",
+     [("<http://e/s2>", '"anb"'), ("<http://e/s>", '"a\\nb"')]),
+    ('SELECT ?s WHERE { ?s <http://e/p> ?o FILTER(CONTAINS(STR(?o), "n")) }',
+     [("<http://e/s2>",)]),
+    ('SELECT ?s WHERE { ?s <http://e/p> ?o FILTER(STR(?o) = "anb") }',
+     [("<http://e/s2>",)]),
+    ('SELECT (GROUP_CONCAT(?o; SEPARATOR="\\n") AS ?c) '
+     "WHERE { ?s <http://e/q> ?o }",
+     [("x\ny",)]),
+    # \' is a SPARQL escape; the table holds the writer's canonical "it's"
+    ("SELECT ?s WHERE { ?s <http://e/r> \"it\\'s\" }",
+     [("<http://e/s3>",)]),
+])
+def test_exec_escapes_round_trip_through_the_codec(escapes, query, expected):
+    assert _rows(sparql_select(escapes, query)) == expected
+
+
+def test_exec_lang_of_unbound_is_unbound(spark):
+    """LANG of an unbound variable is a SPARQL error: BIND leaves the
+    alias unbound and a FILTER over it drops the row, like DATATYPE."""
+    df = spark.createDataFrame(
+        [("<http://e/a>", "<http://e/p>", '"x"'),
+         ("<http://e/b>", "<http://e/p>", '"y"'),
+         ("<http://e/a>", "<http://e/q>", '"z"@fr')], ["s", "p", "o"])
+    opt = "?s <http://e/p> ?o OPTIONAL { ?s <http://e/q> ?z } "
+    out = sparql_select(
+        df, f"SELECT ?s ?l WHERE {{ {opt} BIND(LANG(?z) AS ?l) }}")
+    assert _rows(out) == [("<http://e/a>", '"fr"'), ("<http://e/b>", None)]
+    out = sparql_select(
+        df, f'SELECT ?s WHERE {{ {opt} FILTER(LANG(?z) = "") }}')
+    assert _rows(out) == []
 
 
 def test_exec_numeric_comparison_on_typed_literals(triples):

@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 
 from pyrml_spark.compiler import RMLCompiler
 from pyrml_spark.parse_mapping import parse_mapping
-from pyrml_spark.plans.salting import salted_join, top_heavy_keys
+from pyrml_spark.plans.salting import salted_join
 
 
 def test_salted_join_equals_plain_join(spark):
@@ -19,13 +19,6 @@ def test_salted_join_equals_plain_join(spark):
               salted_join(left, right, left.k == right.rk, salt=4)
               .select("lv", "rv").collect()}
     assert plain == salted
-
-
-def test_top_heavy_keys(spark):
-    df = spark.range(100).select(
-        F.when(F.col("id") < 90, F.lit("hot")).otherwise(F.lit("cold"))
-        .alias("k"))
-    assert top_heavy_keys(df, "k", 50) == ["hot"]
 
 
 _MAP = """

@@ -1,5 +1,5 @@
-"""Partitioned triples-table sink (kg/table.py) — fallback layout, pruned
-point lookup, and the no-silent-downgrade contract for the Iceberg path
+"""Partitioned triples-table sink (kg/table.py) — fallback layout and
+the no-silent-downgrade contract for the Iceberg path
 (no Iceberg runtime jar in this sandbox; the catalog detection and writer-v2
 construction are the testable surface)."""
 
@@ -12,7 +12,6 @@ from pyrml_spark.kg.table import (
     DEFAULT_BUCKETS,
     iceberg_catalogs,
     read_triples_table,
-    subject_lookup,
     write_triples_table,
 )
 
@@ -40,17 +39,6 @@ def test_fallback_parquet_roundtrip_and_layout(spark, tmp_path):
     back = read_triples_table(spark, tgt)
     assert back.columns == ["s", "p", "o", "g"]
     assert {tuple(r) for r in back.collect()} == {tuple(r) for r in df.collect()}
-
-
-def test_subject_lookup_prunes_partitions(spark, tmp_path):
-    tgt = str(tmp_path / "triples")
-    write_triples_table(_triples(spark), tgt, n_buckets=8)
-    got = subject_lookup(spark, tgt, "<http://ex.com/s/7>", n_buckets=8)
-    rows = got.collect()
-    assert len(rows) == 1 and rows[0]["o"] == '"v7"'
-    # the bucket predicate must reach the scan as a partition filter
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "subject_bucket" in plan, plan
 
 
 def test_missing_columns_rejected(spark, tmp_path):

@@ -39,6 +39,15 @@ def test_parse_basic_triples():
     assert ("literal", "true", None, R.XSD + "boolean") in lits
 
 
+def test_long_and_short_strings_decode_the_same_escapes():
+    """Turtle's escapes (ECHAR, \\u) hold in long strings too."""
+    triples, _, _ = parse_turtle(
+        '@prefix ex: <http://ex.com/> . '
+        'ex:a ex:p """x\\ty\\u0041 "q" """ ; ex:q "x\\ty\\u0041 \\"q\\" " .')
+    assert [o for _, _, o in triples] == [
+        ("literal", 'x\tyA "q" ', None, None)] * 2
+
+
 def test_parse_bnode_property_list_and_lang():
     triples, _, _ = parse_turtle(
         """
